@@ -4,7 +4,7 @@ timing + formatted-plan capture, SEPARATE from the frozen bench.py.
 Usage:
   python bench_extra.py time q1 q2 ...      # noop timings (median of N)
   python bench_extra.py plans q1 q2 ...     # write plans/r08/<q>_<tag>.txt
-  python bench_extra.py all                 # every headline query
+  python bench_extra.py all                 # every bench.py headline query
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
      SPARK_GRAFT_CPUS (default 32), BENCH_EXTRA_N (default 5),
@@ -21,22 +21,13 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from bench import HEADLINE, HEAVY  # noqa: E402
 from extract_sf_r_parallel_spark.plans import registry  # noqa: E402
 from extract_sf_r_parallel_spark.session import get_spark  # noqa: E402
 
-HEADLINE = [
-    "range_near", "areadist_square", "areadist_circle", "knn3",
-    "areadist_dissolve", "areadist_wet", "areadist_wet_sum",
-    "tile_counts", "pricing_summary", "multi_join", "embed_top1",
-    "minhash_pairs", "asof_join", "interval_join", "idw_interp",
-    "layer_overlay", "convex_hull", "zonal_stats", "viewshed",
-    "flow_d8", "wide_merge",
-]
-
-
 def main() -> None:
     mode = sys.argv[1] if len(sys.argv) > 1 else "time"
-    names = sys.argv[2:] or HEADLINE
+    names = sys.argv[2:] or HEADLINE + list(HEAVY)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     n = int(os.environ.get("BENCH_EXTRA_N", "5"))

@@ -10,8 +10,8 @@ Design (public H3 ideas, reimplemented for a planar CRS):
 - pointy-top hexagons on axial coordinates (q, r);
 - resolution = hex edge length in metres (continuous, not a fixed
   aperture hierarchy — planar CRS makes arbitrary edges exact);
-- cell id packs (res_code, q, r) into one int64 so ids from different
-  resolutions never collide;
+- cell id packs (resolution code, q, r) into one int64 so ids from
+  different resolutions never collide;
 - kRing(cell, k) gives the hex-disk of radius k — the candidate cover
   for "within maxdist" joins (the reference's 1000 m cap, C_…R:112);
 - cover_bbox gives the covering cell set for a polygon's bbox — the
@@ -26,7 +26,6 @@ import numpy as np
 
 __all__ = [
     "RESOLUTIONS",
-    "res_code",
     "edge_for_code",
     "xy_to_cell",
     "cell_to_center",
@@ -45,14 +44,6 @@ RESOLUTIONS: tuple[float, ...] = (
 
 _SQRT3 = float(np.sqrt(3.0))
 _BIAS = 1 << 28  # axial coords offset to non-negative before packing
-
-
-def res_code(edge: float) -> int:
-    """Code of the registered resolution with this edge length."""
-    for i, e in enumerate(RESOLUTIONS):
-        if e == edge:
-            return i
-    raise ValueError(f"unregistered hex edge {edge}; choose from {RESOLUTIONS}")
 
 
 def code_for_radius(radius: float) -> int:

@@ -165,8 +165,6 @@ def areadist(
     broadcast_polys: bool = False,
     salt: int = 0,
     dissolve: str = "auto",
-    pi_literal: float = PI_LITERAL,
-    cell_edge_divisor: float = 4.0,
     observation=None,
 ) -> DataFrame:
     """One row per (point, layer): AREA<r>, PROP<r>, MEANAGE_<r> (if
@@ -235,7 +233,7 @@ def areadist(
     pairs = range_join_pairs(
         point_side, join_side, maxdist, radii,
         theta=theta, broadcast_polys=broadcast_polys, salt=salt,
-        keep_geom=need_geom, cell_edge_divisor=cell_edge_divisor,
+        keep_geom=need_geom,
     )
 
 
@@ -259,7 +257,7 @@ def areadist(
         aggs.append(F.sum(F.col("weight") * F.col(a)).alias(f"AREA{int(r)}"))
         aggs.append(
             (F.sum(F.col("weight") * F.col(a))
-             / F.lit(pi_literal * r * r)).alias(f"PROP{int(r)}")
+             / F.lit(PI_LITERAL * r * r)).alias(f"PROP{int(r)}")
         )
         if age:
             # Σ(age·clip_area)/Σ(clip_area) over candidates with a>0
@@ -304,7 +302,7 @@ def areadist(
             got = (
                 got.withColumn(f"AREA{int(r)}", patched)
                 .withColumn(f"PROP{int(r)}",
-                            F.col(f"AREA{int(r)}") / F.lit(pi_literal * r * r))
+                            F.col(f"AREA{int(r)}") / F.lit(PI_LITERAL * r * r))
                 .drop(f"UAREA{int(r)}")
             )
 

@@ -31,10 +31,9 @@ from pyspark.sql import types as T
 
 from ..functions import hashing as H
 
-__all__ = ["exact_dedup", "minhash_signatures", "minhash_lsh_pairs",
-           "simhash_signatures", "simhash_pairs", "ngram_jaccard_pairs",
-           "connected_components", "connected_components_star",
-           "dedup_canonical"]
+__all__ = ["exact_dedup", "minhash_lsh_pairs", "simhash_signatures",
+           "simhash_pairs", "ngram_jaccard_pairs", "connected_components",
+           "connected_components_star", "dedup_canonical"]
 
 
 def exact_dedup(df: DataFrame, text_col: str = "text",
@@ -68,15 +67,6 @@ def _sig_shingle_udf(n_hashes: int, k_shingle: int, seed: int):
             shs.append(sh.astype(np.int64).tolist())
         return pd.DataFrame({"sig": sigs, "shingles": shs})
     return _f
-
-
-def minhash_signatures(df: DataFrame, text_col: str = "text",
-                       n_hashes: int = 64, k_shingle: int = 3,
-                       seed: int = 7) -> DataFrame:
-    """Add a `sig` array<long> MinHash signature column."""
-    f = _sig_shingle_udf(n_hashes, k_shingle, seed)
-    return (df.withColumn("_ss", f(F.col(text_col)))
-              .withColumn("sig", F.col("_ss.sig")).drop("_ss"))
 
 
 def _jvm_jaccard(sh_a: Column, sh_b: Column) -> Column:

@@ -36,12 +36,11 @@ __all__ = ["idw_interpolate"]
 
 def idw_interpolate(probes: DataFrame, obs: DataFrame, radius: float,
                     value: str = "v", probe_id: str = "probe_id",
-                    x: str = "x", y: str = "y",
-                    cell_edge_divisor: float = 2.0) -> DataFrame:
+                    x: str = "x", y: str = "y") -> DataFrame:
     """One row per probe: `n_obs` neighbors within `radius` and the
     IDW estimate `est` (NULL when no neighbor). Probe columns are
     suffixed `_p` inside the join to survive shared x/y names."""
-    code = I.code_for_radius(radius / cell_edge_divisor)
+    code = I.code_for_radius(radius / 2.0)
     p = probes.select(
         F.col(probe_id),
         F.col(x).alias("_px"), F.col(y).alias("_py"))

@@ -41,7 +41,7 @@ from ..geo import index as I
 from ..geo import kernels as K
 
 __all__ = [
-    "cell_udf", "poly_cover_udf", "is_valid_udf", "pair_metrics_udf",
+    "poly_cover_udf", "is_valid_udf", "pair_metrics_udf",
     "broadcast_pair_metrics_udf", "cell_col", "with_cell",
     "explode_poly_cells", "explode_bbox_cells", "range_join_pairs",
     "salted",
@@ -95,15 +95,6 @@ def cell_col(x: Column, y: Column, code: int) -> Column:
     e = float(I.edge_for_code(code))
     qi, ri = _axial_cols(x, y, e)
     return _pack_cell(code, qi, ri)
-
-
-def cell_udf(code: int):
-    """(x, y) → int64 hex cell id at resolution `code` (SURVEY.md J1:
-    the point-in-polygon tile join becomes a computed column)."""
-    @F.pandas_udf(T.LongType())
-    def _cell(x: pd.Series, y: pd.Series) -> pd.Series:
-        return pd.Series(I.xy_to_cell(x.to_numpy(np.float64), y.to_numpy(np.float64), code))
-    return _cell
 
 
 def poly_cover_udf(radius: float, code: int):
@@ -344,7 +335,6 @@ def range_join_pairs(
     radii: tuple[float, ...] = (),
     *,
     code: int | None = None,
-    cell_edge_divisor: float = 4.0,
     theta: Column | None = None,
     broadcast_polys: bool = False,
     salt: int | str = 0,
@@ -388,7 +378,7 @@ def range_join_pairs(
         raise ValueError(
             f"salt must be an int or the exact string 'auto', got {salt!r}")
     if code is None:
-        code = I.code_for_radius(max(radius / cell_edge_divisor, I.RESOLUTIONS[0]))
+        code = I.code_for_radius(max(radius / 4.0, I.RESOLUTIONS[0]))
     pts = with_cell(points, code, point_x, point_y)
     pls = explode_poly_cells(polys, radius, code, keep_bbox=True)
     if broadcast_polys:

@@ -1,10 +1,17 @@
-"""The driver-contract query registry: every implemented operator from
-SURVEY.md §2 exposed as (spark, sf_dir) → DataFrame, each with a
-DuckDB oracle SQL string — since round 3 there are ZERO rows-only
-entries (``len(ORACLE) == len(QUERIES)``; a test asserts this), so
-every registered query is exact-value gated, not just row-counted."""
+"""The query registry behind ``__spark_entry__``.
+
+A query is registered in exactly one way: define a module-level
+``q_<name>(spark, sf_dir) -> DataFrame`` in this module or in
+``relational``, ``spatial_queries`` or ``textops``, next to its DuckDB
+oracle ``ORACLE["<name>"] = "<SQL>"``. ``QUERIES`` is derived from the
+``q_`` functions at the end of this module, and every query has an
+oracle (``set(QUERIES) == set(ORACLE)``, asserted by a test), so every
+registered query is exact-value gated, not just row-counted. The order
+the gate runs them in is chosen by ``__spark_entry__.queries()``."""
 
 from __future__ import annotations
+
+import sys
 
 from pyspark.sql import functions as F
 
@@ -40,7 +47,7 @@ from . import relational, spatial_queries, textops
 # the cluster up front (run_available_now docstring).
 _STREAM_PARTS = 4
 _STREAM_PARTS_PY = 8
-from .spatial_queries import points_df, rects_df
+from .spatial_queries import _flagship_select, _keyed_points, rects_df
 
 ORACLE: dict[str, str] = {}
 ORACLE.update(relational.ORACLE)
@@ -354,33 +361,11 @@ def q_text_features(spark, sf_dir):
 # ≥3 orders above the ≤4e-9 measured cross-formula error). The
 # unrounded kernel stays pytest-oracled at 1e-9 (tests/).
 def _circle_inputs(spark, sf_dir):
-    pts = points_df(spark, sf_dir).filter(F.col("pid") % 10 == 0).select(
-        F.col("pid").cast("string").alias("PKEY"),
-        (F.col("pid") % 97).cast("string").alias("SS"),
-        F.col("pyear").alias("YEAR"), "x", "y",
-    )
     polys = rects_df(spark, sf_dir).select(
         F.col("fid").alias("feature_id"), F.lit("rects").alias("layer"),
         F.col("ryear").alias("YEAR"), "geom",
     )
-    return pts, polys
-
-
-def _flagship_select(df):
-    """Rounding contract shared with the DuckDB oracle
-    (spatial_queries.FLAGSHIP_ROUND). MEANAGE is gated on the ROUNDED
-    area > 0 on both engines, which also unifies the fused path's NaN
-    with the join path's NULL for empty candidate sets."""
-    d = spatial_queries.FLAGSHIP_ROUND
-    cols = [F.col("PKEY"), F.col("SS"), F.col("YEAR"), F.col("layer"),
-            F.round("NEAR_DIST", d["NEAR_DIST"]).alias("NEAR_DIST")]
-    for r in (150, 565):
-        area = F.round(F.col(f"AREA{r}"), d["AREA"])
-        cols.append(area.alias(f"AREA{r}"))
-        cols.append(F.round(F.col(f"PROP{r}"), d["PROP"]).alias(f"PROP{r}"))
-        cols.append(F.when(area > 0, F.round(F.col(f"MEANAGE_{r}"), d["MEANAGE"]))
-                     .alias(f"MEANAGE_{r}"))
-    return df.select(*cols)
+    return _keyed_points(spark, sf_dir), polys
 
 
 def q_areadist_circle(spark, sf_dir):
@@ -628,48 +613,59 @@ _WM_LAYERS = [f"L{i:02d}" for i in range(14)]
 _WM_CLASSES = ["Bog", "Fen", "Marsh", "Open_Water", "Swamp"]
 
 
-def q_wide_merge_sum(spark, sf_dir):
+def _wide_merge(spark, sf_dir, foot_polys, wet_polys, dissolve):
+    """14 footprint layers (temporal + age) and 5 wetland classes, each
+    run through areadist_auto, rounded, pivoted wide and inner-merged
+    on the point keys. `foot_polys` / `wet_polys` build the feature
+    sides; they are called on the worker threads below."""
+    from concurrent.futures import ThreadPoolExecutor
+
     from ..operators.areadist import areadist_wide
     from ..operators.areadist_fused import areadist_auto
-    from .spatial_queries import _keyed_points
-    d = spatial_queries.FLAGSHIP_ROUND
     pts = _keyed_points(spark, sf_dir)
 
-    lay = F.format_string("L%02d", F.pmod(F.col("fid"), F.lit(14)).cast("int"))
-    fpolys = rects_df(spark, sf_dir).select(
-        F.col("fid").alias("feature_id"), lay.alias("layer"),
-        F.col("ryear").alias("YEAR"), "geom")
-    foot = areadist_auto(pts, fpolys, validity_filter=False, dissolve="sum")
-    fcols = [F.col("PKEY"), F.col("SS"), F.col("YEAR"), F.col("layer"),
-             F.round("NEAR_DIST", d["NEAR_DIST"]).alias("NEAR_DIST")]
-    for r in (150, 565):
-        area = F.round(F.col(f"AREA{r}"), d["AREA"])
-        fcols.append(area.alias(f"AREA{r}"))
-        fcols.append(F.round(F.col(f"PROP{r}"), d["PROP"]).alias(f"PROP{r}"))
-        fcols.append(F.when(area > 0, F.round(F.col(f"MEANAGE_{r}"),
-                                              d["MEANAGE"]))
-                      .alias(f"MEANAGE_{r}"))
-    wide_f = areadist_wide(foot.select(*fcols), values=tuple(_WM_LAYERS))
+    def _foot_side():
+        foot = areadist_auto(pts, foot_polys(), validity_filter=False,
+                             dissolve=dissolve)
+        return areadist_wide(_flagship_select(foot), values=tuple(_WM_LAYERS))
 
-    cls = F.element_at(
-        F.array(*[F.lit(c) for c in _WM_CLASSES]),
-        (F.pmod(F.col("fid"), F.lit(5)) + 1).cast("int"))
-    wpolys = rects_df(spark, sf_dir).select(
-        F.col("fid").alias("feature_id"), cls.alias("CWCS_Class"),
-        F.lit(0).cast("int").alias("YEAR"), "geom")
-    wet = areadist_auto(pts, wpolys, temporal=False, age=False,
-                        layer_col="CWCS_Class", validity_filter=False,
-                        dissolve="sum")
-    wcols = [F.col("PKEY"), F.col("SS"), F.col("YEAR"), F.col("layer"),
-             F.round("NEAR_DIST", d["NEAR_DIST"]).alias("NEAR_DIST")]
-    for r in (150, 565):
-        wcols.append(F.round(F.col(f"AREA{r}"), d["AREA"]).alias(f"AREA{r}"))
-        wcols.append(F.round(F.col(f"PROP{r}"), d["PROP"]).alias(f"PROP{r}"))
-    wide_w = areadist_wide(wet.select(*wcols), values=tuple(_WM_CLASSES))
+    def _wet_side():
+        wet = areadist_auto(pts, wet_polys(), temporal=False, age=False,
+                            layer_col="CWCS_Class", validity_filter=False,
+                            dissolve=dissolve)
+        return areadist_wide(_flagship_select(wet), values=tuple(_WM_CLASSES))
+
+    # the two areadist_auto passes each run eager plan-build jobs on
+    # the driver (feature count, distributed correction build+collect,
+    # geometry collect+broadcast) that are fully independent — overlap
+    # them on two threads; Spark schedules concurrent jobs fine and
+    # this roughly halves the capstone's serial plan-build latency
+    with ThreadPoolExecutor(2) as ex:
+        ff, wf = ex.submit(_foot_side), ex.submit(_wet_side)
+        wide_f, wide_w = ff.result(), wf.result()
 
     # the reference's final inner merge on the point keys
     # (C_…R:1194-1208); both sides are dense → row count preserved
     return wide_f.join(wide_w, ["PKEY", "SS", "YEAR"], "inner")
+
+
+def q_wide_merge_sum(spark, sf_dir):
+    def foot_polys():
+        lay = F.format_string("L%02d",
+                              F.pmod(F.col("fid"), F.lit(14)).cast("int"))
+        return rects_df(spark, sf_dir).select(
+            F.col("fid").alias("feature_id"), lay.alias("layer"),
+            F.col("ryear").alias("YEAR"), "geom")
+
+    def wet_polys():
+        cls = F.element_at(
+            F.array(*[F.lit(c) for c in _WM_CLASSES]),
+            (F.pmod(F.col("fid"), F.lit(5)) + 1).cast("int"))
+        return rects_df(spark, sf_dir).select(
+            F.col("fid").alias("feature_id"), cls.alias("CWCS_Class"),
+            F.lit(0).cast("int").alias("YEAR"), "geom")
+
+    return _wide_merge(spark, sf_dir, foot_polys, wet_polys, dissolve="sum")
 
 
 def _wide_merge_sum_oracle() -> str:
@@ -805,54 +801,17 @@ ORACLE["wide_merge_sum"] = _wide_merge_sum_oracle()
 # wide_merge_sum (arbitrary-overlap geotag rects, where no closed-form
 # union oracle exists).
 def q_wide_merge(spark, sf_dir):
-    from concurrent.futures import ThreadPoolExecutor
+    # _pair_rect_polys is looked up on the module at call time, so a
+    # wrapper installed on spatial_queries (perfbench tracing) sees it
+    def foot_polys():
+        return spatial_queries._pair_rect_polys(spark, sf_dir, foot14=True)
 
-    from ..operators.areadist import areadist_wide
-    from ..operators.areadist_fused import areadist_auto
-    from .spatial_queries import _keyed_points, _pair_rect_polys
-    d = spatial_queries.FLAGSHIP_ROUND
-    pts = _keyed_points(spark, sf_dir)
+    def wet_polys():
+        return spatial_queries._pair_rect_polys(
+            spark, sf_dir, with_class=True, classes=tuple(_WM_CLASSES),
+            layer_col="CWCS_Class")
 
-    def _foot_side():
-        fpolys = _pair_rect_polys(spark, sf_dir, foot14=True)
-        foot = areadist_auto(pts, fpolys, validity_filter=False)
-        fcols = [F.col("PKEY"), F.col("SS"), F.col("YEAR"), F.col("layer"),
-                 F.round("NEAR_DIST", d["NEAR_DIST"]).alias("NEAR_DIST")]
-        for r in (150, 565):
-            area = F.round(F.col(f"AREA{r}"), d["AREA"])
-            fcols.append(area.alias(f"AREA{r}"))
-            fcols.append(F.round(F.col(f"PROP{r}"),
-                                 d["PROP"]).alias(f"PROP{r}"))
-            fcols.append(F.when(area > 0, F.round(F.col(f"MEANAGE_{r}"),
-                                                  d["MEANAGE"]))
-                          .alias(f"MEANAGE_{r}"))
-        return areadist_wide(foot.select(*fcols), values=tuple(_WM_LAYERS))
-
-    def _wet_side():
-        wpolys = _pair_rect_polys(spark, sf_dir, with_class=True,
-                                  classes=tuple(_WM_CLASSES),
-                                  layer_col="CWCS_Class")
-        wet = areadist_auto(pts, wpolys, temporal=False, age=False,
-                            layer_col="CWCS_Class", validity_filter=False)
-        wcols = [F.col("PKEY"), F.col("SS"), F.col("YEAR"), F.col("layer"),
-                 F.round("NEAR_DIST", d["NEAR_DIST"]).alias("NEAR_DIST")]
-        for r in (150, 565):
-            wcols.append(F.round(F.col(f"AREA{r}"),
-                                 d["AREA"]).alias(f"AREA{r}"))
-            wcols.append(F.round(F.col(f"PROP{r}"),
-                                 d["PROP"]).alias(f"PROP{r}"))
-        return areadist_wide(wet.select(*wcols), values=tuple(_WM_CLASSES))
-
-    # the two areadist_auto passes each run eager plan-build jobs on
-    # the driver (feature count, distributed correction build+collect,
-    # geometry collect+broadcast) that are fully independent — overlap
-    # them on two threads; Spark schedules concurrent jobs fine and
-    # this roughly halves the capstone's serial plan-build latency
-    with ThreadPoolExecutor(2) as ex:
-        ff, wf = ex.submit(_foot_side), ex.submit(_wet_side)
-        wide_f, wide_w = ff.result(), wf.result()
-
-    return wide_f.join(wide_w, ["PKEY", "SS", "YEAR"], "inner")
+    return _wide_merge(spark, sf_dir, foot_polys, wet_polys, dissolve="auto")
 
 
 def _wide_merge_oracle() -> str:
@@ -2226,20 +2185,6 @@ WHERE a.event_id % 2 = 0
 """
 
 
-# stream ≡ batch: sessions_stream / windowed_stream answer the
-# identical SQL oracles as their batch twins (aliased after
-# ORACLE["sessions"] / relational's tumbling_window import)
-QUERIES = {"sessions": q_sessions, "sessions_stream": q_sessions_stream,
-           "windowed_stream": q_windowed_stream,
-           "stream_enrich": q_stream_enrich,
-           "dedup_stream": q_dedup_stream,
-           "stream_join": q_stream_join,
-           "stream_join_outer": q_stream_join_outer,
-           "geofence": q_geofence,
-           "geofence_stream": q_geofence_stream}
-QUERIES.update(relational.QUERIES)
-QUERIES.update(spatial_queries.QUERIES)
-QUERIES.update(textops.QUERIES)
 # --- 3×3 median rank filter (r06): the NONLINEAR stencil next to the
 # linear ones (Sobel, focal mean) — salt-and-pepper denoise / impulse
 # noise screen. Engine: one np.partition per image inside shuffle-free
@@ -2390,192 +2335,6 @@ FROM glcm GROUP BY 1
 """
 
 
-QUERIES.update({
-    "embed_top1": q_embed_top1,
-    "embed_dup_pairs": q_embed_dup_pairs,
-    "embed_ann_lsh": q_embed_ann_lsh,
-    "embed_ann_ivf": q_embed_ann_ivf,
-    "embed_ann_ivf_lloyd": q_embed_ann_ivf_lloyd,
-    "semantic_dedup": q_semantic_dedup,
-    "minhash_pairs": q_minhash_pairs,
-    "simhash": q_simhash,
-    "ngram_jaccard": q_ngram_jaccard,
-    "text_features": q_text_features,
-    "areadist_circle": q_areadist_circle,
-    "areadist_circle_join": q_areadist_circle_join,
-    "knn_ring": q_knn_ring,
-    "multimodal_stats": q_multimodal_stats,
-    "frame_sample": q_frame_sample,
-    "resize_stats": q_resize_stats,
-    "resize_stats_cjpg": q_resize_stats_cjpg,
-    "sobel_stats": q_sobel_stats,
-    "blob_stats": q_blob_stats,
-    "morph_stats": q_morph_stats,
-    "mosaic_median": q_mosaic_median,
-    "sat_probe": q_sat_probe,
-    "hist_equalize": q_hist_equalize,
-    "chip_extract": q_chip_extract,
-    "image_extract": q_image_extract,
-    "image_dedup": q_image_dedup,
-    "wide_merge": q_wide_merge,
-    "wide_merge_sum": q_wide_merge_sum,
-    "asof_join": q_asof_join,
-    "asof_join_fwd": q_asof_join_fwd,
-    "asof_nearest": q_asof_nearest,
-    "interval_join": q_interval_join,
-    "median_filter": q_median_filter,
-    "orient_hist": q_orient_hist,
-    "glcm_texture": q_glcm_texture,
-    "hll_stream": q_hll_stream,
-})
-
-# Driver-gate ordering: the gate records registry entries in dict
-# order and CUTS at a fixed budget (observed: 50 rows), so with >50
-# queries some rows are always truncated. r4/r5 used a static
-# capstone-first list (same tail starved forever, VERDICT r05
-# next-#2); early r06 rotated on "absent from the NEWEST artifact",
-# which stops starving only while registry size ≤ 2× budget. At 130
-# queries the rotation now ranks by STALENESS across ALL committed
-# CORRECTNESS_r*.json artifacts: brand-new queries first (capstone
-# order), then ascending last-verified round — so every query is
-# re-verified by the driver within ceil(N / budget) rounds, whatever
-# N grows to. pricing_summary stays first purely as the session
-# warm-up absorber: the first query of a gate pays ~5s of one-time
-# JVM/broadcast/pandas worker spin-up, and that should land on a
-# 0.2s aggregate, not inflate a capstone's recorded time.
-_GATE_FIRST = [
-    "pricing_summary",
-    "wide_merge", "areadist_circle", "areadist_circle_join", "knn_ring",
-    "asof_join", "asof_join_fwd", "interval_join", "multimodal_stats",
-    "frame_sample", "resize_stats", "text_features",
-    "wide_merge_sum", "resize_stats_cjpg", "asof_nearest", "stream_join",
-    "image_dedup", "stream_join_outer", "bm25", "hash_split",
-    "stratified_sample", "zorder_stats", "focal_mean", "tile_pyramid",
-    "pack_chunks", "grid_clusters", "simplify_lines",
-    "embed_ann_ivf_lloyd",
-    "convex_hull", "sobel_stats", "idw_interp", "traj_stats",
-    "spatial_antijoin", "geo_median", "layer_overlay",
-    "geofence", "geofence_stream", "image_extract",
-    "zonal_stats", "blob_stats", "hist_equalize", "semantic_dedup",
-    "merge_upsert", "profile_table", "viewshed", "stream_enrich",
-    "chip_extract", "zonal_weighted", "hillshade", "line_locate",
-    "rollup_agg", "skyline", "flow_d8", "morph_stats", "hull_centroid",
-    "rep_ngram", "contam_check", "domain_mix", "geodesic",
-    "contour_cases", "mosaic_median", "compact_files",
-    "ohlc_bars", "table_diff", "sat_probe", "group_ols", "iqr_outliers",
-    "bpe_vocab", "hll_users", "pagerank_walk", "cohort_retention",
-    "pmi_bigrams", "edit_blocks", "median_filter", "hilbert_stats",
-    "orient_hist", "glcm_texture", "hll_stream", "bloom_probe",
-    "cms_grid", "rolling_stats", "stats_prune", "triangles",
-    "quality_checks", "delete_rows", "textrank", "scd2_build", "funnel_steps", "ab_chisq",
-    "cms_stream", "motion_energy", "stream_sink", "cms_topk",
-    "ab_chisq_big", "ewma_features", "markov_transitions",
-    "attribution", "band_class", "otsu_threshold", "vacuum_table",
-    "geohash_encode", "label_prop", "bpe_encode", "areal_interp",
-    "hist_quantiles", "quantile_stream", "ship_priority",
-    "caption_stats", "flow_accum", "harris_corners", "dist_transform",
-    "cost_distance", "nms_peaks", "upsample2", "mode_resample",
-    "seg_cross", "tfidf_topk", "winsorize", "incremental_read",
-    "moran_i", "raster_equalize", "traj_stays", "od_flows",
-    "interval_overlap", "substring_dups", "ycbcr_stats",
-    "waveform_stats", "trend_mk",
-    "cusum_change", "gap_fill", "bellman_hops",
-    "quadtree_tiles", "box_iou_join", "acf_lags",
-    "audio_pitch", "run_length",
-    "point_sample", "voronoi_assign", "kcore", "image_moments",
-    "dow_seasonal", "dbscan_classify", "hough_lines",
-    "pq_encode", "audio_fp_dedup",
-    "basket_pairs", "mad_outliers",
-    "unpivot_melt", "gini_lorenz", "ripley_k", "knox_test",
-    "lbp_hist", "raster_line", "tpi_class", "jaccard_nodes",
-    "theil_sen", "getis_hotspot", "burst_detect", "bayer_dither",
-    "lm_novelty", "str_pack", "map_algebra", "template_match",
-    "audio_resample", "color_mediancut", "simpson_diversity",
-    "benford_digits",
-    "stock_floor", "max_drawdown", "rfm_scores", "scene_cuts",
-    "local_moran", "yoy_ttest", "clustering_coef", "crossmodal_corr",
-    "hotspot_stream", "terrain_profile", "rake_scores",
-    "weighted_sample", "noise_estimate", "snapshot_diff",
-    "ring_profile", "st_cube", "interval_union",
-    "aspect_class", "fk_orphans", "top3_concat",
-    "sliding_stream", "snaive_error", "value_histogram",
-    "order_gaps", "ahash_balance", "caption_subjects",
-    "fence_visits", "hod_profile", "cume_users",
-    "hhi_brand", "price_runs", "letterbox",
-    "abc_class", "user_paths", "symmetry_score",
-    "json_props", "tile_change",
-    "dedup_latest", "share_of_total",
-]
-
-
-def _gate_last_seen() -> tuple[dict, int]:
-    """(last_seen, newest): for every query name recorded in ANY
-    parseable CORRECTNESS_r*.json at the repo root, the highest round
-    index it appears in, plus the newest round index found. Committed
-    driver artifacts — deterministic for a given checkout. ({}, -1)
-    when none exists (fresh clone)."""
-    import glob as _glob
-    import json as _json
-    import os
-    import re as _re
-    root = os.path.dirname(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))))
-    last_seen: dict = {}
-    newest = -1
-    for path in _glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
-        m = _re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        try:
-            with open(path) as fh:
-                data = _json.load(fh)
-        except Exception:  # noqa: BLE001 — in-progress/corrupt artifact
-            continue
-        if not isinstance(data, dict) or not data:
-            continue
-        newest = max(newest, rnd)
-        for name in data:
-            last_seen[name] = max(last_seen.get(name, -1), rnd)
-    return last_seen, newest
-
-
-def _gate_order(keys) -> list:
-    # With more registered queries than the driver's ~50-row budget,
-    # the gate order must guarantee round-robin coverage, not just
-    # "newest-missing first" (which can starve a tail forever once
-    # registry size > 2× budget). Order:
-    #   1. pricing_summary — the warm-up absorber (one-time JVM/
-    #      broadcast/pandas-worker spin-up lands on a 0.2 s aggregate,
-    #      not on a capstone's recorded time);
-    #   2. brand-new queries (never in any committed artifact), in
-    #      capstone-first (_GATE_FIRST) order;
-    #   3. everything else by ASCENDING last-verified round — the
-    #      stalest rows refresh first, so every query gets a fresh
-    #      driver row within ceil(N / budget) rounds;
-    #   ties: _GATE_FIRST rank, then original registry order (stable
-    #   sort).
-    last_seen, _ = _gate_last_seen()
-    rank = {k: i for i, k in enumerate(_GATE_FIRST)}
-
-    def sort_key(k):
-        return (k != "pricing_summary",
-                k in last_seen,                    # never-recorded first
-                last_seen.get(k, -1),              # stalest first
-                rank.get(k, len(_GATE_FIRST)))
-
-    order = list(keys)
-    order.sort(key=lambda k: sort_key(k))  # stable → registry order tiebreak
-    return order
-
-
-# NOTE: the gate reorder is applied ONCE, at the very END of this
-# module (after the last registration). Re-ordering here would leave
-# any query registered below permanently past the driver's ~50-row
-# budget and invisible to the staleness rotation (the r06 bug that
-# starved cms_stream/motion_energy/stream_sink).
-
-
 # --- video motion energy (r06): frame differencing over the CPNV
 # container — the scene-cut / static-clip screen. Every consecutive
 # channel-0 frame pair scores Σ|Δ| and max|Δ|, exact int64; the
@@ -2650,9 +2409,6 @@ SELECT hour, sk_row, cell, CAST(COUNT(*) AS BIGINT) AS cnt
 FROM s GROUP BY 1, 2, 3
 """
 
-QUERIES["cms_stream"] = q_cms_stream
-QUERIES["motion_energy"] = q_motion_energy
-
 
 # --- streaming → lakehouse sink (r06): the ingestion loop every
 # production pipeline runs — a watermarked file stream lands in the
@@ -2692,8 +2448,6 @@ SELECT event_type, COUNT(*) AS n, ROUND(SUM(value), 4) AS sum_value,
        4 AS n_snapshots
 FROM events GROUP BY 1
 """
-
-QUERIES["stream_sink"] = q_stream_sink
 
 
 # --- streaming top-k heavy hitters (r07, VERDICT r06 next-#4): the
@@ -2744,8 +2498,6 @@ GROUP BY 1, 2
 HAVING COUNT(*) = 4 AND MIN(cnt) >= 5
 """
 
-QUERIES["cms_topk"] = q_cms_topk
-
 
 # --- band-math classification (r07): remote sensing's NDVI pattern
 # over the image fixture — exact integer class boundary (10·(nir−red)
@@ -2787,8 +2539,6 @@ SELECT image_id,
   CAST(SUM(nir - red) AS BIGINT) AS diff_sum
 FROM px GROUP BY 1
 """
-
-QUERIES["band_class"] = q_band_class
 
 
 # --- Otsu automatic threshold (r07): the histogram-based binarization
@@ -2841,8 +2591,6 @@ SELECT image_id, CAST(v AS INT) AS otsu_t, CAST(n0 AS BIGINT) AS n0,
        CAST(n1 AS BIGINT) AS n1, CAST(q AS VARCHAR) AS q_scaled
 FROM rk WHERE rn = 1
 """
-
-QUERIES["otsu_threshold"] = q_otsu_threshold
 
 
 # --- snapshot expiry + orphan cleanup (r07): the vacuum half of
@@ -2903,8 +2651,6 @@ FROM orders WHERE NOT ({_VAC_PRED.replace("div", "//")})
 GROUP BY 1
 """
 
-QUERIES["vacuum_table"] = q_vacuum_table
-
 
 # --- histogram quantile sketch, batch (r07): the fourth sketch next
 # to HLL / Bloom / Count-Min — bounded mergeable state (≤256 bins per
@@ -2938,8 +2684,6 @@ SELECT event_type, CAST(MAX(n) AS BIGINT) AS n,
        MIN(CASE WHEN cum >= (n*99 + 99)//100 THEN bin END) * 2.0 AS p99_lo
 FROM cum GROUP BY 1
 """
-
-QUERIES["hist_quantiles"] = q_hist_quantiles
 
 
 # --- histogram quantile sketch, LIVE (r07): the same bounded-state
@@ -2981,8 +2725,6 @@ SELECT day, event_type, CAST(MAX(n) AS BIGINT) AS n,
        MIN(CASE WHEN cum >= (n*99 + 99)//100 THEN bin END) * 2.0 AS p99_lo
 FROM cum GROUP BY 1, 2
 """
-
-QUERIES["quantile_stream"] = q_quantile_stream
 
 
 # --- caption × pixel joint analytics (r07): the multimodal JOIN the
@@ -3044,8 +2786,6 @@ SELECT CAST(subject AS INT) AS subject, CAST(tone AS INT) AS tone,
        CAST(COUNT(*) AS BIGINT) AS n_px
 FROM px GROUP BY 1, 2
 """
-
-QUERIES["caption_stats"] = q_caption_stats
 
 
 # --- Harris corner response (r07): the interest-point detector next
@@ -3118,8 +2858,6 @@ SELECT image_id,
 FROM r GROUP BY 1
 """
 
-QUERIES["harris_corners"] = q_harris_corners
-
 
 # --- incremental (CDC append) read (r07): Iceberg incremental scan /
 # Delta readChangeFeed for an append-only history — the consumer that
@@ -3160,8 +2898,6 @@ WHERE o_orderkey // 4096 > (SELECT MIN(o_orderkey // 4096) FROM orders)
 GROUP BY 1
 """
 
-QUERIES["incremental_read"] = q_incremental_read
-
 
 # --- integer RGB→YCbCr conversion (r07): the color-space transform
 # every JPEG/video encoder and augmentation pipeline runs first, and
@@ -3201,8 +2937,6 @@ SELECT image_id,
        CAST(SUM(128*r - 107*g - 21*b) AS BIGINT) AS sum_cr
 FROM px GROUP BY 1
 """
-
-QUERIES["ycbcr_stats"] = q_ycbcr_stats
 
 
 # --- audio waveform features (r07): the AUDIO leg of the multimodal
@@ -3258,8 +2992,6 @@ FROM px p JOIN vad v USING (clip_id)
 GROUP BY 1, v.n_frames, v.n_voiced
 """
 
-QUERIES["waveform_stats"] = q_waveform_stats
-
 
 # --- autocorrelation pitch estimation (r07 wave D): the ACF pitch
 # tracker (YIN/RAPT first stage) over the s16le clips — R(L) =
@@ -3307,8 +3039,6 @@ FROM sel s
 JOIN best b ON b.clip_id = s.clip_id
 JOIN acf a32 ON a32.clip_id = s.clip_id AND a32.lag = 32
 """
-
-QUERIES["audio_pitch"] = q_audio_pitch
 
 
 # --- run-length encoding statistics (r07 wave D): the RLE
@@ -3358,8 +3088,6 @@ SELECT image_id,
 FROM runs GROUP BY 1
 """
 
-QUERIES["run_length"] = q_run_length
-
 
 # --- raw + central image moments (r07 wave E): cv2.moments / Hu-
 # moment stage-one on channel 0 — mass, centroid numerators, and
@@ -3400,8 +3128,6 @@ SELECT image_id, mass, m10, m01,
                  - (mass * m02 - m01 * m01)) AS BIGINT) AS elong
 FROM m
 """
-
-QUERIES["image_moments"] = q_image_moments
 
 
 # --- Hough line detection (r07 wave F): Duda–Hart voting with
@@ -3490,8 +3216,6 @@ LEFT JOIN t1 ON t1.image_id = i.image_id
 LEFT JOIN r1 ON r1.image_id = i.image_id
 """
 
-QUERIES["hough_lines"] = q_hough_lines
-
 
 # --- product quantization encode (r07 wave G): Jégou-style PQ over
 # the embeddings table — the compression half of IVF+PQ (the IVF
@@ -3541,8 +3265,6 @@ FROM coded
 
 
 ORACLE["pq_encode"] = _pq_oracle()
-
-QUERIES["pq_encode"] = q_pq_encode
 
 
 # --- banded audio-fingerprint dedup (r07 wave G): the audio analog
@@ -3618,8 +3340,6 @@ SELECT id_a, id_b, CAST(bit_count(xor(fp_a, fp_b)) AS BIGINT) AS ham
 FROM pairs WHERE bit_count(xor(fp_a, fp_b)) <= 2
 """
 
-QUERIES["audio_fp_dedup"] = q_audio_fp_dedup
-
 
 # --- local binary patterns (r07 wave J): Ojala's LBP texture codes
 # over channel-0 interior pixels — bit k ⟺ neighbor_k ≥ centre
@@ -3683,8 +3403,6 @@ SELECT image_id,
 FROM uni GROUP BY 1
 """
 
-QUERIES["lbp_hist"] = q_lbp_hist
-
 
 # --- Bayer ordered dithering (r07 wave K): halftoning chosen over
 # Floyd–Steinberg because the threshold matrix is position-local
@@ -3736,8 +3454,6 @@ SELECT image_id,
 FROM bit GROUP BY 1
 """
 
-QUERIES["bayer_dither"] = q_bayer_dither
-
 
 # --- template matching (r07 wave L): raw integer cross-correlation
 # of the fixed 5×5 signed template (operators/multimodal.py::TMPL5)
@@ -3783,8 +3499,6 @@ SELECT image_id, CAST(r AS BIGINT) AS best_r, CAST(c AS BIGINT) AS best_c,
 FROM best WHERE rn = 1
 """
 
-QUERIES["template_match"] = q_template_match
-
 
 # --- rational 2/3 audio resample (r07 wave M): linear-interp
 # downsampling kept exact by 2×-scaled output samples (even k reads
@@ -3820,8 +3534,6 @@ SELECT clip_id, CAST(MAX(n_out) AS BIGINT) AS n_out,
        CAST(MAX(ABS(out2)) AS BIGINT) AS max_abs2
 FROM o GROUP BY 1
 """
-
-QUERIES["audio_resample"] = q_audio_resample
 
 
 # --- median-cut first split (r07 wave M): Heckbert's palette
@@ -3875,8 +3587,6 @@ SELECT s.image_id, CAST(MAX(s.split_c) AS BIGINT) AS split_c,
 FROM sel s JOIN med m USING (image_id)
 GROUP BY 1
 """
-
-QUERIES["color_mediancut"] = q_color_mediancut
 
 
 # --- scene-cut detection (r07 wave N): the shot-boundary screen a
@@ -3940,8 +3650,6 @@ SELECT image_id,
        CAST(MAX(motion_l1) AS BIGINT) AS max_l1
 FROM pairs GROUP BY 1
 """
-
-QUERIES["scene_cuts"] = q_scene_cuts
 
 
 # --- cross-modal correlation (r07 wave O): the image↔caption JOINT
@@ -4019,8 +3727,6 @@ SELECT CAST(COUNT(*) AS BIGINT) AS n,
 FROM ysum
 """
 
-QUERIES["crossmodal_corr"] = q_crossmodal_corr
-
 
 # --- LIVE streaming spatial hotspot grid (r07 wave P): tumbling
 # 1-hour per-2km-tile counts under a watermark
@@ -4055,8 +3761,6 @@ FROM events
 GROUP BY 1, 2, 3
 """
 
-QUERIES["hotspot_stream"] = q_hotspot_stream
-
 
 # --- Laplacian noise estimate (r07 wave Q): Immerkær's estimator,
 # integer core |4v − N − S − E − W| per interior pixel
@@ -4087,8 +3791,6 @@ SELECT image_id, CAST(COUNT(*) AS BIGINT) AS n_interior,
        CAST(MAX(l) AS BIGINT) AS lap_max
 FROM lap GROUP BY 1
 """
-
-QUERIES["noise_estimate"] = q_noise_estimate
 
 
 # --- IceLite snapshot diff (r07 wave Q): the "what changed between
@@ -4144,8 +3846,6 @@ SELECT o_orderstatus,
 FROM orders GROUP BY 1
 """
 
-QUERIES["snapshot_diff"] = q_snapshot_diff
-
 
 # --- LIVE sliding-window stream (r07 wave T): 2-hour windows
 # sliding hourly (streaming/events.py::sliding_counts) — the overlap
@@ -4180,8 +3880,6 @@ SELECT win_start, event_type,
        ROUND(SUM(value), 4) AS sum_value
 FROM starts GROUP BY 1, 2
 """
-
-QUERIES["sliding_stream"] = q_sliding_stream
 
 
 # --- aHash bit-balance audit (r07 wave U): hash-quality check over
@@ -4237,8 +3935,6 @@ SELECT b, n_set, CAST(240 AS BIGINT) AS n_images,
 FROM agg
 """
 
-QUERIES["ahash_balance"] = q_ahash_balance
-
 
 # --- caption subject extraction (r07 wave U): the regex field-
 # extraction every caption/metadata pipeline runs — parse
@@ -4271,8 +3967,6 @@ SELECT CAST(subject AS BIGINT) AS subject,
        CAST(SUM(px) AS BIGINT) AS sum_px
 FROM imgs GROUP BY 1
 """
-
-QUERIES["caption_subjects"] = q_caption_subjects
 
 
 # --- letterbox detection (r07 wave W): dark-border screen
@@ -4317,8 +4011,6 @@ SELECT image_id, border_n, border_sum, interior_n, interior_sum,
 FROM agg
 """
 
-QUERIES["letterbox"] = q_letterbox
-
 
 # --- mirror symmetry score (r07 wave X): horizontal-mirror
 # asymmetry Σ|v[r,c] − v[r,w−1−c]| over the left half of channel 0
@@ -4356,12 +4048,8 @@ SELECT image_id, CAST(COUNT(*) AS BIGINT) AS n_pairs,
 FROM d GROUP BY 1
 """.replace("FROM imgs_range", "FROM range(150) t(i)")
 
-QUERIES["symmetry_score"] = q_symmetry_score
 
-
-# ---------------------------------------------------------------------------
-# Gate reorder — MUST stay the LAST statement that touches QUERIES.
-# Every registration above (including late waves appended at the end of
-# the module) is visible to the staleness rotation only because this
-# runs after all of them. New queries: register above this line.
-QUERIES = {k: QUERIES[k] for k in _gate_order(QUERIES)}
+_PLAN_MODULES = (sys.modules[__name__], relational, spatial_queries, textops)
+QUERIES = {name[2:]: fn
+           for mod in _PLAN_MODULES for name, fn in vars(mod).items()
+           if name.startswith("q_") and fn.__module__ == mod.__name__}

@@ -521,29 +521,6 @@ WHERE NOT EXISTS (
 """
 
 
-QUERIES = {
-    "pricing_summary": q_pricing_summary,
-    "profile_table": q_profile_table,
-    "rollup_agg": q_rollup_agg,
-    "skyline": q_skyline,
-    "ohlc_bars": q_ohlc_bars,
-    "iqr_outliers": q_iqr_outliers,
-    "table_diff": q_table_diff,
-    "filtered_min": q_filtered_min,
-    "weighted_mean": q_weighted_mean,
-    "multi_join": q_multi_join,
-    "theta_join": q_theta_join,
-    "left_coalesce": q_left_coalesce,
-    "pivot_wide": q_pivot_wide,
-    "union_all": q_union_all,
-    "window_topk": q_window_topk,
-    "conditional_recode": q_conditional_recode,
-    "distinct_count": q_distinct_count,
-    "sort_limit": q_sort_limit,
-    "tumbling_window": q_tumbling_window,
-}
-
-
 # --- HyperLogLog distinct sketch (r06): the register TABLE is the
 # query output, so the driver verifies every register bit-for-bit
 # (md5 / conv / bin all probed engine-identical). The float estimate
@@ -683,10 +660,6 @@ SELECT node, mass FROM m{iters}
 
 ORACLE["pagerank_walk"] = _pagerank_oracle()
 
-QUERIES["hll_users"] = q_hll_users
-QUERIES["cohort_retention"] = q_cohort_retention
-QUERIES["pagerank_walk"] = q_pagerank_walk
-
 
 # --- Bloom-filter semi-join pre-filter (r06): build the bitset over
 # high-balance customers, probe every ordering customer. The bits are
@@ -775,9 +748,6 @@ SELECT sk_row, cell, CAST(COUNT(*) AS BIGINT) AS cnt
 FROM s GROUP BY 1, 2
 """
 
-QUERIES["bloom_probe"] = q_bloom_probe
-QUERIES["cms_grid"] = q_cms_grid
-
 
 # --- rolling time-range window features (r06): per-user trailing-hour
 # activity (count + sum) at every event — the classic point-in-time
@@ -810,8 +780,6 @@ FROM (
 WINDOW w AS (PARTITION BY user_id ORDER BY sec
              RANGE BETWEEN 3599 PRECEDING AND CURRENT ROW)
 """
-
-QUERIES["rolling_stats"] = q_rolling_stats
 
 
 # --- triangle counting (r06): the third graph-analytics op next to
@@ -890,8 +858,6 @@ FROM (
 GROUP BY 1
 """
 
-QUERIES["triangles"] = q_triangles
-
 
 # --- declarative data-quality suite (r06): five constraint checks
 # compiled into ONE aggregate pass (k checks must never mean k scans
@@ -945,8 +911,6 @@ UNION ALL
 SELECT 'min_rows(100)', CAST(COUNT(*) AS BIGINT), COUNT(*) >= 100
 FROM orders
 """
-
-QUERIES["quality_checks"] = q_quality_checks
 
 
 # --- SCD Type 2 dimension build (r06): the classic warehouse op —
@@ -1002,8 +966,6 @@ SELECT user_id, k, valid_from,
 FROM seg
 """
 
-QUERIES["scd2_build"] = q_scd2_build
-
 
 # --- batch funnel analysis (r06): strictly-ordered 3-step conversion
 # (view → click → purchase) per user — the batch twin of the
@@ -1055,8 +1017,6 @@ SELECT t1.user_id, t1.t1, t2.t2, t3.t3,
 FROM t1 LEFT JOIN t2 ON t1.user_id = t2.user_id
         LEFT JOIN t3 ON t1.user_id = t3.user_id
 """
-
-QUERIES["funnel_steps"] = q_funnel_steps
 
 
 # --- A/B test with an EXACT chi-square verdict (r06): variant =
@@ -1122,8 +1082,6 @@ SELECT a, b, c2, d,
          > 384 * (a+b) * (c2+d) * (a+c2) * (b+d) AS significant_95
 FROM w
 """
-
-QUERIES["ab_chisq"] = q_ab_chisq
 
 
 # --- DECIMAL(38) chi-square (r07, VERDICT r06 next-#5): ab_chisq's
@@ -1191,8 +1149,6 @@ SELECT a, b, c2, d,
 FROM h
 """
 
-QUERIES["ab_chisq_big"] = q_ab_chisq_big
-
 
 # --- fixed-point EWMA user features (r07, VERDICT r06 next-#8): the
 # one common feature-pipeline op that was still absent. Floats under a
@@ -1249,8 +1205,6 @@ SELECT user_id,
 FROM k GROUP BY 1
 """
 
-QUERIES["ewma_features"] = q_ewma_features
-
 
 # --- Markov transition matrix (r07): per-user event-type bigrams in
 # (ts, event_id) order — the session-modeling primitive (next-action
@@ -1287,8 +1241,6 @@ SELECT from_type, to_type, n,
        n = MAX(n) OVER (PARTITION BY from_type) AS is_mode
 FROM c
 """
-
-QUERIES["markov_transitions"] = q_markov_transitions
 
 
 # --- conversion attribution (r07): for every purchase, credit the
@@ -1337,8 +1289,6 @@ UNION ALL
 SELECT 'first', COALESCE(ft, 'organic'), CAST(COUNT(*) AS BIGINT)
 FROM o WHERE event_type = 'purchase' GROUP BY 2
 """
-
-QUERIES["attribution"] = q_attribution
 
 
 # --- label propagation communities (r07): the third graph kernel next
@@ -1424,8 +1374,6 @@ WITH e AS (
 
 ORACLE["label_prop"] = _label_prop_oracle()
 
-QUERIES["label_prop"] = q_label_prop
-
 
 # --- shipping priority, exact-integer TPC-H Q3 (r07): the classic
 # 3-way join + revenue top-k, with the money math EXACT — prices and
@@ -1465,8 +1413,6 @@ GROUP BY 1, 2, 3
 ORDER BY revenue_c4 DESC, o_orderkey ASC
 LIMIT 10
 """
-
-QUERIES["ship_priority"] = q_ship_priority
 
 
 # --- per-group winsorized sum (r07): robust aggregation — clip each
@@ -1536,8 +1482,6 @@ FROM r JOIN g USING (c_nationkey)
 GROUP BY 1, 2, 3, 4, 5
 """
 
-QUERIES["winsorize"] = q_winsorize
-
 
 # --- sweep-line interval concurrency (r07): max simultaneous open
 # intervals per group — the "how many shipments in transit at once"
@@ -1591,8 +1535,6 @@ SELECT l_suppkey,
        CAST(MAX(open_) AS BIGINT) AS max_open
 FROM run GROUP BY 1
 """
-
-QUERIES["interval_overlap"] = q_interval_overlap
 
 
 # --- CUSUM changepoint detection (r07 wave D): the classic
@@ -1659,8 +1601,6 @@ SELECT l_suppkey,
        CAST(MIN(CASE WHEN absd = mx THEN day END) AS BIGINT) AS cp_day
 FROM d GROUP BY 1
 """
-
-QUERIES["cusum_change"] = q_cusum_change
 
 
 # --- time-series gap fill with linear interpolation (r07 wave D):
@@ -1749,8 +1689,6 @@ SELECT l_suppkey,
 FROM s GROUP BY 1
 """
 
-QUERIES["gap_fill"] = q_gap_fill
-
 
 # --- Bellman-Ford shortest paths, k min-plus rounds (r07 wave D):
 # weighted single-source-set shortest distance over the user-journey
@@ -1816,8 +1754,6 @@ SELECT node, CAST(dist AS BIGINT) AS dist FROM d{rounds}""")
 
 
 ORACLE["bellman_hops"] = _bellman_oracle()
-
-QUERIES["bellman_hops"] = q_bellman_hops
 
 
 # --- k-core decomposition, 3 prune rounds (r07 wave E): the graph-
@@ -1888,8 +1824,6 @@ SELECT node, deg FROM a{rounds}""")
 
 ORACLE["kcore"] = _kcore_oracle()
 
-QUERIES["kcore"] = q_kcore
-
 
 # --- day-of-week seasonal indices (r07 wave F): the season/trend
 # split (STL's seasonal component at weekly period) every demand-
@@ -1946,8 +1880,6 @@ SELECT g.l_suppkey, g.dow, g.n_days, g.sum_v,
        t.n_tot * g.n_days AS effect_den
 FROM g JOIN tot t ON t.l_suppkey = g.l_suppkey
 """
-
-QUERIES["dow_seasonal"] = q_dow_seasonal
 
 
 # --- market-basket pair mining (r07 wave H): co-occurrence counting,
@@ -2007,8 +1939,6 @@ JOIN cnt ca ON ca.l_partkey = p.part_a
 JOIN cnt cb ON cb.l_partkey = p.part_b
 CROSS JOIN n
 """
-
-QUERIES["basket_pairs"] = q_basket_pairs
 
 
 # --- median absolute deviation outliers (r07 wave H): the robust
@@ -2083,8 +2013,6 @@ SELECT c_nationkey,
 FROM m5 GROUP BY 1
 """
 
-QUERIES["mad_outliers"] = q_mad_outliers
-
 
 # --- unpivot / melt (r07 wave I): the wide→long reshape every
 # feature-store export needs — four lineitem money/quantity metrics
@@ -2127,8 +2055,6 @@ SELECT metric, CAST(COUNT(*) AS BIGINT) AS n,
        MIN(value_cents) AS min_cents, MAX(value_cents) AS max_cents
 FROM long GROUP BY metric
 """
-
-QUERIES["unpivot_melt"] = q_unpivot_melt
 
 
 # --- Gini / Lorenz inequality (r07 wave I): per-nation wealth
@@ -2182,8 +2108,6 @@ SELECT c_nationkey,
          AS lorenz_half
 FROM r GROUP BY 1
 """
-
-QUERIES["gini_lorenz"] = q_gini_lorenz
 
 
 # --- graph node Jaccard similarity (r07 wave J): link-prediction's
@@ -2252,8 +2176,6 @@ JOIN deg da ON da.node = c.a
 JOIN deg db ON db.node = c.b
 """
 
-QUERIES["jaccard_nodes"] = q_jaccard_nodes
-
 
 # --- Theil–Sen robust trend (r07 wave K): the median-of-pairwise-
 # slopes estimator over per-nation yearly revenue — outlier-proof
@@ -2310,8 +2232,6 @@ SELECT nk, CAST(np AS BIGINT) AS n_pairs, dy AS med_dy, dx AS med_dx
 FROM r WHERE rn = (np + 1) // 2
 """
 
-QUERIES["theil_sen"] = q_theil_sen
-
 
 # --- Gini–Simpson diversity (r07 wave M): the entropy-free diversity
 # index (1 − Σp²) a profiler reports per key — chosen over Shannon
@@ -2352,8 +2272,6 @@ SELECT user_id, CAST(SUM(c) AS BIGINT) AS n,
        MAX(CASE WHEN rn = 1 THEN event_type END) AS top_type
 FROM r GROUP BY 1
 """
-
-QUERIES["simpson_diversity"] = q_simpson_diversity
 
 
 # --- Benford first-digit screen (r07 wave M): the fraud/data-quality
@@ -2397,8 +2315,6 @@ SELECT digit, n_d, t.n, 9 * n_d - t.n AS dev9,
        COALESCE(n_d >= LEAD(n_d) OVER (ORDER BY digit), TRUE) AS ge_next
 FROM cnt CROSS JOIN tot t
 """
-
-QUERIES["benford_digits"] = q_benford_digits
 
 
 # --- floored running balance (r07 wave N): the inventory/queueing
@@ -2459,8 +2375,6 @@ SELECT l_suppkey,
 FROM f GROUP BY 1
 """
 
-QUERIES["stock_floor"] = q_stock_floor
-
 
 # --- maximum drawdown (r07 wave N): the risk metric over each
 # part's shipment-ordered price path — running peak via a cumulative
@@ -2508,8 +2422,6 @@ SELECT l_partkey,
          AS last_cents
 FROM r GROUP BY 1
 """
-
-QUERIES["max_drawdown"] = q_max_drawdown
 
 
 # --- RFM quintile scoring (r07 wave N): the classic customer
@@ -2578,8 +2490,6 @@ SELECT o_custkey, freq, cents,
        CAST(100 * r_score + 10 * f_score + m_score AS BIGINT) AS rfm
 FROM r
 """
-
-QUERIES["rfm_scores"] = q_rfm_scores
 
 
 # --- paired YoY t-test (r07 wave O): for customers active in BOTH
@@ -2653,8 +2563,6 @@ SELECT c_nationkey, n, sum_d, sum_d2,
 FROM m
 """
 
-QUERIES["yoy_ttest"] = q_yoy_ttest
-
 
 # --- graph clustering coefficient (r07 wave O): per node of the
 # part co-purchase graph (the jaccard_nodes edge set — sparse by the
@@ -2715,8 +2623,6 @@ SELECT deg.v, deg.deg, COALESCE(c.t_v, 0) AS t_v,
 FROM deg LEFT JOIN closed c USING (v)
 """
 
-QUERIES["clustering_coef"] = q_clustering_coef
-
 
 # --- deterministic weighted sampling (r07 wave Q): the importance-
 # sampling screen a curation pipeline applies ("keep expensive
@@ -2761,8 +2667,6 @@ SELECT o_orderpriority,
          AS sampled_cents
 FROM s GROUP BY 1
 """
-
-QUERIES["weighted_sample"] = q_weighted_sample
 
 
 # --- interval-union coverage (r07 wave R): total covered time per
@@ -2819,8 +2723,6 @@ SELECT user_id, CAST(COUNT(*) AS BIGINT) AS n_islands,
        CAST(SUM(hi - lo) // 1000000 AS BIGINT) AS covered_sec
 FROM per_island GROUP BY 1
 """
-
-QUERIES["interval_union"] = q_interval_union
 
 
 # --- referential-integrity audit (r07 wave S): the FK orphan scan a
@@ -2882,8 +2784,6 @@ SELECT 'customer.nationkey',
              WHERE n.n_nationkey IS NULL) AS BIGINT)
 """
 
-QUERIES["fk_orphans"] = q_fk_orphans
-
 
 # --- ordered top-k concatenation (r07 wave S): the "show me the top
 # 3 per group as one cell" presentation rollup — per nation the
@@ -2915,8 +2815,6 @@ SELECT c_nationkey, CAST(COUNT(*) AS BIGINT) AS n,
                                   DESC, c_custkey), 1, 3), ':') AS top3
 FROM customer GROUP BY 1
 """
-
-QUERIES["top3_concat"] = q_top3_concat
 
 
 # --- seasonal-naive forecast error (r07 wave T): the baseline every
@@ -2981,8 +2879,6 @@ FROM err WHERE abs_err IS NOT NULL
 GROUP BY 1
 """
 
-QUERIES["snaive_error"] = q_snaive_error
-
 
 # --- fixed-width value histogram (r07 wave T): the profiler's
 # distribution sketch — events.value binned into 25-unit buckets
@@ -3009,8 +2905,6 @@ SELECT LEAST(CAST(FLOOR(value / 25) AS BIGINT), 19) AS bin,
          AS sum_cents
 FROM events GROUP BY 1
 """
-
-QUERIES["value_histogram"] = q_value_histogram
 
 
 # --- inter-order gap analysis (r07 wave U): per-customer purchase
@@ -3053,8 +2947,6 @@ WHERE gap IS NOT NULL
 GROUP BY 1
 """
 
-QUERIES["order_gaps"] = q_order_gaps
-
 
 # --- hour-of-day profile (r07 wave V): the diurnal activity
 # fingerprint per event type — 24-bin UTC hour histogram with
@@ -3096,8 +2988,6 @@ SELECT event_type, CAST(hod AS BIGINT) AS hod, n, sum_cents,
 FROM r
 """
 
-QUERIES["hod_profile"] = q_hod_profile
-
 
 # --- cumulative user growth (r07 wave V): the growth-accounting
 # curve — each user's FIRST active day (min over the event stream),
@@ -3133,8 +3023,6 @@ SELECT first_day AS day, n_new,
        CAST(SUM(n_new) OVER (ORDER BY first_day) AS BIGINT) AS cum_users
 FROM daily
 """
-
-QUERIES["cume_users"] = q_cume_users
 
 
 # --- Herfindahl concentration (r07 wave W): the antitrust /
@@ -3175,8 +3063,6 @@ SELECT p_brand, CAST(COUNT(*) AS BIGINT) AS n_suppliers,
        4 * MAX(qs) * MAX(qs) > SUM(qs) * SUM(qs) AS dominated
 FROM bysup GROUP BY 1
 """
-
-QUERIES["hhi_brand"] = q_hhi_brand
 
 
 # --- price run analysis (r07 wave W): tick-direction statistics over
@@ -3253,8 +3139,6 @@ SELECT l_partkey,
 FROM runs GROUP BY 1
 """
 
-QUERIES["price_runs"] = q_price_runs
-
 
 # --- ABC / Pareto classification (r07 wave X): the inventory
 # analysis staple — parts ranked by revenue, classified A while the
@@ -3313,8 +3197,6 @@ SELECT cls, CAST(COUNT(*) AS BIGINT) AS n_parts,
 FROM cls GROUP BY 1
 """
 
-QUERIES["abc_class"] = q_abc_class
-
 
 # --- user path analysis (r07 wave X): the Sankey-diagram feed —
 # each user's FIRST THREE event types in (ts, event_id) order
@@ -3349,8 +3231,6 @@ WITH ordered AS (
 SELECT path, CAST(COUNT(*) AS BIGINT) AS n_users
 FROM path GROUP BY 1
 """
-
-QUERIES["user_paths"] = q_user_paths
 
 
 # --- semi-structured JSON extraction (r07 wave Y): the props column
@@ -3392,8 +3272,6 @@ SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
 FROM ev GROUP BY 1
 """
 
-QUERIES["json_props"] = q_json_props
-
 
 # --- CDC keep-latest compaction (r07 wave Z): the change-stream →
 # current-state primitive (Kafka log compaction / Debezium "last
@@ -3430,8 +3308,6 @@ SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_keys,
        CAST(SUM(cents) AS BIGINT) AS kept_cents
 FROM r WHERE rn = 1 GROUP BY 1
 """
-
-QUERIES["dedup_latest"] = q_dedup_latest
 
 
 # --- share-of-total report (r07 wave Z): the BI percent-of-total
@@ -3474,5 +3350,3 @@ SELECT nk, cents,
             // t.tot AS BIGINT) AS cum_ppm
 FROM rev CROSS JOIN tot t
 """
-
-QUERIES["share_of_total"] = q_share_of_total

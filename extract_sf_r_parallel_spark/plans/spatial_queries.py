@@ -310,8 +310,8 @@ def _sql_circle_rect_area(r: float) -> str:
             f"+ {B(tx0, ty0)})")
 
 
-# Rounding contract shared by the Spark flagship queries (registry.py
-# _flagship_select) and this oracle: both engines compute independently
+# Rounding contract shared by the Spark flagship queries
+# (_flagship_select) and this oracle: both engines compute independently
 # then ROUND at digits ≥3 orders above the measured cross-engine error.
 FLAGSHIP_ROUND = {"NEAR_DIST": 4, "AREA": 2, "PROP": 6, "MEANAGE": 4}
 
@@ -843,15 +843,27 @@ def q_polyline_knn(spark, sf_dir):
 _WET_CLASSES = ("Bog", "Fen", "Marsh", "Open Water", "Swamp")
 
 
-def _wet_select(out):
+def _flagship_select(df):
+    """Rounding contract shared with the DuckDB oracles
+    (FLAGSHIP_ROUND). MEANAGE, when present, is gated on the ROUNDED
+    area > 0 on both engines, which also unifies the fused path's NaN
+    with the join path's NULL for empty candidate sets."""
     d = FLAGSHIP_ROUND
-    cols = [F.col("PKEY"), F.col("SS"), F.col("YEAR"),
-            F.col("layer").alias("CWCS_Class"),
+    cols = [F.col("PKEY"), F.col("SS"), F.col("YEAR"), F.col("layer"),
             F.round("NEAR_DIST", d["NEAR_DIST"]).alias("NEAR_DIST")]
     for r in (150, 565):
-        cols.append(F.round(F.col(f"AREA{r}"), d["AREA"]).alias(f"AREA{r}"))
+        area = F.round(F.col(f"AREA{r}"), d["AREA"])
+        cols.append(area.alias(f"AREA{r}"))
         cols.append(F.round(F.col(f"PROP{r}"), d["PROP"]).alias(f"PROP{r}"))
-    return out.select(*cols)
+        if f"MEANAGE_{r}" in df.columns:
+            cols.append(F.when(area > 0, F.round(F.col(f"MEANAGE_{r}"),
+                                                 d["MEANAGE"]))
+                        .alias(f"MEANAGE_{r}"))
+    return df.select(*cols)
+
+
+def _wet_select(out):
+    return _flagship_select(out).withColumnRenamed("layer", "CWCS_Class")
 
 
 def q_areadist_wet(spark, sf_dir):
@@ -2173,51 +2185,6 @@ WHERE a.rxmin <= b.rxmax AND b.rxmin <= a.rxmax
 """
 
 
-QUERIES = {
-    "tile_counts": q_tile_counts,
-    "zorder_stats": q_zorder_stats,
-    "focal_mean": q_focal_mean,
-    "tile_pyramid": q_tile_pyramid,
-    "grid_clusters": q_grid_clusters,
-    "simplify_lines": q_simplify_lines,
-    "range_near": q_range_near,
-    "areadist_square": q_areadist_square,
-    "knn3": q_knn3,
-    "theta_spatial": q_theta_spatial,
-    "dist_quantiles": q_dist_quantiles,
-    "reproject": q_reproject,
-    "shapefile_scan": q_shapefile_scan,
-    "polyline_knn": q_polyline_knn,
-    "areadist_dissolve": q_areadist_dissolve,
-    "areadist_dissolve_join": q_areadist_dissolve_join,
-    "areadist_wet": q_areadist_wet,
-    "areadist_wet_sum": q_areadist_wet_sum,
-    "validity_filter": q_validity_filter,
-    "raster_roundtrip": q_raster_roundtrip,
-    "shard_roundtrip": q_shard_roundtrip,
-    "icelite_evolution": q_icelite_evolution,
-    "merge_upsert": q_merge_upsert,
-    "compact_files": q_compact_files,
-    "group_ols": q_group_ols,
-    "csv_roundtrip": q_csv_roundtrip,
-    "spatial_antijoin": q_spatial_antijoin,
-    "traj_stats": q_traj_stats,
-    "idw_interp": q_idw_interp,
-    "convex_hull": q_convex_hull,
-    "hull_centroid": q_hull_centroid,
-    "geo_median": q_geo_median,
-    "layer_overlay": q_layer_overlay,
-    "zonal_stats": q_zonal_stats,
-    "zonal_weighted": q_zonal_weighted,
-    "viewshed": q_viewshed,
-    "hillshade": q_hillshade,
-    "flow_d8": q_flow_d8,
-    "geodesic": q_geodesic,
-    "contour_cases": q_contour_cases,
-    "line_locate": q_line_locate,
-}
-
-
 # --- Hilbert-curve layout (r06): the second space-filling curve next
 # to zorder_stats — same bucket-bbox report, different curve. The
 # engine unrolls the 8-level xy2d rotation fold into chained integer
@@ -2249,8 +2216,6 @@ FROM h0 GROUP BY 1
 
 
 ORACLE["hilbert_stats"] = _hilbert_oracle()
-
-QUERIES["hilbert_stats"] = q_hilbert_stats
 
 
 # --- manifest-stats scan pruning (r06): the 100 TB payoff of the
@@ -2296,8 +2261,6 @@ SELECT o.o_orderstatus,
 FROM orders o WHERE o_orderkey BETWEEN 5000 AND 8000
 GROUP BY 1
 """
-
-QUERIES["stats_prune"] = q_stats_prune
 
 
 # --- lakehouse row-level DELETE (r06): the third DML verb next to
@@ -2347,8 +2310,6 @@ FROM orders WHERE NOT ({_DEL_PRED})
 GROUP BY 1
 """
 
-QUERIES["delete_rows"] = q_delete_rows
-
 
 # --- geohash encoding + prefix rollup (r07): the human-shareable
 # spatial index code next to Z-order and Hilbert — 5 bits/char base32,
@@ -2391,8 +2352,6 @@ FROM g GROUP BY 1
 
 
 ORACLE["geohash_encode"] = _geohash_oracle()
-
-QUERIES["geohash_encode"] = q_geohash_encode
 
 
 # --- vector-vector areal interpolation (r07): transfer an attribute
@@ -2460,8 +2419,6 @@ FROM o WHERE ovx > 0 AND ovy > 0
 GROUP BY 1, 2
 """
 
-QUERIES["areal_interp"] = q_areal_interp
-
 
 # --- k-step D8 flow accumulation (r07): hydrology's second
 # derivative over flow_d8's directions — route unit mass downslope
@@ -2519,8 +2476,6 @@ SELECT cx // 25 AS bx, cy // 25 AS by,
 FROM a2 GROUP BY 1, 2
 """
 
-QUERIES["flow_accum"] = q_flow_accum
-
 
 # --- k-bounded city-block distance transform (r07): per cell, L1
 # distance to the nearest feature cell (v ≥ 990, ~1% density), capped
@@ -2559,8 +2514,6 @@ SELECT cx // 25 AS bx, cy // 25 AS by,
        COUNT(CASE WHEN d <= 3 THEN 1 END) AS n_reached
 FROM d3 GROUP BY 1, 2
 """
-
-QUERIES["dist_transform"] = q_dist_transform
 
 
 # --- k-bounded cost-distance surface (r07): the WEIGHTED sibling of
@@ -2601,8 +2554,6 @@ SELECT cx // 25 AS bx, cy // 25 AS by,
 FROM d3 GROUP BY 1, 2
 """
 
-QUERIES["cost_distance"] = q_cost_distance
-
 
 # --- 3×3 non-maximum suppression (r07): strict-local-max peak
 # selection over the raster (the post-detector step of Harris/DoG,
@@ -2637,8 +2588,6 @@ SELECT cx // 25 AS bx, cy // 25 AS by,
 FROM j GROUP BY 1, 2
 """
 
-QUERIES["nms_peaks"] = q_nms_peaks
-
 
 # --- exact 2× bilinear disaggregation (r07): terra disagg(bilinear) /
 # gdalwarp -r bilinear at half pitch, half-pixel-centre alignment —
@@ -2668,8 +2617,6 @@ SELECT tx // 50 AS bx, ty // 50 AS by,
        CAST(SUM(v16) AS BIGINT) AS sum_v16
 FROM t WHERE n = 4 GROUP BY 1, 2
 """
-
-QUERIES["upsample2"] = q_upsample2
 
 
 # --- majority (modal) resampling (r07): categorical-raster
@@ -2702,8 +2649,6 @@ SELECT gx // 25 AS bx, gy // 25 AS by,
        CAST(MAX(mode_v) AS BIGINT) AS max_mode
 FROM m WHERE rn = 1 GROUP BY 1, 2
 """
-
-QUERIES["mode_resample"] = q_mode_resample
 
 
 # --- segment × segment crossing count (r07): the line-layer overlay
@@ -2766,8 +2711,6 @@ SELECT rx // 2048 AS bx, ry // 2048 AS by, COUNT(*) AS n_cross
 FROM p GROUP BY 1, 2
 """
 
-QUERIES["seg_cross"] = q_seg_cross
-
 
 # --- global Moran's I (r07): THE spatial-autocorrelation statistic
 # (spdep moran.test / PySAL esda.Moran / ArcGIS Spatial
@@ -2810,8 +2753,6 @@ SELECT t.n, t.s AS s_sum, p.w_pairs, p.num, d.den,
 FROM tot t, pairs p, den d
 """
 
-QUERIES["moran_i"] = q_moran_i
-
 
 # --- raster-wide histogram equalization (r07): the MOSAIC contrast
 # normalization (gdal -scale over a global histogram, GRASS
@@ -2851,8 +2792,6 @@ SELECT cx // 25 AS bx, cy // 25 AS by,
 FROM px JOIN lut USING (v)
 GROUP BY 1, 2
 """
-
-QUERIES["raster_equalize"] = q_raster_equalize
 
 
 # --- trajectory stay-point segmentation (r07): split each user's
@@ -2909,8 +2848,6 @@ SELECT user_id,
 FROM per_seg GROUP BY 1
 """
 
-QUERIES["traj_stays"] = q_traj_stays
-
 
 # --- origin–destination tile flows (r07): the mobility OD matrix
 # (operators/trajectory.py::od_matrix) over 4 km tiles of the LCG
@@ -2950,8 +2887,6 @@ FROM seq
 WHERE fx IS NOT NULL AND (fx <> tx OR fy <> ty)
 GROUP BY 1, 2, 3, 4
 """
-
-QUERIES["od_flows"] = q_od_flows
 
 
 # --- Mann-Kendall trend per tile (r07): the statistic inside
@@ -3022,8 +2957,6 @@ SELECT p.tx, p.ty, p.s_mk, p.n_pairs, t.n_days, t.total
 FROM pairs p JOIN tot t ON t.tx = p.tx AND t.ty = p.ty
 """
 
-QUERIES["trend_mk"] = q_trend_mk
-
 
 # --- adaptive quadtree tiling (r07 wave D): operators/quadtree.py —
 # the skew-aware partitioner (PR-quadtree / S2-compaction shape):
@@ -3064,8 +2997,6 @@ SELECT e.l AS lvl, e.cx, e.cy,
 FROM leaf q JOIN e ON e.id = q.id AND e.l = q.lvl
 GROUP BY 1, 2, 3
 """
-
-QUERIES["quadtree_tiles"] = q_quadtree_tiles
 
 
 # --- box-IoU spatial self-join (r07 wave D): the object-detection
@@ -3148,8 +3079,6 @@ SELECT id_a, id_b, CAST(inter AS BIGINT) AS inter,
 FROM p WHERE 6 * inter >= sum_area
 """
 
-QUERIES["box_iou_join"] = q_box_iou_join
-
 
 # --- autocorrelation function per tile (r07 wave D): ACF at lags
 # 1-3 over each 2-km tile's complete daily-count series (the
@@ -3227,8 +3156,6 @@ SELECT n.tx, n.ty, n.lag, n.num, d.den,
 FROM num n JOIN den d ON d.tx = n.tx AND d.ty = n.ty
 WHERE d.den > 0
 """
-
-QUERIES["acf_lags"] = q_acf_lags
 
 
 # --- bilinear raster extraction at points (r07 wave E): the other
@@ -3308,8 +3235,6 @@ SELECT id,
 FROM t
 """
 
-QUERIES["point_sample"] = q_point_sample
-
 
 # --- Voronoi / nearest-site assignment (r07 wave E): the discrete
 # Voronoi tessellation (and one Lloyd half-step) — every event point
@@ -3371,8 +3296,6 @@ SELECT site,
        CAST(SUM(y) AS BIGINT) AS sum_y
 FROM a GROUP BY 1
 """
-
-QUERIES["voronoi_assign"] = q_voronoi_assign
 
 
 # --- DBSCAN point classification (r07 wave F): stage one of DBSCAN
@@ -3454,8 +3377,6 @@ LEFT JOIN core c ON c.id = nb.id
 LEFT JOIN near_core nc ON nc.id = nb.id
 """
 
-QUERIES["dbscan_classify"] = q_dbscan_classify
-
 
 # --- Ripley's K pair counts (r07 wave I): the spatial point-pattern
 # clustering statistic — unordered point-pair counts within r ∈
@@ -3514,8 +3435,6 @@ SELECT CAST(SUM(CASE WHEN d2 <= 90000 THEN 1 ELSE 0 END) AS BIGINT)
        CAST(COUNT(*) AS BIGINT) AS k1200
 FROM pairs
 """
-
-QUERIES["ripley_k"] = q_ripley_k
 
 
 # --- Knox space-time interaction test (r07 wave I): epidemiology's
@@ -3616,8 +3535,6 @@ SELECT n_events, pairs_space, pairs_time, pairs_both,
 FROM s_agg CROSS JOIN t_agg CROSS JOIN n_agg
 """
 
-QUERIES["knox_test"] = q_knox_test
-
 
 # --- vector→raster line burn (r07 wave J): the rasterization half of
 # G9 for LINE geometry (roads/streams burned onto a grid — GDAL's
@@ -3692,8 +3609,6 @@ SELECT coverage, CAST(COUNT(*) AS BIGINT) AS n_cells,
 FROM cov GROUP BY 1
 """
 
-QUERIES["raster_line"] = q_raster_line
-
 
 # --- topographic position index (r07 wave J): Weiss's landform
 # classifier over the closed-form DEM — TPI = centre − mean(8
@@ -3754,8 +3669,6 @@ SELECT cx // 25 AS bx, cy // 25 AS by,
          AS n_valley
 FROM t GROUP BY 1, 2
 """
-
-QUERIES["tpi_class"] = q_tpi_class
 
 
 # --- Getis–Ord Gi* hotspot screen (r07 wave K): local spatial
@@ -3836,8 +3749,6 @@ SELECT l.gx, l.gy, l.local_sum, l.n_nb,
 FROM local l CROSS JOIN tot t
 """
 
-QUERIES["getis_hotspot"] = q_getis_hotspot
-
 
 # --- burst detection (r07 wave K): Kleinberg-lite activity bursts —
 # per event, how many events the SAME user fired in the forward
@@ -3896,8 +3807,6 @@ WITH ev AS (
 )
 SELECT user_id, burst AS max_burst, id AS at_event FROM r WHERE rn = 1
 """
-
-QUERIES["burst_detect"] = q_burst_detect
 
 
 # --- STR bulk-load packing (r07 wave L): Sort-Tile-Recursive — the
@@ -3958,8 +3867,6 @@ SELECT layer, slab, (ry - 1) * 8 // ns AS leaf,
 FROM r2 GROUP BY 1, 2, 3
 """
 
-QUERIES["str_pack"] = q_str_pack
-
 
 # --- raster map algebra (r07 wave L): the two-band raster calculator
 # (NDVI's normalized difference, gdal_calc shape) over band A (the
@@ -4003,8 +3910,6 @@ SELECT bx, by, CAST(COUNT(*) AS BIGINT) AS n_cells,
          AS n_low
 FROM r GROUP BY 1, 2
 """
-
-QUERIES["map_algebra"] = q_map_algebra
 
 
 # --- local Moran's I (r07 wave O): Anselin's LISA — the
@@ -4087,8 +3992,6 @@ SELECT d.gx, d.gy, d.dev, n.nb_sum, d.dev * n.nb_sum AS i_num,
 FROM dev d JOIN nb n USING (gx, gy)
 """
 
-QUERIES["local_moran"] = q_local_moran
-
 
 # --- terrain elevation profile (r07 wave P): the "profile graph"
 # tool of every GIS — sample the closed-form DEM along each of 200
@@ -4160,8 +4063,6 @@ SELECT s, CAST(COUNT(*) AS BIGINT) AS n_samples,
 FROM rk GROUP BY 1
 """
 
-QUERIES["terrain_profile"] = q_terrain_profile
-
 
 # --- distance-band ring profile (r07 wave R): the "what surrounds
 # this POI" site report — events banded into 500 m Chebyshev rings
@@ -4192,8 +4093,6 @@ SELECT LEAST(GREATEST(ABS(({_ODX}) - 10000),
        ROUND(SUM(value), 4) AS sum_value
 FROM events GROUP BY 1
 """
-
-QUERIES["ring_profile"] = q_ring_profile
 
 
 # --- space-time cube (r07 wave R): the ESRI-style st-cube rollup —
@@ -4237,8 +4136,6 @@ SELECT gx, gy, CAST(COUNT(*) AS BIGINT) AS n_days,
        CAST(MAX(CASE WHEN rn = 1 THEN day END) AS BIGINT) AS peak_day
 FROM rk GROUP BY 1, 2
 """
-
-QUERIES["st_cube"] = q_st_cube
 
 
 # --- slope aspect classification (r07 wave S): the compass-facing
@@ -4301,8 +4198,6 @@ SELECT cx // 25 AS bx, cy // 25 AS by,
 FROM g GROUP BY 1, 2
 """
 
-QUERIES["aspect_class"] = q_aspect_class
-
 
 # --- geofence visit summary (r07 wave V): the BATCH rollup next to
 # the streaming transition alerts — pings inside each (buffered)
@@ -4357,8 +4252,6 @@ GROUP BY 1
 
 ORACLE["fence_visits"] = _fence_visits_oracle()
 
-QUERIES["fence_visits"] = q_fence_visits
-
 
 # --- tile change detection (r07 wave Y): period-over-period
 # activity shift per 2 km tile — event counts in the first vs
@@ -4406,5 +4299,3 @@ SELECT gx, gy, n1, n2,
        n2 * t.t1 - n1 * t.t2 > 0 AS grew
 FROM per_tile CROSS JOIN tot t
 """
-
-QUERIES["tile_change"] = q_tile_change

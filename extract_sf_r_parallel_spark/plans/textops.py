@@ -650,24 +650,6 @@ FROM c
 """
 
 
-QUERIES = {
-    "dedup_exact": q_dedup_exact,
-    "pack_chunks": q_pack_chunks,
-    "dedup_bucket": q_dedup_bucket,
-    "token_stats": q_token_stats,
-    "text_quality": q_text_quality,
-    "lang_markers": q_lang_markers,
-    "dedup_canonical": q_dedup_canonical,
-    "dedup_canonical_star": q_dedup_canonical_star,
-    "simhash_pairs": q_simhash_pairs,
-    "bm25": q_bm25,
-    "rep_ngram": q_rep_ngram,
-    "contam_check": q_contam_check,
-    "hash_split": q_hash_split,
-    "stratified_sample": q_stratified_sample,
-}
-
-
 # --- domain mixing (r06): exact integer-proportion corpus rebalance
 # ("2 parts en to 1 part each other lang"): B = min_s floor(n_s/w_s),
 # stratum s keeps the w_s·B smallest rows by (md5 bucket, doc_id).
@@ -706,8 +688,6 @@ WITH b AS (
 )
 SELECT r.doc_id, r.lang FROM r JOIN kept USING (lang) WHERE rn <= k
 """
-
-QUERIES["domain_mix"] = q_domain_mix
 
 
 # --- BPE vocabulary induction (r06): tokenizer training, distributed.
@@ -799,8 +779,6 @@ GROUP BY 1
 
 ORACLE["bpe_vocab"] = _bpe_oracle()
 
-QUERIES["bpe_vocab"] = q_bpe_vocab
-
 
 # --- BPE tokenizer APPLICATION (r07): the other half of the
 # tokenizer lifecycle — bpe_vocab trains the merges, this applies them
@@ -849,8 +827,6 @@ GROUP BY 1
 
 
 ORACLE["bpe_encode"] = _bpe_encode_oracle()
-
-QUERIES["bpe_encode"] = q_bpe_encode
 
 
 # --- PMI collocation mining (r06): bigram pointwise mutual
@@ -906,8 +882,6 @@ SELECT w1, w2, c_xy, c_x, c_y,
 FROM c JOIN cx USING (w1) JOIN cy USING (w2), n
 WHERE c_xy >= 3
 """
-
-QUERIES["pmi_bigrams"] = q_pmi_bigrams
 
 
 # --- blocked edit-distance near-dup screen (r06): the third dedup
@@ -980,8 +954,6 @@ SELECT agg.lang, agg.bkt, n_pairs, min_dist, n_close, n_docs,
        n_docs > 256 AS truncated
 FROM agg JOIN sizes ON agg.lang = sizes.lang AND agg.bkt = sizes.bkt
 """
-
-QUERIES["edit_blocks"] = q_edit_blocks
 
 
 # --- TextRank keyword scoring (r06): the damped integer-mass walk
@@ -1066,8 +1038,6 @@ SELECT node AS word, mass FROM m{iters}
 
 ORACLE["textrank"] = _textrank_oracle()
 
-QUERIES["textrank"] = q_textrank
-
 
 # --- per-document top-3 tf·idf keywords (r07): keyword extraction
 # over the corpus (operators/ranking.py::tfidf_topk). Raw-ratio idf
@@ -1102,8 +1072,6 @@ SELECT doc_id, term, CAST(tf AS BIGINT) AS tf, CAST(df AS BIGINT) AS df,
        CAST(rnk AS INT) AS rnk, score
 FROM rk WHERE rnk <= 3
 """
-
-QUERIES["tfidf_topk"] = q_tfidf_topk
 
 
 # --- cross-document duplicate n-token windows (r07): the EXACT
@@ -1159,8 +1127,6 @@ SELECT doc_id,
 FROM documents LEFT JOIN per USING (doc_id)
 """
 
-QUERIES["substring_dups"] = q_substring_dups
-
 
 # --- bigram novelty / hapax screen (r07 wave L): the corpus-internal
 # novelty signal LLM curation uses next to contamination checks —
@@ -1208,8 +1174,6 @@ SELECT doc_id,
 FROM b JOIN c USING (w1, w2)
 GROUP BY 1
 """
-
-QUERIES["lm_novelty"] = q_lm_novelty
 
 
 # --- RAKE keyword scores (r07 wave P): Rapid Automatic Keyword
@@ -1263,5 +1227,3 @@ SELECT w, CAST(COUNT(*) AS BIGINT) AS freq,
 FROM words JOIN plen USING (doc_id, seg)
 GROUP BY 1
 """
-
-QUERIES["rake_scores"] = q_rake_scores

@@ -79,18 +79,34 @@ def test_entry_smoke(spark):
     assert {"PKEY", "AREA150", "PROP565", "NEAR_DIST", "MEANAGE_150"} <= cols
 
 
+def test_registry_is_every_q_function():
+    """QUERIES is derived from the plan modules' ``q_<name>`` functions:
+    each has an oracle, and none is left out."""
+    from extract_sf_r_parallel_spark.plans import (
+        registry, relational, spatial_queries, textops)
+
+    assert set(registry.QUERIES) == set(registry.ORACLE)
+    for mod in (registry, relational, spatial_queries, textops):
+        for name, fn in vars(mod).items():
+            if name.startswith("q_") and fn.__module__ == mod.__name__:
+                assert registry.QUERIES[name[2:]] is fn, name
+
+
 def test_gate_order_never_recorded_first():
     """Regression for the r06 gate-starvation bug: every query that has
     never received a driver CORRECTNESS row must sit inside the
     driver's ~50-row budget, i.e. within the first 50 keys of
-    queries(). A late registration after the registry's gate reorder
-    would silently violate this (the reorder must stay the last
-    statement in plans/registry.py)."""
-    from extract_sf_r_parallel_spark.plans import registry
+    queries(). The order must not depend on the order the registry
+    was built in."""
+    import random
 
-    keys = list(registry.QUERIES)
-    assert list(QUERIES) == keys, "entry queries() must preserve registry order"
-    last_seen, _ = registry._gate_last_seen()
+    keys = list(QUERIES)
+    assert set(keys) == set(entrymod._GATE_FIRST), \
+        "every registered query is ranked in _GATE_FIRST"
+    shuffled = list(keys)
+    random.Random(0).shuffle(shuffled)
+    assert entrymod._gate_order(shuffled) == keys
+    last_seen = entrymod._gate_last_seen()
     never = [k for k in keys if k not in last_seen]
     # The no-PERMANENT-starvation invariant: every never-recorded query
     # sorts BEFORE every recorded one except the pricing_summary

@@ -17,6 +17,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from extract_sf_r_parallel_spark.data import synth
+from extract_sf_r_parallel_spark.operators import areadist_fused as AF
 from extract_sf_r_parallel_spark.operators import dedup as D
 from extract_sf_r_parallel_spark.operators import similarity as S
 from extract_sf_r_parallel_spark.operators.areadist import areadist
@@ -75,7 +76,7 @@ def test_all_sentinel_year_layer_agrees(spark, frames):
     assert n_null == join[np.isnan(join["MEANAGE_565"].to_numpy(float))].shape[0]
 
 
-def test_areadist_auto_gates_on_feature_count(spark, frames):
+def test_areadist_auto_gates_on_feature_count(spark, frames, monkeypatch):
     images, layers, _ = frames
     pts = spark.createDataFrame(images, GEOTAGGED_SCHEMA)
     pls = spark.createDataFrame(layers, LAYER_SCHEMA)
@@ -83,7 +84,8 @@ def test_areadist_auto_gates_on_feature_count(spark, frames):
     small = areadist_auto(pts, pls)
     assert "Exchange" not in small._jdf.queryExecution().executedPlan().toString()
     # over the gate → the shuffle-join plan
-    big = areadist_auto(pts, pls, max_broadcast_features=10)
+    monkeypatch.setattr(AF, "MAX_BROADCAST_FEATURES", 10)
+    big = areadist_auto(pts, pls)
     assert "Exchange" in big._jdf.queryExecution().executedPlan().toString()
     _cmp(small.toPandas(), big.toPandas())
 

@@ -123,8 +123,7 @@ def test_od_matrix_brute(spark):
 
 
 def test_interval_overlap_query_matches_daily_counter(spark):
-    from extract_sf_r_parallel_spark.plans.relational import (
-        QUERIES as RQ)
+    from extract_sf_r_parallel_spark.plans.registry import QUERIES as RQ
     sf = "/root/testdata/sf0.001"
     got = RQ["interval_overlap"](spark, sf).toPandas().set_index("l_suppkey")
     li = pd.read_parquet(f"{sf}/lineitem.parquet")
@@ -141,7 +140,7 @@ def test_interval_overlap_query_matches_daily_counter(spark):
 
 
 def test_substring_dups_planted(spark):
-    from extract_sf_r_parallel_spark.plans.textops import QUERIES as TQ
+    from extract_sf_r_parallel_spark.plans.registry import QUERIES as TQ
     import extract_sf_r_parallel_spark.plans.textops as T
 
     phrase = "alpha beta gamma delta epsilon zeta eta theta"  # 8 tokens
@@ -219,7 +218,7 @@ def test_decode_audio_stub_raises(spark):
 
 def test_trend_mk_brute(spark):
     # deterministic planted series on two tiles: one rising, one flat
-    import extract_sf_r_parallel_spark.plans.spatial_queries as S
+    from extract_sf_r_parallel_spark.plans import registry as S
     import itertools
     t0 = dt.datetime(2024, 1, 1)
     # brute Mann-Kendall on the q_trend_mk output at sf0.001
