@@ -7,7 +7,8 @@ Usage:
   python bench_extra.py all                 # every bench.py headline query
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-     SPARK_GRAFT_CPUS (default 32), BENCH_EXTRA_N (default 5),
+     SPARK_GRAFT_CPUS (default: the CPUs this process may use),
+     BENCH_EXTRA_N (default 5),
      BENCH_EXTRA_TAG (plan filename suffix, default "before").
 """
 
@@ -29,10 +30,9 @@ def main() -> None:
     mode = sys.argv[1] if len(sys.argv) > 1 else "time"
     names = sys.argv[2:] or HEADLINE + list(HEAVY)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     n = int(os.environ.get("BENCH_EXTRA_N", "5"))
     tag = os.environ.get("BENCH_EXTRA_TAG", "before")
-    spark = get_spark(app="bench_extra", master=f"local[{cpus}]")
+    spark = get_spark(app="bench_extra")
     spark.sparkContext.setLogLevel("ERROR")
     # same pool warm-up as bench.py
     spark.range(10000).selectExpr("id * 2 as x").write.format("noop") \

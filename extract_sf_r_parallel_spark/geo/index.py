@@ -12,10 +12,9 @@ Design (public H3 ideas, reimplemented for a planar CRS):
   aperture hierarchy — planar CRS makes arbitrary edges exact);
 - cell id packs (resolution code, q, r) into one int64 so ids from
   different resolutions never collide;
-- kRing(cell, k) gives the hex-disk of radius k — the candidate cover
-  for "within maxdist" joins (the reference's 1000 m cap, C_…R:112);
-- cover_bbox gives the covering cell set for a polygon's bbox — the
-  explode side of the spatial join (J2 in SURVEY.md §2.4).
+- cover_bbox_many gives each polygon's candidate cells: the cover of
+  its bbox dilated by the search radius (the 1000 m cap, C_…R:112) —
+  the explode side of the spatial join (J2 in SURVEY.md §2.4).
 
 Every function is vectorized over NumPy arrays; none touch Spark.
 """
@@ -30,14 +29,13 @@ __all__ = [
     "xy_to_cell",
     "cell_to_center",
     "cell_to_axial",
-    "kring",
-    "kring_for_radius",
-    "cover_bbox",
+    "cover_bbox_many",
     "cell_ring_vertices",
 ]
 
-# registered edge lengths (metres); code = index. Engine default picks
-# the smallest edge ≥ maxdist so a 1-ring covers the search disk.
+# registered edge lengths (metres); code = index. The engine picks the
+# smallest edge ≥ maxdist/4 (code_for_radius): finer cells tighten the
+# dilated-bbox cover.
 RESOLUTIONS: tuple[float, ...] = (
     16.0, 32.0, 64.0, 128.0, 256.0, 512.0, 1024.0, 2048.0, 4096.0, 8192.0,
 )
@@ -47,7 +45,8 @@ _BIAS = 1 << 28  # axial coords offset to non-negative before packing
 
 
 def code_for_radius(radius: float) -> int:
-    """Smallest registered edge ≥ radius (so kRing k=1 covers it)."""
+    """Index of the smallest registered edge ≥ radius (the largest
+    when none is)."""
     for i, e in enumerate(RESOLUTIONS):
         if e >= radius:
             return i
@@ -112,93 +111,15 @@ def cell_to_center(cell: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     return x, y
 
 
-def kring(cell: int, k: int) -> np.ndarray:
-    """All cells within hex-grid distance k of `cell` (the hex disk,
-    (k+1)³-(k)³... actually 1+3k(k+1) cells)."""
-    code, q, r = cell_to_axial(np.array([cell]))
-    code, q, r = int(code[0]), int(q[0]), int(r[0])
-    dq = np.arange(-k, k + 1)
-    out_q, out_r = [], []
-    for d in dq:
-        lo = max(-k, -d - k)
-        hi = min(k, -d + k)
-        rs = np.arange(lo, hi + 1)
-        out_q.append(np.full(len(rs), d))
-        out_r.append(rs)
-    qq = np.concatenate(out_q) + q
-    rr = np.concatenate(out_r) + r
-    return _pack(code, qq, rr)
-
-
-def kring_for_radius(cell: np.ndarray, radius: float) -> np.ndarray:
-    """Vectorized: for each cell (all same resolution) return the 2-D
-    array stack of k-ring neighbours such that the Euclidean disk of
-    `radius` around ANY point of the cell is covered. Returns
-    (n_cells, ring_size) int64.
-
-    Coverage bound (ADVICE r01 #1): cell centres at hex distance k can
-    be as close as 1.5·e·k Euclidean (the zigzag axis), NOT k·√3·e; a
-    target point can sit up to `radius` from a source point that is up
-    to one circumradius e from the centre, and its own cell centre up
-    to e away again — so cover requires 1.5·e·k ≥ radius + 2e, i.e.
-    k = ceil((radius + 2e) / (1.5e))."""
-    cell = np.asarray(cell, dtype=np.int64)
-    code, q, r = cell_to_axial(cell)
-    c0 = int(code[0]) if len(code) else 0
-    e = edge_for_code(c0)
-    k = int(np.ceil((radius + 2.0 * e) / (1.5 * e))) if radius > 0 else 0
-    dq_list, dr_list = [], []
-    for d in range(-k, k + 1):
-        lo = max(-k, -d - k)
-        hi = min(k, -d + k)
-        for rr_ in range(lo, hi + 1):
-            dq_list.append(d)
-            dr_list.append(rr_)
-    dq = np.array(dq_list, dtype=np.int64)
-    dr = np.array(dr_list, dtype=np.int64)
-    qq = q[:, None] + dq[None, :]
-    rr = r[:, None] + dr[None, :]
-    return _pack(c0, qq, rr)
-
-
-def cover_bbox(
-    xmin: float, ymin: float, xmax: float, ymax: float, code: int
-) -> np.ndarray:
-    """Cell ids covering an axis-aligned bbox (superset cover — exact
-    hex/bbox overlap filtering happens in the refinement kernel). Used
-    to explode polygons over their candidate cells (SURVEY.md J2)."""
-    e = edge_for_code(code)
-    # sample the bbox corners' axial coords, pad by 1 cell each way
-    xs = np.array([xmin, xmax, xmin, xmax])
-    ys = np.array([ymin, ymin, ymax, ymax])
-    qf = (_SQRT3 / 3.0 * xs - ys / 3.0) / e
-    rf = (2.0 / 3.0 * ys) / e
-    q, r = _axial_round(qf, rf)
-    q0, q1 = int(q.min()) - 1, int(q.max()) + 1
-    r0, r1 = int(r.min()) - 1, int(r.max()) + 1
-    qq, rr = np.meshgrid(np.arange(q0, q1 + 1), np.arange(r0, r1 + 1))
-    qq, rr = qq.ravel(), rr.ravel()
-    # prune hexes whose centre is farther than (circumradius + half-diag
-    # slack) from the bbox — keeps the cover tight for thin features
-    cx = e * (_SQRT3 * qq + _SQRT3 / 2.0 * rr)
-    cy = e * (1.5 * rr)
-    pad = e  # circumradius
-    keep = (
-        (cx >= xmin - pad) & (cx <= xmax + pad)
-        & (cy >= ymin - pad) & (cy <= ymax + pad)
-    )
-    return _pack(code, qq[keep], rr[keep])
-
-
 def cover_bbox_many(
     xmin: np.ndarray, ymin: np.ndarray, xmax: np.ndarray, ymax: np.ndarray,
     code: int,
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Vectorized :func:`cover_bbox` over many bboxes: returns
-    (cells, counts) where cells is the concatenation of each bbox's
-    cover and counts[i] its length. One NumPy pass — no per-feature
-    Python loop (the driver-side index build and the cover UDF batch
-    thousands of features)."""
+    """Cell ids covering each axis-aligned bbox (a superset; the
+    refinement kernel is exact): (cells, counts), cells the concatenated
+    covers, counts[i] the length of bbox i's. One NumPy pass — no
+    per-feature Python loop (the driver-side index build and the cover
+    UDF batch thousands of features)."""
     e = edge_for_code(code)
     n = len(xmin)
     if n == 0:
@@ -222,7 +143,8 @@ def cover_bbox_many(
     local = np.arange(total, dtype=np.int64) - np.repeat(starts, sizes)
     qq = np.repeat(q0, sizes) + local // np.repeat(nr, sizes)
     rr = np.repeat(r0, sizes) + local % np.repeat(nr, sizes)
-    # centre-proximity pruning, identical to cover_bbox
+    # prune hexes whose centre is farther than the circumradius from
+    # the bbox — keeps the cover tight for thin features
     cx = e * (_SQRT3 * qq + _SQRT3 / 2.0 * rr)
     cy = e * (1.5 * rr)
     pad = e

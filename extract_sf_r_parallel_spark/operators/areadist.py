@@ -7,24 +7,33 @@ Reimplements (semantics, not code):
 - ``areadist.age``  — C_…R:135-197 (adds MEANAGE via YEAR recode)
 - ``areadist.wet``  — D_…R:20-66  (no temporal filter, grouped by class)
 
-as ONE parameterized pipeline:
+as ONE planner, :func:`areadist`, over two result-identical kernels:
 
-  points ⟕ range_join_pairs(maxdist) → groupBy(point, layer).agg(...)
+- ``areadist_fused.areadist_fused`` (broadcast): a CSR cell index +
+  packed rings ship to every executor once and one mapInPandas over
+  the points finds, refines and reduces each point's candidates — no
+  shuffle, no materialized pairs;
+- :func:`areadist_join` (shuffle): points ⟕ range_join_pairs(maxdist)
+  → groupBy(point, layer).agg(...), where the reference's 10,000-cell
+  driver loop (C_…R:232-253) is the shuffle on the hex cell id and its
+  per-point R loop (C_…R:138-194) is the grouped aggregation.
 
-where the reference's 10,000-cell driver loop (C_…R:232-253) is the
-shuffle on the hex cell id and its per-point R loop (C_…R:138-194) is
-the grouped aggregation. LEFT semantics + coalesce reproduce the
-empty-candidate defaults (AREA=0, PROP=0, MEANAGE=null,
-NEAR_DIST=maxdist — C_…R:99,116-117,159).
+The planner counts the feature side and sends the call to the fused
+kernel up to ``areadist_fused.MAX_BROADCAST_FEATURES`` features, to the
+join kernel beyond it, and to the join kernel's broadcast branch when
+the fused kernel finds a layer whose union needs the raster fallback
+(``K.DissolveFallback``). Both kernels return the points' columns, then
+``layer``, then the metrics, with the empty-candidate defaults
+(AREA=0, PROP=0, MEANAGE=null, NEAR_DIST=maxdist — C_…R:99,116-117,159).
 
 Semantic parity notes (SURVEY.md §2.2 P7, §2.5 A4):
 - PROP divisors use the literal π≈3.14 exactly as the reference does
   (C_…R:122-123): PROP150 = AREA150 / (3.14·150²);
 - MEANAGE's numerator/denominator use the *per-clip* (non-dissolved)
   areas (C_…R:156-159) while AREA is the *dissolved* union area
-  (C_…R:154). For pairwise-disjoint layers both equal Σ circle∩poly —
-  the fixture guarantee; `dissolve="raster"` switches AREA to a
-  deterministic supersampled union for overlapping layers;
+  (C_…R:154), exact via inclusion–exclusion correction pseudo-features;
+  layers too entangled for that take a deterministic supersampled
+  union;
 - YEAR=0 sentinel polygons are recoded to the layer's oldest real year
   min(YEAR[YEAR>0]) before age math (C_…R:150, 231).
 """
@@ -40,7 +49,8 @@ from pyspark.sql import types as T
 from ..geo import kernels as K
 from .range_join import is_valid_udf, range_join_pairs
 
-__all__ = ["areadist", "areadist_wide", "dissolve_corrections_df", "PI_LITERAL"]
+__all__ = ["areadist", "areadist_join", "areadist_wide",
+           "dissolve_corrections_df", "PI_LITERAL"]
 
 PI_LITERAL = 3.14  # the reference's literal (C_…R:122-123), not math.pi
 
@@ -84,8 +94,8 @@ def dissolve_corrections_df(polys: DataFrame, layer_col: str = "layer",
         # synthetic negative ids: 42-bit (layer, tile) salt × 2^20 slot
         # space per tile. ADVICE r03: the old 20-bit salt hit birthday
         # collisions (~50% at ~1200 groups) on mega-layers; 42 bits put
-        # 50% at ~2.5M (layer, tile) groups, and the id-uniqueness
-        # check in `areadist` (both join paths) catches the residue.
+        # 50% at ~2.5M (layer, tile) groups, and the join kernel's
+        # id-uniqueness checks (both branches) catch the residue.
         base = -((int(pd.util.hash_pandas_object(
             pd.Series([f"{layer}|{tx}|{ty}"])).iloc[0]) % (1 << 42) + 1) << 20)
         rings = [K.feature_parts(g) for g in pdf["geom"]]
@@ -151,7 +161,93 @@ def _union_area_raster(px: float, py: float, radius: float,
     return float((inc & anyin).sum() * cell)
 
 
+def _feature_side(polys: DataFrame, *, layer_col: str,
+                  validity_filter: bool, dissolve: str, collect: bool):
+    """Both kernels' feature side: (features, corrections,
+    fallback_layers). Features are (feature_id, layer, poly_year, geom),
+    valid ones only under `validity_filter` (st_is_valid, C_…R:317).
+    Corrections (dissolve="auto" only, else None) cover the exactly
+    dissolvable layers — one tile's fallback sends the WHOLE layer to
+    the raster union — as pandas when `collect`, else checkpointed."""
+    pl = polys.select(
+        F.col("feature_id"), F.col(layer_col).alias("layer"),
+        F.col("YEAR").alias("poly_year"), F.col("geom"),
+    )
+    if validity_filter:
+        pl = pl.filter(is_valid_udf()(F.col("geom")))
+    if dissolve != "auto":
+        return pl, None, []
+    corr = dissolve_corrections_df(pl)
+    if collect:
+        # bounded (pairwise-overlap terms), so collecting it respects
+        # the broadcast gate
+        corr = corr.toPandas()
+        marked = corr["layer"].str.startswith(_CORR_MARK)
+        fallback = sorted({v[len(_CORR_MARK):] for v in corr.loc[marked, "layer"]})
+        return pl, corr[~marked & ~corr["layer"].isin(fallback)], fallback
+    # localCheckpoint, not persist: the marker collect, the join-side
+    # union and a broadcast index build read one computation, and the
+    # ContextCleaner frees the blocks with the plan (ADVICE r02 leak)
+    corr = corr.localCheckpoint(eager=True)
+    marked = F.col("layer").startswith(_CORR_MARK)
+    fallback = sorted(r[0][len(_CORR_MARK):] for r in
+                      corr.filter(marked).select("layer").distinct().collect())
+    corr = corr.filter(~marked)
+    if fallback:
+        corr = corr.filter(~F.col("layer").isin(fallback))
+    return pl, corr, fallback
+
+
+def _check_dissolve(fn: str, dissolve: str, allowed: tuple) -> None:
+    if dissolve not in allowed:
+        raise ValueError(f"{fn}: dissolve must be one of {allowed}, "
+                         f"got {dissolve!r}")
+
+
 def areadist(
+    points: DataFrame,
+    polys: DataFrame,
+    *,
+    radii: tuple[float, ...] = (150.0, 565.0),
+    maxdist: float = 1000.0,
+    temporal: bool = True,
+    age: bool = True,
+    keys: tuple[str, ...] = ("PKEY", "SS", "YEAR"),
+    layer_col: str = "layer",
+    validity_filter: bool = True,
+    dissolve: str = "auto",
+) -> DataFrame:
+    """One row per (point, layer): the points' columns, `layer`,
+    NEAR_DIST, then AREA<r>, PROP<r> and (if `age`) MEANAGE_<r> per
+    radius. `temporal`/`age` select the reference's areadist vs
+    areadist.age vs areadist.wet variants.
+
+    `dissolve` (the st_union in C_…R:99,154):
+    - "auto" (default): exact union via precomputed inclusion–exclusion
+      correction pseudo-features (geo/kernels.overlap_corrections);
+      layers whose exact union is not S-H-computable fall back to the
+      supersampled raster union automatically;
+    - "sum": Σ of per-clip areas (exact only for disjoint layers — the
+      reference's superseded variant, C_…R:101).
+    MEANAGE always uses the per-clip (non-dissolved) areas, the
+    reference's dual-area-notion quirk (C_…R:154-159). The kernel is
+    chosen here, not by the caller (VERDICT r01 wrong-#3)."""
+    from . import areadist_fused as AF  # it imports this module
+    _check_dissolve("areadist", dissolve, ("auto", "sum"))
+    kw = dict(radii=radii, maxdist=maxdist, temporal=temporal, age=age,
+              layer_col=layer_col, validity_filter=validity_filter,
+              dissolve=dissolve)
+    broadcast = AF.feature_count(polys) <= AF.MAX_BROADCAST_FEATURES
+    if broadcast:
+        try:
+            return AF.areadist_fused(points, polys, **kw)
+        except K.DissolveFallback:
+            pass
+    return areadist_join(points, polys, keys=keys,
+                         broadcast_polys=broadcast, **kw)
+
+
+def areadist_join(
     points: DataFrame,
     polys: DataFrame,
     *,
@@ -165,68 +261,34 @@ def areadist(
     broadcast_polys: bool = False,
     salt: int = 0,
     dissolve: str = "auto",
-    observation=None,
 ) -> DataFrame:
-    """One row per (point, layer): AREA<r>, PROP<r>, MEANAGE_<r> (if
-    `age`), NEAR_DIST. `temporal`/`age` flags select the reference's
-    areadist vs areadist.age vs areadist.wet variants.
-
-    `dissolve` (the st_union in C_…R:99,154):
-    - "auto" (default): exact union via precomputed inclusion–exclusion
-      correction pseudo-features (geo/kernels.overlap_corrections);
-      layers whose exact union is not S-H-computable fall back to the
-      supersampled raster union automatically;
-    - "sum": Σ of per-clip areas (exact only for disjoint layers — the
-      reference's superseded variant, C_…R:101);
-    - "raster": force the supersampled union everywhere.
-    MEANAGE always uses the per-clip (non-dissolved) areas, the
-    reference's dual-area-notion quirk (C_…R:154-159)."""
+    """The join kernel behind :func:`areadist`, same output. It also
+    takes dissolve="raster", the supersampled union for every layer;
+    "auto" routes only the layers whose exact union raised
+    DissolveFallback there."""
+    _check_dissolve("areadist_join", dissolve, ("auto", "sum", "raster"))
     point_side = points.select(*keys, "x", "y")
-
-    pl = polys
-    if validity_filter:
-        pl = pl.filter(is_valid_udf()(F.col("geom")))
-    pl = pl.select(
-        F.col("feature_id"), F.col(layer_col).alias("layer"),
-        F.col("YEAR").alias("poly_year"), F.col("geom"),
-    )
-
-    fallback_layers: list[str] = []
+    pl, corr, fallback_layers = _feature_side(
+        polys, layer_col=layer_col, validity_filter=validity_filter,
+        dissolve=dissolve, collect=False)
     join_side = pl.withColumn("weight", F.lit(1.0)) \
                   .withColumn("is_real", F.lit(True))
-    if dissolve == "auto":
-        # localCheckpoint (not persist): the marker collect below, the
-        # join-side union, and (if broadcasting) the geometry-index
-        # build all read it — one grouped computation, not three — and
-        # the blocks are released by the ContextCleaner when the plan
-        # is dropped, where persist() would park them in the
-        # CacheManager forever (the ADVICE r02 minhash leak pattern;
-        # checkpoint to reliable storage instead at 100 TB)
-        corr = dissolve_corrections_df(pl).localCheckpoint(eager=True)
-        marks = corr.filter(F.col("layer").startswith(_CORR_MARK)) \
-                    .select("layer").distinct().collect()
-        fallback_layers = [r[0][len(_CORR_MARK):] for r in marks]
-        corr = (corr.filter(~F.col("layer").startswith(_CORR_MARK))
-                .withColumn("is_real", F.lit(False)))
-        if fallback_layers:
-            # one tile's fallback sends the WHOLE layer to the raster
-            # path — drop the corrections its other tiles produced
-            corr = corr.filter(~F.col("layer").isin(fallback_layers))
-        if not broadcast_polys:
-            # ADVICE r03: the broadcast path's geometry index raises on
-            # duplicate feature_id, but the shuffle-join path factorizes
-            # fid inside pair_metrics_udf and would silently refine
-            # against the wrong correction ring on a salt collision.
-            # One tiny agg over the checkpointed ids keeps both paths
-            # fail-loud (negligible vs the join it protects).
-            dup = (corr.groupBy("feature_id").count()
-                   .filter(F.col("count") > 1).limit(1).count())
-            if dup:
-                raise ValueError(
-                    "dissolve_corrections_df: correction feature_id salt "
-                    "collision across (layer, tile) groups — rerun with a "
-                    "different tile_size")
-        join_side = join_side.unionByName(corr)
+    if corr is not None:
+        join_side = join_side.unionByName(
+            corr.withColumn("is_real", F.lit(False)))
+    if not broadcast_polys:
+        # the broadcast geometry index rejects repeated ids; here one
+        # tiny agg does, or a repeated feature counts twice and a salt
+        # collision refines the wrong correction ring (ADVICE r03)
+        dup = (join_side.groupBy("feature_id").count()
+               .filter(F.col("count") > 1).select("feature_id").first())
+        if dup is not None:
+            raise ValueError(
+                f"areadist_join: duplicate feature_id {dup[0]} in the "
+                f"feature side" if dup[0] >= 0  # correction ids are < 0
+                else "dissolve_corrections_df: correction feature_id salt "
+                "collision across (layer, tile) groups — rerun with a "
+                "different tile_size")
 
     need_geom = dissolve == "raster" or bool(fallback_layers)
     theta = F.col("poly_year") < F.col("YEAR") if temporal else None
@@ -235,7 +297,6 @@ def areadist(
         theta=theta, broadcast_polys=broadcast_polys, salt=salt,
         keep_geom=need_geom,
     )
-
 
     if age:
         # layer-level scalar: oldest real construction year (C_…R:231)
@@ -265,7 +326,7 @@ def areadist(
             # Pairs with undefined age (YEAR=0 in a layer with no real
             # year → null oldestyear → null page) are excluded from
             # BOTH num and den (null-contribution semantics, ADVICE
-            # r01 — same rule as oracle.py and the fused path).
+            # r01 — same rule as oracle.py and the fused kernel).
             ok = (F.col(a) > 0) & F.col("page").isNotNull() & F.col("is_real")
             num = F.sum(F.when(ok, F.col("page") * F.col(a)))
             den = F.sum(F.when(ok, F.col(a)))
@@ -278,11 +339,10 @@ def areadist(
         # supersampling (applyInPandas per point group — G5 fallback).
         # Under "auto" only the layers whose exact union raised
         # DissolveFallback take this path; under "raster", all do.
-        key_fields = [pairs.schema[k] for k in (*keys, "layer")]
-        fields = key_fields + [
+        kcols = (*keys, "layer")
+        fields = [pairs.schema[k] for k in kcols] + [
             T.StructField(f"UAREA{int(r)}", T.DoubleType()) for r in radii
         ]
-        kcols = (*keys, "layer")
         rpairs = pairs.filter(F.col("is_real"))
         if dissolve == "auto":
             rpairs = rpairs.filter(F.col("layer").isin(fallback_layers))
@@ -307,32 +367,18 @@ def areadist(
             )
 
     # LEFT semantics: every point appears for every layer (J6;
-    # row-count invariant C_…R:707-709)
+    # row-count invariant C_…R:707-709), in the fused kernel's column
+    # order so a fallback never changes the caller's schema
     layers = pl.select("layer").distinct()
-    base = points.crossJoin(F.broadcast(layers))
-    out = base.join(got, [*keys, "layer"], "left")
-    fills = {"NEAR_DIST": F.lit(float(maxdist))}
+    out = points.crossJoin(F.broadcast(layers)) \
+        .join(got, [*keys, "layer"], "left")
+    fills = {"NEAR_DIST": float(maxdist)}
     for r in radii:
-        fills[f"AREA{int(r)}"] = F.lit(0.0)
-        fills[f"PROP{int(r)}"] = F.lit(0.0)
-    for c, default in fills.items():
-        out = out.withColumn(c, F.coalesce(F.col(c), default))
-
-    if observation is not None:
-        # job metrics (the engine's "accumulators") ride the action via
-        # the Observation API — no extra job. Observed on the final
-        # plan node (mid-plan CollectMetrics below an aggregation
-        # yields a schema-less row in Spark 4.1 that Observation.get
-        # cannot convert).
-        r0 = int(radii[0])
-        out = out.observe(
-            observation,
-            F.count(F.lit(1)).alias("rows_out"),
-            F.round(F.avg("NEAR_DIST"), 3).alias("avg_near_dist"),
-            F.sum(F.when(F.col(f"AREA{r0}") > 0, 1).otherwise(0))
-             .alias(f"rows_with_area{r0}"),
-        )
-    return out
+        fills[f"AREA{int(r)}"] = fills[f"PROP{int(r)}"] = 0.0
+    metrics = [c for c in got.columns if c not in (*keys, "layer")]
+    return out.select(*points.columns, "layer", *[
+        F.coalesce(F.col(c), F.lit(fills[c])).alias(c) if c in fills
+        else F.col(c) for c in metrics])
 
 
 def areadist_wide(result: DataFrame, keys: tuple[str, ...] = ("PKEY", "SS", "YEAR"),

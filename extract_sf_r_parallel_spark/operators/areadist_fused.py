@@ -1,15 +1,16 @@
-"""Fused broadcast areadist — the engine's fast path when the feature
-side is broadcast-join-sized (the same precondition as a Spark
+"""The fused broadcast kernel behind operators.areadist.areadist, for
+feature sides of broadcast-join size (the same precondition as a Spark
 broadcast join; the reference's layers — ≤ a few million polygons —
-all qualify).
+all qualify; the planner checks MAX_BROADCAST_FEATURES).
 
-The generic path (operators/areadist.py) materializes candidate pairs
-through an equi join, which at high feature density multiplies row
-traffic ~100× between the join and the per-point aggregation. This
-path instead ships a CSR cell→features index + packed ring geometry to
-every executor ONCE (a Spark broadcast variable) and runs candidate
-lookup → bbox prefilter → exact circle∩polygon refinement → per-point
-aggregation inside ONE mapInPandas over the points table:
+The join kernel (operators.areadist.areadist_join) materializes
+candidate pairs through an equi join, which at high feature density
+multiplies row traffic ~100× between the join and the per-point
+aggregation. This kernel instead ships a CSR cell→features index +
+packed ring geometry to every executor ONCE (a Spark broadcast
+variable) and runs candidate lookup → bbox prefilter → exact
+circle∩polygon refinement → per-point aggregation inside ONE
+mapInPandas over the points table:
 
     points scan → mapInPandas(fused kernel) → sink
 
@@ -21,9 +22,10 @@ loop. Output rows = points × layers with the reference's LEFT-default
 semantics (AREA=0, PROP=0, MEANAGE=null, NEAR_DIST=maxdist) emitted
 densely, so no outer join is needed afterwards.
 
-Semantics are identical to operators/areadist.areadist (asserted
-row-for-row in tests/test_areadist_fused.py); the SMJ path remains the
-fallback for feature sides too large to broadcast.
+Results are identical to the join kernel's (asserted row-for-row in
+tests/test_areadist_fused.py). A layer whose exact union needs the
+raster fallback raises K.DissolveFallback, and the planner then sends
+the call to the join kernel.
 """
 
 from __future__ import annotations
@@ -34,14 +36,13 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..geo import index as I
 from ..geo import kernels as K
-from .areadist import PI_LITERAL
+from .areadist import PI_LITERAL, _check_dissolve, _feature_side
 
-__all__ = ["areadist_fused", "areadist_auto", "clear_index_cache"]
+__all__ = ["areadist_fused", "clear_index_cache", "feature_count"]
 
 # Session-scoped build cache (VERDICT r05 next-#5): building a
 # _FeatureIndex is the only eager, driver-side part of the fused plan
@@ -110,88 +111,67 @@ def _plan_key(df: DataFrame):
         files = ()
     return (re.sub(r"#\d+", renum, s), files)
 
-# feature-side row count up to which the fused broadcast path is used;
-# beyond it the generic cell-explode equi join (SMJ-capable) takes
-# over. ~5M rects ≈ 400 MB packed rings + CSR — comfortably inside one
-# executor, the same envelope as a Spark broadcast join build side.
+# feature-side row count up to which the planner (areadist.areadist)
+# uses this kernel; beyond it the join kernel's shuffle branch
+# (SMJ-capable) takes over. ~5M rects ≈ 400 MB packed rings + CSR —
+# comfortably inside one executor, the same envelope as a Spark
+# broadcast join build side.
 MAX_BROADCAST_FEATURES = 5_000_000
 
 # points per kernel chunk (see _chunk_metrics)
 _CHUNK_POINTS = 512
 
 
-def areadist_auto(points: DataFrame, polys: DataFrame, **kw) -> DataFrame:
-    """Plan selection the caller shouldn't have to get right (VERDICT
-    r01 wrong-#3): count the feature side and pick the fused broadcast
-    plan when it fits an executor, else the shuffle join plan. Both
-    paths are result-identical (tests/test_areadist_fused.py)."""
-    from .areadist import areadist
+def feature_count(polys: DataFrame) -> int:
+    """Row count of the feature side, memoized on the same plan key as
+    the index cache (the planner counts on every call; the capstone and
+    the gate ask for the same layer sets again and again)."""
     pk = _plan_key(polys)
     ck = (polys.sparkSession.sparkContext.applicationId, pk)
     if pk is not None and ck in _COUNT_CACHE:
-        n = _COUNT_CACHE[ck]
-    else:
-        n = polys.count()
-        if pk is not None:
-            _COUNT_CACHE[ck] = n
-            while len(_COUNT_CACHE) > _IDX_CACHE_MAX:
-                _COUNT_CACHE.popitem(last=False)
-    if n <= MAX_BROADCAST_FEATURES:
-        return areadist_fused(points, polys, **kw)
-    return areadist(points, polys, **kw)
+        return _COUNT_CACHE[ck]
+    n = polys.count()
+    if pk is not None:
+        _COUNT_CACHE[ck] = n
+        while len(_COUNT_CACHE) > _IDX_CACHE_MAX:
+            _COUNT_CACHE.popitem(last=False)
+    return n
 
 
 class _FeatureIndex:
     """Driver-built, broadcast-shipped: packed rings + bboxes + years +
-    layer codes + CSR (cell id → candidate feature indices). With
-    dissolve="auto", inclusion–exclusion correction polygons
-    (geo/kernels.overlap_corrections) are appended as weighted
-    pseudo-features — weight ±1, is_real False — so the exact union
-    rides the same CSR lookup with zero extra per-point machinery."""
+    layer codes + CSR (cell id → candidate feature indices) over the
+    features of areadist._feature_side. Its dissolve="auto" corrections
+    (`corr_pdf`) are appended as weighted pseudo-features — weight ±1,
+    is_real False — so the exact union rides the same CSR lookup with
+    zero extra per-point machinery."""
 
     def __init__(self, pdf: pd.DataFrame, radius: float, code: int,
-                 layer_col: str, validity_filter: bool,
-                 dissolve: str = "auto",
                  corr_pdf: pd.DataFrame | None = None):
+        if pdf["feature_id"].duplicated().any():  # would count twice
+            raise ValueError("_FeatureIndex: duplicate feature_id values "
+                             "in the feature side")
         rings = [K.feature_parts(g) for g in pdf["geom"]]
-        if validity_filter:
-            # polygon-ring validity of every part (st_is_valid,
-            # C_…R:317) — polyline layers are ingested with
-            # validity_filter=False and checked by
-            # kernels.polyline_is_valid instead
-            keep = np.array([all(K.ring_is_valid(p) for p in f)
-                             for f in rings])
-            pdf = pdf[keep].reset_index(drop=True)
-            rings = [r for r, k in zip(rings, keep) if k]
-        years = pdf["YEAR"].to_numpy(np.int64)
-        lcodes, lnames = pd.factorize(pdf[layer_col])
+        years = pdf["poly_year"].to_numpy(np.int64)
+        lcodes, lnames = pd.factorize(pdf["layer"])
         lcodes = lcodes.astype(np.int64)
         self.layers = [str(x) for x in lnames]
         weight = np.ones(len(rings), dtype=np.float64)
         is_real = np.ones(len(rings), dtype=bool)
-        if dissolve == "auto":
+        if corr_pdf is not None:
             # correction pseudo-features arrive PRECOMPUTED from the
             # distributed (layer, coarse-tile) build — the r02 serial
             # per-layer driver loop is gone (VERDICT r02 missing-#2)
-            if corr_pdf is None:
-                raise ValueError("dissolve='auto' needs corr_pdf from "
-                                 "dissolve_corrections_df")
             lmap = {name: i for i, name in enumerate(self.layers)}
-            add_years, add_codes, add_w = [], [], []
-            for row in corr_pdf.itertuples():
-                li = lmap.get(row.layer)
-                if li is None:
-                    continue  # layer fully removed by validity filter
-                rings.append(K.feature_parts(row.geom))
-                add_years.append(int(row.poly_year))
-                add_codes.append(li)
-                add_w.append(float(row.weight))
-            if add_years:
-                years = np.concatenate([years, add_years]).astype(np.int64)
-                lcodes = np.concatenate([lcodes, add_codes]).astype(np.int64)
-                weight = np.concatenate([weight, add_w])
-                is_real = np.concatenate(
-                    [is_real, np.zeros(len(add_w), dtype=bool)])
+            rings += [K.feature_parts(g) for g in corr_pdf["geom"]]
+            years = np.concatenate(
+                [years, corr_pdf["poly_year"].to_numpy(np.int64)])
+            lcodes = np.concatenate(
+                [lcodes, corr_pdf["layer"].map(lmap).to_numpy(np.int64)])
+            weight = np.concatenate(
+                [weight, corr_pdf["weight"].to_numpy(np.float64)])
+            is_real = np.concatenate(
+                [is_real, np.zeros(len(corr_pdf), dtype=bool)])
         self.packed = K.PackedRings(rings)
         self.bbox = np.array([
             [min(p[:, 0].min() for p in f), min(p[:, 1].min() for p in f),
@@ -208,23 +188,18 @@ class _FeatureIndex:
             real = self.years[(self.lcodes == li) & (self.years > 0) & is_real]
             if len(real):
                 self.oldest[li] = real.min()
-        # CSR cell cover (one vectorized pass over all features)
-        if len(rings):
-            cells, ccounts = I.cover_bbox_many(
-                self.bbox[:, 0] - radius, self.bbox[:, 1] - radius,
-                self.bbox[:, 2] + radius, self.bbox[:, 3] + radius, code)
-            feats = np.repeat(np.arange(len(rings), dtype=np.int64), ccounts)
-            order = np.argsort(cells, kind="stable")
-            cells, feats = cells[order], feats[order]
-            self.ucells, starts = np.unique(cells, return_index=True)
-            self.ustarts = starts.astype(np.int64)
-            self.ucounts = np.diff(np.append(starts, len(cells))).astype(np.int64)
-            self.centries = feats
-        else:
-            self.ucells = np.zeros(0, dtype=np.int64)
-            self.ustarts = np.zeros(0, dtype=np.int64)
-            self.ucounts = np.zeros(0, dtype=np.int64)
-            self.centries = np.zeros(0, dtype=np.int64)
+        # CSR cell cover (one vectorized pass over all features; empty
+        # arrays for an empty feature side)
+        cells, ccounts = I.cover_bbox_many(
+            self.bbox[:, 0] - radius, self.bbox[:, 1] - radius,
+            self.bbox[:, 2] + radius, self.bbox[:, 3] + radius, code)
+        feats = np.repeat(np.arange(len(rings), dtype=np.int64), ccounts)
+        order = np.argsort(cells, kind="stable")
+        cells, feats = cells[order], feats[order]
+        self.ucells, starts = np.unique(cells, return_index=True)
+        self.ustarts = starts.astype(np.int64)
+        self.ucounts = np.diff(np.append(starts, len(cells))).astype(np.int64)
+        self.centries = feats
 
 
 def _grouped_ranges(starts: np.ndarray, counts: np.ndarray) -> np.ndarray:
@@ -245,64 +220,46 @@ def areadist_fused(
     maxdist: float = 1000.0,
     temporal: bool = True,
     age: bool = True,
-    keys: tuple[str, ...] = ("PKEY", "SS", "YEAR"),
     layer_col: str = "layer",
     validity_filter: bool = True,
     dissolve: str = "auto",
 ) -> DataFrame:
-    """Drop-in equivalent of operators.areadist.areadist for
-    broadcast-sized feature tables. Returns points' columns + layer +
-    NEAR_DIST + AREA<r>/PROP<r>[/MEANAGE_<r>] per radius. `dissolve`:
-    "auto" = exact union via correction pseudo-features (raises with a
-    pointer to areadist(dissolve='raster') when a layer is not exactly
-    dissolvable), "sum" = Σ per-clip areas (disjoint layers)."""
+    """The broadcast kernel behind operators.areadist.areadist, same
+    output: points' columns + layer + NEAR_DIST + AREA<r>/PROP<r>
+    [/MEANAGE_<r>] per radius. `dissolve`: "auto" = exact union via
+    correction pseudo-features (raises K.DissolveFallback when a layer
+    is not exactly dissolvable), "sum" = Σ per-clip areas (disjoint
+    layers)."""
+    _check_dissolve("areadist_fused", dissolve, ("auto", "sum"))
     spark = points.sparkSession
     code = I.code_for_radius(max(maxdist / 4.0, I.RESOLUTIONS[0]))
     pk = _plan_key(polys)
-    cache_key = None
-    if pk is not None:
-        cache_key = (spark.sparkContext.applicationId, pk, float(maxdist),
-                     code, layer_col, bool(validity_filter), dissolve)
-        hit = _IDX_CACHE.get(cache_key)
-        if hit is not None:
-            _IDX_CACHE.move_to_end(cache_key)
-            idx, bc = hit
-            return _fused_apply(points, idx, bc, radii=radii,
-                                maxdist=maxdist, temporal=temporal, age=age,
-                                code=code)
-    corr_pdf = None
-    if dissolve == "auto":
-        # distributed correction build (same operator the join path
-        # uses): per (layer, coarse-tile) tasks, owner-corner
-        # exactly-once — the result is bounded (pairwise-overlap
-        # terms), so collecting it respects the broadcast gate
-        from .areadist import _CORR_MARK, dissolve_corrections_df
-        pl = polys.select("feature_id",
-                          F.col(layer_col).alias("layer"),
-                          F.col("YEAR").alias("poly_year"), "geom")
-        if validity_filter:
-            from .range_join import is_valid_udf
-            pl = pl.filter(is_valid_udf()(F.col("geom")))
-        corr_pdf = dissolve_corrections_df(pl).toPandas()
-        marks = corr_pdf["layer"].str.startswith(_CORR_MARK)
-        if marks.any():
-            lay = corr_pdf.loc[marks, "layer"].iloc[0][len(_CORR_MARK):]
-            raise ValueError(
-                f"layer {lay!r} needs the raster dissolve fallback; "
-                f"use areadist(dissolve='raster')")
-    pl_pdf = polys.select("feature_id", F.col(layer_col).alias(layer_col),
-                          "YEAR", "geom").toPandas()
-    idx = _FeatureIndex(pl_pdf, maxdist, code, layer_col, validity_filter,
-                        dissolve, corr_pdf=corr_pdf)
-    bc = spark.sparkContext.broadcast(idx)
-    if cache_key is not None:
-        _IDX_CACHE[cache_key] = (idx, bc)
-        while len(_IDX_CACHE) > _IDX_CACHE_MAX:
-            _, (_, old_bc) = _IDX_CACHE.popitem(last=False)
-            try:
-                old_bc.unpersist()
-            except Exception:  # noqa: BLE001
-                pass
+    cache_key = None if pk is None else (
+        spark.sparkContext.applicationId, pk, float(maxdist), code,
+        layer_col, bool(validity_filter), dissolve)
+    hit = _IDX_CACHE.get(cache_key)
+    if hit is not None:
+        _IDX_CACHE.move_to_end(cache_key)
+        idx, bc = hit
+    else:
+        # distributed correction build (the join kernel's operator):
+        # per (layer, coarse-tile) tasks, owner-corner exactly-once
+        pl, corr_pdf, fallback = _feature_side(
+            polys, layer_col=layer_col, validity_filter=validity_filter,
+            dissolve=dissolve, collect=True)
+        if fallback:
+            raise K.DissolveFallback(
+                f"layer {fallback[0]!r} needs the raster dissolve fallback")
+        idx = _FeatureIndex(pl.toPandas(), maxdist, code, corr_pdf)
+        bc = spark.sparkContext.broadcast(idx)
+        if cache_key is not None:
+            _IDX_CACHE[cache_key] = (idx, bc)
+            while len(_IDX_CACHE) > _IDX_CACHE_MAX:
+                _, (_, old_bc) = _IDX_CACHE.popitem(last=False)
+                try:
+                    old_bc.unpersist()
+                except Exception:  # noqa: BLE001
+                    pass
     return _fused_apply(points, idx, bc, radii=radii, maxdist=maxdist,
                         temporal=temporal, age=age, code=code)
 

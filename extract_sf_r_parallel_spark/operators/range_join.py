@@ -225,21 +225,20 @@ def broadcast_pair_metrics_udf(spark, polys: DataFrame, radii: tuple[float, ...]
     return _metrics
 
 
-def with_cell(df: DataFrame, code: int, x: str = "x", y: str = "y",
-              out: str = "cell") -> DataFrame:
+def with_cell(df: DataFrame, code: int, x: str = "x",
+              y: str = "y") -> DataFrame:
     # r08: JVM expression instead of the pandas UDF — same cell ids
     # (cell_col is the bit-identical twin of xy_to_cell), but the
     # assignment now fuses into the surrounding codegen stage instead
     # of forcing an ArrowEvalPython exchange with the Python workers
-    return df.withColumn(out, cell_col(F.col(x), F.col(y), code))
+    return df.withColumn("cell", cell_col(F.col(x), F.col(y), code))
 
 
 def explode_poly_cells(polys: DataFrame, radius: float, code: int,
-                       geom: str = "geom", out: str = "cell",
                        keep_bbox: bool = False) -> DataFrame:
-    df = polys.withColumn("_cb", poly_cover_udf(radius, code)(F.col(geom)))
+    df = polys.withColumn("_cb", poly_cover_udf(radius, code)(F.col("geom")))
     df = df.select("*", "_cb.*").drop("_cb")
-    df = df.withColumn(out, F.explode("cells")).drop("cells")
+    df = df.withColumn("cell", F.explode("cells")).drop("cells")
     if not keep_bbox:
         df = df.drop("bxmin", "bymin", "bxmax", "bymax")
     return df
@@ -248,7 +247,6 @@ def explode_poly_cells(polys: DataFrame, radius: float, code: int,
 def explode_bbox_cells(polys: DataFrame, radius: float, code: int,
                        xmin: str = "rxmin", ymin: str = "rymin",
                        xmax: str = "rxmax", ymax: str = "rymax",
-                       out: str = "cell",
                        keep_bbox: bool = False,
                        disk_prune: bool = False) -> DataFrame:
     """Pure-JVM twin of :func:`explode_poly_cells` for features whose
@@ -298,7 +296,7 @@ def explode_bbox_cells(polys: DataFrame, radius: float, code: int,
         keep = keep & (ddx * ddx + ddy * ddy
                        <= F.lit((float(radius) + e) ** 2))
     df = df.filter(keep)
-    df = df.withColumn(out, _pack_cell(code, F.col("_q"), F.col("_r"))) \
+    df = df.withColumn("cell", _pack_cell(code, F.col("_q"), F.col("_r"))) \
         .drop("_q", "_r", "_q0", "_q1", "_r0", "_r1")
     if keep_bbox:
         # same contract as explode_poly_cells(keep_bbox=True): the
@@ -334,13 +332,9 @@ def range_join_pairs(
     radius: float,
     radii: tuple[float, ...] = (),
     *,
-    code: int | None = None,
     theta: Column | None = None,
     broadcast_polys: bool = False,
     salt: int | str = 0,
-    point_x: str = "x",
-    point_y: str = "y",
-    keep_dist_within: bool = True,
     keep_geom: bool = False,
     bc_metrics=None,
 ) -> DataFrame:
@@ -377,9 +371,8 @@ def range_join_pairs(
         # TypeError from the `salt > 1` comparison (ADVICE r05)
         raise ValueError(
             f"salt must be an int or the exact string 'auto', got {salt!r}")
-    if code is None:
-        code = I.code_for_radius(max(radius / 4.0, I.RESOLUTIONS[0]))
-    pts = with_cell(points, code, point_x, point_y)
+    code = I.code_for_radius(max(radius / 4.0, I.RESOLUTIONS[0]))
+    pts = with_cell(points, code)
     pls = explode_poly_cells(polys, radius, code, keep_bbox=True)
     if broadcast_polys:
         # broadcast side is small ⇒ ship geometry once per executor and
@@ -414,8 +407,7 @@ def range_join_pairs(
                 polys.select("geom"), radius, code)
             ph = cells_only.groupBy("cell").agg(
                 F.count(F.lit(1)).alias("_np"))
-            sp = with_cell(points.sample(AUTO_SALT_SAMPLE, seed=7),
-                           code, point_x, point_y)
+            sp = with_cell(points.sample(AUTO_SALT_SAMPLE, seed=7), code)
             row = (sp.groupBy("cell").agg(F.count(F.lit(1)).alias("_ns"))
                    .join(ph, "cell")
                    .agg(F.max(F.col("_ns") * F.col("_np")).alias("m"))
@@ -426,7 +418,7 @@ def range_join_pairs(
                            -(-int(est) // AUTO_SALT_PAIRS_PER_TASK))
     join_keys = ["cell"]
     if salt > 1:
-        pts, pls, join_keys = salted(pts, pls, salt, F.col(point_x))
+        pts, pls, join_keys = salted(pts, pls, salt, F.col("x"))
     if broadcast_polys:
         pls = F.broadcast(pls)
 
@@ -445,20 +437,18 @@ def range_join_pairs(
     # Arrow kernel off 60-80% of the raw cell-join output — the hex
     # cell join at edge ≥ radius admits pairs up to ~3 cell diameters
     # apart; this tightens to the exact radius superset, JVM-side.
-    bdx = F.greatest(F.col("bxmin") - F.col(point_x),
-                     F.col(point_x) - F.col("bxmax"), F.lit(0.0))
-    bdy = F.greatest(F.col("bymin") - F.col(point_y),
-                     F.col(point_y) - F.col("bymax"), F.lit(0.0))
+    bdx = F.greatest(F.col("bxmin") - F.col("x"),
+                     F.col("x") - F.col("bxmax"), F.lit(0.0))
+    bdy = F.greatest(F.col("bymin") - F.col("y"),
+                     F.col("y") - F.col("bymax"), F.lit(0.0))
     pairs = pairs.filter(bdx * bdx + bdy * bdy < F.lit(float(radius) ** 2))
     pairs = pairs.drop("bxmin", "bymin", "bxmax", "bymax")
 
     if bc_metrics is not None:
-        m = bc_metrics(F.col(point_x), F.col(point_y), F.col("feature_id")).alias("_m")
+        m = bc_metrics(F.col("x"), F.col("y"), F.col("feature_id")).alias("_m")
     else:
         m = pair_metrics_udf(tuple(radii))(
-            F.col(point_x), F.col(point_y), F.col("feature_id"), F.col("geom")
+            F.col("x"), F.col("y"), F.col("feature_id"), F.col("geom")
         ).alias("_m")
     pairs = pairs.withColumn("_m", m).select("*", "_m.*").drop("_m")
-    if keep_dist_within:
-        pairs = pairs.filter(F.col("dist") < F.lit(float(radius)))
-    return pairs
+    return pairs.filter(F.col("dist") < F.lit(float(radius)))

@@ -17,8 +17,7 @@ from pyspark.sql import functions as F
 
 from ..data import synth
 from ..functions.text import fingerprint_udf, langid_udf, quality_udf, token_count_udf
-from ..operators.areadist import areadist
-from ..operators.areadist_fused import areadist_auto
+from ..operators.areadist import areadist, areadist_join
 from ..operators.dedup import minhash_lsh_pairs, ngram_jaccard_pairs, simhash_signatures
 from ..operators.knn import knn_join
 from ..operators.multimodal import decode_stats, frame_sample, pixel_embed
@@ -369,9 +368,9 @@ def _circle_inputs(spark, sf_dir):
 
 
 def q_areadist_circle(spark, sf_dir):
-    # auto plan selection (VERDICT r01 wrong-#3): the feature-side
-    # count picks the fused single-stage mapInPandas plan when it fits
-    # an executor (it does here), else the shuffle-join plan below —
+    # the planner (VERDICT r01 wrong-#3): the feature-side count picks
+    # the fused single-stage mapInPandas kernel when it fits an
+    # executor (it does here), else the join kernel below —
     # result-identical either way
     # dissolve="sum": this query's DuckDB oracle evaluates the
     # per-clip Σ (the reference's second area notion, C_…R:156); the
@@ -379,16 +378,16 @@ def q_areadist_circle(spark, sf_dir):
     # (areadist_dissolve) and 1e-9 pytest oracles
     pts, polys = _circle_inputs(spark, sf_dir)
     return _flagship_select(
-        areadist_auto(pts, polys, validity_filter=False, dissolve="sum"))
+        areadist(pts, polys, validity_filter=False, dissolve="sum"))
 
 
 def q_areadist_circle_join(spark, sf_dir):
-    # the generic cell-explode equi-join path (the SMJ-capable plan for
+    # the join kernel (cell-explode equi join, the SMJ-capable plan for
     # feature sides too large to broadcast) — same results
     pts, polys = _circle_inputs(spark, sf_dir)
     return _flagship_select(
-        areadist(pts, polys, validity_filter=False, broadcast_polys=True,
-                 dissolve="sum"))
+        areadist_join(pts, polys, validity_filter=False,
+                      broadcast_polys=True, dissolve="sum"))
 
 
 # --- kNN ring expansion (uncapped k nearest; brute-force SQL oracle)
@@ -600,7 +599,7 @@ GROUP BY 1, 2
 # areadist per footprint layer (14-way merge, C_…R:1194-1208) and
 # areadist.wet per wetland class (5-way, D_…R:595-608), suffix-renames
 # each layer's metric columns, and inner-merges everything on
-# (PKEY, SS, YEAR). Here: ONE areadist_auto call over all 14 footprint
+# (PKEY, SS, YEAR). Here: ONE areadist call over all 14 footprint
 # layers (temporal + age — the areadist.age variant), one over the 5
 # wetland classes (no temporal, no age — areadist.wet), each pivoted
 # by areadist_wide into <layer>_<METRIC> columns, inner-joined on the
@@ -615,27 +614,26 @@ _WM_CLASSES = ["Bog", "Fen", "Marsh", "Open_Water", "Swamp"]
 
 def _wide_merge(spark, sf_dir, foot_polys, wet_polys, dissolve):
     """14 footprint layers (temporal + age) and 5 wetland classes, each
-    run through areadist_auto, rounded, pivoted wide and inner-merged
+    run through areadist, rounded, pivoted wide and inner-merged
     on the point keys. `foot_polys` / `wet_polys` build the feature
     sides; they are called on the worker threads below."""
     from concurrent.futures import ThreadPoolExecutor
 
     from ..operators.areadist import areadist_wide
-    from ..operators.areadist_fused import areadist_auto
     pts = _keyed_points(spark, sf_dir)
 
     def _foot_side():
-        foot = areadist_auto(pts, foot_polys(), validity_filter=False,
-                             dissolve=dissolve)
+        foot = areadist(pts, foot_polys(), validity_filter=False,
+                        dissolve=dissolve)
         return areadist_wide(_flagship_select(foot), values=tuple(_WM_LAYERS))
 
     def _wet_side():
-        wet = areadist_auto(pts, wet_polys(), temporal=False, age=False,
-                            layer_col="CWCS_Class", validity_filter=False,
-                            dissolve=dissolve)
+        wet = areadist(pts, wet_polys(), temporal=False, age=False,
+                       layer_col="CWCS_Class", validity_filter=False,
+                       dissolve=dissolve)
         return areadist_wide(_flagship_select(wet), values=tuple(_WM_CLASSES))
 
-    # the two areadist_auto passes each run eager plan-build jobs on
+    # the two areadist passes each run eager plan-build jobs on
     # the driver (feature count, distributed correction build+collect,
     # geometry collect+broadcast) that are fully independent — overlap
     # them on two threads; Spark schedules concurrent jobs fine and
@@ -788,7 +786,7 @@ ORACLE["wide_merge_sum"] = _wide_merge_sum_oracle()
 
 # --- wide_merge, the PRIMARY-path capstone (VERDICT r04 next-#2): the
 # same 19-layer wide-merged output table, but run over the controlled-
-# overlap pair-rect fixtures so both areadist_auto passes execute the
+# overlap pair-rect fixtures so both areadist passes execute the
 # reference's primary st_union dissolve (C_…R:99,154; D_…R:35,42) —
 # dissolve left at its "auto" DEFAULT, overlap corrections kick in
 # with no caller hint. The footprint side additionally carries

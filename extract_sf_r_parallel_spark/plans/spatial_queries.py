@@ -734,19 +734,19 @@ def q_areadist_dissolve(spark, sf_dir):
 
 
 def q_areadist_dissolve_join(spark, sf_dir):
-    # the cell-explode equi-JOIN plan through the same dissolve="auto"
-    # default — the SMJ-capable path a too-big-to-broadcast layer takes
-    # at 100 TB. Same oracle as the fused row (r04: both engine plans
-    # driver-oracled, mirroring the areadist_circle/_join pairing).
+    # the join kernel through the same dissolve="auto" default — the
+    # SMJ-capable path a too-big-to-broadcast layer takes at 100 TB.
+    # Same oracle as the fused row (r04: both kernels oracled by SQL,
+    # mirroring the areadist_circle/_join pairing).
     # broadcast_polys=False (ADVICE r04): this row exists to oracle the
     # SHUFFLE join — geometry rides the pairs into pair_metrics_udf and
-    # the correction-id collision check in areadist's non-broadcast
-    # branch actually executes.
-    from ..operators.areadist import areadist
+    # the feature-id uniqueness check in the join kernel's
+    # non-broadcast branch actually executes.
+    from ..operators.areadist import areadist_join
     pts = _keyed_points(spark, sf_dir)
     polys = _pair_rect_polys(spark, sf_dir)
-    out = areadist(pts, polys, temporal=False, age=False,
-                   validity_filter=False, broadcast_polys=False)
+    out = areadist_join(pts, polys, temporal=False, age=False,
+                        validity_filter=False, broadcast_polys=False)
     return _dissolve_select(out)
 
 
@@ -867,14 +867,14 @@ def _wet_select(out):
 
 
 def q_areadist_wet(spark, sf_dir):
-    from ..operators.areadist_fused import areadist_auto
+    from ..operators.areadist import areadist
     pts = _keyed_points(spark, sf_dir)
     polys = _pair_rect_polys(spark, sf_dir, layer_col="CWCS_Class",
                              with_class=True)
     # dissolve at its DEFAULT ("auto"): per-class st_union semantics
     # with no caller hint — the reference's primary wetland path
-    out = areadist_auto(pts, polys, temporal=False, age=False,
-                        layer_col="CWCS_Class", validity_filter=False)
+    out = areadist(pts, polys, temporal=False, age=False,
+                   layer_col="CWCS_Class", validity_filter=False)
     return _wet_select(out)
 
 
@@ -919,7 +919,7 @@ LEFT JOIN agg ON pid = jpid AND cls = jcls
 
 
 def q_areadist_wet_sum(spark, sf_dir):
-    from ..operators.areadist_fused import areadist_auto
+    from ..operators.areadist import areadist
     pts = _keyed_points(spark, sf_dir)
     cls = F.element_at(
         F.array(*[F.lit(c) for c in _WET_CLASSES]),
@@ -927,12 +927,12 @@ def q_areadist_wet_sum(spark, sf_dir):
     polys = rects_df(spark, sf_dir).select(
         F.col("fid").alias("feature_id"), cls.alias("CWCS_Class"),
         F.lit(0).cast("int").alias("YEAR"), "geom")
-    # auto plan selection like the flagship: fused single-stage
-    # mapInPandas when the 5-class feature side broadcasts, else the
-    # generic shuffle join — result-identical
-    out = areadist_auto(pts, polys, temporal=False, age=False,
-                        layer_col="CWCS_Class", validity_filter=False,
-                        dissolve="sum")
+    # the planner picks the kernel like the flagship: fused
+    # single-stage mapInPandas when the 5-class feature side
+    # broadcasts, else the shuffle join — result-identical
+    out = areadist(pts, polys, temporal=False, age=False,
+                   layer_col="CWCS_Class", validity_filter=False,
+                   dissolve="sum")
     return _wet_select(out)
 
 

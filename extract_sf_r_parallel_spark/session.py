@@ -7,8 +7,43 @@ runtime half of the skew strategy (SURVEY.md §4, north rule)."""
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
+
+
+_UNIT_MIB = {"k": 1 / 1024, "m": 1, "g": 1024, "t": 1024 * 1024}
+
+
+def _mem_total_mib() -> int | None:
+    """Physical RAM (MemTotal of /proc/meminfo) in MiB, else None."""
+    try:
+        with open("/proc/meminfo") as f:
+            return next(int(v.split()[1]) // 1024 for v in f
+                        if v.startswith("MemTotal:"))
+    except (OSError, StopIteration):
+        return None
+
+
+def host_defaults() -> tuple[int, str]:
+    """(local threads, driver heap) for this host: SPARK_GRAFT_CPUS, else
+    the CPUs this process may run on; SPARK_DRIVER_MEM, else 24g capped
+    at physical RAM. An explicit heap larger than physical RAM raises
+    here, before a JVM starts that the kernel would kill later."""
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS")
+               or len(os.sched_getaffinity(0)))
+    total = _mem_total_mib()
+    mem = os.environ.get("SPARK_DRIVER_MEM")
+    if mem is None:
+        return cpus, f"{min(24 * 1024, total or 24 * 1024)}m"
+    m = re.fullmatch(r"(\d+)([kmgt]?)b?", mem.strip().lower())
+    if m is None:
+        raise ValueError(f"SPARK_DRIVER_MEM={mem!r} is not a JVM memory size")
+    # a bare number is MiB, as for spark.driver.memory
+    if total is not None and int(m[1]) * _UNIT_MIB[m[2] or "m"] > total:
+        raise ValueError(f"SPARK_DRIVER_MEM={mem} exceeds this host's "
+                         f"physical memory ({total} MiB)")
+    return cpus, mem
 
 
 def get_spark(
@@ -17,7 +52,7 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra: dict[str, str] | None = None,
 ) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus, driver_mem = host_defaults()
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
         # local: match cores; on a real cluster this would be
@@ -36,7 +71,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "20000")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", driver_mem)
         # files: 128 MiB splits — the cluster default that keeps scan
         # tasks balanced at 100 TB (partition pruning happens above)
         .config("spark.sql.files.maxPartitionBytes", "134217728")

@@ -70,10 +70,10 @@ def _make_index(rects):
         rings.append([[x0, y0, x1, y0, x1, y1, x0, y1, x0, y0]])
     pdf = pd.DataFrame({
         "feature_id": rects["fid"], "layer": "rects",
-        "YEAR": rects["ryear"].astype(np.int64), "geom": rings,
+        "poly_year": rects["ryear"].astype(np.int64), "geom": rings,
     })
     code = I.code_for_radius(max(1000.0 / 4.0, I.RESOLUTIONS[0]))
-    return _FeatureIndex(pdf, 1000.0, code, "layer", False, "sum"), code
+    return _FeatureIndex(pdf, 1000.0, code), code
 
 
 _IDX = None

@@ -44,6 +44,15 @@ LAYER_SCHEMA = T.StructType([
     T.StructField("is_valid_truth", T.BooleanType()),
 ])
 
+# bare areadist points: the keys plus coordinates
+PTS_SCHEMA = T.StructType([
+    T.StructField("PKEY", T.StringType()),
+    T.StructField("SS", T.StringType()),
+    T.StructField("YEAR", T.IntegerType()),
+    T.StructField("x", T.DoubleType()),
+    T.StructField("y", T.DoubleType()),
+])
+
 WETLAND_SCHEMA = T.StructType(LAYER_SCHEMA.fields[:2] + [
     T.StructField("CWCS_Class", T.StringType()),
 ] + LAYER_SCHEMA.fields[2:])

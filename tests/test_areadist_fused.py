@@ -1,17 +1,23 @@
-"""The fused broadcast path must match the generic join path — and the
+"""The fused broadcast kernel must match the join kernel — and the
 serial oracle — row-for-row, for every variant (age, wetland,
 no-temporal). Also asserts the fused plan is a single narrow stage
-(no shuffle exchange)."""
+(no shuffle exchange), and that the areadist planner only routes a call
+to a kernel that can answer it."""
 
 import numpy as np
+import pandas as pd
 import pytest
 
 from extract_sf_r_parallel_spark.data import synth
-from extract_sf_r_parallel_spark.operators.areadist import areadist
+from extract_sf_r_parallel_spark.geo import kernels as K
+from extract_sf_r_parallel_spark.operators.areadist import (
+    areadist,
+    areadist_join,
+)
 from extract_sf_r_parallel_spark.operators.areadist_fused import areadist_fused
 from extract_sf_r_parallel_spark.oracle import areadist_oracle
 
-from .conftest import GEOTAGGED_SCHEMA, LAYER_SCHEMA, WETLAND_SCHEMA
+from .conftest import GEOTAGGED_SCHEMA, LAYER_SCHEMA, PTS_SCHEMA, WETLAND_SCHEMA
 
 
 @pytest.fixture(scope="module")
@@ -43,7 +49,7 @@ def test_fused_matches_oracle_and_join_path(spark, frames):
     want = areadist_oracle(images, layers)
     assert len(fused) == len(images) * 3
     _cmp(fused, want, METRICS)
-    joinpath = areadist(pts, pls).toPandas()
+    joinpath = areadist_join(pts, pls).toPandas()
     _cmp(fused, joinpath, METRICS)
     # caption passthrough (graft invariant)
     m = fused.merge(images[["PKEY", "caption"]], on="PKEY", suffixes=("", "_in"))
@@ -130,3 +136,60 @@ def test_index_cache_hits_on_parquet_backed_layers(spark, frames, tmp_path):
     finally:
         AF.clear_index_cache()
     assert len(AF._IDX_CACHE) == 0 and len(AF._COUNT_CACHE) == 0
+
+
+# ---------------------------------------------------------------------------
+# the planner (operators.areadist.areadist) over the two kernels
+# ---------------------------------------------------------------------------
+
+def _squares(spark, offsets, side=50.0):
+    """One layer "L" of side×side squares at the given (dx, dy) offsets,
+    and one point at the first square's centre."""
+    x0, y0 = synth.X_LO + 1000.0, synth.Y_LO + 1000.0
+    rows = []
+    for i, (dx, dy) in enumerate(offsets):
+        a, b = x0 + dx, y0 + dy
+        ring = [a, b, a + side, b, a + side, b + side, a, b + side, a, b]
+        rows.append({"feature_id": i, "layer": "L", "YEAR": 2000,
+                     "geom": [ring], "is_valid_truth": True})
+    pts = pd.DataFrame([("p", "p", 2010, x0 + side / 2, y0 + side / 2)],
+                       columns=["PKEY", "SS", "YEAR", "x", "y"])
+    return (spark.createDataFrame(pts, PTS_SCHEMA),
+            spark.createDataFrame(pd.DataFrame(rows), LAYER_SCHEMA))
+
+
+def test_planner_routes_raster_fallback_layer_to_join(spark):
+    """12 mutually overlapping squares exceed the inclusion–exclusion
+    term budget: the fused kernel raises DissolveFallback and the
+    planner answers through the join kernel's raster union."""
+    pts, pls = _squares(spark, [(i, i) for i in range(12)])
+    with pytest.raises(K.DissolveFallback):
+        areadist_fused(pts, pls)
+    got = areadist(pts, pls).toPandas()
+    want = areadist_join(pts, pls).toPandas()
+    _cmp(got, want, METRICS)
+    # exact union 50² + 11·(2·50 − 1) = 3589 (the Σ of clips is 30000);
+    # the 512² supersampled raster lands within ~1.5 %
+    assert got["AREA150"].iloc[0] == pytest.approx(3589.0, rel=2e-2)
+
+
+def test_raster_dissolve_only_on_join_kernel(spark):
+    pts, pls = _squares(spark, [(0, 0), (25, 0)])
+    for fn in (areadist, areadist_fused):
+        with pytest.raises(ValueError, match="dissolve"):
+            fn(pts, pls, dissolve="raster")
+    union = areadist_join(pts, pls, dissolve="raster").toPandas()
+    assert union["AREA150"].iloc[0] == pytest.approx(3750.0, rel=2e-2)
+    exact = areadist(pts, pls).toPandas()
+    assert exact["AREA150"].iloc[0] == pytest.approx(3750.0, abs=1e-8)
+
+
+def test_kernels_share_column_order(spark, frames):
+    images, layers = frames
+    pts = spark.createDataFrame(images, GEOTAGGED_SCHEMA)
+    pls = spark.createDataFrame(layers, LAYER_SCHEMA)
+    for kw in ({}, {"age": False, "radii": (150.0,)}):
+        fused = areadist_fused(pts, pls, **kw).columns
+        assert fused == areadist_join(pts, pls, **kw).columns
+        assert fused == areadist_join(pts, pls, dissolve="raster", **kw).columns
+        assert fused[:len(pts.columns) + 1] == [*pts.columns, "layer"]

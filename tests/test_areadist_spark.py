@@ -1,5 +1,6 @@
 """Serial-vs-parallel equivalence (SURVEY.md §5 row 1): the distributed
-cell-indexed plan must match the brute-force serial oracle row-for-row
+cell-indexed join kernel must match the brute-force serial oracle
+row-for-row
 — the formalization of the reference author's prototype-vs-function
 check (C_…R:35-81 vs C_…R:84-130)."""
 
@@ -8,7 +9,11 @@ import pandas as pd
 import pytest
 
 from extract_sf_r_parallel_spark.data import synth
-from extract_sf_r_parallel_spark.operators.areadist import areadist, areadist_wide
+from extract_sf_r_parallel_spark.operators.areadist import (
+    areadist,
+    areadist_join,
+    areadist_wide,
+)
 from extract_sf_r_parallel_spark.oracle import areadist_oracle
 
 from .conftest import GEOTAGGED_SCHEMA, LAYER_SCHEMA, WETLAND_SCHEMA
@@ -37,7 +42,7 @@ def test_areadist_age_matches_oracle(spark, fixture_frames):
     images, layers = fixture_frames
     pts = spark.createDataFrame(images, GEOTAGGED_SCHEMA)
     pls = spark.createDataFrame(layers, LAYER_SCHEMA)
-    got = areadist(pts, pls).toPandas()
+    got = areadist_join(pts, pls).toPandas()
     want = areadist_oracle(images, layers)
     # row-count invariant: points × layers (C_…R:707-709)
     assert len(got) == len(images) * 3
@@ -53,8 +58,8 @@ def test_areadist_no_age_no_temporal_wetland(spark, fixture_frames):
     wet = synth.wetland_pdf(200)
     pts = spark.createDataFrame(images, GEOTAGGED_SCHEMA)
     pls = spark.createDataFrame(wet, WETLAND_SCHEMA)
-    got = areadist(pts, pls, temporal=False, age=False,
-                   layer_col="CWCS_Class").toPandas()
+    got = areadist_join(pts, pls, temporal=False, age=False,
+                        layer_col="CWCS_Class").toPandas()
     want = areadist_oracle(images, wet, temporal=False, age=False,
                            layer_col="CWCS_Class")
     assert len(got) == len(images) * len(set(wet["CWCS_Class"]))
@@ -66,8 +71,8 @@ def test_areadist_salted_matches(spark, fixture_frames):
     images, layers = fixture_frames
     pts = spark.createDataFrame(images, GEOTAGGED_SCHEMA)
     pls = spark.createDataFrame(layers, LAYER_SCHEMA)
-    plain = areadist(pts, pls).toPandas()
-    salted = areadist(pts, pls, salt=4).toPandas()
+    plain = areadist_join(pts, pls).toPandas()
+    salted = areadist_join(pts, pls, salt=4).toPandas()
     _compare(salted, plain, ["NEAR_DIST", "AREA150", "MEANAGE_565"])
 
 
@@ -75,8 +80,8 @@ def test_areadist_broadcast_matches(spark, fixture_frames):
     images, layers = fixture_frames
     pts = spark.createDataFrame(images, GEOTAGGED_SCHEMA)
     pls = spark.createDataFrame(layers, LAYER_SCHEMA)
-    plain = areadist(pts, pls).toPandas()
-    bcast = areadist(pts, pls, broadcast_polys=True).toPandas()
+    plain = areadist_join(pts, pls).toPandas()
+    bcast = areadist_join(pts, pls, broadcast_polys=True).toPandas()
     _compare(bcast, plain, ["NEAR_DIST", "AREA565", "MEANAGE_150"])
 
 
@@ -87,9 +92,9 @@ def test_overlap_layer_raster_dissolve(spark):
     over = synth.overlap_layer_pdf()
     pts = spark.createDataFrame(images, GEOTAGGED_SCHEMA)
     pls = spark.createDataFrame(over, LAYER_SCHEMA)
-    summed = areadist(pts, pls, temporal=False, age=False).toPandas()
-    dis = areadist(pts, pls, temporal=False, age=False,
-                   dissolve="raster").toPandas()
+    summed = areadist_join(pts, pls, temporal=False, age=False).toPandas()
+    dis = areadist_join(pts, pls, temporal=False, age=False,
+                        dissolve="raster").toPandas()
     want = areadist_oracle(images, over, temporal=False, age=False,
                            dissolve="raster")
     m = summed.merge(dis, on=["PKEY", "layer"], suffixes=("_sum", "_dis"))

@@ -1,30 +1,21 @@
 """Exact dissolved-union area (VERDICT r01 #8): overlap detection is
 automatic (dissolve left at its default), results are exact — not
 supersampled — and layers whose union is not S-H-computable fall back
-to the raster path (join) or fail loudly (fused)."""
+to the raster path (join kernel; the fused kernel raises
+DissolveFallback and the planner reroutes)."""
 
 import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from extract_sf_r_parallel_spark.data import synth
 from extract_sf_r_parallel_spark.geo import kernels as K
-from extract_sf_r_parallel_spark.operators.areadist import areadist
+from extract_sf_r_parallel_spark.operators.areadist import areadist_join
 from extract_sf_r_parallel_spark.operators.areadist_fused import areadist_fused
 from extract_sf_r_parallel_spark.oracle import areadist_oracle
 
-from .conftest import LAYER_SCHEMA
-
-PTS_SCHEMA = T.StructType([
-    T.StructField("PKEY", T.StringType()),
-    T.StructField("SS", T.StringType()),
-    T.StructField("YEAR", T.IntegerType()),
-    T.StructField("x", T.DoubleType()),
-    T.StructField("y", T.DoubleType()),
-])
-
+from .conftest import LAYER_SCHEMA, PTS_SCHEMA
 
 @pytest.fixture(scope="module")
 def overlap_frames():
@@ -48,8 +39,8 @@ def test_auto_dissolve_exact_default(spark, overlap_frames):
     pls = spark.createDataFrame(over, LAYER_SCHEMA)
     for got in (
         areadist_fused(pts, pls, temporal=False, age=False).toPandas(),
-        areadist(pts, pls, temporal=False, age=False,
-                 broadcast_polys=True).toPandas(),
+        areadist_join(pts, pls, temporal=False, age=False,
+                      broadcast_polys=True).toPandas(),
     ):
         g = got.sort_values("PKEY").reset_index(drop=True)
         np.testing.assert_allclose(g["AREA150"], 900.0, atol=1e-8)
@@ -144,8 +135,8 @@ def test_star_overlap_exact(spark, star_overlap):
     want = a1 + a2 - inter
 
     for plan in (
-        areadist(pts, pls, temporal=False, age=False,
-                 broadcast_polys=True),
+        areadist_join(pts, pls, temporal=False, age=False,
+                      broadcast_polys=True),
         areadist_fused(pts, pls, temporal=False, age=False),
     ):
         got = plan.toPandas()

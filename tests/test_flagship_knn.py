@@ -28,9 +28,9 @@ def test_flagship_circle_query_matches_serial_oracle(spark):
     # the raw operator at full precision (the driver query adds the
     # 2-6dp ROUND layer shared with its DuckDB closed-form oracle —
     # that layer is checked by CORRECTNESS, not here)
-    from extract_sf_r_parallel_spark.operators.areadist_fused import areadist_auto
+    from extract_sf_r_parallel_spark.operators.areadist import areadist
     pts, polys = _circle_inputs(spark, SF_DIR)
-    got = areadist_auto(pts, polys, validity_filter=False) \
+    got = areadist(pts, polys, validity_filter=False) \
         .drop("x", "y").toPandas()
     ppd, lpd = _pandas_inputs(spark)
     want = areadist_oracle(ppd, lpd, validity_filter=False)

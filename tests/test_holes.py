@@ -10,21 +10,12 @@ from pyspark.sql import types as T
 
 from extract_sf_r_parallel_spark.data import synth
 from extract_sf_r_parallel_spark.geo import kernels as K
-from extract_sf_r_parallel_spark.operators.areadist import areadist
+from extract_sf_r_parallel_spark.operators.areadist import areadist_join
 from extract_sf_r_parallel_spark.operators.areadist_fused import areadist_fused
 from extract_sf_r_parallel_spark.oracle import areadist_oracle
 from extract_sf_r_parallel_spark.sources import shapefile as SHP
 
-from .conftest import LAYER_SCHEMA
-
-PTS_SCHEMA = T.StructType([
-    T.StructField("PKEY", T.StringType()),
-    T.StructField("SS", T.StringType()),
-    T.StructField("YEAR", T.IntegerType()),
-    T.StructField("x", T.DoubleType()),
-    T.StructField("y", T.DoubleType()),
-])
-
+from .conftest import LAYER_SCHEMA, PTS_SCHEMA
 
 def _donut(ox, oy, size=40.0, hole=20.0):
     o2, h2 = size / 2, hole / 2
@@ -59,7 +50,7 @@ def test_holes_through_both_paths_and_oracle(spark, donut_frames):
     pls = spark.createDataFrame(layer, LAYER_SCHEMA)
     want = areadist_oracle(points, layer)
     fused = areadist_fused(pts, pls).toPandas()
-    join = areadist(pts, pls, broadcast_polys=True).toPandas()
+    join = areadist_join(pts, pls, broadcast_polys=True).toPandas()
     for got in (fused, join):
         g = got.sort_values("PKEY").reset_index(drop=True)
         w = want.sort_values("PKEY").reset_index(drop=True)
@@ -186,7 +177,8 @@ def test_overlapping_donuts_exact_dissolve(spark):
     want = a1 + a2 - inter
 
     for plan in (
-        areadist(pts, pls, temporal=False, age=False, broadcast_polys=True),
+        areadist_join(pts, pls, temporal=False, age=False,
+                      broadcast_polys=True),
         areadist_fused(pts, pls, temporal=False, age=False),
     ):
         got = plan.toPandas()

@@ -1,13 +1,10 @@
 """Physical-plan shape checks (the 100 TB design invariants): filters
 reach the parquet scan, projections prune columns, small dims
-broadcast, relational pipelines stay inside WholeStageCodegen, and the
-areadist metrics Observation reports candidate counts."""
+broadcast, and relational pipelines stay inside WholeStageCodegen."""
 
 import pytest
-from pyspark.sql import Observation
 from pyspark.sql import functions as F
 
-from extract_sf_r_parallel_spark.data import synth
 from extract_sf_r_parallel_spark.operators.areadist import areadist
 from extract_sf_r_parallel_spark.plans import relational, spatial_queries
 
@@ -69,21 +66,6 @@ def test_rect_pairs_is_equi_join_with_jvm_refinement(spark):
     # the only Python stages are Arrow-batched cell-id/cover UDFs
     n_arrow = len(re.findall(r"^\(\d+\) ArrowEvalPython", plan, re.M))
     assert n_arrow <= 4
-
-
-def test_areadist_observation_metrics(spark):
-    images = synth.geotag_images_pdf(synth.images_pdf(40))
-    layers = synth.footprint_layers_pdf(80)
-    pts = spark.createDataFrame(images, GEOTAGGED_SCHEMA)
-    pls = spark.createDataFrame(layers, LAYER_SCHEMA)
-    obs = Observation("areadist_metrics")
-    out = areadist(pts, pls, observation=obs)
-    n = out.count()
-    assert n == 40 * 3
-    m = obs.get
-    assert m["rows_out"] == 40 * 3
-    assert 0 <= m["avg_near_dist"] <= 1000.0
-    assert 0 <= m["rows_with_area150"] <= m["rows_out"]
 
 
 def test_areadist_left_defaults_edge_cases(spark):

@@ -3,12 +3,12 @@
 - all-sentinel-YEAR layers: MEANAGE null-contribution semantics agree
   across oracle, join path, and fused path (ADVICE r01 #3), and the
   fused path emits SQL NULL (not NaN);
-- areadist_auto picks the fused vs join plan from the feature count
-  (VERDICT wrong-#3), result-identical either way;
+- the areadist planner picks the fused vs join kernel from the feature
+  count (VERDICT wrong-#3), result-identical either way;
 - matmul_topk routes oversize corpora to the distributed JVM brute
   force instead of collecting to the driver (VERDICT wrong-#1);
 - ngram_jaccard_pairs caps oversized blocks (VERDICT wrong-#2);
-- broadcast geometry index rejects duplicate feature_ids (ADVICE #4).
+- every areadist path rejects duplicate feature_ids (ADVICE #4).
 """
 
 import numpy as np
@@ -20,11 +20,11 @@ from extract_sf_r_parallel_spark.data import synth
 from extract_sf_r_parallel_spark.operators import areadist_fused as AF
 from extract_sf_r_parallel_spark.operators import dedup as D
 from extract_sf_r_parallel_spark.operators import similarity as S
-from extract_sf_r_parallel_spark.operators.areadist import areadist
-from extract_sf_r_parallel_spark.operators.areadist_fused import (
-    areadist_auto,
-    areadist_fused,
+from extract_sf_r_parallel_spark.operators.areadist import (
+    areadist,
+    areadist_join,
 )
+from extract_sf_r_parallel_spark.operators.areadist_fused import areadist_fused
 from extract_sf_r_parallel_spark.oracle import areadist_oracle
 
 from .conftest import GEOTAGGED_SCHEMA, LAYER_SCHEMA
@@ -60,7 +60,7 @@ def test_all_sentinel_year_layer_agrees(spark, frames):
     pls = spark.createDataFrame(layers, LAYER_SCHEMA)
     fused_df = areadist_fused(pts, pls)
     fused = fused_df.toPandas()
-    join = areadist(pts, pls).toPandas()
+    join = areadist_join(pts, pls).toPandas()
     want = areadist_oracle(images, layers)
     _cmp(fused, want)
     _cmp(join, want)
@@ -76,16 +76,16 @@ def test_all_sentinel_year_layer_agrees(spark, frames):
     assert n_null == join[np.isnan(join["MEANAGE_565"].to_numpy(float))].shape[0]
 
 
-def test_areadist_auto_gates_on_feature_count(spark, frames, monkeypatch):
+def test_areadist_gates_on_feature_count(spark, frames, monkeypatch):
     images, layers, _ = frames
     pts = spark.createDataFrame(images, GEOTAGGED_SCHEMA)
     pls = spark.createDataFrame(layers, LAYER_SCHEMA)
     # under the gate → fused single-stage plan (no Exchange)
-    small = areadist_auto(pts, pls)
+    small = areadist(pts, pls)
     assert "Exchange" not in small._jdf.queryExecution().executedPlan().toString()
-    # over the gate → the shuffle-join plan
+    # over the gate → the join kernel's shuffle branch
     monkeypatch.setattr(AF, "MAX_BROADCAST_FEATURES", 10)
-    big = areadist_auto(pts, pls)
+    big = areadist(pts, pls)
     assert "Exchange" in big._jdf.queryExecution().executedPlan().toString()
     _cmp(small.toPandas(), big.toPandas())
 
@@ -123,10 +123,21 @@ def test_ngram_jaccard_block_cap(spark):
     assert (0, 1000) in set(zip(uncapped.id_a, uncapped.id_b))
 
 
-def test_broadcast_index_rejects_duplicate_fids(spark, frames):
+def test_broadcast_index_rejects_duplicate_fids(spark, frames, monkeypatch):
     images, layers, _ = frames
     dup = pd.concat([layers, layers.iloc[[0]]], ignore_index=True)
     pts = spark.createDataFrame(images, GEOTAGGED_SCHEMA)
     pls = spark.createDataFrame(dup, LAYER_SCHEMA)
     with pytest.raises(Exception, match="duplicate feature_id"):
-        areadist(pts, pls, broadcast_polys=True).collect()
+        areadist_join(pts, pls, broadcast_polys=True).collect()
+    # the planner's fused kernel, both dissolve modes
+    for dissolve in ("auto", "sum"):
+        with pytest.raises(ValueError, match="duplicate feature_id"):
+            areadist(pts, pls, dissolve=dissolve)
+    # the join kernel's shuffle branch, directly and through the planner
+    for dissolve in ("auto", "sum"):
+        with pytest.raises(ValueError, match="duplicate feature_id"):
+            areadist_join(pts, pls, dissolve=dissolve)
+    monkeypatch.setattr(AF, "MAX_BROADCAST_FEATURES", 10)
+    with pytest.raises(ValueError, match="duplicate feature_id"):
+        areadist(pts, pls, dissolve="sum")

@@ -8,7 +8,7 @@ import pytest
 
 from extract_sf_r_parallel_spark.data import synth
 from extract_sf_r_parallel_spark.geo import kernels as K
-from extract_sf_r_parallel_spark.operators.areadist import areadist
+from extract_sf_r_parallel_spark.operators.areadist import areadist_join
 from extract_sf_r_parallel_spark.operators.areadist_fused import areadist_fused
 from extract_sf_r_parallel_spark.oracle import areadist_oracle
 from extract_sf_r_parallel_spark.sources import shapefile as SHP
@@ -109,8 +109,8 @@ def test_areadist_on_polyline_layer(spark, line_layer):
     pls = spark.createDataFrame(line_layer, LAYER_SCHEMA)
     want = areadist_oracle(images, line_layer, validity_filter=False)
     fused = areadist_fused(pts, pls, validity_filter=False).toPandas()
-    join = areadist(pts, pls, validity_filter=False,
-                    broadcast_polys=True).toPandas()
+    join = areadist_join(pts, pls, validity_filter=False,
+                         broadcast_polys=True).toPandas()
     for got in (fused, join):
         g = got.sort_values("PKEY").reset_index(drop=True)
         w = want.sort_values("PKEY").reset_index(drop=True)
