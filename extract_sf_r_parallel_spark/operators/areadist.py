@@ -174,7 +174,10 @@ def _feature_side(polys: DataFrame, *, layer_col: str,
         F.col("YEAR").alias("poly_year"), F.col("geom"),
     )
     if validity_filter:
-        pl = pl.filter(is_valid_udf()(F.col("geom")))
+        # materialized once: the corrections, the id check and every
+        # branch of the join kernel's plan read the validated side, and
+        # the validity UDF would otherwise re-run in each of them
+        pl = pl.filter(is_valid_udf()(F.col("geom"))).localCheckpoint(eager=True)
     if dissolve != "auto":
         return pl, None, []
     corr = dissolve_corrections_df(pl)

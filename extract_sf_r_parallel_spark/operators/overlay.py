@@ -82,7 +82,8 @@ def rect_overlay_pairs(a: DataFrame, b: DataFrame,
     # only from that cell makes each pair unique without a distinct
     rx = F.greatest(ax0, bx0)
     ry = F.greatest(ay0, by0)
-    ref_cell = cell_col(rx, ry, code)
+    ref_cell = cell_col(f"greatest(`rxmin{sa}`, `rxmin{sb}`)",
+                        f"greatest(`rymin{sa}`, `rymin{sb}`)", code)
     iw = F.least(ax1, bx1) - rx
     ih = F.least(ay1, by1) - ry
     return (pairs.filter(overlap & (F.col("cell") == ref_cell))

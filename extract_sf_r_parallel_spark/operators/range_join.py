@@ -57,44 +57,62 @@ __all__ = [
 # ArrowEvalPython node from the candidate-join build keeps the whole
 # pair pipeline (cell assign → cover explode → equi join → bbox
 # refinement) inside one WholeStageCodegen span.
+#
+# The twins are built as SQL TEXT and parsed by one F.expr per output
+# column. The expression tree is the one a chain of Column operators
+# would build, but each Column operator is a driver→JVM round trip and
+# the cover's tree has thousands of nodes: built Column by Column it
+# cost ~0.5 s of py4j calls per explode_bbox_cells at plan build. Every
+# binary op is parenthesized (the parser would otherwise rebalance
+# AND chains) and double literals carry the D suffix (a bare 0.577…
+# parses as DECIMAL), so the parsed tree is the Column-built one.
 # ---------------------------------------------------------------------------
 
 _RINT_MAGIC = 6755399441055744.0  # 1.5 · 2^52
 
 
-def _rint(c: Column) -> Column:
+def _d(v: float) -> str:
+    """A DOUBLE literal (repr round-trips the exact value)."""
+    return f"{float(v)!r}D"
+
+
+def _name(c: str) -> str:
+    return f"`{c}`"
+
+
+def _rint(c: str) -> str:
     """Round half-to-even, branchless (|input| < 2^51)."""
-    return (c + F.lit(_RINT_MAGIC)) - F.lit(_RINT_MAGIC)
+    m = _d(_RINT_MAGIC)
+    return f"(({c} + {m}) - {m})"
 
 
-def _axial_cols(x: Column, y: Column, e: float) -> tuple[Column, Column]:
-    """Fractional axial coords + cube rounding — the Column twin of
+def _axial_sql(x: str, y: str, e: float) -> tuple[str, str]:
+    """Fractional axial coords + cube rounding — the SQL twin of
     geo.index.xy_to_cell's interior (same op order, same rounding)."""
-    qf = (F.lit(I._SQRT3 / 3.0) * x - y / F.lit(3.0)) / F.lit(e)
-    rf = (F.lit(2.0 / 3.0) * y) / F.lit(e)
-    sf = -qf - rf
+    qf = f"((({_d(I._SQRT3 / 3.0)} * {x}) - ({y} / {_d(3.0)})) / {_d(e)})"
+    rf = f"(({_d(2.0 / 3.0)} * {y}) / {_d(e)})"
+    sf = f"((- {qf}) - {rf})"
     q, r, s = _rint(qf), _rint(rf), _rint(sf)
-    dq, dr, ds = F.abs(q - qf), F.abs(r - rf), F.abs(s - sf)
-    fix_q = (dq > dr) & (dq > ds)
-    fix_r = (~fix_q) & (dr > ds)
-    qi = F.when(fix_q, -r - s).otherwise(q).cast("long")
-    ri = F.when(fix_r, -q - s).otherwise(r).cast("long")
+    dq, dr, ds = f"abs(({q} - {qf}))", f"abs(({r} - {rf}))", f"abs(({s} - {sf}))"
+    fix_q = f"(({dq} > {dr}) AND ({dq} > {ds}))"
+    fix_r = f"((NOT {fix_q}) AND ({dr} > {ds}))"
+    qi = f"CAST(CASE WHEN {fix_q} THEN ((- {r}) - {s}) ELSE {q} END AS BIGINT)"
+    ri = f"CAST(CASE WHEN {fix_r} THEN ((- {q}) - {s}) ELSE {r} END AS BIGINT)"
     return qi, ri
 
 
-def _pack_cell(code: int, qi: Column, ri: Column) -> Column:
+def _pack_sql(code: int, qi: str, ri: str) -> str:
     """(code, q, r) → int64 cell id, identical to geo.index._pack."""
-    return (F.shiftleft(F.lit(int(code)).cast("long"), 58)
-            .bitwiseOR(F.shiftleft(qi + F.lit(int(I._BIAS)), 29))
-            .bitwiseOR(ri + F.lit(int(I._BIAS))))
+    b = int(I._BIAS)
+    return (f"((shiftleft(CAST({int(code)} AS BIGINT), 58) "
+            f"| shiftleft(({qi} + {b}), 29)) | ({ri} + {b}))")
 
 
-def cell_col(x: Column, y: Column, code: int) -> Column:
-    """(x, y) → int64 hex cell id at resolution `code`, pure JVM —
-    bit-identical to geo.index.xy_to_cell (see module comment)."""
-    e = float(I.edge_for_code(code))
-    qi, ri = _axial_cols(x, y, e)
-    return _pack_cell(code, qi, ri)
+def cell_col(x: str, y: str, code: int) -> Column:
+    """SQL expressions (x, y) → int64 hex cell id at resolution `code`,
+    pure JVM — bit-identical to geo.index.xy_to_cell (see module
+    comment)."""
+    return F.expr(_pack_sql(code, *_axial_sql(x, y, float(I.edge_for_code(code)))))
 
 
 def poly_cover_udf(radius: float, code: int):
@@ -231,7 +249,7 @@ def with_cell(df: DataFrame, code: int, x: str = "x",
     # (cell_col is the bit-identical twin of xy_to_cell), but the
     # assignment now fuses into the surrounding codegen stage instead
     # of forcing an ArrowEvalPython exchange with the Python workers
-    return df.withColumn("cell", cell_col(F.col(x), F.col(y), code))
+    return df.withColumn("cell", cell_col(_name(x), _name(y), code))
 
 
 def explode_poly_cells(polys: DataFrame, radius: float, code: int,
@@ -247,7 +265,6 @@ def explode_poly_cells(polys: DataFrame, radius: float, code: int,
 def explode_bbox_cells(polys: DataFrame, radius: float, code: int,
                        xmin: str = "rxmin", ymin: str = "rymin",
                        xmax: str = "rxmax", ymax: str = "rymax",
-                       keep_bbox: bool = False,
                        disk_prune: bool = False) -> DataFrame:
     """Pure-JVM twin of :func:`explode_poly_cells` for features whose
     bbox is already in columns (axis-aligned rectangles: the bbox IS
@@ -258,11 +275,12 @@ def explode_bbox_cells(polys: DataFrame, radius: float, code: int,
     is bit-identical to the pandas-UDF path while staying inside
     WholeStageCodegen (r08, guide §4.1)."""
     e = float(I.edge_for_code(code))
-    x0 = F.col(xmin) - F.lit(float(radius))
-    x1 = F.col(xmax) + F.lit(float(radius))
-    y0 = F.col(ymin) - F.lit(float(radius))
-    y1 = F.col(ymax) + F.lit(float(radius))
-    qs, rs = zip(*[_axial_cols(cx, cy, e)
+    rad = _d(radius)
+    x0 = f"({_name(xmin)} - {rad})"
+    x1 = f"({_name(xmax)} + {rad})"
+    y0 = f"({_name(ymin)} - {rad})"
+    y1 = f"({_name(ymax)} + {rad})"
+    qs, rs = zip(*[_axial_sql(cx, cy, e)
                    for cx, cy in ((x0, y0), (x1, y0), (x0, y1), (x1, y1))])
     # materialize the grid bounds as NAMED columns before the explodes:
     # inlined into sequence() they would be re-evaluated per GENERATED
@@ -271,18 +289,19 @@ def explode_bbox_cells(polys: DataFrame, radius: float, code: int,
     # feature inside codegen and the Generates see plain attributes
     df = polys.select(
         "*",
-        (F.least(*qs) - 1).alias("_q0"), (F.greatest(*qs) + 1).alias("_q1"),
-        (F.least(*rs) - 1).alias("_r0"), (F.greatest(*rs) + 1).alias("_r1"))
-    df = df.withColumn("_q", F.explode(F.sequence(F.col("_q0"),
-                                                  F.col("_q1"))))
-    df = df.withColumn("_r", F.explode(F.sequence(F.col("_r0"),
-                                                  F.col("_r1"))))
-    qd, rd = F.col("_q").cast("double"), F.col("_r").cast("double")
-    cx = F.lit(e) * (F.lit(I._SQRT3) * qd + F.lit(I._SQRT3 / 2.0) * rd)
-    cy = F.lit(e) * (F.lit(1.5) * rd)
-    pad = F.lit(e)
-    keep = ((cx >= x0 - pad) & (cx <= x1 + pad)
-            & (cy >= y0 - pad) & (cy <= y1 + pad))
+        F.expr(f"(least({', '.join(qs)}) - 1)").alias("_q0"),
+        F.expr(f"(greatest({', '.join(qs)}) + 1)").alias("_q1"),
+        F.expr(f"(least({', '.join(rs)}) - 1)").alias("_r0"),
+        F.expr(f"(greatest({', '.join(rs)}) + 1)").alias("_r1"))
+    df = df.withColumn("_q", F.expr("explode(sequence(`_q0`, `_q1`))"))
+    df = df.withColumn("_r", F.expr("explode(sequence(`_r0`, `_r1`))"))
+    qd, rd = "CAST(`_q` AS DOUBLE)", "CAST(`_r` AS DOUBLE)"
+    cx = (f"({_d(e)} * (({_d(I._SQRT3)} * {qd}) "
+          f"+ ({_d(I._SQRT3 / 2.0)} * {rd})))")
+    cy = f"({_d(e)} * ({_d(1.5)} * {rd}))"
+    pad = _d(e)
+    keep = (f"(((({cx} >= ({x0} - {pad})) AND ({cx} <= ({x1} + {pad}))) "
+            f"AND ({cy} >= ({y0} - {pad}))) AND ({cy} <= ({y1} + {pad})))")
     if disk_prune:
         # DEGENERATE bboxes only (xmin == xmax, ymin == ymax — a point
         # dilated by `radius`): the square cover's corner cells cannot
@@ -291,21 +310,13 @@ def explode_bbox_cells(polys: DataFrame, radius: float, code: int,
         # cell centre within circumradius e of itself, hence within
         # radius + e of the query centre. Cuts candidate pairs ~21 %
         # on the idw disk join (47.6 M → 37.7 M at sf0.1).
-        ddx = cx - F.col(xmin)
-        ddy = cy - F.col(ymin)
-        keep = keep & (ddx * ddx + ddy * ddy
-                       <= F.lit((float(radius) + e) ** 2))
-    df = df.filter(keep)
-    df = df.withColumn("cell", _pack_cell(code, F.col("_q"), F.col("_r"))) \
+        ddx = f"({cx} - {_name(xmin)})"
+        ddy = f"({cy} - {_name(ymin)})"
+        keep = (f"({keep} AND ((({ddx} * {ddx}) + ({ddy} * {ddy})) "
+                f"<= {_d((float(radius) + e) ** 2)}))")
+    df = df.filter(F.expr(keep))
+    return df.withColumn("cell", F.expr(_pack_sql(code, "`_q`", "`_r`"))) \
         .drop("_q", "_r", "_q0", "_q1", "_r0", "_r1")
-    if keep_bbox:
-        # same contract as explode_poly_cells(keep_bbox=True): the
-        # UNDILATED bbox rides along for the JVM prefilter
-        df = (df.withColumn("bxmin", F.col(xmin))
-              .withColumn("bymin", F.col(ymin))
-              .withColumn("bxmax", F.col(xmax))
-              .withColumn("bymax", F.col(ymax)))
-    return df
 
 
 def salted(points: DataFrame, polys: DataFrame, salt: int,

@@ -61,19 +61,33 @@ _PAIRS_SQL = f"""
 """
 
 
+def _key_scan(spark: SparkSession, sf_dir: str, table: str,
+              key: str) -> DataFrame:
+    """The one BIGINT key column of a geotag table. Every coordinate,
+    extent and year derives from the key, so nothing else is read. The
+    declared schema skips Spark's footer-inference job (one Spark job
+    per unschema'd read, run at plan build); since a declared schema
+    reads a missing column as NULLs, a null key fails the scan by name
+    instead of yielding null rows. An INT32 key widens to BIGINT."""
+    msg = f"{table}.parquet: null or missing {key}"
+    return (spark.read.schema(f"{key} BIGINT")
+            .parquet(f"{sf_dir}/{table}.parquet")
+            .select(F.expr(f"coalesce(`{key}`, raise_error('{msg}'))")
+                    .alias(key)))
+
+
 def points_df(spark: SparkSession, sf_dir: str,
               spread: bool = True) -> DataFrame:
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    # the testdata tables are single small parquet files → one input
-    # split; a 100 TB scan has thousands. Spread the probe side across
-    # the cluster so downstream joins/kernels parallelize (a real scan
-    # arrives pre-split and skips this).
+    o = _key_scan(spark, sf_dir, "orders", "o_orderkey")
+    # The probe side is spread across the cluster so the per-point
+    # joins and kernels parallelize: a testdata table is one small file,
+    # hence one input split (a real scan arrives pre-split).
     # r08 (guide §2.4): HASH on the point key, not round-robin — the
     # keyless form pays a sort-before-repartition AND its partitioning
     # is useless downstream, while hashpartitioning(pid) is exactly
-    # what every per-pid groupBy / window / left-join wants, so
-    # Catalyst elides their exchanges (knn3's 25 M-row rank shuffle
-    # disappears outright: 4 → 3 exchanges, measured 3.5 → 1.9 s).
+    # what every per-pid groupBy or window wants, so Catalyst elides
+    # their exchanges (the one-scan aggregate of _per_point, knn3's
+    # rank window: measured 3.5 → 1.9 s when its shuffle went away).
     # spread=False skips the exchange for consumers with NO per-point
     # kernel or per-pid operator (tile_counts: scan → map-side partial
     # agg → 256-group exchange is the 100 TB plan shape already; the
@@ -90,43 +104,71 @@ def points_df(spark: SparkSession, sf_dir: str,
 
 
 def rects_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    p = spark.read.parquet(f"{sf_dir}/part.parquet")
+    p = _key_scan(spark, sf_dir, "part", "p_partkey")
     # single small file → 1 split; spread so the cover explode
     # parallelizes (r08: hash on the key — no round-robin sort, and
     # the key partitioning is reusable downstream, guide §2.4)
     p = p.repartition(spark.sparkContext.defaultParallelism,
                       F.col("p_partkey"))
-    sel = [F.col("p_partkey").alias("fid")]
-    sel += [F.expr(v).alias(k) for k, v in _R.items()]
-    df = p.select(*sel)
-    ring = F.array(
-        F.col("rxmin"), F.col("rymin"), F.col("rxmax"), F.col("rymin"),
-        F.col("rxmax"), F.col("rymax"), F.col("rxmin"), F.col("rymax"),
-        F.col("rxmin"), F.col("rymin"),
-    )
-    return df.withColumn("geom", F.array(ring))
+    df = p.selectExpr("p_partkey AS fid", *[f"{v} AS {k}" for k, v in _R.items()])
+    return df.withColumn("geom", F.expr(
+        "array(array(rxmin, rymin, rxmax, rymin, rxmax, rymax, "
+        "rxmin, rymax, rxmin, rymin))"))
+
+
+# point-to-rectangle distance over a joined (point, rect) row: pure
+# JVM and codegen'd (axis-aligned features need no pandas UDF)
+_RECT_DIST_SQL = ("sqrt((greatest((rxmin - x), (x - rxmax), 0.0D) "
+                  "* greatest((rxmin - x), (x - rxmax), 0.0D)) "
+                  "+ (greatest((rymin - y), (y - rymax), 0.0D) "
+                  "* greatest((rymin - y), (y - rymax), 0.0D)))")
+
+
+def _rect_cover(rects: DataFrame) -> tuple[int, DataFrame]:
+    """(cell code, maxdist cover of `rects`). Finer-than-radius cells →
+    tighter dilation cover → fewer raw join rows (see
+    range_join.range_join_pairs). r08: rects are axis-aligned, so the
+    cover explodes straight from the bbox columns in pure JVM
+    (explode_bbox_cells) — no pandas cover UDF, no ring parse; the
+    broadcast build side is one codegen'd scan+explode instead of an
+    ArrowEvalPython stage."""
+    code = I.code_for_radius(MAXDIST / 4.0)
+    return code, explode_bbox_cells(rects.drop("geom"), MAXDIST, code)
 
 
 def rect_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The engine's candidate-pair join: points carry one hex cell id,
     rectangles explode over the hex cover of their maxdist-dilated
-    bbox, equi join on cell, then a pure-Column (JVM, codegen'd)
-    point-to-rectangle distance — no Python in the refinement at all
-    (axis-aligned features need no pandas UDF)."""
-    # finer-than-radius cells → tighter dilation cover → fewer raw
-    # join rows (see range_join.range_join_pairs)
-    code = I.code_for_radius(MAXDIST / 4.0)
+    bbox, equi join on cell, then the point-to-rectangle distance."""
+    code, cover = _rect_cover(rects_df(spark, sf_dir))
     pts = with_cell(points_df(spark, sf_dir), code)
-    # r08: rects are axis-aligned, so the cover explodes straight from
-    # the bbox columns in pure JVM (explode_bbox_cells) — no pandas
-    # cover UDF, no ring parse; the broadcast build side is one
-    # codegen'd scan+explode instead of an ArrowEvalPython stage
-    rects = explode_bbox_cells(rects_df(spark, sf_dir).drop("geom"),
-                               MAXDIST, code)
-    pairs = pts.join(F.broadcast(rects), "cell")
-    dx = F.greatest(F.col("rxmin") - F.col("x"), F.col("x") - F.col("rxmax"), F.lit(0.0))
-    dy = F.greatest(F.col("rymin") - F.col("y"), F.col("y") - F.col("rymax"), F.lit(0.0))
-    return pairs.withColumn("dist", F.sqrt(dx * dx + dy * dy))
+    return pts.join(F.broadcast(cover), "cell") \
+        .withColumn("dist", F.expr(_RECT_DIST_SQL))
+
+
+def _per_point(spark: SparkSession, sf_dir: str, *aggs,
+               theta=None, rects: DataFrame | None = None) -> DataFrame:
+    """One row per point — pid, x, y, pyear and `aggs` — from ONE scan
+    of the points: the celled points LEFT-join the broadcast cover of
+    `rects` (default rects_df) and aggregate per point. A point with no
+    candidate keeps one row whose rectangle columns and `dist` are
+    NULL, so `aggs` state their empty-candidate defaults themselves
+    (when/coalesce) and no second points scan and LEFT join restore
+    them. greatest/least skip NULLs, so a pair expression built from
+    them must test `dist` to stay NULL on that row. `theta` is an extra
+    predicate inside the join condition: a pair it rejects is not a
+    candidate. The points arrive hash-partitioned on pid, so the
+    aggregate needs no exchange."""
+    code, cover = _rect_cover(rects if rects is not None
+                              else rects_df(spark, sf_dir))
+    pts = with_cell(points_df(spark, sf_dir), code)
+    cond = pts["cell"] == cover["cell"]
+    if theta is not None:
+        cond = cond & theta
+    return (pts.join(F.broadcast(cover), cond, "left")
+            .withColumn("dist", F.when(cover["cell"].isNotNull(),
+                                       F.expr(_RECT_DIST_SQL)))
+            .groupBy("pid", "x", "y", "pyear").agg(*aggs))
 
 
 # --- J1/G8: fishnet tile assignment + per-tile counts (the reference's
@@ -155,17 +197,13 @@ FROM ({_PTS_SQL}) GROUP BY 1, 2
 # --- J2/J3/G7: range join + capped nearest distance (the flagship:
 # st_distance + maxdist cap, C_…R:112-117) with LEFT defaults (J6)
 def q_range_near(spark, sf_dir):
-    pairs = rect_pairs(spark, sf_dir).filter(F.col("dist") < MAXDIST)
-    agg = pairs.groupBy("pid").agg(
-        F.count(F.lit(1)).alias("n_cand"),
-        F.min("dist").alias("near_dist"),
-    )
-    pts = points_df(spark, sf_dir)
-    return pts.join(agg, "pid", "left").select(
-        "pid",
-        F.coalesce("n_cand", F.lit(0)).alias("n_cand"),
-        F.coalesce("near_dist", F.lit(MAXDIST)).alias("near_dist"),
-    )
+    near = F.col("dist") < MAXDIST
+    return _per_point(
+        spark, sf_dir,
+        F.count(F.when(near, 1)).alias("n_cand"),
+        F.coalesce(F.min(F.when(near, F.col("dist"))),
+                   F.lit(MAXDIST)).alias("near_dist"),
+    ).select("pid", "n_cand", "near_dist")
 
 
 ORACLE["range_near"] = f"""
@@ -184,34 +222,24 @@ LEFT JOIN (
 # filter, YEAR=0 recode to the oldest real year, area-weighted mean
 # age, LEFT defaults — C_…R:135-197) in exact integer arithmetic
 def q_areadist_square(spark, sf_dir):
-    r = 150
-    pairs = rect_pairs(spark, sf_dir).filter(F.col("ryear") < F.col("pyear"))
-    ow = F.greatest(
-        F.least(F.col("x") + r, F.col("rxmax")) - F.greatest(F.col("x") - r, F.col("rxmin")),
-        F.lit(0.0))
-    oh = F.greatest(
-        F.least(F.col("y") + r, F.col("rymax")) - F.greatest(F.col("y") - r, F.col("rymin")),
-        F.lit(0.0))
-    pairs = pairs.withColumn("a150", ow * oh)
     rects = rects_df(spark, sf_dir)
     oldest = rects.filter(F.col("ryear") > 0).agg(F.min("ryear").alias("oldestyear"))
-    pairs = pairs.crossJoin(F.broadcast(oldest))
-    age = F.col("pyear") - F.when(F.col("ryear") == 0, F.col("oldestyear")) \
-                            .otherwise(F.col("ryear"))
-    pairs = pairs.withColumn("age", age)
-    agg = pairs.groupBy("pid").agg(
-        F.sum("a150").alias("area150"),
-        (F.sum(F.when(F.col("a150") > 0, F.col("age") * F.col("a150")))
-         / F.sum(F.when(F.col("a150") > 0, F.col("a150")))).alias("meanage150"),
-        F.min("dist").alias("near_dist"),
-    )
-    pts = points_df(spark, sf_dir)
-    return pts.join(agg, "pid", "left").select(
-        "pid",
-        F.coalesce("area150", F.lit(0.0)).alias("area150"),
-        F.col("meanage150"),
-        F.coalesce(F.least(F.col("near_dist"), F.lit(MAXDIST)), F.lit(MAXDIST)).alias("near_dist"),
-    )
+    # SQL text, as the oracle states it: one parse per aggregate instead
+    # of a py4j call per Column operator
+    a150 = ("CASE WHEN dist IS NOT NULL THEN"
+            " greatest(least(x + 150, rxmax) - greatest(x - 150, rxmin), 0.0D)"
+            " * greatest(least(y + 150, rymax) - greatest(y - 150, rymin), 0.0D)"
+            " END")
+    age = "(pyear - CASE WHEN ryear = 0 THEN oldestyear ELSE ryear END)"
+    return _per_point(
+        spark, sf_dir,
+        F.expr(f"coalesce(sum({a150}), 0.0D)").alias("area150"),
+        F.expr(f"sum(CASE WHEN {a150} > 0 THEN {age} * {a150} END)"
+               f" / sum(CASE WHEN {a150} > 0 THEN {a150} END)").alias("meanage150"),
+        F.expr(f"coalesce(least(min(dist), {MAXDIST}D), {MAXDIST}D)").alias("near_dist"),
+        theta=F.col("ryear") < F.col("pyear"),
+        rects=rects.crossJoin(F.broadcast(oldest)),
+    ).select("pid", "area150", "meanage150", "near_dist")
 
 
 ORACLE["areadist_square"] = f"""
@@ -651,7 +679,7 @@ def _pair_rect_polys(spark, sf_dir, layer_col: str = "layer",
     construction years (0-sentinels included), so the temporal theta
     and the YEAR-recode age math run over the union fixture — the
     wide_merge capstone's primary-path feature side."""
-    p = spark.read.parquet(f"{sf_dir}/part.parquet")
+    p = _key_scan(spark, sf_dir, "part", "p_partkey")
     # The oracle's three-term closed form assumes p_partkey % _SLOT²
     # is injective (each key owns a private 100 m slot). Past _SLOT²
     # parts (sf > 0.2) distinct keys would share a slot:
@@ -1870,12 +1898,13 @@ FROM kept k JOIN pts p ON p.line_id = k.line_id AND p.idx = k.idx""")
 ORACLE["simplify_lines"] = _simplify_oracle()
 
 
-# --- spatial ANTI join (r06): points with NO feature within maxdist —
-# the relational complement of range_near, planned as the cell-indexed
-# candidate join followed by a LEFT ANTI on pid (one extra exchange,
-# no aggregation). The oracle brute-forces NOT IN over the cross
-# join, so a hash match proves the cell cover misses no candidate
-# (a false-negative cover would leak points into this result).
+# --- spatial ANTI join (r06): points with NO feature within ANTI_R —
+# the relational complement of range_near, planned as range_near's
+# one-scan LEFT candidate join whose per-point count of pairs within
+# ANTI_R must be 0 (no second points scan, no anti join). The oracle
+# brute-forces NOT IN over the cross join, so a hash match proves the
+# cell cover misses no candidate (a false-negative cover would leak
+# points into this result).
 # Radius 300 m (not maxdist): at fixture density every point has a
 # feature within 1000 m, so the interesting complement — ~9 % of
 # points isolated — lives at the tighter cutoff. The candidate pairs
@@ -1885,9 +1914,8 @@ ANTI_R = 300.0
 
 
 def q_spatial_antijoin(spark, sf_dir):
-    pairs = rect_pairs(spark, sf_dir).filter(F.col("dist") < ANTI_R)
-    pts = points_df(spark, sf_dir)
-    return pts.join(pairs.select("pid"), "pid", "left_anti") \
+    near = F.count(F.when(F.col("dist") < ANTI_R, 1)).alias("_n")
+    return _per_point(spark, sf_dir, near).filter(F.col("_n") == 0) \
         .select("pid", "x", "y", "pyear")
 
 

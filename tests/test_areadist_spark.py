@@ -116,3 +116,20 @@ def test_areadist_wide_pivot(spark, fixture_frames):
     pdf = wide.toPandas()
     assert len(pdf) == len(images)  # J5 inner-merge row invariant
     assert "seismic_NEAR_DIST" in pdf.columns and "harvest_AREA150" in pdf.columns
+
+
+def test_join_kernel_validates_feature_side_once(spark):
+    """The validity UDF runs once per call: the validated feature side
+    is materialized before the join plan, so no `_valid(` node remains
+    in any branch of it (the join side, the oldest-year aggregate, the
+    layer list)."""
+    images = synth.geotag_images_pdf(synth.images_pdf(40))
+    layers = synth.footprint_layers_pdf(80)
+    one = layers[layers["layer"] == layers["layer"].iloc[0]]
+    assert len(one) == 80
+    pts = spark.createDataFrame(images, GEOTAGGED_SCHEMA)
+    pls = spark.createDataFrame(one, LAYER_SCHEMA)
+    out = areadist_join(pts, pls)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "_valid(" not in plan
+    assert len(out.toPandas()) == len(images)

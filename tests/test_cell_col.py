@@ -76,9 +76,9 @@ def test_explode_bbox_cells_matches_cover_bbox_many(spark):
 
 
 def test_cell_col_composes_with_literals(spark):
-    # cell_col over plain literal columns (no DataFrame round-trip)
+    # cell_col over SQL double literals (no DataFrame round-trip)
     row = spark.range(1).select(
-        cell_col(F.lit(1234.0), F.lit(5678.0), 2).alias("c")).first()
+        cell_col("1234.0D", "5678.0D", 2).alias("c")).first()
     assert row["c"] == int(I.xy_to_cell(
         np.array([1234.0]), np.array([5678.0]), 2)[0])
 
