@@ -304,20 +304,6 @@ def feature_parts(geom) -> list[np.ndarray]:
     return [np.asarray(p, dtype=np.float64).reshape(-1, 2) for p in geom]
 
 
-def _orient_parts(parts: list[np.ndarray]) -> list[np.ndarray]:
-    """Enforce winding so the signed Green's-theorem sum is the holed
-    area directly: closed part 0 CCW (outer), closed parts 1+ CW
-    (holes). Open parts pass through untouched."""
-    out = []
-    for i, p in enumerate(parts):
-        if not ring_is_closed(p):
-            out.append(_open_ring(p))
-            continue
-        o = orient_ccw(p)
-        out.append(o if i == 0 else o[::-1])
-    return out
-
-
 class PackedRings:
     """Unique features of one Arrow batch packed into flat arrays so
     the per-pair kernel is pure vectorized gather — zero per-pair
@@ -342,32 +328,51 @@ class PackedRings:
         # normalize: a bare (n,2) array is a single-ring feature
         feats = [[f] if isinstance(f, np.ndarray) and f.ndim == 2 else list(f)
                  for f in features]
-        self.closed = np.array(
-            [all(ring_is_closed(np.asarray(p, np.float64).reshape(-1, 2))
-                 for p in f) for f in feats], dtype=bool)
         n = len(feats)
-        part_lists = [
-            _orient_parts([np.asarray(p, np.float64).reshape(-1, 2)
-                           for p in f]) for f in feats
-        ]
-        self.counts = np.array(
-            [sum(len(p) for p in pl) for pl in part_lists], dtype=np.int64)
+        parts = [np.asarray(p, np.float64).reshape(-1, 2) for f in feats for p in f]
+        fpart = np.repeat(np.arange(n, dtype=np.int64), [len(f) for f in feats])
+        nparts = np.bincount(fpart, minlength=n)
+        # part index within its feature: 0 = outer ring, 1+ = holes
+        pidx = np.arange(len(parts)) - np.repeat(np.cumsum(nparts) - nparts, nparts)
+        lens = np.array([len(p) for p in parts], dtype=np.int64)
+        raw = (np.concatenate(parts, axis=0) if parts
+               else np.zeros((0, 2), dtype=np.float64))
+        start = np.cumsum(lens) - lens
+        # first == last vertex: the closing duplicate (_open_ring drops it;
+        # a closed ring — ring_is_closed — also needs ≥ 4 raw vertices)
+        ends_eq = np.zeros(len(parts), dtype=bool)
+        nz = lens > 0
+        ends_eq[nz] = (raw[start[nz]] == raw[start[nz] + lens[nz] - 1]).all(axis=1)
+        closed = ends_eq & (lens >= 4)
+        olen = lens - (ends_eq & (lens >= 2))
+        # orientation of closed parts: the signed shoelace sum of
+        # orient_ccw, evaluated per equal-length group so each sum is the
+        # same contiguous np.sum reduction as the per-ring call
+        ccw = np.ones(len(parts), dtype=bool)
+        for m in np.unique(olen[closed]):
+            sel = np.flatnonzero(closed & (olen == m))
+            vi = start[sel][:, None] + np.arange(m)
+            x, y = raw[vi, 0], raw[vi, 1]
+            a = 0.5 * np.sum(x * np.roll(y, -1, axis=1)
+                             - np.roll(x, -1, axis=1) * y, axis=1)
+            ccw[sel] = a >= 0
+        # closed outer rings CCW, closed holes CW; open parts untouched
+        rev = closed & (ccw != (pidx == 0))
+        ostart = np.cumsum(olen) - olen
+        q = np.arange(int(olen.sum()), dtype=np.int64) - np.repeat(ostart, olen)
+        ol = np.repeat(olen, olen)
+        src = np.repeat(start, olen) + np.where(np.repeat(rev, olen), ol - 1 - q, q)
+        self.V = raw[src]
+        self.counts = np.bincount(fpart, weights=olen, minlength=n).astype(np.int64)
         self.offsets = np.concatenate(
             [[0], np.cumsum(self.counts)[:-1]]).astype(np.int64)
-        allp = [p for pl in part_lists for p in pl]
-        self.V = (np.concatenate(allp, axis=0) if allp
-                  else np.zeros((0, 2), dtype=np.float64))
+        self.closed = np.bincount(fpart[~closed], minlength=n) == 0
+        # each part's last vertex wraps to its first (closed ring) or stays
+        # put (open chain: a degenerate zero-length edge)
         nxt = np.arange(1, len(self.V) + 1, dtype=np.int64)
-        pos = 0
-        for i in range(n):
-            for j, p in enumerate(part_lists[i]):
-                end = pos + len(p) - 1
-                raw = feats[i][j]
-                if ring_is_closed(np.asarray(raw, np.float64).reshape(-1, 2)):
-                    nxt[end] = pos  # ring wraps within its own part
-                else:
-                    nxt[end] = end  # open chain: degenerate stay-edge
-                pos += len(p)
+        last = ostart + olen - 1
+        ne = olen > 0
+        nxt[last[ne]] = np.where(closed[ne], ostart[ne], last[ne])
         self.nxt = nxt
 
 

@@ -72,8 +72,8 @@ def dissolve_corrections_df(polys: DataFrame, layer_col: str = "layer",
     every `tile_size` coarse tile their bbox touches (JVM bbox +
     sequence/explode — no Python), and corrections are computed per
     (layer, tile) group, so one mega-layer spreads over
-    (extent/tile_size)² tasks instead of serializing through a single
-    Python worker. Exactly-once across replicas: a subset's term is
+    (extent/tile_size)² groups, hashed over every core, instead of
+    serializing through a single Python worker. Exactly-once across replicas: a subset's term is
     emitted only by the tile containing its owner corner — the exact
     (max minx, max miny) over member bboxes, pure maxima of input
     doubles, identical in every replica (kernels.overlap_corrections
@@ -136,7 +136,13 @@ def dissolve_corrections_df(polys: DataFrame, layer_col: str = "layer",
                   F.explode(tiles).alias("_t"))
          .select("feature_id", layer_col, "poly_year", "geom",
                  F.col("_t.tx").alias("_tx"), F.col("_t.ty").alias("_ty")))
-    return d.groupBy(layer_col, "_tx", "_ty").applyInPandas(_fn, schema)
+    # a numbered repartition on the grouping keys: it satisfies the
+    # groupBy's clustering (no second exchange), and AQE never
+    # coalesces it — the groupBy's own small-byte shuffle was coalesced
+    # into ONE task, which ran every (layer, tile) group in one worker
+    n = polys.sparkSession.sparkContext.defaultParallelism
+    return (d.repartition(n, layer_col, "_tx", "_ty")
+            .groupBy(layer_col, "_tx", "_ty").applyInPandas(_fn, schema))
 
 
 def _union_area_raster(px: float, py: float, radius: float,

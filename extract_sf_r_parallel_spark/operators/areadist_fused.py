@@ -18,9 +18,15 @@ One narrow stage. Zero shuffles. Zero materialized pairs. Every point
 is completed in the batch it arrives in (candidates come from the
 broadcast index, never from a shuffle), which is the same per-tile
 independence the reference's loop exploited (C_…R:232-253) — minus the
-loop. Output rows = points × layers with the reference's LEFT-default
-semantics (AREA=0, PROP=0, MEANAGE=null, NEAR_DIST=maxdist) emitted
-densely, so no outer join is needed afterwards.
+loop. Every point gets every layer with the reference's LEFT-default
+semantics (AREA=0, PROP=0, MEANAGE=null, NEAR_DIST=maxdist) built in,
+so no outer join is needed afterwards. The output is either long, one
+row per (point, layer), or — with `wide` — one row per point carrying a
+<layer>_<METRIC> block per layer, the reference's suffix-renamed merge
+(C_…R:1194-1208) without a pivot or a key join. The temporal theta and
+MEANAGE are chosen per layer, so one index over several layer groups
+(14 footprints with both, 5 wetland classes with neither) answers them
+all in one pass.
 
 Results are identical to the join kernel's (asserted row-for-row in
 tests/test_areadist_fused.py). A layer whose exact union needs the
@@ -138,16 +144,28 @@ def feature_count(polys: DataFrame) -> int:
     return n
 
 
+def _has_flag(flag, layer: str) -> bool:
+    """`flag` (areadist_fused's `temporal` / `age`) is a bool for every
+    layer or the collection of the layer names that carry it."""
+    return flag if isinstance(flag, bool) else layer in flag
+
+
+def _flag_key(flag):
+    return flag if isinstance(flag, bool) else tuple(sorted(flag))
+
+
 class _FeatureIndex:
     """Driver-built, broadcast-shipped: packed rings + bboxes + years +
     layer codes + CSR (cell id → candidate feature indices) over the
-    features of areadist._feature_side. Its dissolve="auto" corrections
-    (`corr_pdf`) are appended as weighted pseudo-features — weight ±1,
-    is_real False — so the exact union rides the same CSR lookup with
-    zero extra per-point machinery."""
+    features of areadist._feature_side, plus a `temporal` and an `age`
+    flag per layer code. Its dissolve="auto" corrections (`corr_pdf`)
+    are appended as weighted pseudo-features — weight ±1, is_real
+    False — so the exact union rides the same CSR lookup with zero
+    extra per-point machinery."""
 
     def __init__(self, pdf: pd.DataFrame, radius: float, code: int,
-                 corr_pdf: pd.DataFrame | None = None):
+                 corr_pdf: pd.DataFrame | None = None,
+                 temporal=True, age=True):
         if pdf["feature_id"].duplicated().any():  # would count twice
             raise ValueError("_FeatureIndex: duplicate feature_id values "
                              "in the feature side")
@@ -156,6 +174,10 @@ class _FeatureIndex:
         lcodes, lnames = pd.factorize(pdf["layer"])
         lcodes = lcodes.astype(np.int64)
         self.layers = [str(x) for x in lnames]
+        self.temporal = np.array([_has_flag(temporal, n) for n in self.layers],
+                                 dtype=bool)
+        self.age = np.array([_has_flag(age, n) for n in self.layers],
+                            dtype=bool)
         weight = np.ones(len(rings), dtype=np.float64)
         is_real = np.ones(len(rings), dtype=bool)
         if corr_pdf is not None:
@@ -173,11 +195,13 @@ class _FeatureIndex:
             is_real = np.concatenate(
                 [is_real, np.zeros(len(corr_pdf), dtype=bool)])
         self.packed = K.PackedRings(rings)
-        self.bbox = np.array([
-            [min(p[:, 0].min() for p in f), min(p[:, 1].min() for p in f),
-             max(p[:, 0].max() for p in f), max(p[:, 1].max() for p in f)]
-            for f in rings
-        ], dtype=np.float64) if rings else np.zeros((0, 4))
+        # per-feature bbox over the packed vertices (the dropped closing
+        # vertex repeats the first, so the extremes are the raw ones)
+        V, off = self.packed.V, self.packed.offsets
+        self.bbox = np.stack([
+            np.minimum.reduceat(V[:, 0], off), np.minimum.reduceat(V[:, 1], off),
+            np.maximum.reduceat(V[:, 0], off), np.maximum.reduceat(V[:, 1], off),
+        ], axis=1) if rings else np.zeros((0, 4))
         self.years = years
         self.lcodes = lcodes
         self.weight = weight
@@ -218,25 +242,33 @@ def areadist_fused(
     *,
     radii: tuple[float, ...] = (150.0, 565.0),
     maxdist: float = 1000.0,
-    temporal: bool = True,
-    age: bool = True,
+    temporal=True,
+    age=True,
     layer_col: str = "layer",
     validity_filter: bool = True,
     dissolve: str = "auto",
+    wide: tuple[str, ...] | None = None,
 ) -> DataFrame:
     """The broadcast kernel behind operators.areadist.areadist, same
     output: points' columns + layer + NEAR_DIST + AREA<r>/PROP<r>
-    [/MEANAGE_<r>] per radius. `dissolve`: "auto" = exact union via
-    correction pseudo-features (raises K.DissolveFallback when a layer
-    is not exactly dissolvable), "sum" = Σ per-clip areas (disjoint
-    layers)."""
+    [/MEANAGE_<r>] per radius. `temporal` / `age` are True/False for
+    every layer or the collection of layer names that take the theta /
+    MEANAGE (MEANAGE is null on the other layers' rows). `wide` (layer
+    names) emits one row per point instead: the points' columns, then
+    per named layer <layer>_NEAR_DIST, <layer>_AREA<r>, <layer>_PROP<r>
+    [, <layer>_MEANAGE_<r> for age layers]; a named layer with no
+    feature gets the empty-candidate defaults. `dissolve`: "auto" =
+    exact union via correction pseudo-features (raises
+    K.DissolveFallback when a layer is not exactly dissolvable), "sum"
+    = Σ per-clip areas (disjoint layers)."""
     _check_dissolve("areadist_fused", dissolve, ("auto", "sum"))
     spark = points.sparkSession
     code = I.code_for_radius(max(maxdist / 4.0, I.RESOLUTIONS[0]))
     pk = _plan_key(polys)
     cache_key = None if pk is None else (
         spark.sparkContext.applicationId, pk, float(maxdist), code,
-        layer_col, bool(validity_filter), dissolve)
+        layer_col, bool(validity_filter), dissolve,
+        _flag_key(temporal), _flag_key(age))
     hit = _IDX_CACHE.get(cache_key)
     if hit is not None:
         _IDX_CACHE.move_to_end(cache_key)
@@ -250,7 +282,8 @@ def areadist_fused(
         if fallback:
             raise K.DissolveFallback(
                 f"layer {fallback[0]!r} needs the raster dissolve fallback")
-        idx = _FeatureIndex(pl.toPandas(), maxdist, code, corr_pdf)
+        idx = _FeatureIndex(pl.toPandas(), maxdist, code, corr_pdf,
+                            temporal=temporal, age=age)
         bc = spark.sparkContext.broadcast(idx)
         if cache_key is not None:
             _IDX_CACHE[cache_key] = (idx, bc)
@@ -261,11 +294,11 @@ def areadist_fused(
                 except Exception:  # noqa: BLE001
                     pass
     return _fused_apply(points, idx, bc, radii=radii, maxdist=maxdist,
-                        temporal=temporal, age=age, code=code)
+                        age=age, code=code, wide=wide)
 
 
 def _fused_apply(points: DataFrame, idx: "_FeatureIndex", bc, *,
-                 radii, maxdist, temporal, age, code) -> DataFrame:
+                 radii, maxdist, age, code, wide) -> DataFrame:
     """Lazy half of the fused plan: given a built (possibly cached)
     _FeatureIndex + its broadcast, declare the one-stage mapInPandas.
     No jobs run here — this is what makes the index cache pay: a
@@ -273,16 +306,31 @@ def _fused_apply(points: DataFrame, idx: "_FeatureIndex", bc, *,
     radii = tuple(float(r) for r in radii)
     L = len(idx.layers)
 
+    def metric_names(with_age: bool) -> list[str]:
+        names = ["NEAR_DIST"]
+        for r in radii:
+            names += [f"AREA{int(r)}", f"PROP{int(r)}"]
+            if with_age:
+                names.append(f"MEANAGE_{int(r)}")
+        return names
+
+    with_age = bool(age)
     in_fields = list(points.schema.fields)
-    metric_fields = [T.StructField("layer", T.StringType()),
-                     T.StructField("NEAR_DIST", T.DoubleType())]
-    for r in radii:
-        metric_fields.append(T.StructField(f"AREA{int(r)}", T.DoubleType()))
-        metric_fields.append(T.StructField(f"PROP{int(r)}", T.DoubleType()))
-        if age:
-            metric_fields.append(T.StructField(f"MEANAGE_{int(r)}", T.DoubleType()))
-    out_schema = T.StructType(in_fields + metric_fields)
     in_cols = [f.name for f in in_fields]
+    if wide is None:
+        out_names = ["layer"] + metric_names(with_age)
+    else:
+        lcode = {name: li for li, name in enumerate(idx.layers)}
+        blocks = [(name, lcode.get(name), metric_names(_has_flag(age, name)))
+                  for name in wide]
+        out_names = [f"{name}_{m}" for name, _, ms in blocks for m in ms]
+    out_schema = T.StructType(in_fields + [
+        T.StructField(n, T.StringType() if n == "layer" else T.DoubleType())
+        for n in out_names])
+    # a wide layer with no feature: the empty-candidate defaults
+    defaults = {m: (float(maxdist) if m == "NEAR_DIST" else
+                    np.nan if m.startswith("MEANAGE_") else 0.0)
+                for m in metric_names(True)}
 
     def _chunk_metrics(fx, px, py, pyear):
         """Candidate lookup + prefilters + exact kernel for one point
@@ -303,8 +351,10 @@ def _fused_apply(points: DataFrame, idx: "_FeatureIndex", bc, *,
             ppi = np.zeros(0, dtype=np.int64)
             ridx = np.zeros(0, dtype=np.int64)
 
-        if temporal:
-            keep = fx.years[ridx] < pyear[ppi]          # theta (C_…R:93-94)
+        if fx.temporal.any():
+            # theta (C_…R:93-94), on the temporal layers' candidates
+            keep = (~fx.temporal[fx.lcodes[ridx]]
+                    | (fx.years[ridx] < pyear[ppi]))
             ppi, ridx = ppi[keep], ridx[keep]
         # bbox distance < maxdist (lossless: bbox dist ≤ true dist)
         bb = fx.bbox[ridx]
@@ -315,6 +365,71 @@ def _fused_apply(points: DataFrame, idx: "_FeatureIndex", bc, *,
         m = K.packed_pair_metrics(px[ppi], py[ppi], ridx, fx.packed, radii)
         return ppi, ridx, m
 
+    def _chunk_reduce(fx, nL, px, py, pyear) -> dict[str, np.ndarray]:
+        """Per (point, layer) metrics of one chunk, B × nL row-major."""
+        B = len(px)
+        ppi, ridx, m = _chunk_metrics(fx, px, py, pyear)
+        lr = fx.lcodes[ridx]
+        key = ppi * nL + lr
+        order = np.argsort(key, kind="stable")
+        key_s = key[order]
+        ukey, kstart = np.unique(key_s, return_index=True)
+
+        nkeys = B * nL
+        near = np.full(nkeys, maxdist, dtype=np.float64)
+        real = fx.is_real[ridx][order] if len(key_s) else np.zeros(0, bool)
+        wgt = fx.weight[ridx][order] if len(key_s) else np.zeros(0)
+        if len(key_s):
+            # NEAR_DIST over REAL features only (corrections
+            # are areal bookkeeping, not features)
+            dreal = np.where(real, m["dist"][order], np.inf)
+            dmin = np.minimum.reduceat(dreal, kstart)
+            near[ukey] = np.minimum(dmin, maxdist)  # cap (C_…R:116-117)
+        cols: dict[str, np.ndarray] = {"NEAR_DIST": near}
+        for r in radii:
+            a = m[f"a{int(r)}"][order] if len(key_s) else np.zeros(0)
+            asum = np.zeros(nkeys, dtype=np.float64)
+            if len(key_s):
+                # dissolved union: Σ weight·area (weight is +1
+                # for real features, ±1 for I-E corrections)
+                asum[ukey] = np.add.reduceat(wgt * a, kstart)
+            cols[f"AREA{int(r)}"] = asum
+            cols[f"PROP{int(r)}"] = asum / (PI_LITERAL * r * r)
+            if with_age:
+                num = np.zeros(nkeys)
+                den = np.zeros(nkeys)
+                if len(key_s):
+                    # YEAR=0 → layer's oldest real year (C_…R:150)
+                    yy = fx.years[ridx][order].astype(np.float64)
+                    old = fx.oldest[lr[order]].astype(np.float64)
+                    yy = np.where(yy == 0, old, yy)
+                    agev = pyear[ppi][order] - yy
+                    # yy stays -1 when the layer has NO real
+                    # year: age undefined → excluded from num
+                    # AND den (null-contribution semantics,
+                    # ADVICE r01 — matches oracle + join path).
+                    # MEANAGE uses per-clip areas of REAL
+                    # features (the reference's non-dissolved
+                    # area notion, C_…R:156-159)
+                    w = np.where((a > 0) & (yy > 0) & real, a, 0.0)
+                    num[ukey] = np.add.reduceat(agev * w, kstart)
+                    den[ukey] = np.add.reduceat(w, kstart)
+                with np.errstate(divide="ignore", invalid="ignore"):
+                    ma = np.where(den > 0, num / den, np.nan)
+                if not fx.age.all():
+                    ma.reshape(B, nL)[:, ~fx.age] = np.nan
+                cols[f"MEANAGE_{int(r)}"] = ma
+        return cols
+
+    def _out_col(name: str, arr: np.ndarray):
+        if name.startswith("MEANAGE_"):
+            # emit SQL NULL (not NaN) for empty candidate sets —
+            # identical to the join path's LEFT-join null
+            # (pandas nullable Float64 → Arrow null)
+            arr = np.ascontiguousarray(arr)
+            return pd.arrays.FloatingArray(arr, np.isnan(arr))
+        return arr
+
     def fused(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         fx = bc.value
         nL = max(L, 1)
@@ -323,89 +438,36 @@ def _fused_apply(points: DataFrame, idx: "_FeatureIndex", bc, *,
             # output is assembled and yielded ONCE per Arrow batch —
             # per-chunk yields would send thousands of tiny record
             # batches through the Arrow stream (measured JVM-side cost)
-            acc: list[dict[str, np.ndarray]] = []
+            B0 = len(pdf0)
+            if B0 == 0:
+                continue
             px0 = pdf0["x"].to_numpy(np.float64)
             py0 = pdf0["y"].to_numpy(np.float64)
             pyear0 = pdf0["YEAR"].to_numpy(np.int64)
-            for lo in range(0, len(pdf0), _CHUNK_POINTS):
-                B = min(_CHUNK_POINTS, len(pdf0) - lo)
-                if B == 0:
-                    continue
-                px = px0[lo:lo + _CHUNK_POINTS]
-                py = py0[lo:lo + _CHUNK_POINTS]
-                pyear = pyear0[lo:lo + _CHUNK_POINTS]
-                ppi, ridx, m = _chunk_metrics(fx, px, py, pyear)
-                lr = fx.lcodes[ridx]
-                key = ppi * nL + lr
-                order = np.argsort(key, kind="stable")
-                key_s = key[order]
-                ukey, kstart = np.unique(key_s, return_index=True)
-
-                nkeys = B * nL
-                near = np.full(nkeys, maxdist, dtype=np.float64)
-                real = fx.is_real[ridx][order] if len(key_s) else np.zeros(0, bool)
-                wgt = fx.weight[ridx][order] if len(key_s) else np.zeros(0)
-                if len(key_s):
-                    # NEAR_DIST over REAL features only (corrections
-                    # are areal bookkeeping, not features)
-                    dreal = np.where(real, m["dist"][order], np.inf)
-                    dmin = np.minimum.reduceat(dreal, kstart)
-                    near[ukey] = np.minimum(dmin, maxdist)  # cap (C_…R:116-117)
-                cols: dict[str, np.ndarray] = {"NEAR_DIST": near}
-                for r in radii:
-                    a = m[f"a{int(r)}"][order] if len(key_s) else np.zeros(0)
-                    asum = np.zeros(nkeys, dtype=np.float64)
-                    if len(key_s):
-                        # dissolved union: Σ weight·area (weight is +1
-                        # for real features, ±1 for I-E corrections)
-                        asum[ukey] = np.add.reduceat(wgt * a, kstart)
-                    cols[f"AREA{int(r)}"] = asum
-                    cols[f"PROP{int(r)}"] = asum / (PI_LITERAL * r * r)
-                    if age:
-                        # YEAR=0 → layer's oldest real year (C_…R:150)
-                        yy = fx.years[ridx][order].astype(np.float64) if len(key_s) else np.zeros(0)
-                        if len(key_s):
-                            old = fx.oldest[lr[order]].astype(np.float64)
-                            yy = np.where(yy == 0, old, yy)
-                            agev = pyear[ppi][order] - yy
-                            num = np.zeros(nkeys)
-                            den = np.zeros(nkeys)
-                            # yy stays -1 when the layer has NO real
-                            # year: age undefined → excluded from num
-                            # AND den (null-contribution semantics,
-                            # ADVICE r01 — matches oracle + join path).
-                            # MEANAGE uses per-clip areas of REAL
-                            # features (the reference's non-dissolved
-                            # area notion, C_…R:156-159)
-                            w = np.where((a > 0) & (yy > 0) & real, a, 0.0)
-                            num[ukey] = np.add.reduceat(agev * w, kstart)
-                            den[ukey] = np.add.reduceat(w, kstart)
-                        else:
-                            num = np.zeros(nkeys)
-                            den = np.zeros(nkeys)
-                        with np.errstate(divide="ignore", invalid="ignore"):
-                            ma = np.where(den > 0, num / den, np.nan)
-                        cols[f"MEANAGE_{int(r)}"] = ma
-
-                acc.append(cols)
-
-            if not acc:
-                continue
-            # dense (B × L) output with LEFT defaults built in
-            B0 = len(pdf0)
-            rep = pdf0.loc[pdf0.index.repeat(nL)].reset_index(drop=True)
-            out = rep[in_cols].copy()
-            out["layer"] = np.tile(np.array(fx.layers if L else ["<none>"]), B0)
-            for name in acc[0]:
-                arr = (np.concatenate([c[name] for c in acc])
-                       if len(acc) > 1 else acc[0][name])
-                if name.startswith("MEANAGE_"):
-                    # emit SQL NULL (not NaN) for empty candidate sets —
-                    # identical to the join path's LEFT-join null
-                    # (pandas nullable Float64 → Arrow null)
-                    out[name] = pd.arrays.FloatingArray(arr, np.isnan(arr))
-                else:
-                    out[name] = arr
+            acc = [_chunk_reduce(fx, nL, px0[lo:lo + _CHUNK_POINTS],
+                                 py0[lo:lo + _CHUNK_POINTS],
+                                 pyear0[lo:lo + _CHUNK_POINTS])
+                   for lo in range(0, B0, _CHUNK_POINTS)]
+            cols = {name: (np.concatenate([c[name] for c in acc])
+                           if len(acc) > 1 else acc[0][name])
+                    for name in acc[0]}
+            if wide is None:
+                # dense (B × L) output with LEFT defaults built in
+                rep = pdf0.loc[pdf0.index.repeat(nL)].reset_index(drop=True)
+                out = rep[in_cols].copy()
+                out["layer"] = np.tile(np.array(fx.layers if L else ["<none>"]), B0)
+                for name, arr in cols.items():
+                    out[name] = _out_col(name, arr)
+            else:
+                # one row per point: layer li's column of each metric
+                new = {}
+                for name, li, ms in blocks:
+                    for m in ms:
+                        arr = (cols[m].reshape(B0, nL)[:, li] if li is not None
+                               else np.full(B0, defaults[m]))
+                        new[f"{name}_{m}"] = _out_col(m, arr)
+                out = pd.concat([pdf0[in_cols].reset_index(drop=True),
+                                 pd.DataFrame(new)], axis=1)
             yield out
 
     return points.mapInPandas(fused, out_schema)

@@ -54,7 +54,9 @@ def rect_overlay_pairs(a: DataFrame, b: DataFrame,
     code = I.code_for_radius(cell_edge)  # smallest registered edge ≥
     sa, sb = suffixes
 
-    shared = (set(a.columns) & set(b.columns)) - {"geom"}
+    # a's column order, not set order: the plan must not depend on the
+    # process's string-hash seed
+    shared = [c for c in a.columns if c in b.columns and c != "geom"]
     for c in shared:
         a = a.withColumnRenamed(c, f"{c}{sa}")
         b = b.withColumnRenamed(c, f"{c}{sb}")

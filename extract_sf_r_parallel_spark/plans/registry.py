@@ -599,52 +599,81 @@ GROUP BY 1, 2
 # areadist per footprint layer (14-way merge, C_…R:1194-1208) and
 # areadist.wet per wetland class (5-way, D_…R:595-608), suffix-renames
 # each layer's metric columns, and inner-merges everything on
-# (PKEY, SS, YEAR). Here: ONE areadist call over all 14 footprint
-# layers (temporal + age — the areadist.age variant), one over the 5
-# wetland classes (no temporal, no age — areadist.wet), each pivoted
-# by areadist_wide into <layer>_<METRIC> columns, inner-joined on the
-# keys — 19 layers × metrics = 123 metric columns in one DataFrame,
-# the reference's "give me the output table" answer in one call.
-# Both sides emit every point densely (LEFT semantics), so the inner
-# merge preserves the point count — the reference's 83,439-row
-# invariant (C_…R:707-709), asserted in tests/test_wide_merge.py.
+# (PKEY, SS, YEAR). Here: the two feature sides are unioned (ids made
+# unique per side) and ONE fused areadist pass over one broadcast index
+# answers all 19 layers — the 14 footprint layers with the temporal
+# theta and MEANAGE (the areadist.age variant), the 5 wetland classes
+# with neither (areadist.wet) — and emits the <layer>_<METRIC> row per
+# point directly: no pivot, no key join (one join over the union of the
+# branches instead of one per branch, as in Teradata's joins over
+# UNION ALL, SIGMOD 2018). 19 layers × metrics = 123 metric columns,
+# the reference's "give me the output table" answer in one call. A
+# union past the broadcast gate, or with a layer that needs the raster
+# dissolve, takes the join route instead: one areadist call per side,
+# each pivoted by areadist_wide, inner-joined on the keys — the same
+# columns. Every point is emitted densely (LEFT semantics) on both
+# routes, so the point count is preserved — the reference's
+# 83,439-row invariant (C_…R:707-709), asserted in
+# tests/test_wide_merge.py.
 _WM_LAYERS = [f"L{i:02d}" for i in range(14)]
 _WM_CLASSES = ["Bog", "Fen", "Marsh", "Open_Water", "Swamp"]
+# the wetland side's feature ids move past every footprint id
+_WM_SIDE_SHIFT = 40
+
+
+def _wide_select(df, blocks):
+    """The keys and the rounded <layer>_<METRIC> blocks, in `blocks`
+    order ((layer, has MEANAGE) pairs), in one selectExpr."""
+    return df.selectExpr("PKEY", "SS", "YEAR", *[
+        e for name, with_age in blocks
+        for e in spatial_queries._flagship_exprs(f"{name}_", with_age)])
 
 
 def _wide_merge(spark, sf_dir, foot_polys, wet_polys, dissolve):
-    """14 footprint layers (temporal + age) and 5 wetland classes, each
-    run through areadist, rounded, pivoted wide and inner-merged
-    on the point keys. `foot_polys` / `wet_polys` build the feature
-    sides; they are called on the worker threads below."""
-    from concurrent.futures import ThreadPoolExecutor
-
+    """14 footprint layers (temporal + age) and 5 wetland classes per
+    point, rounded, one row per point with a <layer>_<METRIC> block per
+    layer. `foot_polys` / `wet_polys` build the feature sides (layer
+    columns `layer` / `CWCS_Class`)."""
+    from ..geo import kernels as K
+    from ..operators import areadist_fused as AF
     from ..operators.areadist import areadist_wide
+
+    shared = set(_WM_LAYERS) & set(_WM_CLASSES)
+    if shared:
+        raise ValueError(f"wide_merge: layer names {sorted(shared)} are in "
+                         f"both the footprint and the wetland side")
+    blocks = [(L, True) for L in _WM_LAYERS] + [(C, False) for C in _WM_CLASSES]
     pts = _keyed_points(spark, sf_dir)
+    foot, wet = foot_polys(), wet_polys()
 
-    def _foot_side():
-        foot = areadist(pts, foot_polys(), validity_filter=False,
-                        dissolve=dissolve)
-        return areadist_wide(_flagship_select(foot), values=tuple(_WM_LAYERS))
+    def side(polys, layer_col, layers, n):
+        return polys.selectExpr(
+            f"feature_id + {n << _WM_SIDE_SHIFT} AS feature_id",
+            f"`{layer_col}` AS layer", "YEAR", "geom",
+        ).filter(F.col("layer").isin(*layers))
 
-    def _wet_side():
-        wet = areadist(pts, wet_polys(), temporal=False, age=False,
-                       layer_col="CWCS_Class", validity_filter=False,
-                       dissolve=dissolve)
-        return areadist_wide(_flagship_select(wet), values=tuple(_WM_CLASSES))
-
-    # the two areadist passes each run eager plan-build jobs on
-    # the driver (feature count, distributed correction build+collect,
-    # geometry collect+broadcast) that are fully independent — overlap
-    # them on two threads; Spark schedules concurrent jobs fine and
-    # this roughly halves the capstone's serial plan-build latency
-    with ThreadPoolExecutor(2) as ex:
-        ff, wf = ex.submit(_foot_side), ex.submit(_wet_side)
-        wide_f, wide_w = ff.result(), wf.result()
-
+    union = side(foot, "layer", _WM_LAYERS, 0).unionByName(
+        side(wet, "CWCS_Class", _WM_CLASSES, 1))
+    if AF.feature_count(union) <= AF.MAX_BROADCAST_FEATURES:
+        # looked up on the module at call time, so a wrapper installed
+        # on areadist_fused (perfbench tracing) sees the build
+        try:
+            return _wide_select(AF.areadist_fused(
+                pts, union, temporal=frozenset(_WM_LAYERS),
+                age=frozenset(_WM_LAYERS), validity_filter=False,
+                dissolve=dissolve, wide=(*_WM_LAYERS, *_WM_CLASSES)), blocks)
+        except K.DissolveFallback:
+            pass
+    foot = areadist(pts, foot, validity_filter=False, dissolve=dissolve)
+    wet = areadist(pts, wet, temporal=False, age=False,
+                   layer_col="CWCS_Class", validity_filter=False,
+                   dissolve=dissolve)
     # the reference's final inner merge on the point keys
     # (C_…R:1194-1208); both sides are dense → row count preserved
-    return wide_f.join(wide_w, ["PKEY", "SS", "YEAR"], "inner")
+    wide = areadist_wide(foot.drop("x", "y"), values=tuple(_WM_LAYERS)).join(
+        areadist_wide(wet.drop("x", "y"), values=tuple(_WM_CLASSES)),
+        ["PKEY", "SS", "YEAR"], "inner")
+    return _wide_select(wide, blocks)
 
 
 def q_wide_merge_sum(spark, sf_dir):
@@ -786,7 +815,7 @@ ORACLE["wide_merge_sum"] = _wide_merge_sum_oracle()
 
 # --- wide_merge, the PRIMARY-path capstone (VERDICT r04 next-#2): the
 # same 19-layer wide-merged output table, but run over the controlled-
-# overlap pair-rect fixtures so both areadist passes execute the
+# overlap pair-rect fixtures so both feature sides take the
 # reference's primary st_union dissolve (C_…R:99,154; D_…R:35,42) —
 # dissolve left at its "auto" DEFAULT, overlap corrections kick in
 # with no caller hint. The footprint side additionally carries

@@ -681,63 +681,63 @@ def _pair_rect_polys(spark, sf_dir, layer_col: str = "layer",
     wide_merge capstone's primary-path feature side."""
     p = _key_scan(spark, sf_dir, "part", "p_partkey")
     # The oracle's three-term closed form assumes p_partkey % _SLOT²
-    # is injective (each key owns a private 100 m slot). Past _SLOT²
-    # parts (sf > 0.2) distinct keys would share a slot:
-    # the engine still subtracts the cross-key overlaps but the
-    # per-key oracle would not, so fail loudly instead of
-    # hash-mismatching mysteriously (ADVICE r02).
-    n_parts = p.count()
-    assert n_parts <= _SLOT * _SLOT, (
-        f"pair-rect fixture needs ≤ {_SLOT * _SLOT} parts for "
-        f"slot privacy; got {n_parts} — enlarge _SLOT for this sf")
+    # is injective (each key owns a private 100 m slot). A key above
+    # _SLOT² could share a slot: the engine would still subtract the
+    # cross-key overlaps but the per-key oracle would not, so fail
+    # loudly instead of hash-mismatching mysteriously (ADVICE r02).
+    # Checked per row, so the plan build runs no Spark job. [0, _SLOT²]
+    # admits both 0-based (testdata) and 1-based key sets; of its
+    # keys only 0 and _SLOT² share a slot.
+    S2 = _SLOT * _SLOT
+    msg = (f"pair-rect fixture needs part keys in [0, {S2}] for slot "
+           f"privacy — enlarge _SLOT for this sf")
+    p = p.selectExpr(f"CASE WHEN p_partkey >= 0 AND p_partkey <= {S2} "
+                     f"THEN p_partkey ELSE raise_error('{msg}') END AS p_partkey")
     # single small file → 1 split; spread so the cover/correction UDFs
     # parallelize (a real layer scan arrives pre-split; r08: hash on
     # the key — skips the round-robin pre-sort, guide §2.4)
     p = p.repartition(spark.sparkContext.defaultParallelism,
                       F.col("p_partkey"))
-    k = F.pmod(F.col("p_partkey"), F.lit(_SLOT * _SLOT))
-    sx, sy = F.pmod(k, F.lit(_SLOT)), F.floor(k / _SLOT)
-    ox = (sx * 100 + 10).cast("double")
-    oy = (sy * 100 + 10).cast("double")
-    hw = (F.lit(10) + F.pmod("p_partkey", F.lit(15))).cast("double")
-    hh = (F.lit(8) + F.pmod("p_partkey", F.lit(11))).cast("double")
+    # SQL text, one selectExpr per frame: a Column per expression costs
+    # ~11 py4j round trips, and this builds at every capstone call
     if with_class:
-        lay = F.element_at(
-            F.array(*[F.lit(c) for c in (classes or _WET_CLASSES)]),
-            (F.pmod(F.col("p_partkey"), F.lit(5)) + 1).cast("int"))
+        names = ", ".join(f"'{c}'" for c in (classes or _WET_CLASSES))
+        lay = f"element_at(array({names}), CAST(pmod(p_partkey, 5) + 1 AS INT))"
     elif foot14:
-        lay = F.format_string(
-            "L%02d", F.pmod(F.col("p_partkey"), F.lit(14)).cast("int"))
+        lay = "format_string('L%02d', CAST(pmod(p_partkey, 14) AS INT))"
     else:
-        lay = F.lit("pairs")
+        lay = "'pairs'"
     # independent construction years per rect (foot14 only): the same
     # 0-sentinel recipe as the geotag rects, different moduli for A and
     # B so the overlap correction's theta year max(yA, yB) is exercised
     # with genuinely distinct member years
-    ya = F.when(F.pmod("p_partkey", F.lit(20)) == 0, 0) \
-          .otherwise(1990 + F.pmod("p_partkey", F.lit(29))).cast("int")
-    yb = F.when(F.pmod("p_partkey", F.lit(17)) == 0, 0) \
-          .otherwise(1992 + F.pmod(F.col("p_partkey") * 3, F.lit(27))) \
-          .cast("int")
-    zero = F.lit(0).cast("int")
-    base = p.select("p_partkey", ox.alias("ox"), oy.alias("oy"),
-                    hw.alias("hw"), hh.alias("hh"), lay.alias("_lay"),
-                    (ya if foot14 else zero).alias("_ya"),
-                    (yb if foot14 else zero).alias("_yb"))
+    if foot14:
+        ya = ("CAST(CASE WHEN pmod(p_partkey, 20) = 0 THEN 0 "
+              "ELSE 1990 + pmod(p_partkey, 29) END AS INT)")
+        yb = ("CAST(CASE WHEN pmod(p_partkey, 17) = 0 THEN 0 "
+              "ELSE 1992 + pmod(p_partkey * 3, 27) END AS INT)")
+    else:
+        ya = yb = "CAST(0 AS INT)"
+    k = f"pmod(p_partkey, {S2})"
+    base = p.selectExpr(
+        "p_partkey",
+        f"CAST(pmod({k}, {_SLOT}) * 100 + 10 AS DOUBLE) AS ox",
+        f"CAST(FLOOR({k} / {_SLOT}) * 100 + 10 AS DOUBLE) AS oy",
+        "CAST(10 + pmod(p_partkey, 15) AS DOUBLE) AS hw",
+        "CAST(8 + pmod(p_partkey, 11) AS DOUBLE) AS hh",
+        f"{lay} AS _lay", f"{ya} AS _ya", f"{yb} AS _yb")
 
-    def rect(df, x0, y0, x1, y1, fid, year_col):
-        ring = F.array(x0, y0, x1, y0, x1, y1, x0, y1, x0, y0)
-        return df.select(fid.alias("feature_id"),
-                         F.col("_lay").alias(layer_col),
-                         F.col(year_col).alias("YEAR"),
-                         F.array(ring).alias("geom"))
+    def rect(x0, y0, x1, y1, fid, year_col):
+        return base.selectExpr(
+            f"{fid} AS feature_id", f"_lay AS `{layer_col}`",
+            f"{year_col} AS YEAR",
+            f"array(array({x0}, {y0}, {x1}, {y0}, {x1}, {y1}, "
+            f"{x0}, {y1}, {x0}, {y0})) AS geom")
 
-    a = rect(base, F.col("ox"), F.col("oy"),
-             F.col("ox") + 2 * F.col("hw"), F.col("oy") + 2 * F.col("hh"),
-             F.col("p_partkey") * 2, "_ya")
-    b = rect(base, F.col("ox") + F.col("hw"), F.col("oy"),
-             F.col("ox") + 3 * F.col("hw"), F.col("oy") + 2 * F.col("hh"),
-             F.col("p_partkey") * 2 + 1, "_yb")
+    a = rect("ox", "oy", "ox + 2 * hw", "oy + 2 * hh",
+             "p_partkey * 2", "_ya")
+    b = rect("ox + hw", "oy", "ox + 3 * hw", "oy + 2 * hh",
+             "p_partkey * 2 + 1", "_yb")
     return a.unionByName(b)
 
 
@@ -871,23 +871,31 @@ def q_polyline_knn(spark, sf_dir):
 _WET_CLASSES = ("Bog", "Fen", "Marsh", "Open Water", "Swamp")
 
 
-def _flagship_select(df):
-    """Rounding contract shared with the DuckDB oracles
-    (FLAGSHIP_ROUND). MEANAGE, when present, is gated on the ROUNDED
+def _flagship_exprs(prefix: str, with_age: bool) -> list[str]:
+    """SQL text of the rounding contract shared with the DuckDB oracles
+    (FLAGSHIP_ROUND) for one metric block: `prefix`NEAR_DIST, then
+    AREA/PROP[/MEANAGE] per radius. MEANAGE is gated on the ROUNDED
     area > 0 on both engines, which also unifies the fused path's NaN
     with the join path's NULL for empty candidate sets."""
     d = FLAGSHIP_ROUND
-    cols = [F.col("PKEY"), F.col("SS"), F.col("YEAR"), F.col("layer"),
-            F.round("NEAR_DIST", d["NEAR_DIST"]).alias("NEAR_DIST")]
+    out = [f"round(`{prefix}NEAR_DIST`, {d['NEAR_DIST']}) "
+           f"AS `{prefix}NEAR_DIST`"]
     for r in (150, 565):
-        area = F.round(F.col(f"AREA{r}"), d["AREA"])
-        cols.append(area.alias(f"AREA{r}"))
-        cols.append(F.round(F.col(f"PROP{r}"), d["PROP"]).alias(f"PROP{r}"))
-        if f"MEANAGE_{r}" in df.columns:
-            cols.append(F.when(area > 0, F.round(F.col(f"MEANAGE_{r}"),
-                                                 d["MEANAGE"]))
-                        .alias(f"MEANAGE_{r}"))
-    return df.select(*cols)
+        area = f"round(`{prefix}AREA{r}`, {d['AREA']})"
+        out.append(f"{area} AS `{prefix}AREA{r}`")
+        out.append(f"round(`{prefix}PROP{r}`, {d['PROP']}) "
+                   f"AS `{prefix}PROP{r}`")
+        if with_age:
+            out.append(f"CASE WHEN {area} > 0 THEN round("
+                       f"`{prefix}MEANAGE_{r}`, {d['MEANAGE']}) END "
+                       f"AS `{prefix}MEANAGE_{r}`")
+    return out
+
+
+def _flagship_select(df):
+    """One rounded row per (point, layer) (_flagship_exprs)."""
+    return df.selectExpr("PKEY", "SS", "YEAR", "layer", *_flagship_exprs(
+        "", "MEANAGE_150" in df.columns))
 
 
 def _wet_select(out):

@@ -6,14 +6,20 @@ DissolveFallback and the planner reroutes)."""
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
 from extract_sf_r_parallel_spark.data import synth
 from extract_sf_r_parallel_spark.geo import kernels as K
-from extract_sf_r_parallel_spark.operators.areadist import areadist_join
+from extract_sf_r_parallel_spark.operators.areadist import (
+    areadist_join,
+    dissolve_corrections_df,
+)
 from extract_sf_r_parallel_spark.operators.areadist_fused import areadist_fused
 from extract_sf_r_parallel_spark.oracle import areadist_oracle
+from extract_sf_r_parallel_spark.plans import spatial_queries as SQ
 
 from .conftest import LAYER_SCHEMA, PTS_SCHEMA
 
@@ -213,3 +219,20 @@ def test_tile_boundary_subset_emitted_once(spark):
     assert abs(abs(K.ring_area(ring[:-1])) - 120 * 200) < 1e-9
     assert got.iloc[0]["weight"] == -1.0
     assert got.iloc[0]["poly_year"] == 2001
+
+
+def test_correction_build_spreads_over_partitions(spark, tmp_path):
+    """The (layer, tile) groups of the correction build run in several
+    tasks: AQE does not coalesce its small shuffle into one."""
+    pq.write_table(pa.table({"p_partkey": np.arange(200, dtype=np.int64)}),
+                   str(tmp_path / "part.parquet"))
+    pl = SQ._pair_rect_polys(spark, str(tmp_path)).select(
+        "feature_id", "layer", F.col("YEAR").alias("poly_year"), "geom")
+    corr = dissolve_corrections_df(pl).select(
+        F.spark_partition_id().alias("part"), "feature_id")
+    rows = corr.collect()
+    assert len(rows) == 200  # one A∩B term per part key
+    plan = corr._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in plan
+    assert "AQEShuffleRead" not in plan[plan.index("FlatMapGroupsInPandas"):]
+    assert len({r["part"] for r in rows}) >= 2

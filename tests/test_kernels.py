@@ -231,3 +231,55 @@ def test_triangulate_with_holes_random():
         want = W * H - sum((b[2] - b[0]) * (b[3] - b[1]) for b in occupied)
         got = sum(abs(K.ring_area(t)) for t in tris)
         assert got == pytest.approx(want, rel=1e-10), trial
+
+
+def _packed_by_ring(feats):
+    """Per-ring reference for PackedRings: each closed part oriented
+    with orient_ccw (holes reversed after it), open parts with only the
+    closing duplicate dropped, each part's last vertex wrapping to its
+    first (closed) or to itself (open)."""
+    V, counts, nxt, closed = [], [], [], []
+    for f in feats:
+        n0 = sum(len(v) for v in V)
+        cnt, all_closed = 0, True
+        for j, p in enumerate(f):
+            if K.ring_is_closed(p):
+                o = K.orient_ccw(p)
+                o = o if j == 0 else o[::-1]
+            else:
+                o, all_closed = K._open_ring(p), False
+            start = n0 + cnt
+            nxt += list(range(start + 1, start + len(o)))
+            nxt.append(start if K.ring_is_closed(p) else start + len(o) - 1)
+            V.append(o)
+            cnt += len(o)
+        counts.append(cnt)
+        closed.append(all_closed)
+    return np.concatenate(V), np.array(counts), np.array(nxt), np.array(closed)
+
+
+def test_packed_rings_match_per_ring_orientation():
+    """The vectorized packing orients every ring exactly as orient_ccw
+    does, down to zero- and denormal-area rings."""
+    rng = np.random.default_rng(11)
+    feats = []
+    for _ in range(3000):
+        parts = []
+        for _ in range(rng.integers(1, 4)):
+            pts = rng.normal(size=(int(rng.integers(1, 12)), 2)) * 100
+            if rng.random() < 0.2:
+                pts = np.round(pts / 100)  # collinear / repeated vertices
+            if rng.random() < 0.7:
+                pts = np.vstack([pts, pts[:1]])
+            parts.append(pts)
+        feats.append(parts)
+    for w in (0.0, 1e-310, 3.0):
+        feats.append([np.array([[5.0, 5.0], [5.0 + w, 5.0], [5.0 + w, 7.0],
+                                [5.0, 7.0], [5.0, 5.0]])])
+    pk = K.PackedRings(feats)
+    V, counts, nxt, closed = _packed_by_ring(feats)
+    assert np.array_equal(pk.V, V)
+    assert np.array_equal(pk.counts, counts)
+    assert np.array_equal(pk.offsets, np.cumsum(counts) - counts)
+    assert np.array_equal(pk.nxt, nxt)
+    assert np.array_equal(pk.closed, closed)

@@ -1,7 +1,13 @@
 """Feature×feature overlay join: reference-point dedup correctness."""
 
+import os
+import subprocess
+import sys
+
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 from extract_sf_r_parallel_spark.operators.overlay import rect_overlay_pairs
@@ -83,3 +89,40 @@ def test_overlay_payload_columns_ride_along(spark):
     assert {"fid_a", "fid_b", "inter_area"} <= set(got.columns)
     assert sorted(map(tuple, got[["fid_a", "fid_b", "inter_area"]]
                       .to_numpy().tolist())) == _brute(a, b)
+
+
+_PLAN_SCRIPT = """
+import re, sys
+sys.path.insert(0, sys.argv[1])
+from extract_sf_r_parallel_spark.session import get_spark
+from extract_sf_r_parallel_spark.plans import registry
+spark = get_spark(app="overlay_plan", master="local[1]")
+df = registry.QUERIES["layer_overlay"](spark, sys.argv[2])
+qe = df._jdf.queryExecution()
+seen = {}
+print(df.columns)
+for plan in (qe.analyzed().toString(), qe.optimizedPlan().toString()):
+    print(re.sub(r"#\\d+", lambda m: seen.setdefault(m.group(0), f"#{len(seen)}"),
+                 plan))
+spark.stop()
+"""
+
+
+def test_layer_overlay_plan_does_not_depend_on_hash_seed(tmp_path):
+    """The shared-column renames follow the input's column order, so
+    two processes with different string-hash seeds build one plan."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    pq.write_table(pa.table({"p_partkey": np.arange(200, dtype=np.int64)}),
+                   str(tmp_path / "part.parquet"))
+    outs = []
+    for seed in ("1", "2"):
+        env = dict(os.environ, PYTHONHASHSEED=seed, SPARK_GRAFT_CPUS="1",
+                   SPARK_DRIVER_MEM="1g")
+        p = subprocess.run([sys.executable, "-c", _PLAN_SCRIPT, repo,
+                            str(tmp_path)],
+                           capture_output=True, text=True, timeout=600,
+                           env=env)
+        assert p.returncode == 0, p.stderr[-4000:]
+        outs.append(p.stdout)
+    assert "rxmin_a" in outs[0]
+    assert outs[0] == outs[1]

@@ -103,3 +103,19 @@ def test_string_key_raises(spark, tmp_path):
                    str(tmp_path / "orders.parquet"))
     with pytest.raises(Exception):
         SQ.points_df(spark, str(tmp_path)).collect()
+
+
+def test_pair_rect_polys_build_runs_no_spark_job(spark, sparse_dir):
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    SQ._pair_rect_polys(spark, sparse_dir, foot14=True)
+    assert set(tracker.getJobIdsForGroup(None)) == before
+
+
+def test_pair_rect_key_past_slot_space_fails(spark, tmp_path):
+    # a key past _SLOT² would share a 100 m slot with another key
+    pkeys = [3, 17, SQ._SLOT * SQ._SLOT + 1]
+    pq.write_table(pa.table({"p_partkey": pa.array(pkeys, pa.int64())}),
+                   str(tmp_path / "part.parquet"))
+    with pytest.raises(Exception, match="pair-rect fixture needs part keys"):
+        SQ._pair_rect_polys(spark, str(tmp_path)).collect()

@@ -1,12 +1,18 @@
 """The capstone wide-merge artifact (C_…R:1194-1208, D_…R:595-608):
-14 footprint layers (temporal + age) + 5 wetland classes (neither)
-pivoted to <layer>_<METRIC> columns and inner-merged on (PKEY, SS,
-YEAR). The reference asserts its final table keeps exactly one row per
-point (83,439 — C_…R:707-709); this is that invariant at fixture
-scale, plus the full column inventory."""
+14 footprint layers (temporal + age) + 5 wetland classes (neither) as
+<layer>_<METRIC> columns, one row per (PKEY, SS, YEAR). The reference
+asserts its final table keeps exactly one row per point (83,439 —
+C_…R:707-709); this is that invariant at fixture scale, plus the full
+column inventory. Both routes — one fused pass over the union of the
+two feature sides, and two areadist calls pivoted and key-joined —
+give the same table."""
 
+import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
+from extract_sf_r_parallel_spark.operators import areadist_fused as AF
+from extract_sf_r_parallel_spark.plans import registry
 from extract_sf_r_parallel_spark.plans.registry import (
     _WM_CLASSES,
     _WM_LAYERS,
@@ -41,3 +47,36 @@ def test_wide_merge_row_invariant_and_columns(spark):
 
     # one row per key triple (the merge is keyed, not fanned out)
     assert out.select("PKEY", "SS", "YEAR").distinct().count() == n_points
+
+
+@pytest.mark.parametrize("name", ["wide_merge", "wide_merge_sum"])
+def test_fused_route_matches_join_route(spark, monkeypatch, name):
+    fused_df = registry.QUERIES[name](spark, SF_DIR)
+    plan = fused_df._jdf.queryExecution().executedPlan().toString()
+    assert "MapInPandas" in plan and "Join" not in plan
+    fused = fused_df.toPandas()
+    monkeypatch.setattr(AF, "MAX_BROADCAST_FEATURES", 10)
+    joined_df = registry.QUERIES[name](spark, SF_DIR)
+    assert "Join" in joined_df._jdf.queryExecution().executedPlan().toString()
+    joined = joined_df.toPandas()
+    assert list(joined.columns) == list(fused.columns)
+    assert len(fused) > 0
+    pd.testing.assert_frame_equal(
+        fused.sort_values("PKEY").reset_index(drop=True),
+        joined.sort_values("PKEY").reset_index(drop=True))
+
+
+def test_layer_in_both_sides_raises(spark, monkeypatch):
+    monkeypatch.setattr(registry, "_WM_CLASSES",
+                        ["L00", "Fen", "Marsh", "Open_Water", "Swamp"])
+    with pytest.raises(ValueError, match="'L00'.* both"):
+        q_wide_merge(spark, SF_DIR)
+
+
+def test_one_index_per_call(spark):
+    AF.clear_index_cache()
+    try:
+        q_wide_merge(spark, SF_DIR)
+        assert len(AF._IDX_CACHE) == 1
+    finally:
+        AF.clear_index_cache()
