@@ -29,9 +29,9 @@ MEANAGE are chosen per layer, so one index over several layer groups
 all in one pass.
 
 Results are identical to the join kernel's (asserted row-for-row in
-tests/test_areadist_fused.py). A layer whose exact union needs the
-raster fallback raises K.DissolveFallback, and the planner then sends
-the call to the join kernel.
+tests/test_areadist_fused.py), also on a layer whose exact union needs
+the raster fallback: the index keeps its rings, and the same pass
+supersamples its union over the same candidates.
 """
 
 from __future__ import annotations
@@ -46,7 +46,8 @@ from pyspark.sql import types as T
 
 from ..geo import index as I
 from ..geo import kernels as K
-from .areadist import PI_LITERAL, _check_dissolve, _feature_side
+from .areadist import (PI_LITERAL, _check_dissolve, _feature_side,
+                       _union_area_raster)
 
 __all__ = ["areadist_fused", "clear_index_cache", "feature_count"]
 
@@ -157,15 +158,16 @@ def _flag_key(flag):
 class _FeatureIndex:
     """Driver-built, broadcast-shipped: packed rings + bboxes + years +
     layer codes + CSR (cell id → candidate feature indices) over the
-    features of areadist._feature_side, plus a `temporal` and an `age`
-    flag per layer code. Its dissolve="auto" corrections (`corr_pdf`)
-    are appended as weighted pseudo-features — weight ±1, is_real
-    False — so the exact union rides the same CSR lookup with zero
-    extra per-point machinery."""
+    features of areadist._feature_side, plus a `temporal`, an `age`
+    and a `raster` flag per layer code. Its dissolve="auto" corrections
+    (`corr_pdf`) are appended as weighted pseudo-features — weight ±1,
+    is_real False — so the exact union rides the same CSR lookup with
+    zero extra per-point machinery. The `raster` layers (no exact
+    union) keep their features' parts for the supersampled union."""
 
     def __init__(self, pdf: pd.DataFrame, radius: float, code: int,
                  corr_pdf: pd.DataFrame | None = None,
-                 temporal=True, age=True):
+                 temporal=True, age=True, raster=()):
         if pdf["feature_id"].duplicated().any():  # would count twice
             raise ValueError("_FeatureIndex: duplicate feature_id values "
                              "in the feature side")
@@ -178,6 +180,9 @@ class _FeatureIndex:
                                  dtype=bool)
         self.age = np.array([_has_flag(age, n) for n in self.layers],
                             dtype=bool)
+        self.raster = np.array([n in raster for n in self.layers], dtype=bool)
+        self.raster_parts = {int(i): rings[i]
+                             for i in np.flatnonzero(self.raster[lcodes])}
         weight = np.ones(len(rings), dtype=np.float64)
         is_real = np.ones(len(rings), dtype=bool)
         if corr_pdf is not None:
@@ -258,10 +263,10 @@ def areadist_fused(
     per named layer <layer>_NEAR_DIST, <layer>_AREA<r>, <layer>_PROP<r>
     [, <layer>_MEANAGE_<r> for age layers]; a named layer with no
     feature gets the empty-candidate defaults. `dissolve`: "auto" =
-    exact union via correction pseudo-features (raises
-    K.DissolveFallback when a layer is not exactly dissolvable), "sum"
-    = Σ per-clip areas (disjoint layers)."""
-    _check_dissolve("areadist_fused", dissolve, ("auto", "sum"))
+    exact union via correction pseudo-features (a supersampled union on
+    a layer that is not exactly dissolvable), "sum" = Σ per-clip areas
+    (disjoint layers)."""
+    _check_dissolve("areadist_fused", dissolve)
     spark = points.sparkSession
     code = I.code_for_radius(max(maxdist / 4.0, I.RESOLUTIONS[0]))
     pk = _plan_key(polys)
@@ -279,11 +284,8 @@ def areadist_fused(
         pl, corr_pdf, fallback = _feature_side(
             polys, layer_col=layer_col, validity_filter=validity_filter,
             dissolve=dissolve, collect=True)
-        if fallback:
-            raise K.DissolveFallback(
-                f"layer {fallback[0]!r} needs the raster dissolve fallback")
         idx = _FeatureIndex(pl.toPandas(), maxdist, code, corr_pdf,
-                            temporal=temporal, age=age)
+                            temporal=temporal, age=age, raster=fallback)
         bc = spark.sparkContext.broadcast(idx)
         if cache_key is not None:
             _IDX_CACHE[cache_key] = (idx, bc)
@@ -385,6 +387,15 @@ def _fused_apply(points: DataFrame, idx: "_FeatureIndex", bc, *,
             dreal = np.where(real, m["dist"][order], np.inf)
             dmin = np.minimum.reduceat(dreal, kstart)
             near[ukey] = np.minimum(dmin, maxdist)  # cap (C_…R:116-117)
+        rgroups = []
+        if fx.raster.any():
+            # raster layers: the join kernel's union over its candidates
+            # (theta, then dist < maxdist), grouped per (point, layer)
+            rs = np.flatnonzero(fx.raster[lr] & (m["dist"] < maxdist))
+            rs = rs[np.argsort(key[rs], kind="stable")]
+            rk, rstart = np.unique(key[rs], return_index=True)
+            rgroups = [(k, k // nL, [fx.raster_parts[j] for j in g])
+                       for k, g in zip(rk, np.split(ridx[rs], rstart[1:]))]
         cols: dict[str, np.ndarray] = {"NEAR_DIST": near}
         for r in radii:
             a = m[f"a{int(r)}"][order] if len(key_s) else np.zeros(0)
@@ -393,6 +404,8 @@ def _fused_apply(points: DataFrame, idx: "_FeatureIndex", bc, *,
                 # dissolved union: Σ weight·area (weight is +1
                 # for real features, ±1 for I-E corrections)
                 asum[ukey] = np.add.reduceat(wgt * a, kstart)
+            for k, p, feats in rgroups:
+                asum[k] = _union_area_raster(px[p], py[p], r, feats)
             cols[f"AREA{int(r)}"] = asum
             cols[f"PROP{int(r)}"] = asum / (PI_LITERAL * r * r)
             if with_age:

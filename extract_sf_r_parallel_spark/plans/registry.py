@@ -608,12 +608,11 @@ GROUP BY 1, 2
 # branches instead of one per branch, as in Teradata's joins over
 # UNION ALL, SIGMOD 2018). 19 layers × metrics = 123 metric columns,
 # the reference's "give me the output table" answer in one call. A
-# union past the broadcast gate, or with a layer that needs the raster
-# dissolve, takes the join route instead: one areadist call per side,
-# each pivoted by areadist_wide, inner-joined on the keys — the same
-# columns. Every point is emitted densely (LEFT semantics) on both
-# routes, so the point count is preserved — the reference's
-# 83,439-row invariant (C_…R:707-709), asserted in
+# union past the broadcast gate takes the join route instead: one
+# areadist call per side, each pivoted by areadist_wide, inner-joined
+# on the keys — the same columns. Every point is emitted densely (LEFT
+# semantics) on both routes, so the point count is preserved — the
+# reference's 83,439-row invariant (C_…R:707-709), asserted in
 # tests/test_wide_merge.py.
 _WM_LAYERS = [f"L{i:02d}" for i in range(14)]
 _WM_CLASSES = ["Bog", "Fen", "Marsh", "Open_Water", "Swamp"]
@@ -634,7 +633,6 @@ def _wide_merge(spark, sf_dir, foot_polys, wet_polys, dissolve):
     point, rounded, one row per point with a <layer>_<METRIC> block per
     layer. `foot_polys` / `wet_polys` build the feature sides (layer
     columns `layer` / `CWCS_Class`)."""
-    from ..geo import kernels as K
     from ..operators import areadist_fused as AF
     from ..operators.areadist import areadist_wide
 
@@ -657,13 +655,10 @@ def _wide_merge(spark, sf_dir, foot_polys, wet_polys, dissolve):
     if AF.feature_count(union) <= AF.MAX_BROADCAST_FEATURES:
         # looked up on the module at call time, so a wrapper installed
         # on areadist_fused (perfbench tracing) sees the build
-        try:
-            return _wide_select(AF.areadist_fused(
-                pts, union, temporal=frozenset(_WM_LAYERS),
-                age=frozenset(_WM_LAYERS), validity_filter=False,
-                dissolve=dissolve, wide=(*_WM_LAYERS, *_WM_CLASSES)), blocks)
-        except K.DissolveFallback:
-            pass
+        return _wide_select(AF.areadist_fused(
+            pts, union, temporal=frozenset(_WM_LAYERS),
+            age=frozenset(_WM_LAYERS), validity_filter=False,
+            dissolve=dissolve, wide=(*_WM_LAYERS, *_WM_CLASSES)), blocks)
     foot = areadist(pts, foot, validity_filter=False, dissolve=dissolve)
     wet = areadist(pts, wet, temporal=False, age=False,
                    layer_col="CWCS_Class", validity_filter=False,

@@ -1,15 +1,14 @@
 """The fused broadcast kernel must match the join kernel — and the
 serial oracle — row-for-row, for every variant (age, wetland,
 no-temporal). Also asserts the fused plan is a single narrow stage
-(no shuffle exchange), and that the areadist planner only routes a call
-to a kernel that can answer it."""
+(no shuffle exchange), and that it answers a layer whose exact union
+needs the raster fallback itself."""
 
 import numpy as np
 import pandas as pd
 import pytest
 
 from extract_sf_r_parallel_spark.data import synth
-from extract_sf_r_parallel_spark.geo import kernels as K
 from extract_sf_r_parallel_spark.operators.areadist import (
     areadist,
     areadist_join,
@@ -142,46 +141,81 @@ def test_index_cache_hits_on_parquet_backed_layers(spark, frames, tmp_path):
 # the planner (operators.areadist.areadist) over the two kernels
 # ---------------------------------------------------------------------------
 
-def _squares(spark, offsets, side=50.0):
-    """One layer "L" of side×side squares at the given (dx, dy) offsets,
-    and one point at the first square's centre."""
+def _squares(spark, layers, side=50.0):
+    """Layers of side×side squares ({layer: [(dx, dy), ...]}), and one
+    point at the first layer's first square centre."""
     x0, y0 = synth.X_LO + 1000.0, synth.Y_LO + 1000.0
     rows = []
-    for i, (dx, dy) in enumerate(offsets):
-        a, b = x0 + dx, y0 + dy
-        ring = [a, b, a + side, b, a + side, b + side, a, b + side, a, b]
-        rows.append({"feature_id": i, "layer": "L", "YEAR": 2000,
-                     "geom": [ring], "is_valid_truth": True})
+    for layer, offsets in layers.items():
+        for dx, dy in offsets:
+            a, b = x0 + dx, y0 + dy
+            ring = [a, b, a + side, b, a + side, b + side, a, b + side, a, b]
+            rows.append({"feature_id": len(rows), "layer": layer,
+                         "YEAR": 2000, "geom": [ring],
+                         "is_valid_truth": True})
     pts = pd.DataFrame([("p", "p", 2010, x0 + side / 2, y0 + side / 2)],
                        columns=["PKEY", "SS", "YEAR", "x", "y"])
     return (spark.createDataFrame(pts, PTS_SCHEMA),
             spark.createDataFrame(pd.DataFrame(rows), LAYER_SCHEMA))
 
 
-def test_planner_routes_raster_fallback_layer_to_join(spark):
-    """12 mutually overlapping squares exceed the inclusion–exclusion
-    term budget: the fused kernel raises DissolveFallback and the
-    planner answers through the join kernel's raster union."""
-    pts, pls = _squares(spark, [(i, i) for i in range(12)])
-    with pytest.raises(K.DissolveFallback):
-        areadist_fused(pts, pls)
+# 12 mutually overlapping squares exceed the inclusion–exclusion term
+# budget, so the layer's correction build falls back to the raster
+STAIR = [(i, i) for i in range(12)]
+
+
+def _jobs_and_corrections(spark, monkeypatch, pts, pls):
+    """Spark jobs (plan build + sink) and correction builds of one
+    planner call, and its rows."""
+    from extract_sf_r_parallel_spark.operators import areadist as A
+    builds = []
+    real = A.dissolve_corrections_df
+    monkeypatch.setattr(A, "dissolve_corrections_df",
+                        lambda *a, **k: builds.append(1) or real(*a, **k))
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
     got = areadist(pts, pls).toPandas()
-    want = areadist_join(pts, pls).toPandas()
-    _cmp(got, want, METRICS)
+    jobs = len(set(tracker.getJobIdsForGroup(None)) - before)
+    monkeypatch.setattr(A, "dissolve_corrections_df", real)
+    return jobs, len(builds), got
+
+
+def test_fused_kernel_answers_raster_fallback_layer(spark, monkeypatch):
+    """The fused kernel answers a layer without an exact union from its
+    own index: the join kernel's raster union, one correction build per
+    planner call, and no more Spark jobs than an exact layer."""
+    pts, pls = _squares(spark, {"L": STAIR})
+    fused = areadist_fused(pts, pls).toPandas()
+    _cmp(fused, areadist_join(pts, pls).toPandas(), METRICS)
     # exact union 50² + 11·(2·50 − 1) = 3589 (the Σ of clips is 30000);
     # the 512² supersampled raster lands within ~1.5 %
-    assert got["AREA150"].iloc[0] == pytest.approx(3589.0, rel=2e-2)
+    assert fused["AREA150"].iloc[0] == pytest.approx(3589.0, rel=2e-2)
+
+    jobs, builds, got = _jobs_and_corrections(spark, monkeypatch, pts, pls)
+    assert builds == 1
+    _cmp(got, fused, METRICS)
+    exact_pts, exact_pls = _squares(
+        spark, {"L": [(100.0 * i, 0.0) for i in range(12)]})
+    exact_jobs, _, _ = _jobs_and_corrections(
+        spark, monkeypatch, exact_pts, exact_pls)
+    assert jobs <= exact_jobs
 
 
-def test_raster_dissolve_only_on_join_kernel(spark):
-    pts, pls = _squares(spark, [(0, 0), (25, 0)])
-    for fn in (areadist, areadist_fused):
+def test_fused_kernel_mixes_raster_and_exact_layers(spark):
+    pts, pls = _squares(spark, {"L": STAIR, "M": [(0, 0), (25, 0)]})
+    fused = areadist_fused(pts, pls).toPandas()
+    _cmp(fused, areadist_join(pts, pls).toPandas(), METRICS)
+    area = fused.set_index("layer")["AREA150"]
+    assert area["L"] == pytest.approx(3589.0, rel=2e-2)
+    # the exact layer keeps its inclusion–exclusion union: 50 × 75
+    assert area["M"] == pytest.approx(3750.0, abs=1e-8)
+
+
+def test_raster_dissolve_rejected_by_every_kernel(spark):
+    pts, pls = _squares(spark, {"L": [(0, 0), (25, 0)]})
+    for fn in (areadist, areadist_fused, areadist_join):
         with pytest.raises(ValueError, match="dissolve"):
             fn(pts, pls, dissolve="raster")
-    union = areadist_join(pts, pls, dissolve="raster").toPandas()
-    assert union["AREA150"].iloc[0] == pytest.approx(3750.0, rel=2e-2)
-    exact = areadist(pts, pls).toPandas()
-    assert exact["AREA150"].iloc[0] == pytest.approx(3750.0, abs=1e-8)
 
 
 def test_kernels_share_column_order(spark, frames):
@@ -191,5 +225,4 @@ def test_kernels_share_column_order(spark, frames):
     for kw in ({}, {"age": False, "radii": (150.0,)}):
         fused = areadist_fused(pts, pls, **kw).columns
         assert fused == areadist_join(pts, pls, **kw).columns
-        assert fused == areadist_join(pts, pls, dissolve="raster", **kw).columns
         assert fused[:len(pts.columns) + 1] == [*pts.columns, "layer"]

@@ -66,16 +66,6 @@ def test_areadist_no_age_no_temporal_wetland(spark, fixture_frames):
     _compare(got, want, ["NEAR_DIST", "AREA150", "PROP150", "AREA565", "PROP565"])
 
 
-def test_areadist_salted_matches(spark, fixture_frames):
-    """Explicit skew salting must not change results (north rule)."""
-    images, layers = fixture_frames
-    pts = spark.createDataFrame(images, GEOTAGGED_SCHEMA)
-    pls = spark.createDataFrame(layers, LAYER_SCHEMA)
-    plain = areadist_join(pts, pls).toPandas()
-    salted = areadist_join(pts, pls, salt=4).toPandas()
-    _compare(salted, plain, ["NEAR_DIST", "AREA150", "MEANAGE_565"])
-
-
 def test_areadist_broadcast_matches(spark, fixture_frames):
     images, layers = fixture_frames
     pts = spark.createDataFrame(images, GEOTAGGED_SCHEMA)
@@ -87,21 +77,22 @@ def test_areadist_broadcast_matches(spark, fixture_frames):
 
 def test_overlap_layer_raster_dissolve(spark):
     """Dissolved (union) area ≤ Σ clip areas; equality iff no overlap
-    (the reference's superseded-variant comparison, C_…R:99 vs 101)."""
+    (the reference's superseded-variant comparison, C_…R:99 vs 101).
+    The layer is exactly dissolvable, so the planner's union is exact
+    and the serial raster oracle lands within its supersampling error."""
     images = synth.geotag_images_pdf(synth.images_pdf(60))
     over = synth.overlap_layer_pdf()
     pts = spark.createDataFrame(images, GEOTAGGED_SCHEMA)
     pls = spark.createDataFrame(over, LAYER_SCHEMA)
-    summed = areadist_join(pts, pls, temporal=False, age=False).toPandas()
-    dis = areadist_join(pts, pls, temporal=False, age=False,
-                        dissolve="raster").toPandas()
+    summed = areadist(pts, pls, temporal=False, age=False,
+                      dissolve="sum").toPandas()
+    dis = areadist(pts, pls, temporal=False, age=False).toPandas()
     want = areadist_oracle(images, over, temporal=False, age=False,
                            dissolve="raster")
     m = summed.merge(dis, on=["PKEY", "layer"], suffixes=("_sum", "_dis"))
     assert (m["AREA565_dis"] <= m["AREA565_sum"] + 1e-6).all()
     hit = m[m["AREA565_sum"] > 0]
     assert len(hit) > 0
-    # raster dissolve matches the serial raster oracle within tolerance
     md = dis.merge(want, on=["PKEY", "layer"], suffixes=("", "_want"))
     np.testing.assert_allclose(md["AREA565"], md["AREA565_want"], rtol=5e-2, atol=5.0)
 

@@ -211,7 +211,8 @@ def test_asof_split_empty_chunks_and_single_row_chunks(spark):
 def test_asof_split_auto_decision(spark, monkeypatch):
     """split_seconds='auto' must engage on a hot key (plan partitions
     by _ck, result equals the unsplit plan) and stay off on a uniform
-    small input; a typo string fails loudly."""
+    small input; a typo string fails loudly. The hot key's rows tie on
+    ts, so both plans name a tie-breaker."""
     import extract_sf_r_parallel_spark.operators.asof as A
     import numpy as np
     import pytest
@@ -222,7 +223,8 @@ def test_asof_split_auto_decision(spark, monkeypatch):
         "user_id": users,
         "ts": [T0 + pd.Timedelta(seconds=int(s))
                for s in rng.integers(0, 50_000, n)],
-        "value": rng.normal(size=n).round(3)})
+        "value": rng.normal(size=n).round(3),
+        "eid": np.arange(n)})
     left = pd.DataFrame({
         "probe": range(500),
         "user_id": np.where(rng.random(500) < 0.95, 7,
@@ -232,9 +234,10 @@ def test_asof_split_auto_decision(spark, monkeypatch):
     ldf, rdf = spark.createDataFrame(left), spark.createDataFrame(right)
     monkeypatch.setattr(A, "AUTO_SPLIT_ROWS_PER_CHUNK", 500)
     auto = A.asof_join(ldf, rdf, on="user_id", payload=("value",),
-                       split_seconds="auto")
+                       tie_breaker="eid", split_seconds="auto")
     assert "_ck" in auto._jdf.queryExecution().analyzed().toString()
-    plain = A.asof_join(ldf, rdf, on="user_id", payload=("value",)) \
+    plain = A.asof_join(ldf, rdf, on="user_id", payload=("value",),
+                        tie_breaker="eid") \
         .toPandas().sort_values("probe").reset_index(drop=True)
     got = auto.toPandas().sort_values("probe").reset_index(drop=True)
     pd.testing.assert_frame_equal(plain, got, check_like=True)

@@ -1,8 +1,7 @@
 """Exact dissolved-union area (VERDICT r01 #8): overlap detection is
 automatic (dissolve left at its default), results are exact — not
 supersampled — and layers whose union is not S-H-computable fall back
-to the raster path (join kernel; the fused kernel raises
-DissolveFallback and the planner reroutes)."""
+to the supersampled raster union in whichever kernel answers."""
 
 import numpy as np
 import pandas as pd

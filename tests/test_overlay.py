@@ -4,13 +4,17 @@ import os
 import subprocess
 import sys
 
+import duckdb
 import numpy as np
 import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
+import __spark_entry__ as E
+
 from extract_sf_r_parallel_spark.operators.overlay import rect_overlay_pairs
+from extract_sf_r_parallel_spark.plans import registry
 
 
 def _layer(spark, pdf):
@@ -126,3 +130,25 @@ def test_layer_overlay_plan_does_not_depend_on_hash_seed(tmp_path):
         outs.append(p.stdout)
     assert "rxmin_a" in outs[0]
     assert outs[0] == outs[1]
+
+
+def test_layer_overlay_matches_oracle_on_overlapping_keys(spark, tmp_path):
+    """Consecutive part keys put every rect in its own slot, so the
+    query's oracle has no row at the packaged scales; 2,000 keys drawn
+    from 1..40,000 collide in slots and overlap."""
+    rng = np.random.default_rng(5)
+    keys = np.sort(rng.choice(40_000, 2_000, replace=False) + 1)
+    pq.write_table(pa.table({"p_partkey": keys.astype(np.int64)}),
+                   str(tmp_path / "part.parquet"))
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW part AS SELECT * FROM "
+                f"read_parquet('{tmp_path}/part.parquet')")
+    want = con.sql(E.oracle_sql()["layer_overlay"]).df()
+    got = registry.QUERIES["layer_overlay"](spark, str(tmp_path)).toPandas()
+    assert len(want) > 0
+    cols = sorted(want.columns)
+    assert sorted(got.columns) == cols
+    pd.testing.assert_frame_equal(
+        got[cols].sort_values(cols).reset_index(drop=True),
+        want[cols].sort_values(cols).reset_index(drop=True),
+        check_dtype=False)

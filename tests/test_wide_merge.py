@@ -8,11 +8,13 @@ two feature sides, and two areadist calls pivoted and key-joined —
 give the same table."""
 
 import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
 from extract_sf_r_parallel_spark.operators import areadist_fused as AF
-from extract_sf_r_parallel_spark.plans import registry
+from extract_sf_r_parallel_spark.plans import registry, spatial_queries
 from extract_sf_r_parallel_spark.plans.registry import (
     _WM_CLASSES,
     _WM_LAYERS,
@@ -80,3 +82,53 @@ def test_one_index_per_call(spark):
         assert len(AF._IDX_CACHE) == 1
     finally:
         AF.clear_index_cache()
+
+
+def test_raster_fallback_layer_stays_on_fused_route(spark, monkeypatch,
+                                                    tmp_path):
+    """12 mutually overlapping squares at one point put L00 beyond the
+    exact union: the fused pass still answers all 19 layers, and equals
+    the join route value for value."""
+    p = spatial_queries._keyed_points(spark, SF_DIR).first()
+    geoms = [[[p.x - 25 + i, p.y - 25 + i, p.x + 25 + i, p.y - 25 + i,
+               p.x + 25 + i, p.y + 25 + i, p.x - 25 + i, p.y + 25 + i,
+               p.x - 25 + i, p.y - 25 + i]] for i in range(12)]
+    pq.write_table(pa.table({
+        "feature_id": pa.array(range(10**9, 10**9 + 12), pa.int64()),
+        "layer": ["L00"] * 12,
+        "YEAR": pa.array([1900] * 12, pa.int32()),
+        "geom": geoms}), str(tmp_path / "stair.parquet"))
+
+    def foot_polys():
+        return spatial_queries._pair_rect_polys(
+            spark, SF_DIR, foot14=True).unionByName(
+            spark.read.parquet(str(tmp_path / "stair.parquet")))
+
+    def wet_polys():
+        return spatial_queries._pair_rect_polys(
+            spark, SF_DIR, with_class=True, classes=tuple(_WM_CLASSES),
+            layer_col="CWCS_Class")
+
+    def run():
+        return registry._wide_merge(spark, SF_DIR, foot_polys, wet_polys,
+                                    dissolve="auto")
+
+    AF.clear_index_cache()
+    try:
+        fused_df = run()
+        plan = fused_df._jdf.queryExecution().executedPlan().toString()
+        assert "MapInPandas" in plan and "Join" not in plan
+        fused = fused_df.toPandas()
+        ((idx, _),) = AF._IDX_CACHE.values()
+        assert [n for n, r in zip(idx.layers, idx.raster) if r] == ["L00"]
+    finally:
+        AF.clear_index_cache()
+    monkeypatch.setattr(AF, "MAX_BROADCAST_FEATURES", 10)
+    joined = run().toPandas()
+    assert list(joined.columns) == list(fused.columns)
+    pd.testing.assert_frame_equal(
+        fused.sort_values("PKEY").reset_index(drop=True),
+        joined.sort_values("PKEY").reset_index(drop=True))
+    # the point's L00 union is the stair's raster union, not Σ of clips
+    row = fused.set_index("PKEY").loc[p.PKEY]
+    assert row["L00_AREA150"] < 12 * 2500 / 2
