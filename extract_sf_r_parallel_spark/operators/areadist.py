@@ -46,7 +46,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..geo import kernels as K
-from .range_join import is_valid_udf, range_join_pairs
+from .range_join import bbox_sql, is_valid_udf, range_join_pairs
 
 __all__ = ["areadist", "areadist_join", "areadist_wide",
            "dissolve_corrections_df", "PI_LITERAL"]
@@ -120,13 +120,10 @@ def dissolve_corrections_df(polys: DataFrame, layer_col: str = "layer",
             i += 1
         return pd.DataFrame(rows, columns=[f.name for f in schema.fields])
 
-    xs = F.flatten(F.expr("transform(geom, p -> filter(p, (v, i) -> i % 2 = 0))"))
-    ys = F.flatten(F.expr("transform(geom, p -> filter(p, (v, i) -> i % 2 = 1))"))
-    d = (polys.select("feature_id", layer_col, F.col("poly_year"), "geom")
-         .withColumn("_tx0", F.floor(F.array_min(xs) / ts))
-         .withColumn("_tx1", F.floor(F.array_max(xs) / ts))
-         .withColumn("_ty0", F.floor(F.array_min(ys) / ts))
-         .withColumn("_ty1", F.floor(F.array_max(ys) / ts)))
+    d = polys.select("feature_id", layer_col, "poly_year", "geom").selectExpr(
+        "*", *[f"floor({e} / {ts!r}D) AS {n}" for e, n in zip(
+            bbox_sql("dissolve_corrections_df"),
+            ("_tx0", "_ty0", "_tx1", "_ty1"))])
     tiles = F.expr(
         "flatten(transform(sequence(_tx0, _tx1), "
         "tx -> transform(sequence(_ty0, _ty1), "
@@ -148,22 +145,33 @@ def _union_area_raster(px: float, py: float, radius: float,
                        features: list, grid: int = 512) -> float:
     """Supersampled area(circle ∩ ⋃ features); each feature is a ring
     array or a list of parts — inside = even-odd parity over the
-    feature's rings (holes handled), union = OR across features."""
-    g = np.linspace(px - radius, px + radius, grid)
-    h = np.linspace(py - radius, py + radius, grid)
-    gx, gy = np.meshgrid(g, h)
-    inc = (gx - px) ** 2 + (gy - py) ** 2 <= radius * radius
-    anyin = np.zeros_like(inc)
+    feature's closed rings (holes handled), union = OR across features.
+    The grid² cell centres cover the circle's bbox ∩ the rings' bbox,
+    so the sample cell does not grow with the radius."""
+    feats = []  # each feature's closed rings
     for f in features:
         parts = ([f] if isinstance(f, np.ndarray) and f.ndim == 2
                  else [np.asarray(p, np.float64).reshape(-1, 2) for p in f])
+        feats.append([r for r in parts if K.ring_is_closed(r)])
+    rings = [r for f in feats for r in f]
+    if not rings:
+        return 0.0
+    v = np.concatenate(rings)
+    x0, y0 = np.maximum(v.min(axis=0), (px - radius, py - radius))
+    x1, y1 = np.minimum(v.max(axis=0), (px + radius, py + radius))
+    if x1 <= x0 or y1 <= y0:
+        return 0.0
+    dx, dy = (x1 - x0) / grid, (y1 - y0) / grid
+    gx, gy = np.meshgrid(x0 + dx * (np.arange(grid) + 0.5),
+                         y0 + dy * (np.arange(grid) + 0.5))
+    inc = (gx - px) ** 2 + (gy - py) ** 2 <= radius * radius
+    anyin = np.zeros_like(inc)
+    for f in feats:
         par = np.zeros_like(inc)
-        for r in parts:
-            if K.ring_is_closed(r):
-                par ^= K.point_in_ring(gx.ravel(), gy.ravel(), r).reshape(gx.shape)
+        for r in f:
+            par ^= K.point_in_ring(gx.ravel(), gy.ravel(), r).reshape(gx.shape)
         anyin |= par
-    cell = (g[1] - g[0]) * (h[1] - h[0])
-    return float((inc & anyin).sum() * cell)
+    return float((inc & anyin).sum() * dx * dy)
 
 
 def _feature_side(polys: DataFrame, *, layer_col: str,
@@ -294,7 +302,7 @@ def areadist_join(
     theta = F.col("poly_year") < F.col("YEAR") if temporal else None
     pairs = range_join_pairs(
         point_side, join_side, maxdist, radii, theta=theta,
-        broadcast_polys=broadcast_polys, keep_geom=bool(fallback_layers),
+        broadcast_polys=broadcast_polys,
     )
 
     if age:
@@ -341,8 +349,10 @@ def areadist_join(
         fields = [pairs.schema[k] for k in kcols] + [
             T.StructField(f"UAREA{int(r)}", T.DoubleType()) for r in radii
         ]
-        rpairs = pairs.filter(F.col("is_real")
-                              & F.col("layer").isin(fallback_layers))
+        # their own join over those layers' real features, geometry kept
+        rpairs = range_join_pairs(
+            point_side, pl.filter(F.col("layer").isin(fallback_layers)),
+            maxdist, theta=theta)
 
         def _fn(pdf: pd.DataFrame) -> pd.DataFrame:
             rings = [K.feature_parts(g) for g in pdf["geom"]]

@@ -171,6 +171,11 @@ class _FeatureIndex:
         if pdf["feature_id"].duplicated().any():  # would count twice
             raise ValueError("_FeatureIndex: duplicate feature_id values "
                              "in the feature side")
+        for fid, g in zip(pdf["feature_id"], pdf["geom"]):
+            # no bbox: reduceat would hand it the next feature's vertex
+            if g is None or not sum(len(p) for p in g):
+                raise ValueError(f"_FeatureIndex: null or empty geom at "
+                                 f"feature_id {fid}")
         rings = [K.feature_parts(g) for g in pdf["geom"]]
         years = pdf["poly_year"].to_numpy(np.int64)
         lcodes, lnames = pd.factorize(pdf["layer"])

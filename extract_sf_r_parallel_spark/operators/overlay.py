@@ -47,9 +47,8 @@ def rect_overlay_pairs(a: DataFrame, b: DataFrame,
     share only a boundary — boundary contact still reports the pair
     when `closed`, filter `inter_area > 0` for strict interiors).
 
-    Inputs need bbox columns rxmin/rymin/rxmax/rymax and a `geom` ring
-    (for the shared cover UDF); all columns ride along, suffixed on
-    name collisions.
+    Inputs need bbox columns rxmin/rymin/rxmax/rymax; every column but
+    `geom` rides along, suffixed on name collisions.
     """
     code = I.code_for_radius(cell_edge)  # smallest registered edge ≥
     sa, sb = suffixes

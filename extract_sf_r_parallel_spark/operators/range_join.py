@@ -41,10 +41,9 @@ from ..geo import index as I
 from ..geo import kernels as K
 
 __all__ = [
-    "poly_cover_udf", "is_valid_udf", "pair_metrics_udf",
-    "broadcast_pair_metrics_udf", "cell_col", "with_cell",
-    "explode_poly_cells", "explode_bbox_cells", "range_join_pairs",
-    "salted",
+    "is_valid_udf", "pair_metrics_udf", "broadcast_pair_metrics_udf",
+    "cell_col", "with_cell", "bbox_sql", "explode_poly_cells",
+    "explode_bbox_cells", "range_join_pairs", "salted",
 ]
 
 # ---------------------------------------------------------------------------
@@ -113,42 +112,6 @@ def cell_col(x: str, y: str, code: int) -> Column:
     pure JVM — bit-identical to geo.index.xy_to_cell (see module
     comment)."""
     return F.expr(_pack_sql(code, *_axial_sql(x, y, float(I.edge_for_code(code)))))
-
-
-def poly_cover_udf(radius: float, code: int):
-    """geom → struct(cells: cover of bbox(geom) ⊕ radius, bbox corners).
-    The bbox rides along so the join can prefilter candidates with pure
-    JVM arithmetic (bbox distance ≤ true distance) before any Python
-    geometry kernel runs."""
-    schema = T.StructType([
-        T.StructField("cells", T.ArrayType(T.LongType())),
-        T.StructField("bxmin", T.DoubleType()),
-        T.StructField("bymin", T.DoubleType()),
-        T.StructField("bxmax", T.DoubleType()),
-        T.StructField("bymax", T.DoubleType()),
-    ])
-
-    @F.pandas_udf(returnType=schema)
-    def _cover(geom: pd.Series) -> pd.DataFrame:
-        n = len(geom)
-        bx0 = np.empty(n)
-        by0 = np.empty(n)
-        bx1 = np.empty(n)
-        by1 = np.empty(n)
-        for i, g in enumerate(geom):  # ragged ring parse only
-            parts = K.feature_parts(g)
-            bx0[i] = min(p[:, 0].min() for p in parts)
-            by0[i] = min(p[:, 1].min() for p in parts)
-            bx1[i] = max(p[:, 0].max() for p in parts)
-            by1[i] = max(p[:, 1].max() for p in parts)
-        cells, counts = I.cover_bbox_many(
-            bx0 - radius, by0 - radius, bx1 + radius, by1 + radius, code)
-        bounds = np.concatenate([[0], np.cumsum(counts)]).astype(int)
-        return pd.DataFrame({
-            "cells": [cells[bounds[i]:bounds[i + 1]].tolist() for i in range(n)],
-            "bxmin": bx0, "bymin": by0, "bxmax": bx1, "bymax": by1,
-        })
-    return _cover
 
 
 _IS_VALID = None
@@ -252,28 +215,49 @@ def with_cell(df: DataFrame, code: int, x: str = "x",
     return df.withColumn("cell", cell_col(_name(x), _name(y), code))
 
 
+def bbox_sql(op: str) -> tuple[str, str, str, str]:
+    """SQL text for (xmin, ymin, xmax, ymax) of the `geom` column: the
+    extremes of its even and odd coordinates across all parts. A null
+    or vertex-less geometry would give a null bbox and silently drop
+    the feature, so it fails the query instead, naming `op`. The
+    unreachable trailing 0.0D makes the column non-nullable, so
+    Catalyst infers no isnotnull(bbox) filter that would evaluate the
+    bbox a second time below its projection."""
+    msg = f"{op}: null or empty geom"
+
+    def ext(fn: str, odd: int) -> str:
+        return (f"coalesce({fn}(flatten(transform(geom, p -> "
+                f"filter(p, (v, i) -> i % 2 = {odd})))), "
+                f"raise_error('{msg}'), 0.0D)")
+    return (ext("array_min", 0), ext("array_min", 1),
+            ext("array_max", 0), ext("array_max", 1))
+
+
 def explode_poly_cells(polys: DataFrame, radius: float, code: int,
                        keep_bbox: bool = False) -> DataFrame:
-    df = polys.withColumn("_cb", poly_cover_udf(radius, code)(F.col("geom")))
-    df = df.select("*", "_cb.*").drop("_cb")
-    df = df.withColumn("cell", F.explode("cells")).drop("cells")
-    if not keep_bbox:
-        df = df.drop("bxmin", "bymin", "bxmax", "bymax")
-    return df
+    """One row per cell of the hex cover of each feature's bbox dilated
+    by `radius`, pure JVM: the bbox from :func:`bbox_sql` (kept as
+    bxmin/bymin/bxmax/bymax under `keep_bbox`), the cover from
+    :func:`explode_bbox_cells`."""
+    b = ("bxmin", "bymin", "bxmax", "bymax")
+    bbox = bbox_sql("explode_poly_cells")
+    df = polys.selectExpr("*", *[f"{e} AS {n}" for e, n in zip(bbox, b)])
+    df = explode_bbox_cells(df, radius, code, *b)
+    return df if keep_bbox else df.drop(*b)
 
 
 def explode_bbox_cells(polys: DataFrame, radius: float, code: int,
                        xmin: str = "rxmin", ymin: str = "rymin",
                        xmax: str = "rxmax", ymax: str = "rymax",
                        disk_prune: bool = False) -> DataFrame:
-    """Pure-JVM twin of :func:`explode_poly_cells` for features whose
-    bbox is already in columns (axis-aligned rectangles: the bbox IS
-    the geometry, so no ring parse is needed). Emits the exact same
-    cell cover as geo.index.cover_bbox_many over the radius-dilated
-    bbox — corner axial rounding, ±1 grid padding, centre-proximity
-    prune — with every float op in the same IEEE order, so the cover
-    is bit-identical to the pandas-UDF path while staying inside
-    WholeStageCodegen (r08, guide §4.1)."""
+    """The engine's one cell cover, over bbox columns (for axis-aligned
+    rectangles the bbox IS the geometry; :func:`explode_poly_cells`
+    derives it from `geom`). Emits the exact same cell cover as
+    geo.index.cover_bbox_many over the radius-dilated bbox — corner
+    axial rounding, ±1 grid padding, centre-proximity prune — with
+    every float op in the same IEEE order, so the cover is
+    bit-identical to the fused kernel's NumPy index while staying
+    inside WholeStageCodegen (r08, guide §4.1)."""
     e = float(I.edge_for_code(code))
     rad = _d(radius)
     x0 = f"({_name(xmin)} - {rad})"
@@ -346,22 +330,21 @@ def range_join_pairs(
     theta: Column | None = None,
     broadcast_polys: bool = False,
     salt: int | str = 0,
-    keep_geom: bool = False,
     bc_metrics=None,
 ) -> DataFrame:
     """Candidate pairs of (point, polygon) within `radius`, refined.
 
-    Returns points' columns + polys' columns + `dist` + one `a<r>`
-    column per entry of `radii` (exact circle∩polygon area). `theta`
+    Returns points' columns + polys' columns (less `geom` under
+    `broadcast_polys`) + `dist` + one `a<r>` column per entry of
+    `radii` (exact circle∩polygon area). `theta`
     is an optional extra join predicate evaluated *inside* the join
     (e.g. the temporal filter poly.YEAR < point.YEAR, C_…R:93-94) so
     Catalyst keeps the equi-hash join on cell and applies the theta
     condition as a post-filter before the UDF runs.
 
-    `salt="auto"` (VERDICT r04 #3 — shuffle path only): a geometry-free
-    cells-only cover is recomputed for the probe (measured ~3× faster
-    than localCheckpoint-and-reread of the nested-geom cover; one
-    extra codegen pass at build time, zero per-run cost), a 2 % point
+    `salt="auto"` (VERDICT r04 #3 — shuffle path only): the JVM cover
+    is recomputed for the probe from the geometry alone (one extra
+    codegen pass at build time, zero per-run cost), a 2 % point
     sample × the exact per-cell cover histogram estimates the hottest
     cell's candidate-pair count, and salting engages at
     ceil(est / AUTO_SALT_PAIRS_PER_TASK) (≤ AUTO_SALT_MAX) only when
@@ -394,8 +377,7 @@ def range_join_pairs(
         if bc_metrics is None:
             bc_metrics = broadcast_pair_metrics_udf(
                 points.sparkSession, polys, tuple(radii))
-        if not keep_geom:
-            pls = pls.drop("geom")
+        pls = pls.drop("geom")
     else:
         bc_metrics = None
 
@@ -407,13 +389,10 @@ def range_join_pairs(
             # would only pay replication for nothing.
             # The probe only CHOOSES the salt integer; the executed
             # join plan stays byte-identical to the manual-salt plan.
-            # (An earlier version localCheckpoint'ed the exploded
-            # cover to share it between histogram and join — reading
-            # the materialized nested-geom rows back measured ~3×
-            # SLOWER than recomputing the cover through codegen, so
-            # the histogram now runs on a geometry-free cells-only
-            # recompute instead: one extra cover pass at build time,
-            # zero per-run cost.)
+            # The histogram recomputes the cover from `geom` alone: a
+            # localCheckpoint of the exploded cover, shared with the
+            # join, measured ~3× SLOWER to read back than the codegen
+            # recompute.
             cells_only = explode_poly_cells(
                 polys.select("geom"), radius, code)
             ph = cells_only.groupBy("cell").agg(
@@ -456,10 +435,13 @@ def range_join_pairs(
     pairs = pairs.drop("bxmin", "bymin", "bxmax", "bymax")
 
     if bc_metrics is not None:
-        m = bc_metrics(F.col("x"), F.col("y"), F.col("feature_id")).alias("_m")
+        udf, args = bc_metrics, ("x", "y", "feature_id")
     else:
-        m = pair_metrics_udf(tuple(radii))(
-            F.col("x"), F.col("y"), F.col("feature_id"), F.col("geom")
-        ).alias("_m")
+        udf = pair_metrics_udf(tuple(radii))
+        args = ("x", "y", "feature_id", "geom")
+    # nondeterministic, so the optimizer cannot push the dist filter
+    # below this projection by copying the UDF into it: the kernel ran
+    # twice per pair, once for the filter and once for the values
+    m = udf.asNondeterministic()(*map(F.col, args)).alias("_m")
     pairs = pairs.withColumn("_m", m).select("*", "_m.*").drop("_m")
     return pairs.filter(F.col("dist") < F.lit(float(radius)))

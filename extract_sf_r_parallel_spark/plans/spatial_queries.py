@@ -105,11 +105,6 @@ def points_df(spark: SparkSession, sf_dir: str,
 
 def rects_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = _key_scan(spark, sf_dir, "part", "p_partkey")
-    # single small file → 1 split; spread so the cover explode
-    # parallelizes (r08: hash on the key — no round-robin sort, and
-    # the key partitioning is reusable downstream, guide §2.4)
-    p = p.repartition(spark.sparkContext.defaultParallelism,
-                      F.col("p_partkey"))
     df = p.selectExpr("p_partkey AS fid", *[f"{v} AS {k}" for k, v in _R.items()])
     return df.withColumn("geom", F.expr(
         "array(array(rxmin, rymin, rxmax, rymin, rxmax, rymax, "
@@ -127,11 +122,10 @@ _RECT_DIST_SQL = ("sqrt((greatest((rxmin - x), (x - rxmax), 0.0D) "
 def _rect_cover(rects: DataFrame) -> tuple[int, DataFrame]:
     """(cell code, maxdist cover of `rects`). Finer-than-radius cells →
     tighter dilation cover → fewer raw join rows (see
-    range_join.range_join_pairs). r08: rects are axis-aligned, so the
-    cover explodes straight from the bbox columns in pure JVM
-    (explode_bbox_cells) — no pandas cover UDF, no ring parse; the
-    broadcast build side is one codegen'd scan+explode instead of an
-    ArrowEvalPython stage."""
+    range_join.range_join_pairs). Rects are axis-aligned, so the
+    cover explodes straight from the bbox columns (explode_bbox_cells)
+    with no ring parse; the broadcast build side is one codegen'd
+    scan+explode."""
     code = I.code_for_radius(MAXDIST / 4.0)
     return code, explode_bbox_cells(rects.drop("geom"), MAXDIST, code)
 
@@ -693,11 +687,6 @@ def _pair_rect_polys(spark, sf_dir, layer_col: str = "layer",
            f"privacy — enlarge _SLOT for this sf")
     p = p.selectExpr(f"CASE WHEN p_partkey >= 0 AND p_partkey <= {S2} "
                      f"THEN p_partkey ELSE raise_error('{msg}') END AS p_partkey")
-    # single small file → 1 split; spread so the cover/correction UDFs
-    # parallelize (a real layer scan arrives pre-split; r08: hash on
-    # the key — skips the round-robin pre-sort, guide §2.4)
-    p = p.repartition(spark.sparkContext.defaultParallelism,
-                      F.col("p_partkey"))
     # SQL text, one selectExpr per frame: a Column per expression costs
     # ~11 py4j round trips, and this builds at every capstone call
     if with_class:

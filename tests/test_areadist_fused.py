@@ -188,7 +188,7 @@ def test_fused_kernel_answers_raster_fallback_layer(spark, monkeypatch):
     fused = areadist_fused(pts, pls).toPandas()
     _cmp(fused, areadist_join(pts, pls).toPandas(), METRICS)
     # exact union 50² + 11·(2·50 − 1) = 3589 (the Σ of clips is 30000);
-    # the 512² supersampled raster lands within ~1.5 %
+    # the supersampled raster lands close (see the window test below)
     assert fused["AREA150"].iloc[0] == pytest.approx(3589.0, rel=2e-2)
 
     jobs, builds, got = _jobs_and_corrections(spark, monkeypatch, pts, pls)
@@ -226,3 +226,36 @@ def test_kernels_share_column_order(spark, frames):
         fused = areadist_fused(pts, pls, **kw).columns
         assert fused == areadist_join(pts, pls, **kw).columns
         assert fused[:len(pts.columns) + 1] == [*pts.columns, "layer"]
+
+
+def test_raster_union_window_does_not_grow_with_radius(spark):
+    """The raster union samples the circle's bbox ∩ the candidates'
+    bbox, so the larger disk, which holds the whole stair at both radii,
+    reads the same exact union (3589) on both kernels."""
+    pts, pls = _squares(spark, {"L": STAIR})
+    for fn in (areadist_fused, areadist_join):
+        row = fn(pts, pls).toPandas().iloc[0]
+        assert row["AREA565"] >= row["AREA150"], fn.__name__
+        for r in ("AREA150", "AREA565"):
+            assert row[r] == pytest.approx(3589.0, rel=1e-3), (fn.__name__, r)
+
+
+@pytest.mark.parametrize("geom", [None, [], [[]]],
+                         ids=["null", "no-parts", "empty-part"])
+@pytest.mark.parametrize("dissolve", ["sum", "auto"])
+@pytest.mark.parametrize("kernel", ["fused", "join"])
+def test_null_or_empty_geom_fails_by_name(spark, monkeypatch, kernel,
+                                         dissolve, geom):
+    """A feature without vertices has no bbox: both kernels fail the
+    call by name instead of dropping the feature or faking its bbox."""
+    from extract_sf_r_parallel_spark.operators import areadist_fused as AF
+    if kernel == "join":
+        monkeypatch.setattr(AF, "MAX_BROADCAST_FEATURES", 0)
+    ring = [0.0, 0.0, 50.0, 0.0, 50.0, 50.0, 0.0, 50.0, 0.0, 0.0]
+    rows = [(1, "L", 2000, [ring], True), (2, "L", 2000, geom, True),
+            (3, "L", 2000, [ring], True)]
+    pls = spark.createDataFrame(rows, LAYER_SCHEMA)
+    pts = spark.createDataFrame([("p", "p", 2010, 25.0, 25.0)], PTS_SCHEMA)
+    with pytest.raises(Exception, match="null or empty geom"):
+        areadist(pts, pls, dissolve=dissolve,
+                 validity_filter=False).collect()

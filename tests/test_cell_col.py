@@ -7,11 +7,13 @@ broadcast index vs JVM point cells) agree on every cell id."""
 import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from extract_sf_r_parallel_spark.geo import index as I
 from extract_sf_r_parallel_spark.operators.range_join import (
     cell_col,
     explode_bbox_cells,
+    explode_poly_cells,
     with_cell,
 )
 
@@ -73,6 +75,53 @@ def test_explode_bbox_cells_matches_cover_bbox_many(spark):
             want = sorted(cells[bounds[i]:bounds[i + 1]].tolist())
             have = list(got.get(i, []))
             assert have == want, f"code={code} radius={radius} fid={i}"
+
+
+def test_explode_poly_cells_matches_cover_bbox_many(spark):
+    """The geometry cover is the bbox cover: explode_poly_cells over
+    `geom` equals cover_bbox_many over the NumPy bbox of every part's
+    vertices (multi-part, holed, open-polyline, negative coordinates)."""
+    rng = np.random.default_rng(19)
+    rows, bbox = [], []
+    for fid in range(36):
+        cx, cy = rng.uniform(-20000, 20000, 2)
+        ang = np.sort(rng.uniform(0, 2 * np.pi, 7))
+        rr = rng.uniform(5.0, 600.0, 7)
+        ring = np.c_[cx + rr * np.cos(ang), cy + rr * np.sin(ang)]
+        kind = fid % 4
+        if kind == 0:    # open polyline
+            parts = [ring]
+        elif kind == 1:  # closed ring
+            parts = [np.vstack([ring, ring[:1]])]
+        elif kind == 2:  # holed ring
+            hole = np.array([[cx - 2, cy - 2], [cx + 2, cy - 2],
+                             [cx + 2, cy + 2], [cx - 2, cy + 2],
+                             [cx - 2, cy - 2]])
+            parts = [np.vstack([ring, ring[:1]]), hole]
+        else:            # a later part sets the bbox
+            parts = [np.vstack([ring, ring[:1]]), ring[:3] + 900.0]
+        rows.append((fid, [p.ravel().tolist() for p in parts]))
+        v = np.concatenate(parts)
+        bbox.append((*v.min(axis=0), *v.max(axis=0)))
+    bbox = np.array(bbox)
+    df = spark.createDataFrame(rows, T.StructType([
+        T.StructField("fid", T.LongType()),
+        T.StructField("geom", T.ArrayType(T.ArrayType(T.DoubleType())))]))
+    for code, radius in ((2, 0.0), (4, 4000.0)):
+        got = (explode_poly_cells(df, radius, code, keep_bbox=True)
+               .groupBy("fid", "bxmin", "bymin", "bxmax", "bymax")
+               .agg(F.sort_array(F.collect_list("cell")).alias("cells"))
+               .toPandas().set_index("fid").sort_index())
+        assert list(got.index) == list(range(len(rows)))
+        np.testing.assert_array_equal(
+            got[["bxmin", "bymin", "bxmax", "bymax"]].to_numpy(), bbox)
+        cells, counts = I.cover_bbox_many(
+            bbox[:, 0] - radius, bbox[:, 1] - radius,
+            bbox[:, 2] + radius, bbox[:, 3] + radius, code)
+        bounds = np.concatenate([[0], np.cumsum(counts)]).astype(int)
+        for i in range(len(rows)):
+            want = sorted(cells[bounds[i]:bounds[i + 1]].tolist())
+            assert list(got.loc[i, "cells"]) == want, (code, radius, i)
 
 
 def test_cell_col_composes_with_literals(spark):

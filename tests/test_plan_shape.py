@@ -63,9 +63,34 @@ def test_rect_pairs_is_equi_join_with_jvm_refinement(spark):
     # condition (SQRT/GREATEST), not a Python stage
     assert "Join condition: (SQRT" in plan
     assert "BatchEvalPython" not in plan  # no row-at-a-time Python anywhere
-    # the only Python stages are Arrow-batched cell-id/cover UDFs
+    # the cell ids and the cover are JVM expressions: no Python stage
     n_arrow = len(re.findall(r"^\(\d+\) ArrowEvalPython", plan, re.M))
-    assert n_arrow <= 4
+    assert n_arrow == 0
+
+
+def test_ring_join_runs_one_python_stage(spark):
+    """Over ring geometry the cell ids, the bbox and the cover are JVM
+    expressions; the only Python stage is the exact refinement UDF."""
+    import re
+
+    from extract_sf_r_parallel_spark.operators.range_join import (
+        range_join_pairs,
+    )
+    # built over range(), not a local relation, so the optimizer cannot
+    # fold the projections into the data
+    x0 = "CAST(id AS DOUBLE)"
+    ring = f"{x0}, 0.0D, 50.0D, 0.0D, 50.0D, 50.0D, 0.0D, 50.0D, {x0}, 0.0D"
+    polys = spark.range(1, 3).selectExpr(
+        "id AS feature_id", f"array(array({ring})) AS geom")
+    points = spark.range(1).selectExpr("CAST(id AS DOUBLE) + 10.0D AS x",
+                                       "CAST(id AS DOUBLE) + 20.0D AS y")
+    pairs = range_join_pairs(points, polys, 1000.0, (150.0,))
+    plan = _plan(pairs)
+    assert len(re.findall(r"^\(\d+\) ArrowEvalPython", plan, re.M)) == 1
+    # the bbox is computed once per feature: not copied into the cover's
+    # corner expressions, nor into an inferred isnotnull filter
+    opt = pairs._jdf.queryExecution().optimizedPlan().toString()
+    assert opt.count("array_min(") == opt.count("array_max(") == 2
 
 
 def test_areadist_left_defaults_edge_cases(spark):
