@@ -7,23 +7,24 @@ Reimplements (semantics, not code):
 - ``areadist.age``  — C_…R:135-197 (adds MEANAGE via YEAR recode)
 - ``areadist.wet``  — D_…R:20-66  (no temporal filter, grouped by class)
 
-as ONE planner, :func:`areadist`, over two result-identical kernels:
+as ONE planner, :func:`areadist`, over one per-point body
+(areadist_fused's `_answer`: candidate lookup, exact refinement and
+per-point reduction against a cell-indexed _FeatureIndex) run two ways:
 
-- ``areadist_fused.areadist_fused`` (broadcast): a CSR cell index +
-  packed rings ship to every executor once and one mapInPandas over
-  the points finds, refines and reduces each point's candidates — no
-  shuffle, no materialized pairs;
-- :func:`areadist_join` (shuffle): points ⟕ range_join_pairs(maxdist)
-  → groupBy(point, layer).agg(...), where the reference's 10,000-cell
-  driver loop (C_…R:232-253) is the shuffle on the hex cell id and its
-  per-point R loop (C_…R:138-194) is the grouped aggregation.
+- ``areadist_fused.areadist_fused`` (broadcast): one index over the
+  whole feature side ships to every executor once and one mapInPandas
+  over the points answers them — no shuffle, no materialized pairs;
+- :func:`areadist_join` (tiled): the reference's fishnet (C_…R:209-253)
+  — points keyed by coarse tile, features and corrections replicated
+  to every tile their maxdist-dilated bbox touches, and one cogroup per
+  tile that builds the tile's index and runs the same body.
 
 The planner counts the feature side and sends the call to the fused
 kernel up to ``areadist_fused.MAX_BROADCAST_FEATURES`` features and to
-the join kernel beyond it. Both kernels answer every layer, including
-the raster-fallback ones, and return the points' columns, then
-``layer``, then the metrics, with the empty-candidate defaults
-(AREA=0, PROP=0, MEANAGE=null, NEAR_DIST=maxdist — C_…R:99,116-117,159).
+the tiled kernel beyond it. Both answer every layer, including the
+raster-fallback ones, and return the points' columns, then ``layer``,
+then the metrics, with the empty-candidate defaults (AREA=0, PROP=0,
+MEANAGE=null, NEAR_DIST=maxdist — C_…R:99,116-117,159).
 
 Semantic parity notes (SURVEY.md §2.2 P7, §2.5 A4):
 - PROP divisors use the literal π≈3.14 exactly as the reference does
@@ -45,8 +46,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..geo import index as I
 from ..geo import kernels as K
-from .range_join import bbox_sql, is_valid_udf, range_join_pairs
+from .range_join import bbox_sql, is_valid_udf
 
 __all__ = ["areadist", "areadist_join", "areadist_wide",
            "dissolve_corrections_df", "PI_LITERAL"]
@@ -55,9 +57,32 @@ PI_LITERAL = 3.14  # the reference's literal (C_…R:122-123), not math.pi
 
 _CORR_MARK = "__dissolve_fallback__"
 
+# coarse tile edge (m) of the correction build and the tiled kernel
+_TILE_M = 5000.0
+
+
+def _tile_explode(df: DataFrame, pad: float, op: str,
+                  tile: float = _TILE_M) -> DataFrame:
+    """`df` plus `_tx`, `_ty`: one row per `tile` coarse tile that the
+    bbox of `geom` (range_join.bbox_sql, naming `op`), dilated by
+    `pad`, touches — JVM sequence/explode, no Python."""
+    t, p = f"{float(tile)!r}D", f"{float(pad)!r}D"
+    x0, y0, x1, y1 = bbox_sql(op)
+    d = df.selectExpr("*", f"floor(({x0} - {p}) / {t}) AS _tx0",
+                      f"floor(({y0} - {p}) / {t}) AS _ty0",
+                      f"floor(({x1} + {p}) / {t}) AS _tx1",
+                      f"floor(({y1} + {p}) / {t}) AS _ty1")
+    tiles = F.expr(
+        "flatten(transform(sequence(_tx0, _tx1), "
+        "tx -> transform(sequence(_ty0, _ty1), "
+        "ty -> struct(tx as tx, ty as ty))))")
+    return (d.select(*df.columns, F.explode(tiles).alias("_t"))
+            .select(*df.columns, F.col("_t.tx").alias("_tx"),
+                    F.col("_t.ty").alias("_ty")))
+
 
 def dissolve_corrections_df(polys: DataFrame, layer_col: str = "layer",
-                            tile_size: float = 5000.0) -> DataFrame:
+                            tile_size: float = _TILE_M) -> DataFrame:
     """Inclusion–exclusion correction polygons per layer (st_union
     semantics, C_…R:99,154 — VERDICT r01 #8): a grouped pass over the
     feature table emits weighted pseudo-features (weight ±1, theta year
@@ -93,8 +118,8 @@ def dissolve_corrections_df(polys: DataFrame, layer_col: str = "layer",
         # synthetic negative ids: 42-bit (layer, tile) salt × 2^20 slot
         # space per tile. ADVICE r03: the old 20-bit salt hit birthday
         # collisions (~50% at ~1200 groups) on mega-layers; 42 bits put
-        # 50% at ~2.5M (layer, tile) groups, and the join kernel's
-        # id-uniqueness checks (both branches) catch the residue.
+        # 50% at ~2.5M (layer, tile) groups, and both kernels'
+        # id-uniqueness checks catch the residue.
         base = -((int(pd.util.hash_pandas_object(
             pd.Series([f"{layer}|{tx}|{ty}"])).iloc[0]) % (1 << 42) + 1) << 20)
         rings = [K.feature_parts(g) for g in pdf["geom"]]
@@ -120,18 +145,9 @@ def dissolve_corrections_df(polys: DataFrame, layer_col: str = "layer",
             i += 1
         return pd.DataFrame(rows, columns=[f.name for f in schema.fields])
 
-    d = polys.select("feature_id", layer_col, "poly_year", "geom").selectExpr(
-        "*", *[f"floor({e} / {ts!r}D) AS {n}" for e, n in zip(
-            bbox_sql("dissolve_corrections_df"),
-            ("_tx0", "_ty0", "_tx1", "_ty1"))])
-    tiles = F.expr(
-        "flatten(transform(sequence(_tx0, _tx1), "
-        "tx -> transform(sequence(_ty0, _ty1), "
-        "ty -> struct(tx as tx, ty as ty))))")
-    d = (d.select("feature_id", layer_col, "poly_year", "geom",
-                  F.explode(tiles).alias("_t"))
-         .select("feature_id", layer_col, "poly_year", "geom",
-                 F.col("_t.tx").alias("_tx"), F.col("_t.ty").alias("_ty")))
+    d = _tile_explode(
+        polys.select("feature_id", layer_col, "poly_year", "geom"), 0.0,
+        "dissolve_corrections_df", ts)
     # a numbered repartition on the grouping keys: it satisfies the
     # groupBy's clustering (no second exchange), and AQE never
     # coalesces it — the groupBy's own small-byte shuffle was coalesced
@@ -187,8 +203,8 @@ def _feature_side(polys: DataFrame, *, layer_col: str,
         F.col("YEAR").alias("poly_year"), F.col("geom"),
     )
     if validity_filter:
-        # materialized once: the corrections, the id check and every
-        # branch of the join kernel's plan read the validated side, and
+        # materialized once: the corrections, the id check, the layer
+        # aggregate and the tiled kernel's plan read the validated side, and
         # the validity UDF would otherwise re-run in each of them
         pl = pl.filter(is_valid_udf()(F.col("geom"))).localCheckpoint(eager=True)
     if dissolve != "auto":
@@ -201,8 +217,8 @@ def _feature_side(polys: DataFrame, *, layer_col: str,
         marked = corr["layer"].str.startswith(_CORR_MARK)
         fallback = sorted({v[len(_CORR_MARK):] for v in corr.loc[marked, "layer"]})
         return pl, corr[~marked & ~corr["layer"].isin(fallback)], fallback
-    # localCheckpoint, not persist: the marker collect, the join-side
-    # union and a broadcast index build read one computation, and the
+    # localCheckpoint, not persist: the marker collect, the id check
+    # and the tiled kernel's feature side read one computation, and the
     # ContextCleaner frees the blocks with the plan (ADVICE r02 leak)
     corr = corr.localCheckpoint(eager=True)
     marked = F.col("layer").startswith(_CORR_MARK)
@@ -226,17 +242,20 @@ def areadist(
     *,
     radii: tuple[float, ...] = (150.0, 565.0),
     maxdist: float = 1000.0,
-    temporal: bool = True,
-    age: bool = True,
-    keys: tuple[str, ...] = ("PKEY", "SS", "YEAR"),
+    temporal=True,
+    age=True,
     layer_col: str = "layer",
     validity_filter: bool = True,
     dissolve: str = "auto",
+    wide: tuple[str, ...] | None = None,
 ) -> DataFrame:
     """One row per (point, layer): the points' columns, `layer`,
     NEAR_DIST, then AREA<r>, PROP<r> and (if `age`) MEANAGE_<r> per
     radius. `temporal`/`age` select the reference's areadist vs
-    areadist.age vs areadist.wet variants.
+    areadist.age vs areadist.wet variants: True/False for every layer,
+    or the collection of the layer names that take the theta / MEANAGE.
+    `wide` (layer names) emits one row per point instead, with a
+    <layer>_<METRIC> block per named layer (see areadist_fused).
 
     `dissolve` (the st_union in C_…R:99,154):
     - "auto" (default): exact union via precomputed inclusion–exclusion
@@ -250,12 +269,13 @@ def areadist(
     chosen here, not by the caller (VERDICT r01 wrong-#3)."""
     from . import areadist_fused as AF  # it imports this module
     _check_dissolve("areadist", dissolve)
-    kw = dict(radii=radii, maxdist=maxdist, temporal=temporal, age=age,
-              layer_col=layer_col, validity_filter=validity_filter,
-              dissolve=dissolve)
-    if AF.feature_count(polys) <= AF.MAX_BROADCAST_FEATURES:
-        return AF.areadist_fused(points, polys, **kw)
-    return areadist_join(points, polys, keys=keys, **kw)
+    # AF.areadist_fused is looked up at call time, so a wrapper
+    # installed on the module (perfbench tracing) sees the build
+    small = AF.feature_count(polys) <= AF.MAX_BROADCAST_FEATURES
+    return (AF.areadist_fused if small else areadist_join)(
+        points, polys, radii=radii, maxdist=maxdist, temporal=temporal,
+        age=age, layer_col=layer_col, validity_filter=validity_filter,
+        dissolve=dissolve, wide=wide)
 
 
 def areadist_join(
@@ -264,128 +284,84 @@ def areadist_join(
     *,
     radii: tuple[float, ...] = (150.0, 565.0),
     maxdist: float = 1000.0,
-    temporal: bool = True,
-    age: bool = True,
-    keys: tuple[str, ...] = ("PKEY", "SS", "YEAR"),
+    temporal=True,
+    age=True,
     layer_col: str = "layer",
     validity_filter: bool = True,
-    broadcast_polys: bool = False,
     dissolve: str = "auto",
+    wide: tuple[str, ...] | None = None,
 ) -> DataFrame:
-    """The join kernel behind :func:`areadist`, same output. Under
-    "auto", the layers whose exact union raised DissolveFallback take
-    the supersampled union."""
+    """The tiled kernel behind :func:`areadist`, same options and output
+    as areadist_fused, for feature sides past the broadcast gate: the
+    reference's fishnet (C_…R:209-253). Points are keyed by their
+    _TILE_M coarse tile; features and corrections replicate to every
+    tile their maxdist-dilated bbox touches, so a tile holds every
+    candidate of its points. One cogroup per tile builds that tile's
+    _FeatureIndex and runs the fused kernel's body over its points. The
+    layer list, each layer's oldest real year and the raster-fallback
+    layers are whole-side facts, computed once and shared by every
+    tile."""
+    from . import areadist_fused as AF  # it imports this module
     _check_dissolve("areadist_join", dissolve)
-    point_side = points.select(*keys, "x", "y")
-    pl, corr, fallback_layers = _feature_side(
+    pl, corr, fallback = _feature_side(
         polys, layer_col=layer_col, validity_filter=validity_filter,
         dissolve=dissolve, collect=False)
-    join_side = pl.withColumn("weight", F.lit(1.0)) \
-                  .withColumn("is_real", F.lit(True))
+    side = pl.withColumn("weight", F.lit(1.0)) \
+             .withColumn("is_real", F.lit(True))
     if corr is not None:
-        join_side = join_side.unionByName(
-            corr.withColumn("is_real", F.lit(False)))
-    if not broadcast_polys:
-        # the broadcast geometry index rejects repeated ids; here one
-        # tiny agg does, or a repeated feature counts twice and a salt
-        # collision refines the wrong correction ring (ADVICE r03)
-        dup = (join_side.groupBy("feature_id").count()
-               .filter(F.col("count") > 1).select("feature_id").first())
-        if dup is not None:
-            raise ValueError(
-                f"areadist_join: duplicate feature_id {dup[0]} in the "
-                f"feature side" if dup[0] >= 0  # correction ids are < 0
-                else "dissolve_corrections_df: correction feature_id salt "
-                "collision across (layer, tile) groups — rerun with a "
-                "different tile_size")
+        side = side.unionByName(corr.withColumn("is_real", F.lit(False)))
+    # a tile's index rejects ids repeated inside the tile; this one
+    # tiny agg catches the rest, or a repeated feature counts twice and
+    # a salt collision refines the wrong correction ring (ADVICE r03)
+    dup = (side.groupBy("feature_id").count()
+           .filter(F.col("count") > 1).select("feature_id").first())
+    if dup is not None:
+        raise ValueError(
+            f"areadist_join: duplicate feature_id {dup[0]} in the "
+            f"feature side" if dup[0] >= 0  # correction ids are < 0
+            else "dissolve_corrections_df: correction feature_id salt "
+            "collision across (layer, tile) groups — rerun with a "
+            "different tile_size")
+    # oldest real construction year per layer (C_…R:231)
+    old = dict(pl.groupBy("layer").agg(F.min(F.when(
+        F.col("poly_year") > 0, F.col("poly_year")))).collect())
+    layers = sorted(old)
+    oldest = [-1 if old[n] is None else old[n] for n in layers]
 
-    theta = F.col("poly_year") < F.col("YEAR") if temporal else None
-    pairs = range_join_pairs(
-        point_side, join_side, maxdist, radii, theta=theta,
-        broadcast_polys=broadcast_polys,
-    )
+    code = I.code_for_radius(max(maxdist / 4.0, I.RESOLUTIONS[0]))
+    schema, blocks = AF._out_schema(points.schema.fields, layers,
+                                    radii=radii, age=age, wide=wide)
+    in_cols = points.columns
 
-    if age:
-        # layer-level scalar: oldest real construction year (C_…R:231)
-        oldest = (
-            pl.filter(F.col("poly_year") > 0)
-            .groupBy("layer").agg(F.min("poly_year").alias("oldestyear"))
-        )
-        pairs = pairs.join(F.broadcast(oldest), "layer", "left")
-        recoded = F.when(F.col("poly_year") == 0, F.col("oldestyear")) \
-                   .otherwise(F.col("poly_year"))  # C_…R:150
-        pairs = pairs.withColumn("page", F.col("YEAR") - recoded)
+    def tile(pts: pd.DataFrame, feats: pd.DataFrame) -> pd.DataFrame:
+        if pts.empty:
+            return pd.DataFrame()
+        feats = feats.assign(geom=[np.split(xy, np.cumsum(n)[:-1]) for xy, n
+                                   in zip(feats["xy"], feats["sizes"])])
+        real = feats["is_real"].to_numpy(bool)
+        fx = AF._FeatureIndex(feats[real], maxdist, code, feats[~real],
+                              temporal=temporal, age=age, raster=fallback,
+                              layers=layers, oldest=oldest)
+        return AF._answer(fx, pts, in_cols, blocks, radii=radii,
+                          maxdist=maxdist, age=age, code=code)
 
-    # distance and MEANAGE see only REAL features; dissolve correction
-    # pseudo-features contribute weight·area to the union sums only
-    aggs = [F.least(F.min(F.when(F.col("is_real"), F.col("dist"))),
-                    F.lit(float(maxdist))).alias("NEAR_DIST")]
-    for r in radii:
-        a = f"a{int(r)}"
-        aggs.append(F.sum(F.col("weight") * F.col(a)).alias(f"AREA{int(r)}"))
-        aggs.append(
-            (F.sum(F.col("weight") * F.col(a))
-             / F.lit(PI_LITERAL * r * r)).alias(f"PROP{int(r)}")
-        )
-        if age:
-            # Σ(age·clip_area)/Σ(clip_area) over candidates with a>0
-            # (C_…R:156-159); null when nothing intersects the buffer.
-            # Pairs with undefined age (YEAR=0 in a layer with no real
-            # year → null oldestyear → null page) are excluded from
-            # BOTH num and den (null-contribution semantics, ADVICE
-            # r01 — same rule as oracle.py and the fused kernel).
-            ok = (F.col(a) > 0) & F.col("page").isNotNull() & F.col("is_real")
-            num = F.sum(F.when(ok, F.col("page") * F.col(a)))
-            den = F.sum(F.when(ok, F.col(a)))
-            aggs.append((num / den).alias(f"MEANAGE_{int(r)}"))
-
-    got = pairs.groupBy(*keys, "layer").agg(*aggs)
-
-    if fallback_layers:
-        # raster-dissolved layers (the ones whose exact union raised
-        # DissolveFallback): union area via deterministic supersampling
-        # (applyInPandas per point group — G5 fallback)
-        kcols = (*keys, "layer")
-        fields = [pairs.schema[k] for k in kcols] + [
-            T.StructField(f"UAREA{int(r)}", T.DoubleType()) for r in radii
-        ]
-        # their own join over those layers' real features, geometry kept
-        rpairs = range_join_pairs(
-            point_side, pl.filter(F.col("layer").isin(fallback_layers)),
-            maxdist, theta=theta)
-
-        def _fn(pdf: pd.DataFrame) -> pd.DataFrame:
-            rings = [K.feature_parts(g) for g in pdf["geom"]]
-            row = {k: [pdf[k].iloc[0]] for k in kcols}
-            px, py = float(pdf["x"].iloc[0]), float(pdf["y"].iloc[0])
-            for r in radii:
-                row[f"UAREA{int(r)}"] = [_union_area_raster(px, py, r, rings)]
-            return pd.DataFrame(row)
-
-        uareas = rpairs.groupBy(*kcols).applyInPandas(_fn, T.StructType(fields))
-        got = got.join(uareas, [*kcols], "left")
-        for r in radii:
-            patched = F.coalesce(F.col(f"UAREA{int(r)}"), F.col(f"AREA{int(r)}"))
-            got = (
-                got.withColumn(f"AREA{int(r)}", patched)
-                .withColumn(f"PROP{int(r)}",
-                            F.col(f"AREA{int(r)}") / F.lit(PI_LITERAL * r * r))
-                .drop(f"UAREA{int(r)}")
-            )
-
-    # LEFT semantics: every point appears for every layer (J6;
-    # row-count invariant C_…R:707-709), in the fused kernel's column
-    # order so the planner's route never changes the caller's schema
-    layers = pl.select("layer").distinct()
-    out = points.crossJoin(F.broadcast(layers)) \
-        .join(got, [*keys, "layer"], "left")
-    fills = {"NEAR_DIST": float(maxdist)}
-    for r in radii:
-        fills[f"AREA{int(r)}"] = fills[f"PROP{int(r)}"] = 0.0
-    metrics = [c for c in got.columns if c not in (*keys, "layer")]
-    return out.select(*points.columns, "layer", *[
-        F.coalesce(F.col(c), F.lit(fills[c])).alias(c) if c in fills
-        else F.col(c) for c in metrics])
+    # numbered repartitions on the tile keys: they co-partition the two
+    # sides for the cogroup (no further exchange), and AQE never
+    # coalesces them into one task (see dissolve_corrections_df)
+    n = points.sparkSession.sparkContext.defaultParallelism
+    t = repr(_TILE_M)
+    p = points.selectExpr("*", f"floor(x / {t}D) AS _tx",
+                          f"floor(y / {t}D) AS _ty")
+    # geometry travels flat, coordinates plus part sizes: a tile with
+    # points and no feature sends an empty side, and an empty
+    # array<array<double>> column crashes the Python worker
+    # (segmentation fault in the cogroup's Arrow read)
+    f = _tile_explode(side, maxdist, "areadist_join").selectExpr(
+        "feature_id", "layer", "poly_year", "weight", "is_real", "_tx", "_ty",
+        "flatten(geom) AS xy", "transform(geom, p -> size(p)) AS sizes")
+    return (p.repartition(n, "_tx", "_ty").groupBy("_tx", "_ty")
+            .cogroup(f.repartition(n, "_tx", "_ty").groupBy("_tx", "_ty"))
+            .applyInPandas(tile, schema))
 
 
 def areadist_wide(result: DataFrame, keys: tuple[str, ...] = ("PKEY", "SS", "YEAR"),

@@ -3,14 +3,10 @@ feature sides of broadcast-join size (the same precondition as a Spark
 broadcast join; the reference's layers — ≤ a few million polygons —
 all qualify; the planner checks MAX_BROADCAST_FEATURES).
 
-The join kernel (operators.areadist.areadist_join) materializes
-candidate pairs through an equi join, which at high feature density
-multiplies row traffic ~100× between the join and the per-point
-aggregation. This kernel instead ships a CSR cell→features index +
-packed ring geometry to every executor ONCE (a Spark broadcast
-variable) and runs candidate lookup → bbox prefilter → exact
-circle∩polygon refinement → per-point aggregation inside ONE
-mapInPandas over the points table:
+It ships a CSR cell→features index + packed ring geometry to every
+executor ONCE (a Spark broadcast variable) and runs candidate lookup →
+bbox prefilter → exact circle∩polygon refinement → per-point
+aggregation inside ONE mapInPandas over the points table:
 
     points scan → mapInPandas(fused kernel) → sink
 
@@ -26,12 +22,15 @@ row per (point, layer), or — with `wide` — one row per point carrying a
 (C_…R:1194-1208) without a pivot or a key join. The temporal theta and
 MEANAGE are chosen per layer, so one index over several layer groups
 (14 footprints with both, 5 wetland classes with neither) answers them
-all in one pass.
+all in one pass. A layer whose exact union needs the raster fallback
+keeps its rings in the index, and the same pass supersamples its union.
 
-Results are identical to the join kernel's (asserted row-for-row in
-tests/test_areadist_fused.py), also on a layer whose exact union needs
-the raster fallback: the index keeps its rings, and the same pass
-supersamples its union over the same candidates.
+The per-point body (_chunk_metrics, _chunk_reduce, _answer) and the
+output schema (_out_schema) are module-level: the tiled kernel past
+the broadcast gate (operators.areadist.areadist_join) runs the same
+body over each coarse tile's points against that tile's index, so the
+two kernels agree row-for-row (tests/test_areadist_fused.py,
+tests/test_property_areadist.py).
 """
 
 from __future__ import annotations
@@ -119,8 +118,8 @@ def _plan_key(df: DataFrame):
     return (re.sub(r"#\d+", renum, s), files)
 
 # feature-side row count up to which the planner (areadist.areadist)
-# uses this kernel; beyond it the join kernel's shuffle branch
-# (SMJ-capable) takes over. ~5M rects ≈ 400 MB packed rings + CSR —
+# uses this kernel; beyond it the tiled kernel (areadist_join, one
+# cogroup per coarse tile) takes over. ~5M rects ≈ 400 MB packed rings + CSR —
 # comfortably inside one executor, the same envelope as a Spark
 # broadcast join build side.
 MAX_BROADCAST_FEATURES = 5_000_000
@@ -163,11 +162,16 @@ class _FeatureIndex:
     (`corr_pdf`) are appended as weighted pseudo-features — weight ±1,
     is_real False — so the exact union rides the same CSR lookup with
     zero extra per-point machinery. The `raster` layers (no exact
-    union) keep their features' parts for the supersampled union."""
+    union) keep their features' parts for the supersampled union.
+
+    A tile's index (areadist.areadist_join) takes `layers` and their
+    `oldest` real years (-1: none) from the whole feature side, so its
+    layer codes, YEAR=0 recode and defaults are the global ones."""
 
     def __init__(self, pdf: pd.DataFrame, radius: float, code: int,
                  corr_pdf: pd.DataFrame | None = None,
-                 temporal=True, age=True, raster=()):
+                 temporal=True, age=True, raster=(), layers=None,
+                 oldest=None):
         if pdf["feature_id"].duplicated().any():  # would count twice
             raise ValueError("_FeatureIndex: duplicate feature_id values "
                              "in the feature side")
@@ -178,9 +182,12 @@ class _FeatureIndex:
                                  f"feature_id {fid}")
         rings = [K.feature_parts(g) for g in pdf["geom"]]
         years = pdf["poly_year"].to_numpy(np.int64)
-        lcodes, lnames = pd.factorize(pdf["layer"])
+        if layers is None:
+            lcodes, layers = pd.factorize(pdf["layer"])
+        else:
+            lcodes = pd.Index(layers).get_indexer(pdf["layer"])
         lcodes = lcodes.astype(np.int64)
-        self.layers = [str(x) for x in lnames]
+        self.layers = [str(x) for x in layers]
         self.temporal = np.array([_has_flag(temporal, n) for n in self.layers],
                                  dtype=bool)
         self.age = np.array([_has_flag(age, n) for n in self.layers],
@@ -217,11 +224,13 @@ class _FeatureIndex:
         self.weight = weight
         self.is_real = is_real
         # oldest real year per layer (C_…R:231) — real features only
-        self.oldest = np.full(len(self.layers), -1, dtype=np.int64)
-        for li in range(len(self.layers)):
-            real = self.years[(self.lcodes == li) & (self.years > 0) & is_real]
-            if len(real):
-                self.oldest[li] = real.min()
+        if oldest is None:
+            oldest = [-1] * len(self.layers)
+            for li in range(len(self.layers)):
+                real = years[(lcodes == li) & (years > 0) & is_real]
+                if len(real):
+                    oldest[li] = real.min()
+        self.oldest = np.asarray(oldest, dtype=np.int64)
         # CSR cell cover (one vectorized pass over all features; empty
         # arrays for an empty feature side)
         cells, ccounts = I.cover_bbox_many(
@@ -284,7 +293,7 @@ def areadist_fused(
         _IDX_CACHE.move_to_end(cache_key)
         idx, bc = hit
     else:
-        # distributed correction build (the join kernel's operator):
+        # distributed correction build (areadist.dissolve_corrections_df):
         # per (layer, coarse-tile) tasks, owner-corner exactly-once
         pl, corr_pdf, fallback = _feature_side(
             polys, layer_col=layer_col, validity_filter=validity_filter,
@@ -310,182 +319,206 @@ def _fused_apply(points: DataFrame, idx: "_FeatureIndex", bc, *,
     _FeatureIndex + its broadcast, declare the one-stage mapInPandas.
     No jobs run here — this is what makes the index cache pay: a
     cache hit skips straight to plan declaration."""
-    radii = tuple(float(r) for r in radii)
-    L = len(idx.layers)
-
-    def metric_names(with_age: bool) -> list[str]:
-        names = ["NEAR_DIST"]
-        for r in radii:
-            names += [f"AREA{int(r)}", f"PROP{int(r)}"]
-            if with_age:
-                names.append(f"MEANAGE_{int(r)}")
-        return names
-
-    with_age = bool(age)
-    in_fields = list(points.schema.fields)
-    in_cols = [f.name for f in in_fields]
-    if wide is None:
-        out_names = ["layer"] + metric_names(with_age)
-    else:
-        lcode = {name: li for li, name in enumerate(idx.layers)}
-        blocks = [(name, lcode.get(name), metric_names(_has_flag(age, name)))
-                  for name in wide]
-        out_names = [f"{name}_{m}" for name, _, ms in blocks for m in ms]
-    out_schema = T.StructType(in_fields + [
-        T.StructField(n, T.StringType() if n == "layer" else T.DoubleType())
-        for n in out_names])
-    # a wide layer with no feature: the empty-candidate defaults
-    defaults = {m: (float(maxdist) if m == "NEAR_DIST" else
-                    np.nan if m.startswith("MEANAGE_") else 0.0)
-                for m in metric_names(True)}
-
-    def _chunk_metrics(fx, px, py, pyear):
-        """Candidate lookup + prefilters + exact kernel for one point
-        chunk. Chunks are kept small (_CHUNK_POINTS) deliberately: the
-        intermediate pair arrays then stay cache-resident, which
-        measured 16× faster than one monolithic Arrow-batch pass."""
-        B = len(px)
-        cells = I.xy_to_cell(px, py, code)
-        if len(fx.ucells):
-            pos = np.searchsorted(fx.ucells, cells)
-            pos_c = np.minimum(pos, len(fx.ucells) - 1)
-            found = fx.ucells[pos_c] == cells
-            cnt = np.where(found, fx.ucounts[pos_c], 0)
-            ppi = np.repeat(np.arange(B), cnt)          # pair → point idx
-            entry = _grouped_ranges(np.where(found, fx.ustarts[pos_c], 0), cnt)
-            ridx = fx.centries[entry]
-        else:
-            ppi = np.zeros(0, dtype=np.int64)
-            ridx = np.zeros(0, dtype=np.int64)
-
-        if fx.temporal.any():
-            # theta (C_…R:93-94), on the temporal layers' candidates
-            keep = (~fx.temporal[fx.lcodes[ridx]]
-                    | (fx.years[ridx] < pyear[ppi]))
-            ppi, ridx = ppi[keep], ridx[keep]
-        # bbox distance < maxdist (lossless: bbox dist ≤ true dist)
-        bb = fx.bbox[ridx]
-        dx = np.maximum(np.maximum(bb[:, 0] - px[ppi], px[ppi] - bb[:, 2]), 0.0)
-        dy = np.maximum(np.maximum(bb[:, 1] - py[ppi], py[ppi] - bb[:, 3]), 0.0)
-        keep = (dx * dx + dy * dy) < maxdist * maxdist
-        ppi, ridx = ppi[keep], ridx[keep]
-        m = K.packed_pair_metrics(px[ppi], py[ppi], ridx, fx.packed, radii)
-        return ppi, ridx, m
-
-    def _chunk_reduce(fx, nL, px, py, pyear) -> dict[str, np.ndarray]:
-        """Per (point, layer) metrics of one chunk, B × nL row-major."""
-        B = len(px)
-        ppi, ridx, m = _chunk_metrics(fx, px, py, pyear)
-        lr = fx.lcodes[ridx]
-        key = ppi * nL + lr
-        order = np.argsort(key, kind="stable")
-        key_s = key[order]
-        ukey, kstart = np.unique(key_s, return_index=True)
-
-        nkeys = B * nL
-        near = np.full(nkeys, maxdist, dtype=np.float64)
-        real = fx.is_real[ridx][order] if len(key_s) else np.zeros(0, bool)
-        wgt = fx.weight[ridx][order] if len(key_s) else np.zeros(0)
-        if len(key_s):
-            # NEAR_DIST over REAL features only (corrections
-            # are areal bookkeeping, not features)
-            dreal = np.where(real, m["dist"][order], np.inf)
-            dmin = np.minimum.reduceat(dreal, kstart)
-            near[ukey] = np.minimum(dmin, maxdist)  # cap (C_…R:116-117)
-        rgroups = []
-        if fx.raster.any():
-            # raster layers: the join kernel's union over its candidates
-            # (theta, then dist < maxdist), grouped per (point, layer)
-            rs = np.flatnonzero(fx.raster[lr] & (m["dist"] < maxdist))
-            rs = rs[np.argsort(key[rs], kind="stable")]
-            rk, rstart = np.unique(key[rs], return_index=True)
-            rgroups = [(k, k // nL, [fx.raster_parts[j] for j in g])
-                       for k, g in zip(rk, np.split(ridx[rs], rstart[1:]))]
-        cols: dict[str, np.ndarray] = {"NEAR_DIST": near}
-        for r in radii:
-            a = m[f"a{int(r)}"][order] if len(key_s) else np.zeros(0)
-            asum = np.zeros(nkeys, dtype=np.float64)
-            if len(key_s):
-                # dissolved union: Σ weight·area (weight is +1
-                # for real features, ±1 for I-E corrections)
-                asum[ukey] = np.add.reduceat(wgt * a, kstart)
-            for k, p, feats in rgroups:
-                asum[k] = _union_area_raster(px[p], py[p], r, feats)
-            cols[f"AREA{int(r)}"] = asum
-            cols[f"PROP{int(r)}"] = asum / (PI_LITERAL * r * r)
-            if with_age:
-                num = np.zeros(nkeys)
-                den = np.zeros(nkeys)
-                if len(key_s):
-                    # YEAR=0 → layer's oldest real year (C_…R:150)
-                    yy = fx.years[ridx][order].astype(np.float64)
-                    old = fx.oldest[lr[order]].astype(np.float64)
-                    yy = np.where(yy == 0, old, yy)
-                    agev = pyear[ppi][order] - yy
-                    # yy stays -1 when the layer has NO real
-                    # year: age undefined → excluded from num
-                    # AND den (null-contribution semantics,
-                    # ADVICE r01 — matches oracle + join path).
-                    # MEANAGE uses per-clip areas of REAL
-                    # features (the reference's non-dissolved
-                    # area notion, C_…R:156-159)
-                    w = np.where((a > 0) & (yy > 0) & real, a, 0.0)
-                    num[ukey] = np.add.reduceat(agev * w, kstart)
-                    den[ukey] = np.add.reduceat(w, kstart)
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    ma = np.where(den > 0, num / den, np.nan)
-                if not fx.age.all():
-                    ma.reshape(B, nL)[:, ~fx.age] = np.nan
-                cols[f"MEANAGE_{int(r)}"] = ma
-        return cols
-
-    def _out_col(name: str, arr: np.ndarray):
-        if name.startswith("MEANAGE_"):
-            # emit SQL NULL (not NaN) for empty candidate sets —
-            # identical to the join path's LEFT-join null
-            # (pandas nullable Float64 → Arrow null)
-            arr = np.ascontiguousarray(arr)
-            return pd.arrays.FloatingArray(arr, np.isnan(arr))
-        return arr
+    schema, blocks = _out_schema(points.schema.fields, idx.layers,
+                                 radii=radii, age=age, wide=wide)
+    in_cols = points.columns
 
     def fused(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         fx = bc.value
-        nL = max(L, 1)
-        for pdf0 in batches:
-            # kernels run over small cache-resident chunks, but the
-            # output is assembled and yielded ONCE per Arrow batch —
-            # per-chunk yields would send thousands of tiny record
-            # batches through the Arrow stream (measured JVM-side cost)
-            B0 = len(pdf0)
-            if B0 == 0:
-                continue
-            px0 = pdf0["x"].to_numpy(np.float64)
-            py0 = pdf0["y"].to_numpy(np.float64)
-            pyear0 = pdf0["YEAR"].to_numpy(np.int64)
-            acc = [_chunk_reduce(fx, nL, px0[lo:lo + _CHUNK_POINTS],
-                                 py0[lo:lo + _CHUNK_POINTS],
-                                 pyear0[lo:lo + _CHUNK_POINTS])
-                   for lo in range(0, B0, _CHUNK_POINTS)]
-            cols = {name: (np.concatenate([c[name] for c in acc])
-                           if len(acc) > 1 else acc[0][name])
-                    for name in acc[0]}
-            if wide is None:
-                # dense (B × L) output with LEFT defaults built in
-                rep = pdf0.loc[pdf0.index.repeat(nL)].reset_index(drop=True)
-                out = rep[in_cols].copy()
-                out["layer"] = np.tile(np.array(fx.layers if L else ["<none>"]), B0)
-                for name, arr in cols.items():
-                    out[name] = _out_col(name, arr)
-            else:
-                # one row per point: layer li's column of each metric
-                new = {}
-                for name, li, ms in blocks:
-                    for m in ms:
-                        arr = (cols[m].reshape(B0, nL)[:, li] if li is not None
-                               else np.full(B0, defaults[m]))
-                        new[f"{name}_{m}"] = _out_col(m, arr)
-                out = pd.concat([pdf0[in_cols].reset_index(drop=True),
-                                 pd.DataFrame(new)], axis=1)
-            yield out
+        for pdf in batches:
+            if len(pdf):
+                yield _answer(fx, pdf, in_cols, blocks, radii=radii,
+                              maxdist=maxdist, age=age, code=code)
 
-    return points.mapInPandas(fused, out_schema)
+    return points.mapInPandas(fused, schema)
+
+
+# ---------------------------------------------------------------------------
+# The per-point body both kernels share: areadist_fused runs it over
+# each Arrow batch against the broadcast index, areadist.areadist_join
+# over each coarse tile's points against that tile's index.
+# ---------------------------------------------------------------------------
+
+def _metric_names(radii, with_age: bool) -> list[str]:
+    names = ["NEAR_DIST"]
+    for r in radii:
+        names += [f"AREA{int(r)}", f"PROP{int(r)}"]
+        if with_age:
+            names.append(f"MEANAGE_{int(r)}")
+    return names
+
+
+def _out_schema(in_fields, layers, *, radii, age, wide):
+    """(output schema, wide blocks): the points' fields, then `layer`
+    and the metrics (long), or per `wide` layer name a
+    (name, code in `layers` or None, metric names) block."""
+    if wide is None:
+        blocks = None
+        out_names = ["layer"] + _metric_names(radii, bool(age))
+    else:
+        lcode = {name: li for li, name in enumerate(layers)}
+        blocks = [(name, lcode.get(name), _metric_names(radii, _has_flag(age, name)))
+                  for name in wide]
+        out_names = [f"{name}_{m}" for name, _, ms in blocks for m in ms]
+    return T.StructType(list(in_fields) + [
+        T.StructField(n, T.StringType() if n == "layer" else T.DoubleType())
+        for n in out_names]), blocks
+
+
+def _chunk_metrics(fx, px, py, pyear, *, radii, maxdist, code):
+    """Candidate lookup + prefilters + exact kernel for one point
+    chunk. Chunks are kept small (_CHUNK_POINTS) deliberately: the
+    intermediate pair arrays then stay cache-resident, which
+    measured 16× faster than one monolithic Arrow-batch pass."""
+    B = len(px)
+    cells = I.xy_to_cell(px, py, code)
+    if len(fx.ucells):
+        pos = np.searchsorted(fx.ucells, cells)
+        pos_c = np.minimum(pos, len(fx.ucells) - 1)
+        found = fx.ucells[pos_c] == cells
+        cnt = np.where(found, fx.ucounts[pos_c], 0)
+        ppi = np.repeat(np.arange(B), cnt)          # pair → point idx
+        entry = _grouped_ranges(np.where(found, fx.ustarts[pos_c], 0), cnt)
+        ridx = fx.centries[entry]
+    else:
+        ppi = np.zeros(0, dtype=np.int64)
+        ridx = np.zeros(0, dtype=np.int64)
+
+    if fx.temporal.any():
+        # theta (C_…R:93-94), on the temporal layers' candidates
+        keep = (~fx.temporal[fx.lcodes[ridx]]
+                | (fx.years[ridx] < pyear[ppi]))
+        ppi, ridx = ppi[keep], ridx[keep]
+    # bbox distance < maxdist (lossless: bbox dist ≤ true dist)
+    bb = fx.bbox[ridx]
+    dx = np.maximum(np.maximum(bb[:, 0] - px[ppi], px[ppi] - bb[:, 2]), 0.0)
+    dy = np.maximum(np.maximum(bb[:, 1] - py[ppi], py[ppi] - bb[:, 3]), 0.0)
+    keep = (dx * dx + dy * dy) < maxdist * maxdist
+    ppi, ridx = ppi[keep], ridx[keep]
+    m = K.packed_pair_metrics(px[ppi], py[ppi], ridx, fx.packed, radii)
+    return ppi, ridx, m
+
+
+def _chunk_reduce(fx, px, py, pyear, *, radii, maxdist, code,
+                  with_age: bool) -> dict[str, np.ndarray]:
+    """Per (point, layer) metrics of one chunk, B × nL row-major."""
+    B = len(px)
+    nL = max(len(fx.layers), 1)
+    ppi, ridx, m = _chunk_metrics(fx, px, py, pyear, radii=radii,
+                                  maxdist=maxdist, code=code)
+    lr = fx.lcodes[ridx]
+    key = ppi * nL + lr
+    order = np.argsort(key, kind="stable")
+    key_s = key[order]
+    ukey, kstart = np.unique(key_s, return_index=True)
+
+    nkeys = B * nL
+    near = np.full(nkeys, maxdist, dtype=np.float64)
+    real = fx.is_real[ridx][order] if len(key_s) else np.zeros(0, bool)
+    wgt = fx.weight[ridx][order] if len(key_s) else np.zeros(0)
+    if len(key_s):
+        # NEAR_DIST over REAL features only (corrections
+        # are areal bookkeeping, not features)
+        dreal = np.where(real, m["dist"][order], np.inf)
+        dmin = np.minimum.reduceat(dreal, kstart)
+        near[ukey] = np.minimum(dmin, maxdist)  # cap (C_…R:116-117)
+    rgroups = []
+    if fx.raster.any():
+        # raster layers: the union over their real candidates left
+        # after theta and dist < maxdist, grouped per (point, layer)
+        rs = np.flatnonzero(fx.raster[lr] & (m["dist"] < maxdist))
+        rs = rs[np.argsort(key[rs], kind="stable")]
+        rk, rstart = np.unique(key[rs], return_index=True)
+        rgroups = [(k, k // nL, [fx.raster_parts[j] for j in g])
+                   for k, g in zip(rk, np.split(ridx[rs], rstart[1:]))]
+    cols: dict[str, np.ndarray] = {"NEAR_DIST": near}
+    for r in radii:
+        a = m[f"a{int(r)}"][order] if len(key_s) else np.zeros(0)
+        asum = np.zeros(nkeys, dtype=np.float64)
+        if len(key_s):
+            # dissolved union: Σ weight·area (weight is +1
+            # for real features, ±1 for I-E corrections)
+            asum[ukey] = np.add.reduceat(wgt * a, kstart)
+        for k, p, feats in rgroups:
+            asum[k] = _union_area_raster(px[p], py[p], r, feats)
+        cols[f"AREA{int(r)}"] = asum
+        cols[f"PROP{int(r)}"] = asum / (PI_LITERAL * r * r)
+        if with_age:
+            num = np.zeros(nkeys)
+            den = np.zeros(nkeys)
+            if len(key_s):
+                # YEAR=0 → layer's oldest real year (C_…R:150)
+                yy = fx.years[ridx][order].astype(np.float64)
+                old = fx.oldest[lr[order]].astype(np.float64)
+                yy = np.where(yy == 0, old, yy)
+                agev = pyear[ppi][order] - yy
+                # yy stays -1 when the layer has NO real
+                # year: age undefined → excluded from num
+                # AND den (null-contribution semantics,
+                # ADVICE r01 — matches the oracle).
+                # MEANAGE uses per-clip areas of REAL
+                # features (the reference's non-dissolved
+                # area notion, C_…R:156-159)
+                w = np.where((a > 0) & (yy > 0) & real, a, 0.0)
+                num[ukey] = np.add.reduceat(agev * w, kstart)
+                den[ukey] = np.add.reduceat(w, kstart)
+            with np.errstate(divide="ignore", invalid="ignore"):
+                ma = np.where(den > 0, num / den, np.nan)
+            if not fx.age.all():
+                ma.reshape(B, nL)[:, ~fx.age] = np.nan
+            cols[f"MEANAGE_{int(r)}"] = ma
+    return cols
+
+
+def _out_col(name: str, arr: np.ndarray):
+    if name.startswith("MEANAGE_"):
+        # emit SQL NULL (not NaN) for empty candidate sets
+        # (pandas nullable Float64 → Arrow null)
+        arr = np.ascontiguousarray(arr)
+        return pd.arrays.FloatingArray(arr, np.isnan(arr))
+    return arr
+
+
+def _answer(fx, pdf: pd.DataFrame, in_cols, blocks, *, radii, maxdist,
+            age, code) -> pd.DataFrame:
+    """Every layer of `fx` for each point of `pdf`, in the schema of
+    _out_schema: dense, with the empty-candidate defaults built in."""
+    radii = tuple(float(r) for r in radii)
+    L = len(fx.layers)
+    nL = max(L, 1)
+    # kernels run over small cache-resident chunks, but the output is
+    # assembled ONCE per call — per-chunk frames would send thousands
+    # of tiny record batches through the Arrow stream (measured
+    # JVM-side cost)
+    B = len(pdf)
+    px = pdf["x"].to_numpy(np.float64)
+    py = pdf["y"].to_numpy(np.float64)
+    pyear = pdf["YEAR"].to_numpy(np.int64)
+    acc = [_chunk_reduce(fx, px[lo:lo + _CHUNK_POINTS],
+                         py[lo:lo + _CHUNK_POINTS],
+                         pyear[lo:lo + _CHUNK_POINTS], radii=radii,
+                         maxdist=maxdist, code=code, with_age=bool(age))
+           for lo in range(0, B, _CHUNK_POINTS)]
+    cols = {name: (np.concatenate([c[name] for c in acc])
+                   if len(acc) > 1 else acc[0][name])
+            for name in acc[0]}
+    if blocks is None:
+        # dense (B × L) output with LEFT defaults built in
+        out = pdf.loc[pdf.index.repeat(nL), in_cols].reset_index(drop=True)
+        out["layer"] = np.tile(np.array(fx.layers if L else ["<none>"]), B)
+        for name, arr in cols.items():
+            out[name] = _out_col(name, arr)
+        return out
+    # one row per point: layer li's column of each metric; a wide
+    # layer with no feature gets the empty-candidate defaults
+    new = {}
+    for name, li, ms in blocks:
+        for m in ms:
+            if li is not None:
+                arr = cols[m].reshape(B, nL)[:, li]
+            else:
+                arr = np.full(B, float(maxdist) if m == "NEAR_DIST" else
+                              np.nan if m.startswith("MEANAGE_") else 0.0)
+            new[f"{name}_{m}"] = _out_col(m, arr)
+    return pd.concat([pdf[in_cols].reset_index(drop=True),
+                      pd.DataFrame(new)], axis=1)

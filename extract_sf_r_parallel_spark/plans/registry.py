@@ -370,7 +370,7 @@ def _circle_inputs(spark, sf_dir):
 def q_areadist_circle(spark, sf_dir):
     # the planner (VERDICT r01 wrong-#3): the feature-side count picks
     # the fused single-stage mapInPandas kernel when it fits an
-    # executor (it does here), else the join kernel below —
+    # executor (it does here), else the tiled kernel below —
     # result-identical either way
     # dissolve="sum": this query's DuckDB oracle evaluates the
     # per-clip Σ (the reference's second area notion, C_…R:156); the
@@ -382,12 +382,11 @@ def q_areadist_circle(spark, sf_dir):
 
 
 def q_areadist_circle_join(spark, sf_dir):
-    # the join kernel (cell-explode equi join, the SMJ-capable plan for
+    # the tiled kernel (the fused body per coarse tile, the plan for
     # feature sides too large to broadcast) — same results
     pts, polys = _circle_inputs(spark, sf_dir)
     return _flagship_select(
-        areadist_join(pts, polys, validity_filter=False,
-                      broadcast_polys=True, dissolve="sum"))
+        areadist_join(pts, polys, validity_filter=False, dissolve="sum"))
 
 
 # --- kNN ring expansion (uncapped k nearest; brute-force SQL oracle)
@@ -600,20 +599,20 @@ GROUP BY 1, 2
 # areadist.wet per wetland class (5-way, D_…R:595-608), suffix-renames
 # each layer's metric columns, and inner-merges everything on
 # (PKEY, SS, YEAR). Here: the two feature sides are unioned (ids made
-# unique per side) and ONE fused areadist pass over one broadcast index
-# answers all 19 layers — the 14 footprint layers with the temporal
-# theta and MEANAGE (the areadist.age variant), the 5 wetland classes
-# with neither (areadist.wet) — and emits the <layer>_<METRIC> row per
-# point directly: no pivot, no key join (one join over the union of the
+# unique per side) and ONE areadist call answers all 19 layers — the 14
+# footprint layers with the temporal theta and MEANAGE (the
+# areadist.age variant), the 5 wetland classes with neither
+# (areadist.wet) — and emits the <layer>_<METRIC> row per point
+# directly: no pivot, no key join (one join over the union of the
 # branches instead of one per branch, as in Teradata's joins over
 # UNION ALL, SIGMOD 2018). 19 layers × metrics = 123 metric columns,
-# the reference's "give me the output table" answer in one call. A
-# union past the broadcast gate takes the join route instead: one
-# areadist call per side, each pivoted by areadist_wide, inner-joined
-# on the keys — the same columns. Every point is emitted densely (LEFT
-# semantics) on both routes, so the point count is preserved — the
-# reference's 83,439-row invariant (C_…R:707-709), asserted in
-# tests/test_wide_merge.py.
+# the reference's "give me the output table" answer in one call. The
+# planner picks the kernel on the union: one fused pass over one
+# broadcast index, or past the broadcast gate the tiled kernel, which
+# runs the same body per coarse tile and emits the same columns. Every
+# point is emitted densely (LEFT semantics) by both, so the point count
+# is preserved — the reference's 83,439-row invariant (C_…R:707-709),
+# asserted in tests/test_wide_merge.py.
 _WM_LAYERS = [f"L{i:02d}" for i in range(14)]
 _WM_CLASSES = ["Bog", "Fen", "Marsh", "Open_Water", "Swamp"]
 # the wetland side's feature ids move past every footprint id
@@ -633,9 +632,6 @@ def _wide_merge(spark, sf_dir, foot_polys, wet_polys, dissolve):
     point, rounded, one row per point with a <layer>_<METRIC> block per
     layer. `foot_polys` / `wet_polys` build the feature sides (layer
     columns `layer` / `CWCS_Class`)."""
-    from ..operators import areadist_fused as AF
-    from ..operators.areadist import areadist_wide
-
     shared = set(_WM_LAYERS) & set(_WM_CLASSES)
     if shared:
         raise ValueError(f"wide_merge: layer names {sorted(shared)} are in "
@@ -652,23 +648,10 @@ def _wide_merge(spark, sf_dir, foot_polys, wet_polys, dissolve):
 
     union = side(foot, "layer", _WM_LAYERS, 0).unionByName(
         side(wet, "CWCS_Class", _WM_CLASSES, 1))
-    if AF.feature_count(union) <= AF.MAX_BROADCAST_FEATURES:
-        # looked up on the module at call time, so a wrapper installed
-        # on areadist_fused (perfbench tracing) sees the build
-        return _wide_select(AF.areadist_fused(
-            pts, union, temporal=frozenset(_WM_LAYERS),
-            age=frozenset(_WM_LAYERS), validity_filter=False,
-            dissolve=dissolve, wide=(*_WM_LAYERS, *_WM_CLASSES)), blocks)
-    foot = areadist(pts, foot, validity_filter=False, dissolve=dissolve)
-    wet = areadist(pts, wet, temporal=False, age=False,
-                   layer_col="CWCS_Class", validity_filter=False,
-                   dissolve=dissolve)
-    # the reference's final inner merge on the point keys
-    # (C_…R:1194-1208); both sides are dense → row count preserved
-    wide = areadist_wide(foot.drop("x", "y"), values=tuple(_WM_LAYERS)).join(
-        areadist_wide(wet.drop("x", "y"), values=tuple(_WM_CLASSES)),
-        ["PKEY", "SS", "YEAR"], "inner")
-    return _wide_select(wide, blocks)
+    return _wide_select(areadist(
+        pts, union, temporal=frozenset(_WM_LAYERS), age=frozenset(_WM_LAYERS),
+        validity_filter=False, dissolve=dissolve,
+        wide=(*_WM_LAYERS, *_WM_CLASSES)), blocks)
 
 
 def q_wide_merge_sum(spark, sf_dir):

@@ -751,19 +751,17 @@ def q_areadist_dissolve(spark, sf_dir):
 
 
 def q_areadist_dissolve_join(spark, sf_dir):
-    # the join kernel through the same dissolve="auto" default — the
-    # SMJ-capable path a too-big-to-broadcast layer takes at 100 TB.
-    # Same oracle as the fused row (r04: both kernels oracled by SQL,
-    # mirroring the areadist_circle/_join pairing).
-    # broadcast_polys=False (ADVICE r04): this row exists to oracle the
-    # SHUFFLE join — geometry rides the pairs into pair_metrics_udf and
-    # the feature-id uniqueness check in the join kernel's
-    # non-broadcast branch actually executes.
+    # the tiled kernel through the same dissolve="auto" default — the
+    # path a too-big-to-broadcast layer takes at 100 TB: corrections
+    # replicate to the tiles with the features, and the feature-id
+    # uniqueness check executes. Same oracle as the fused row (r04:
+    # both kernels oracled by SQL, mirroring the areadist_circle/_join
+    # pairing).
     from ..operators.areadist import areadist_join
     pts = _keyed_points(spark, sf_dir)
     polys = _pair_rect_polys(spark, sf_dir)
     out = areadist_join(pts, polys, temporal=False, age=False,
-                        validity_filter=False, broadcast_polys=False)
+                        validity_filter=False)
     return _dissolve_select(out)
 
 
@@ -864,8 +862,8 @@ def _flagship_exprs(prefix: str, with_age: bool) -> list[str]:
     """SQL text of the rounding contract shared with the DuckDB oracles
     (FLAGSHIP_ROUND) for one metric block: `prefix`NEAR_DIST, then
     AREA/PROP[/MEANAGE] per radius. MEANAGE is gated on the ROUNDED
-    area > 0 on both engines, which also unifies the fused path's NaN
-    with the join path's NULL for empty candidate sets."""
+    area > 0 on both engines, which also makes MEANAGE NULL for empty
+    candidate sets on both."""
     d = FLAGSHIP_ROUND
     out = [f"round(`{prefix}NEAR_DIST`, {d['NEAR_DIST']}) "
            f"AS `{prefix}NEAR_DIST`"]

@@ -1,4 +1,4 @@
-"""The fused broadcast kernel must match the join kernel — and the
+"""The fused broadcast kernel must match the tiled kernel — and the
 serial oracle — row-for-row, for every variant (age, wetland,
 no-temporal). Also asserts the fused plan is a single narrow stage
 (no shuffle exchange), and that it answers a layer whose exact union
@@ -137,6 +137,39 @@ def test_index_cache_hits_on_parquet_backed_layers(spark, frames, tmp_path):
     assert len(AF._IDX_CACHE) == 0 and len(AF._COUNT_CACHE) == 0
 
 
+def test_index_cache_misses_after_table_merge(spark, tmp_path):
+    """A MERGE that moves a feature writes a new snapshot, so the next
+    build in the same session misses the cache and sees the move."""
+    from extract_sf_r_parallel_spark.operators import areadist_fused as AF
+    from extract_sf_r_parallel_spark.sources.tables import IceLiteTable
+
+    def square(fid, x0):
+        ring = [x0, 0.0, x0 + 50, 0.0, x0 + 50, 50.0, x0, 50.0, x0, 0.0]
+        return (fid, "L", 2000, [ring], True)
+
+    pts = spark.createDataFrame([("p", "p", 2010, 25.0, 25.0)], PTS_SCHEMA)
+    t = IceLiteTable(str(tmp_path / "layer"))
+    t.append(spark.createDataFrame([square(1, 0.0), square(2, 400.0)],
+                                   LAYER_SCHEMA))
+    AF.clear_index_cache()
+    try:
+        before = AF.areadist_fused(pts, t.read(spark)).toPandas().iloc[0]
+        assert before["NEAR_DIST"] == 0.0
+        ((old, _),) = AF._IDX_CACHE.values()
+        # feature 1 moves from under the point to 175 m east of it
+        t.merge_into(spark, spark.createDataFrame([square(1, 200.0)],
+                                                  LAYER_SCHEMA),
+                     key="feature_id")
+        after = AF.areadist_fused(pts, t.read(spark)).toPandas().iloc[0]
+        assert len(AF._IDX_CACHE) == 2
+        new = list(AF._IDX_CACHE.values())[-1][0]
+        assert new is not old
+    finally:
+        AF.clear_index_cache()
+    assert after["NEAR_DIST"] == pytest.approx(175.0)
+    assert after["AREA150"] == 0.0 and before["AREA150"] > 0.0
+
+
 # ---------------------------------------------------------------------------
 # the planner (operators.areadist.areadist) over the two kernels
 # ---------------------------------------------------------------------------
@@ -182,7 +215,7 @@ def _jobs_and_corrections(spark, monkeypatch, pts, pls):
 
 def test_fused_kernel_answers_raster_fallback_layer(spark, monkeypatch):
     """The fused kernel answers a layer without an exact union from its
-    own index: the join kernel's raster union, one correction build per
+    own index: the tiled kernel's raster union, one correction build per
     planner call, and no more Spark jobs than an exact layer."""
     pts, pls = _squares(spark, {"L": STAIR})
     fused = areadist_fused(pts, pls).toPandas()
@@ -259,3 +292,20 @@ def test_null_or_empty_geom_fails_by_name(spark, monkeypatch, kernel,
     with pytest.raises(Exception, match="null or empty geom"):
         areadist(pts, pls, dissolve=dissolve,
                  validity_filter=False).collect()
+
+
+@pytest.mark.parametrize("geom", [None, []], ids=["null", "no-parts"])
+@pytest.mark.parametrize("kernel", ["fused", "tiled"])
+def test_validity_filter_names_null_or_empty_geom(spark, monkeypatch,
+                                                  kernel, geom):
+    """Under the default validity_filter=True the validity UDF sees a
+    vertex-less geom first, and fails the call by name on both routes."""
+    from extract_sf_r_parallel_spark.operators import areadist_fused as AF
+    if kernel == "tiled":
+        monkeypatch.setattr(AF, "MAX_BROADCAST_FEATURES", 0)
+    ring = [0.0, 0.0, 50.0, 0.0, 50.0, 50.0, 0.0, 50.0, 0.0, 0.0]
+    pls = spark.createDataFrame([(1, "L", 2000, [ring], True),
+                                 (2, "L", 2000, geom, True)], LAYER_SCHEMA)
+    pts = spark.createDataFrame([("p", "p", 2010, 25.0, 25.0)], PTS_SCHEMA)
+    with pytest.raises(Exception, match="is_valid_udf: null or empty geom"):
+        areadist(pts, pls).collect()

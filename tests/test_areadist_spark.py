@@ -1,6 +1,5 @@
 """Serial-vs-parallel equivalence (SURVEY.md §5 row 1): the distributed
-cell-indexed join kernel must match the brute-force serial oracle
-row-for-row
+tiled kernel must match the brute-force serial oracle row-for-row
 — the formalization of the reference author's prototype-vs-function
 check (C_…R:35-81 vs C_…R:84-130)."""
 
@@ -66,15 +65,6 @@ def test_areadist_no_age_no_temporal_wetland(spark, fixture_frames):
     _compare(got, want, ["NEAR_DIST", "AREA150", "PROP150", "AREA565", "PROP565"])
 
 
-def test_areadist_broadcast_matches(spark, fixture_frames):
-    images, layers = fixture_frames
-    pts = spark.createDataFrame(images, GEOTAGGED_SCHEMA)
-    pls = spark.createDataFrame(layers, LAYER_SCHEMA)
-    plain = areadist_join(pts, pls).toPandas()
-    bcast = areadist_join(pts, pls, broadcast_polys=True).toPandas()
-    _compare(bcast, plain, ["NEAR_DIST", "AREA565", "MEANAGE_150"])
-
-
 def test_overlap_layer_raster_dissolve(spark):
     """Dissolved (union) area ≤ Σ clip areas; equality iff no overlap
     (the reference's superseded-variant comparison, C_…R:99 vs 101).
@@ -111,9 +101,8 @@ def test_areadist_wide_pivot(spark, fixture_frames):
 
 def test_join_kernel_validates_feature_side_once(spark):
     """The validity UDF runs once per call: the validated feature side
-    is materialized before the join plan, so no `_valid(` node remains
-    in any branch of it (the join side, the oldest-year aggregate, the
-    layer list)."""
+    is materialized before the tiled plan, so no `_valid(` node remains
+    in it."""
     images = synth.geotag_images_pdf(synth.images_pdf(40))
     layers = synth.footprint_layers_pdf(80)
     one = layers[layers["layer"] == layers["layer"].iloc[0]]

@@ -44,8 +44,7 @@ def test_auto_dissolve_exact_default(spark, overlap_frames):
     pls = spark.createDataFrame(over, LAYER_SCHEMA)
     for got in (
         areadist_fused(pts, pls, temporal=False, age=False).toPandas(),
-        areadist_join(pts, pls, temporal=False, age=False,
-                      broadcast_polys=True).toPandas(),
+        areadist_join(pts, pls, temporal=False, age=False).toPandas(),
     ):
         g = got.sort_values("PKEY").reset_index(drop=True)
         np.testing.assert_allclose(g["AREA150"], 900.0, atol=1e-8)
@@ -140,8 +139,7 @@ def test_star_overlap_exact(spark, star_overlap):
     want = a1 + a2 - inter
 
     for plan in (
-        areadist_join(pts, pls, temporal=False, age=False,
-                      broadcast_polys=True),
+        areadist_join(pts, pls, temporal=False, age=False),
         areadist_fused(pts, pls, temporal=False, age=False),
     ):
         got = plan.toPandas()

@@ -50,7 +50,7 @@ def test_holes_through_both_paths_and_oracle(spark, donut_frames):
     pls = spark.createDataFrame(layer, LAYER_SCHEMA)
     want = areadist_oracle(points, layer)
     fused = areadist_fused(pts, pls).toPandas()
-    join = areadist_join(pts, pls, broadcast_polys=True).toPandas()
+    join = areadist_join(pts, pls).toPandas()
     for got in (fused, join):
         g = got.sort_values("PKEY").reset_index(drop=True)
         w = want.sort_values("PKEY").reset_index(drop=True)
@@ -177,8 +177,7 @@ def test_overlapping_donuts_exact_dissolve(spark):
     want = a1 + a2 - inter
 
     for plan in (
-        areadist_join(pts, pls, temporal=False, age=False,
-                      broadcast_polys=True),
+        areadist_join(pts, pls, temporal=False, age=False),
         areadist_fused(pts, pls, temporal=False, age=False),
     ):
         got = plan.toPandas()

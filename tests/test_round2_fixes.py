@@ -83,7 +83,7 @@ def test_areadist_gates_on_feature_count(spark, frames, monkeypatch):
     # under the gate → fused single-stage plan (no Exchange)
     small = areadist(pts, pls)
     assert "Exchange" not in small._jdf.queryExecution().executedPlan().toString()
-    # over the gate → the join kernel's shuffle branch
+    # over the gate → the tiled kernel's shuffle
     monkeypatch.setattr(AF, "MAX_BROADCAST_FEATURES", 10)
     big = areadist(pts, pls)
     assert "Exchange" in big._jdf.queryExecution().executedPlan().toString()
@@ -128,13 +128,11 @@ def test_broadcast_index_rejects_duplicate_fids(spark, frames, monkeypatch):
     dup = pd.concat([layers, layers.iloc[[0]]], ignore_index=True)
     pts = spark.createDataFrame(images, GEOTAGGED_SCHEMA)
     pls = spark.createDataFrame(dup, LAYER_SCHEMA)
-    with pytest.raises(Exception, match="duplicate feature_id"):
-        areadist_join(pts, pls, broadcast_polys=True).collect()
     # the planner's fused kernel, both dissolve modes
     for dissolve in ("auto", "sum"):
         with pytest.raises(ValueError, match="duplicate feature_id"):
             areadist(pts, pls, dissolve=dissolve)
-    # the join kernel's shuffle branch, directly and through the planner
+    # the tiled kernel, directly and through the planner
     for dissolve in ("auto", "sum"):
         with pytest.raises(ValueError, match="duplicate feature_id"):
             areadist_join(pts, pls, dissolve=dissolve)

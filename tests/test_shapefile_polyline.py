@@ -109,8 +109,7 @@ def test_areadist_on_polyline_layer(spark, line_layer):
     pls = spark.createDataFrame(line_layer, LAYER_SCHEMA)
     want = areadist_oracle(images, line_layer, validity_filter=False)
     fused = areadist_fused(pts, pls, validity_filter=False).toPandas()
-    join = areadist_join(pts, pls, validity_filter=False,
-                         broadcast_polys=True).toPandas()
+    join = areadist_join(pts, pls, validity_filter=False).toPandas()
     for got in (fused, join):
         g = got.sort_values("PKEY").reset_index(drop=True)
         w = want.sort_values("PKEY").reset_index(drop=True)

@@ -4,8 +4,8 @@
 asserts its final table keeps exactly one row per point (83,439 —
 C_…R:707-709); this is that invariant at fixture scale, plus the full
 column inventory. Both routes — one fused pass over the union of the
-two feature sides, and two areadist calls pivoted and key-joined —
-give the same table."""
+two feature sides, and past the broadcast gate one tiled pass (the same
+body per coarse tile, one cogroup) — give the same table."""
 
 import pandas as pd
 import pyarrow as pa
@@ -59,7 +59,8 @@ def test_fused_route_matches_join_route(spark, monkeypatch, name):
     fused = fused_df.toPandas()
     monkeypatch.setattr(AF, "MAX_BROADCAST_FEATURES", 10)
     joined_df = registry.QUERIES[name](spark, SF_DIR)
-    assert "Join" in joined_df._jdf.queryExecution().executedPlan().toString()
+    plan = joined_df._jdf.queryExecution().executedPlan().toString()
+    assert "FlatMapCoGroupsInPandas" in plan and "Join" not in plan
     joined = joined_df.toPandas()
     assert list(joined.columns) == list(fused.columns)
     assert len(fused) > 0
@@ -88,7 +89,7 @@ def test_raster_fallback_layer_stays_on_fused_route(spark, monkeypatch,
                                                     tmp_path):
     """12 mutually overlapping squares at one point put L00 beyond the
     exact union: the fused pass still answers all 19 layers, and equals
-    the join route value for value."""
+    the tiled route value for value."""
     p = spatial_queries._keyed_points(spark, SF_DIR).first()
     geoms = [[[p.x - 25 + i, p.y - 25 + i, p.x + 25 + i, p.y - 25 + i,
                p.x + 25 + i, p.y + 25 + i, p.x - 25 + i, p.y + 25 + i,
@@ -124,7 +125,10 @@ def test_raster_fallback_layer_stays_on_fused_route(spark, monkeypatch,
     finally:
         AF.clear_index_cache()
     monkeypatch.setattr(AF, "MAX_BROADCAST_FEATURES", 10)
-    joined = run().toPandas()
+    joined_df = run()
+    plan = joined_df._jdf.queryExecution().executedPlan().toString()
+    assert "FlatMapCoGroupsInPandas" in plan and "Join" not in plan
+    joined = joined_df.toPandas()
     assert list(joined.columns) == list(fused.columns)
     pd.testing.assert_frame_equal(
         fused.sort_values("PKEY").reset_index(drop=True),
