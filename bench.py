@@ -149,12 +149,16 @@ def _skew_bench(spark, sf_dir: str, repeats: int) -> dict:
                 ("salted_auto", "auto", "true"))
         for label, salt, skewjoin in legs:
             spark.conf.set("spark.sql.adaptive.skewJoin.enabled", skewjoin)
-            pairs = range_join_pairs(pts, polys, 1000.0, (), salt=salt)
+            pairs = range_join_pairs(pts, polys, 1000.0, salt=salt)
             runs = []
             for _ in range(repeats):
                 t0 = time.time()
-                out["n_pairs"] = pairs.count()
+                n = pairs.count()
                 runs.append(round(time.time() - t0, 3))
+                # the legs are result-identical: one count stands for all
+                if out.setdefault("n_pairs", n) != n:
+                    raise RuntimeError(f"skew leg {label}: {n} pairs, "
+                                       f"earlier legs {out['n_pairs']}")
             out[f"{label}_s"] = statistics.median(runs)
             out[f"{label}_runs"] = runs
     finally:

@@ -11,7 +11,8 @@ closed rings (first == last vertex) are accepted and the duplicate
 vertex is ignored. Multi-edge batch layout: "pair arrays" — for a batch
 of (point, polygon) candidate pairs we flatten every polygon edge into
 parallel arrays tagged with the pair index, compute per-edge terms
-vectorized, and reduce with ``np.add.at`` / ``np.minimum.at``.
+vectorized, and reduce per pair with ``np.add.reduceat`` /
+``np.minimum.reduceat`` (see packed_pair_metrics).
 """
 
 from __future__ import annotations
@@ -23,7 +24,6 @@ __all__ = [
     "point_in_ring",
     "point_segment_distance",
     "circle_polygon_area",
-    "pairs_circle_polygon_area",
     "pairs_point_polygon_distance",
     "PackedRings",
     "packed_pair_metrics",
@@ -210,40 +210,6 @@ def circle_feature_area(cx: float, cy: float, r: float, parts) -> float:
     return max(total, 0.0)
 
 
-def pairs_circle_polygon_area(
-    cx: np.ndarray, cy: np.ndarray, r: np.ndarray,
-    rings: list[np.ndarray],
-) -> np.ndarray:
-    """Vectorized circle∩polygon area for a batch of (circle, ring)
-    pairs. All edges of all pairs are flattened into one kernel call."""
-    n = len(rings)
-    out = np.zeros(n, dtype=np.float64)
-    if n == 0:
-        return out
-    opened = [_open_ring(rg) for rg in rings]
-    counts = np.array([len(o) if len(o) >= 3 else 0 for o in opened])
-    if counts.sum() == 0:
-        return out
-    pair_idx = np.repeat(np.arange(n), counts)
-    pts = np.concatenate([o for o in opened if len(o) >= 3], axis=0)
-    # per-pair roll for p2 over the packed pts array
-    nxt = np.arange(len(pts)) + 1
-    used = counts[counts > 0]
-    pstops = np.cumsum(used)
-    pstarts = pstops - used
-    nxt[pstops - 1] = pstarts
-    p1 = pts
-    p2 = pts[nxt]
-    ccx = np.repeat(np.asarray(cx, dtype=np.float64), counts)
-    ccy = np.repeat(np.asarray(cy, dtype=np.float64), counts)
-    crr = np.repeat(np.asarray(r, dtype=np.float64), counts)
-    contrib = _edge_circle_contrib(
-        p1[:, 0] - ccx, p1[:, 1] - ccy, p2[:, 0] - ccx, p2[:, 1] - ccy, crr
-    )
-    np.add.at(out, pair_idx, contrib)
-    return np.abs(out)
-
-
 def pairs_point_polygon_distance(
     px: np.ndarray, py: np.ndarray, rings: list
 ) -> np.ndarray:
@@ -383,8 +349,8 @@ def packed_pair_metrics(
     """For candidate pairs (point i at (px[i], py[i]) vs ring
     packed[ridx[i]]): distance (0 inside) and exact circle∩polygon
     area per radius — one fully vectorized pass over all edges of all
-    pairs. Semantics identical to pairs_point_polygon_distance +
-    pairs_circle_polygon_area (with the dist≥r → 0 area clamp)."""
+    pairs. Semantics identical to pairs_point_polygon_distance and, per
+    pair, circle_polygon_area (with the dist≥r → 0 area clamp)."""
     n = len(ridx)
     out_dist = np.full(n, np.inf, dtype=np.float64)
     if n == 0:

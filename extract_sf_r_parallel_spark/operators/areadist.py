@@ -303,6 +303,17 @@ def areadist_join(
     tile."""
     from . import areadist_fused as AF  # it imports this module
     _check_dissolve("areadist_join", dissolve)
+    # every point column rides the cogroup, and an empty side holding
+    # an array of arrays crashes the Python worker (segmentation fault
+    # in the cogroup's Arrow read) on a tile with features and no points
+    for f in points.schema.fields:
+        if isinstance(f.dataType, T.ArrayType) \
+                and isinstance(f.dataType.elementType, T.ArrayType):
+            raise ValueError(
+                f"areadist_join: point column {f.name!r} "
+                f"({f.dataType.simpleString()}) nests arrays, which the "
+                f"tiled kernel cannot carry; drop or flatten it and join "
+                f"it back on the point key")
     pl, corr, fallback = _feature_side(
         polys, layer_col=layer_col, validity_filter=validity_filter,
         dissolve=dissolve, collect=False)

@@ -43,10 +43,13 @@ def knn_join(
     max_radius: float = 64000.0,
     point_id: str = "PKEY",
     feature_id: str = "feature_id",
-    broadcast_polys: bool = False,
 ) -> DataFrame:
     """Returns (point_id, rk, feature_id, dist), rk ∈ 1..k (fewer rows
     if the whole dataset has < k features in range max_radius).
+
+    The feature side is collected and packed once on the driver and
+    broadcast (range_join.broadcast_pair_metrics_udf), so every round's
+    join ships only (x, y, feature_id) per pair.
 
     r0=None picks the density-derived initial radius (one tiny count +
     bbox agg — both sides are scanned by round one anyway, and the
@@ -65,12 +68,9 @@ def knn_join(
     w_rank = Window.partitionBy(point_id).orderBy(F.col("dist"), F.col(feature_id))
     w_cnt = Window.partitionBy(point_id)
     # collect + pack the broadcast geometry ONCE across rounds
-    bc = broadcast_pair_metrics_udf(points.sparkSession, polys, ()) \
-        if broadcast_polys else None
+    bc = broadcast_pair_metrics_udf(points.sparkSession, polys)
     while True:
-        pairs = range_join_pairs(
-            remaining, polys, r, broadcast_polys=broadcast_polys,
-            bc_metrics=bc)
+        pairs = range_join_pairs(remaining, polys, r, bc_metrics=bc)
         ranked = (
             # prune before the rank shuffle: 3 columns, not the pair row
             pairs.select(point_id, feature_id, "dist")

@@ -1,12 +1,13 @@
-"""Cell-indexed spatial range join — the engine's flagship operator
-(SURVEY.md J2/J3; BASELINE.json metric "spatial-join rows/sec").
+"""Cell-indexed spatial range join (SURVEY.md J2/J3): candidate
+(point, feature) pairs within a radius, refined to the exact distance.
+Its callers are knn_join's ring rounds and the bench's skew legs.
 
 Shape: every geometric predicate becomes an equi join on a computed hex
 cell id plus a vectorized refinement kernel:
 
   points ──withColumn(cell)──┐
                              ├── equi join on cell ── pandas-UDF
-  polys ──explode(cover)─────┘    refinement (dist, circle∩poly areas)
+  polys ──explode(cover)─────┘    refinement (dist)
 
 The poly side is exploded over the hex cover of its bbox *dilated by
 the search radius*, so a point within `radius` of a polygon always
@@ -17,15 +18,16 @@ has exactly one cell and a polygon's cover cells are distinct — no
 post-join dedup, no shuffle wasted on it.
 
 Scale notes (100 TB design):
-- the join is a plain equi join: Catalyst/AQE picks broadcast vs
-  sort-merge from size stats; `broadcast_polys=True` forces the hint
-  for small dims;
+- geometry transport is one switch, `bc_metrics`: a broadcast-sized
+  poly side ships its packed rings once per executor and the join is
+  broadcast; otherwise `geom` rides the Arrow batch with each pair and
+  Catalyst/AQE pick the join from size stats;
 - skew: dense cells (the fixture packs 80% of features into 5% of
   cells) are handled by AQE skew-join splitting; `salt` adds explicit
   salting — polys replicated `salt` ways, points routed by a hash —
-  for the sort-merge path at extreme skew (north rule requirement);
-- refinement is one Arrow-batched pandas UDF computing distance and
-  all circle∩polygon areas in a single pass over flattened edge arrays
+  for the shuffle path at extreme skew (north rule requirement);
+- refinement is one Arrow-batched pandas UDF returning one double per
+  pair, the point-to-geometry distance, over flattened edge arrays
   (zero per-row Python in the hot path).
 """
 
@@ -136,38 +138,29 @@ def is_valid_udf():
     return _IS_VALID
 
 
-def pair_metrics_udf(radii: tuple[float, ...]):
+def pair_metrics_udf():
     """Per-candidate-pair refinement: point-to-polygon distance
-    (st_distance, C_…R:117) and exact circle∩polygon area at each
-    buffer radius (st_intersection+st_union+st_area, C_…R:96-108) in
-    one Arrow batch pass.
+    (st_distance, C_…R:117) in one Arrow batch pass.
 
     The feature id rides along so each batch parses every distinct
     geometry exactly ONCE (a feature near a dense cell joins hundreds
     of points; ring decoding per pair would dominate). The math runs
-    through the packed-gather kernel — zero per-pair Python. The
-    dist ≥ r ⇒ area = 0 clamp kills ~1e-9 Green's-theorem noise and
-    matches R's empty st_intersection → zero area / NA age
-    (C_…R:99,159)."""
-    fields = [T.StructField("dist", T.DoubleType())] + [
-        T.StructField(f"a{int(r)}", T.DoubleType()) for r in radii
-    ]
-
-    @F.pandas_udf(returnType=T.StructType(fields))
-    def _metrics(x: pd.Series, y: pd.Series, fid: pd.Series,
-                 geom: pd.Series) -> pd.DataFrame:
+    through the packed-gather kernel — zero per-pair Python."""
+    @F.pandas_udf(T.DoubleType())
+    def _dist(x: pd.Series, y: pd.Series, fid: pd.Series,
+              geom: pd.Series) -> pd.Series:
         codes, _uniq = pd.factorize(fid.to_numpy())
         _ucodes, first_pos = np.unique(codes, return_index=True)
         rings = [K.feature_parts(geom.iloc[int(i)]) for i in first_pos]
         packed = K.PackedRings(rings)
         m = K.packed_pair_metrics(
             x.to_numpy(np.float64), y.to_numpy(np.float64),
-            codes.astype(np.int64), packed, tuple(radii))
-        return pd.DataFrame(m)
-    return _metrics
+            codes.astype(np.int64), packed, ())
+        return pd.Series(m["dist"])
+    return _dist
 
 
-def broadcast_pair_metrics_udf(spark, polys: DataFrame, radii: tuple[float, ...]):
+def broadcast_pair_metrics_udf(spark, polys: DataFrame):
     """Geometry-over-broadcast variant of pair_metrics_udf: the poly
     side's rings are packed ONCE on the driver and shipped to each
     executor as a broadcast variable; candidate-pair rows then carry
@@ -186,12 +179,9 @@ def broadcast_pair_metrics_udf(spark, polys: DataFrame, radii: tuple[float, ...]
     rings = [K.feature_parts(gpdf["geom"].iloc[int(i)]) for i in order]
     packed = K.PackedRings(rings)
     bc = spark.sparkContext.broadcast((packed, sorted_fids))
-    fields = [T.StructField("dist", T.DoubleType())] + [
-        T.StructField(f"a{int(r)}", T.DoubleType()) for r in radii
-    ]
 
-    @F.pandas_udf(returnType=T.StructType(fields))
-    def _metrics(x: pd.Series, y: pd.Series, fid: pd.Series) -> pd.DataFrame:
+    @F.pandas_udf(T.DoubleType())
+    def _dist(x: pd.Series, y: pd.Series, fid: pd.Series) -> pd.Series:
         pk, sfids = bc.value
         f = fid.to_numpy(np.int64)
         ridx = np.searchsorted(sfids, f)
@@ -203,10 +193,9 @@ def broadcast_pair_metrics_udf(spark, polys: DataFrame, radii: tuple[float, ...]
             raise ValueError("broadcast_pair_metrics_udf: pair feature_id "
                              "absent from the broadcast geometry index")
         m = K.packed_pair_metrics(
-            x.to_numpy(np.float64), y.to_numpy(np.float64),
-            ridx, pk, tuple(radii))
-        return pd.DataFrame(m)
-    return _metrics
+            x.to_numpy(np.float64), y.to_numpy(np.float64), ridx, pk, ())
+        return pd.Series(m["dist"])
+    return _dist
 
 
 def with_cell(df: DataFrame, code: int, x: str = "x",
@@ -236,17 +225,17 @@ def bbox_sql(op: str) -> tuple[str, str, str, str]:
             ext("array_max", 0), ext("array_max", 1))
 
 
-def explode_poly_cells(polys: DataFrame, radius: float, code: int,
-                       keep_bbox: bool = False) -> DataFrame:
+def explode_poly_cells(polys: DataFrame, radius: float,
+                       code: int) -> DataFrame:
     """One row per cell of the hex cover of each feature's bbox dilated
-    by `radius`, pure JVM: the bbox from :func:`bbox_sql` (kept as
-    bxmin/bymin/bxmax/bymax under `keep_bbox`), the cover from
-    :func:`explode_bbox_cells`."""
+    by `radius`, pure JVM: the bbox from :func:`bbox_sql`, kept as
+    bxmin/bymin/bxmax/bymax, the cover from :func:`explode_bbox_cells`.
+    A caller that reads only `cell` pays no bbox column: Catalyst
+    prunes them."""
     b = ("bxmin", "bymin", "bxmax", "bymax")
     bbox = bbox_sql("explode_poly_cells")
     df = polys.selectExpr("*", *[f"{e} AS {n}" for e, n in zip(bbox, b)])
-    df = explode_bbox_cells(df, radius, code, *b)
-    return df if keep_bbox else df.drop(*b)
+    return explode_bbox_cells(df, radius, code, *b)
 
 
 def explode_bbox_cells(polys: DataFrame, radius: float, code: int,
@@ -328,28 +317,32 @@ def range_join_pairs(
     points: DataFrame,
     polys: DataFrame,
     radius: float,
-    radii: tuple[float, ...] = (),
     *,
-    broadcast_polys: bool = False,
     salt: int | str = 0,
     bc_metrics=None,
 ) -> DataFrame:
     """Candidate pairs of (point, polygon) within `radius`, refined.
 
-    Returns points' columns + polys' columns (less `geom` under
-    `broadcast_polys`) + `dist` + one `a<r>` column per entry of
-    `radii` (exact circle∩polygon area).
+    Returns the points' columns, the polys' columns (less `geom` under
+    `bc_metrics`) and `dist`, the exact point-to-geometry distance.
 
-    `salt="auto"` (VERDICT r04 #3 — shuffle path only): the JVM cover
-    is recomputed for the probe from the geometry alone (one extra
-    codegen pass at build time, zero per-run cost), a 2 % point
-    sample × the exact per-cell cover histogram estimates the hottest
-    cell's candidate-pair count, and salting engages at
-    ceil(est / AUTO_SALT_PAIRS_PER_TASK) (≤ AUTO_SALT_MAX) only when
-    the estimate exceeds one task's budget — no caller hint, measured
-    in the bench's `salted_auto` leg. AQE's skew-join split measured
-    SLOWER than raw on the one-hot-cell shape (BENCH_r04), which is
-    why the engine owns this decision instead of delegating it.
+    `bc_metrics` — a :func:`broadcast_pair_metrics_udf` over the same
+    poly side — is the one geometry switch. Given, the cover drops
+    `geom`, the join is broadcast and the refinement reads the rings
+    from the broadcast variable; a caller joining the same poly side
+    repeatedly (kNN ring rounds) collects and packs it once. Absent,
+    `geom` crosses Arrow with each pair and `salt` applies.
+
+    `salt="auto"` (VERDICT r04 #3): the JVM cover is recomputed for the
+    probe from the geometry alone (one extra codegen pass at build
+    time, zero per-run cost), a 2 % point sample × the exact per-cell
+    cover histogram estimates the hottest cell's candidate-pair count,
+    and salting engages at ceil(est / AUTO_SALT_PAIRS_PER_TASK)
+    (≤ AUTO_SALT_MAX) only when the estimate exceeds one task's budget
+    — no caller hint, measured in the bench's `salted_auto` leg. AQE's
+    skew-join split measured SLOWER than raw on the one-hot-cell shape
+    (BENCH_r04), which is why the engine owns this decision instead of
+    delegating it.
     """
     # Cell resolution is DECOUPLED from the radius: the poly cover is
     # the bbox dilated by `radius`, which is a sound candidate superset
@@ -363,52 +356,41 @@ def range_join_pairs(
         # TypeError from the `salt > 1` comparison (ADVICE r05)
         raise ValueError(
             f"salt must be an int or the exact string 'auto', got {salt!r}")
+    if salt and bc_metrics is not None:
+        # a broadcast join never shuffles on cell, so a hot cell
+        # spreads with the points' existing partitioning — salting
+        # would only pay replication for nothing
+        raise ValueError("range_join_pairs: salt applies to the shuffle "
+                         "join only, not to a bc_metrics (broadcast) join")
     code = I.code_for_radius(max(radius / 4.0, I.RESOLUTIONS[0]))
     pts = with_cell(points, code)
-    pls = explode_poly_cells(polys, radius, code, keep_bbox=True)
-    if broadcast_polys:
-        # broadcast side is small ⇒ ship geometry once per executor and
-        # keep per-pair Arrow traffic to fixed-width columns; callers
-        # that join the SAME poly side repeatedly (kNN ring rounds)
-        # pass a prebuilt bc_metrics so the driver collects + packs the
-        # geometry once, not once per round
-        if bc_metrics is None:
-            bc_metrics = broadcast_pair_metrics_udf(
-                points.sparkSession, polys, tuple(radii))
-        pls = pls.drop("geom")
+    pls = explode_poly_cells(polys, radius, code)
+    if bc_metrics is not None:
+        pls = F.broadcast(pls.drop("geom"))
+        udf, args = bc_metrics, ("x", "y", "feature_id")
     else:
-        bc_metrics = None
+        udf, args = pair_metrics_udf(), ("x", "y", "feature_id", "geom")
 
     if salt == "auto":
+        # The probe only CHOOSES the salt integer; the executed join
+        # plan stays byte-identical to the manual-salt plan. The
+        # histogram recomputes the cover from `geom` alone: a
+        # localCheckpoint of the exploded cover, shared with the join,
+        # measured ~3× SLOWER to read back than the codegen recompute.
+        ph = explode_poly_cells(polys.select("geom"), radius, code) \
+            .groupBy("cell").agg(F.count(F.lit(1)).alias("_np"))
+        sp = with_cell(points.sample(AUTO_SALT_SAMPLE, seed=7), code)
+        row = (sp.groupBy("cell").agg(F.count(F.lit(1)).alias("_ns"))
+               .join(ph, "cell")
+               .agg(F.max(F.col("_ns") * F.col("_np")).alias("m"))
+               .first())
+        est = (row["m"] or 0) / AUTO_SALT_SAMPLE
         salt = 0
-        if not broadcast_polys:
-            # a broadcast join never shuffles on cell, so a hot cell
-            # spreads with the points' existing partitioning — salting
-            # would only pay replication for nothing.
-            # The probe only CHOOSES the salt integer; the executed
-            # join plan stays byte-identical to the manual-salt plan.
-            # The histogram recomputes the cover from `geom` alone: a
-            # localCheckpoint of the exploded cover, shared with the
-            # join, measured ~3× SLOWER to read back than the codegen
-            # recompute.
-            cells_only = explode_poly_cells(
-                polys.select("geom"), radius, code)
-            ph = cells_only.groupBy("cell").agg(
-                F.count(F.lit(1)).alias("_np"))
-            sp = with_cell(points.sample(AUTO_SALT_SAMPLE, seed=7), code)
-            row = (sp.groupBy("cell").agg(F.count(F.lit(1)).alias("_ns"))
-                   .join(ph, "cell")
-                   .agg(F.max(F.col("_ns") * F.col("_np")).alias("m"))
-                   .first())
-            est = (row["m"] or 0) / AUTO_SALT_SAMPLE
-            if est > AUTO_SALT_PAIRS_PER_TASK:
-                salt = min(AUTO_SALT_MAX,
-                           -(-int(est) // AUTO_SALT_PAIRS_PER_TASK))
+        if est > AUTO_SALT_PAIRS_PER_TASK:
+            salt = min(AUTO_SALT_MAX, -(-int(est) // AUTO_SALT_PAIRS_PER_TASK))
     join_keys = ["cell"]
     if salt > 1:
         pts, pls, join_keys = salted(pts, pls, salt, F.col("x"))
-    if broadcast_polys:
-        pls = F.broadcast(pls)
 
     cond = None
     for k in join_keys:
@@ -430,14 +412,9 @@ def range_join_pairs(
     pairs = pairs.filter(bdx * bdx + bdy * bdy < F.lit(float(radius) ** 2))
     pairs = pairs.drop("bxmin", "bymin", "bxmax", "bymax")
 
-    if bc_metrics is not None:
-        udf, args = bc_metrics, ("x", "y", "feature_id")
-    else:
-        udf = pair_metrics_udf(tuple(radii))
-        args = ("x", "y", "feature_id", "geom")
     # nondeterministic, so the optimizer cannot push the dist filter
     # below this projection by copying the UDF into it: the kernel ran
     # twice per pair, once for the filter and once for the values
-    m = udf.asNondeterministic()(*map(F.col, args)).alias("_m")
-    pairs = pairs.withColumn("_m", m).select("*", "_m.*").drop("_m")
+    pairs = pairs.withColumn(
+        "dist", udf.asNondeterministic()(*map(F.col, args)))
     return pairs.filter(F.col("dist") < F.lit(float(radius)))

@@ -4,10 +4,11 @@ A query is registered in exactly one way: define a module-level
 ``q_<name>(spark, sf_dir) -> DataFrame`` in this module or in
 ``relational``, ``spatial_queries`` or ``textops``, next to its DuckDB
 oracle ``ORACLE["<name>"] = "<SQL>"``. ``QUERIES`` is derived from the
-``q_`` functions at the end of this module, and every query has an
-oracle (``set(QUERIES) == set(ORACLE)``, asserted by a test), so every
-registered query is exact-value gated, not just row-counted. The order
-the gate runs them in is chosen by ``__spark_entry__.queries()``."""
+``q_`` functions and ``ORACLE`` from the modules' ``ORACLE`` dicts at
+the end of this module (a name in two modules raises), and every query
+has an oracle (``set(QUERIES) == set(ORACLE)``, asserted by a test), so
+every registered query is exact-value gated, not just row-counted. The
+order the gate runs them in is chosen by ``__spark_entry__.queries()``."""
 
 from __future__ import annotations
 
@@ -48,10 +49,9 @@ _STREAM_PARTS = 4
 _STREAM_PARTS_PY = 8
 from .spatial_queries import _flagship_select, _keyed_points, rects_df
 
+# this module's own oracles; the end of the module rebinds ORACLE to
+# the union over every plan module
 ORACLE: dict[str, str] = {}
-ORACLE.update(relational.ORACLE)
-ORACLE.update(spatial_queries.ORACLE)
-ORACLE.update(textops.ORACLE)
 
 
 def _emb(spark, sf_dir):
@@ -393,8 +393,7 @@ def q_areadist_circle_join(spark, sf_dir):
 def q_knn_ring(spark, sf_dir):
     pts, polys = _circle_inputs(spark, sf_dir)
     out = knn_join(pts.filter(F.col("PKEY").cast("long") % 50 == 0), polys,
-                   k=3, r0=None, max_radius=32000.0,
-                   broadcast_polys=True)
+                   k=3, r0=None, max_radius=32000.0)
     return out.select("PKEY", "rk", "feature_id",
                       F.round("dist", 6).alias("dist"))
 
@@ -4058,3 +4057,17 @@ _PLAN_MODULES = (sys.modules[__name__], relational, spatial_queries, textops)
 QUERIES = {name[2:]: fn
            for mod in _PLAN_MODULES for name, fn in vars(mod).items()
            if name.startswith("q_") and fn.__module__ == mod.__name__}
+
+
+def _all_oracles(modules) -> dict[str, str]:
+    out: dict[str, str] = {}
+    for mod in modules:
+        for name, sql in mod.ORACLE.items():
+            if name in out:
+                raise ValueError(f"oracle {name!r} is defined in more "
+                                 f"than one plan module")
+            out[name] = sql
+    return out
+
+
+ORACLE = _all_oracles(_PLAN_MODULES)

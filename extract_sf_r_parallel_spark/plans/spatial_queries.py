@@ -647,8 +647,8 @@ SELECT CAST(pid AS VARCHAR) AS PKEY,
 FROM dpts LEFT JOIN agg ON pid = jpid
 """
 
-# both engine plans (fused single-stage / cell-explode join) answer to
-# the same inclusion–exclusion closed form
+# both engine plans (fused single-stage / tiled kernel) answer to the
+# same inclusion–exclusion closed form
 ORACLE["areadist_dissolve_join"] = ORACLE["areadist_dissolve"]
 
 
@@ -834,8 +834,7 @@ def q_polyline_knn(spark, sf_dir):
     polys = s2.select("feature_id", geom.alias("geom"))
     pts = points_df(spark, sf_dir).filter(F.col("pid") % 10 == 0).select(
         F.col("pid").cast("string").alias("PKEY"), "x", "y")
-    out = knn_join(pts, polys, k=2, r0=None, max_radius=32000.0,
-                   broadcast_polys=True)
+    out = knn_join(pts, polys, k=2, r0=None, max_radius=32000.0)
     return out.select("PKEY", "rk", "feature_id",
                       F.round("dist", 6).alias("dist"))
 
@@ -952,7 +951,7 @@ def q_areadist_wet_sum(spark, sf_dir):
         F.lit(0).cast("int").alias("YEAR"), "geom")
     # the planner picks the kernel like the flagship: fused
     # single-stage mapInPandas when the 5-class feature side
-    # broadcasts, else the shuffle join — result-identical
+    # broadcasts, else the tiled kernel — result-identical
     out = areadist(pts, polys, temporal=False, age=False,
                    layer_col="CWCS_Class", validity_filter=False,
                    dissolve="sum")

@@ -113,3 +113,20 @@ def test_join_kernel_validates_feature_side_once(spark):
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "_valid(" not in plan
     assert len(out.toPandas()) == len(images)
+
+
+def test_join_kernel_rejects_nested_array_point_column(spark):
+    """A point column of arrays of arrays would crash the Python worker
+    on a tile that has features but no points (the feature 20 km away
+    sits alone in its tile); the tiled kernel refuses it by name."""
+    pts = spark.createDataFrame(
+        [("p1", "s", 2020, 100.0, 100.0, [[1.0, 2.0]])],
+        "PKEY string, SS string, YEAR int, x double, y double, "
+        "tags array<array<double>>")
+    pls = spark.createDataFrame(pd.DataFrame({
+        "feature_id": [1], "layer": ["A"], "YEAR": [2000],
+        "geom": [[[20000.0, 0.0, 20050.0, 0.0, 20050.0, 50.0,
+                   20000.0, 50.0, 20000.0, 0.0]]],
+        "is_valid_truth": [True]}), LAYER_SCHEMA)
+    with pytest.raises(ValueError, match="point column 'tags'"):
+        areadist_join(pts, pls)

